@@ -220,7 +220,8 @@ object Bench {
       // paid the one-time 4-file staging write (the decode-chain codegen
       // warm above runs at nVoters=64 — a different memo key)
       if (SparkEntry.queries.keys.exists(n => n.contains("vote_e2e") && inFilter(n)))
-        warm { graft.pipeline.VotePipeline.warmStagedTopic(spark, 1000) }
+        warm { graft.pipeline.VotePipeline.warmStagedTopic(spark,
+          graft.pipeline.VotePipeline.gradedNVoters) }
       // queries is a def that rebuilds the full entry map per access —
       // materialize once for the lookups here and the whole-board pass
       val allQueries = SparkEntry.queries
@@ -573,17 +574,7 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] write $pq failed: ${e.getMessage}") }
     }
-    graft.ext.DedupOps.clearCaches()
-    graft.ops.Storage.clearCaches()
-    graft.ops.FuzzyJoin.clearCaches()
-    graft.streaming.StreamOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.ext.TextOps.clearCaches()
-    graft.ext.ClassifierOps.clearCaches()
-    graft.ext.MediaPayloads.clearCaches()
-    graft.pipeline.VotePipeline.clearCaches()
-    graft.SparkEntry.clearCaches()
-    graft.Tables.clearCaches()
+    SessionMemo.clearAll()
     spark.stop()
   }
 }

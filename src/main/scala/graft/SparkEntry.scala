@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.ext._
 import graft.gen.Generator
+import graft.pipeline.VotePipeline
 import graft.streaming.StreamOps
 
 /** Driver contract (see SURVEY.md §7 + builder prompt): one `queries` entry
@@ -32,16 +33,12 @@ object SparkEntry {
     * fixture is never mis-blamed on the sketch. The distinct count is
     * one tiny agg job over a low-cardinality column, memoized per
     * (session, fixture) so the pair of seats pays it once. */
-  private val typeCardMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
-
-  /** Release the session memos (Bench/Verify/ScaleBench teardown — the
-    * same hook every other memoizing module exposes). */
-  def clearCaches(): Unit = typeCardMemo.clear()
+  private val typeCardMemo = SessionMemo[String, Long]("type_cardinality")
   private def assertTopKCapacity(s: SparkSession, d: String, k: Int,
                                  maxItemsTracked: Int): Unit = {
-    val n = typeCardMemo.computeIfAbsent((s, d),
-      _ => Tables.events(s, d).select("event_type").distinct().count())
+    val n = typeCardMemo(s, d) {
+      Tables.events(s, d).select("event_type").distinct().count()
+    }
     require(n <= maxItemsTracked,
       s"approx_top_k exactness holds only to maxItemsTracked=" +
         s"$maxItemsTracked distinct items; fixture $d has $n — the " +
@@ -1687,17 +1684,17 @@ object SparkEntry {
 
     // ---- full 21-field vote pipeline (P2/P4/F8 over VoteSchema) ----
     "vote_e2e_party_tally" -> ((s, _) =>
-      graft.pipeline.VotePipeline.partyTally(s, 1000)),
+      VotePipeline.partyTally(s, VotePipeline.gradedNVoters)),
     "vote_e2e_turnout_by_state" -> ((s, _) =>
-      graft.pipeline.VotePipeline.turnoutByState(s, 1000)),
+      VotePipeline.turnoutByState(s, VotePipeline.gradedNVoters)),
     "vote_e2e_stream_tally" -> ((s, _) =>
-      graft.pipeline.VotePipeline.streamingPartyTally(s, 1000)),
+      VotePipeline.streamingPartyTally(s, VotePipeline.gradedNVoters)),
     "vote_e2e_live_results" -> ((s, _) =>
-      graft.pipeline.VotePipeline.streamingLiveResults(s, 1000)),
+      VotePipeline.streamingLiveResults(s, VotePipeline.gradedNVoters)),
     // the full loop: stream-aggregate -> keyed JSON wire emit to a second
     // topic -> downstream re-consume (P1-P3) -> broadcast dim enrich
     "vote_e2e_reemit" -> ((s, _) =>
-      graft.pipeline.VotePipeline.streamingReEmit(s, 1000)),
+      VotePipeline.streamingReEmit(s, VotePipeline.gradedNVoters)),
 
     // ---- streaming (SURVEY §2.8) — real MemoryStream executions ----
     "t3_stream_cumulative" -> ((s, d) =>

@@ -18,20 +18,18 @@ object Tables {
     * behavior a warehouse gives resolved tables. Without this, each of
     * the board's ~600 table loads re-lists the directory and re-reads
     * parquet footers on the driver (~10–20 ms each — measured seconds
-    * of pure floor across a full board run). Built outside the map
-    * lock (get/putIfAbsent — the `DedupOps.commonCounts` discipline). */
-  private val relMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Long), DataFrame]()
-
-  def clearCaches(): Unit = relMemo.clear()
+    * of pure floor across a full board run). The value carries the
+    * table's [[fingerprint]], so a rewrite replaces the entry in place. */
+  private[graft] val relMemo =
+    SessionMemo[(String, String), (Long, DataFrame)]("tables")
 
   /** Cheap rewrite detector for the memo key: mtime ⊕ length of the
     * table path (one local stat per load — µs against the 10–20 ms
     * listing+footer probe the memo saves). The driver fixtures are
     * immutable, but an in-process rewrite of a SCRATCH fixture dir
     * (e.g. `tools.ScaleUp` output reused in the same JVM) bumps the
-    * mtime and misses the cache instead of silently serving the stale
-    * file listing — no caller has to remember [[clearCaches]]. For a
+    * mtime and rebuilds the entry instead of silently serving the stale
+    * file listing — no caller has to clear the memo. For a
     * DIRECTORY table the top-level stat alone is not enough: a rewrite
     * that replaces files INSIDE nested partition subdirectories leaves
     * the root's mtime untouched (only direct child add/remove bumps
@@ -46,7 +44,7 @@ object Tables {
     * here (Spark writers, the scale tools) goes through a
     * delete-then-recreate or fresh-part-file path, which is what keeps
     * the shallow probe sufficient; a tool that someday patches parquet
-    * bytes in place must call [[clearCaches]] itself. */
+    * bytes in place must call [[SessionMemo.clearAll]] itself. */
   private[graft] def fingerprint(path: String): Long = {
     val f = new java.io.File(path)
     var h = f.lastModified ^ java.lang.Long.rotateLeft(f.length, 32)
@@ -69,22 +67,10 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = (spark, dir, name, fingerprint(path))
-    val hit = relMemo.get(key)
-    if (hit != null) hit
-    else {
-      // a rewrite bumped the fingerprint: drop the superseded entries
-      // for this (session, dir, table) so a rewrite LOOP can't
-      // accumulate dead resolved plans for the session's lifetime
-      val it = relMemo.keySet.iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k._1 == spark && k._2 == dir && k._3 == name) it.remove()
-      }
-      val df = spark.read.parquet(path)
-      val prev = relMemo.putIfAbsent(key, df)
-      if (prev != null) prev else df
-    }
+    val fp = fingerprint(path)
+    relMemo(spark, (dir, name), valid = _._1 == fp) {
+      (fp, spark.read.parquet(path))
+    }._2
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -72,17 +72,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // release the board-run memos (dedup truth/cluster checkpoints,
     // storage layout dirs) before teardown — nothing may outlive the run
-    graft.ext.DedupOps.clearCaches()
-    graft.ops.Storage.clearCaches()
-    graft.ops.FuzzyJoin.clearCaches()
-    graft.streaming.StreamOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.ext.TextOps.clearCaches()
-    graft.ext.ClassifierOps.clearCaches()
-    graft.ext.MediaPayloads.clearCaches()
-    graft.pipeline.VotePipeline.clearCaches()
-    graft.SparkEntry.clearCaches()
-    graft.Tables.clearCaches()
+    SessionMemo.clearAll()
     spark.stop()
   }
 }

@@ -62,30 +62,18 @@ object ClassifierOps {
     * it and `lrScore` serves with its final weights, so a board run
     * trains once (the session-memo discipline of
     * `DedupOps.commonCounts`; keys are the session object + the
-    * canonicalized plan OBJECT, never a plan string). The GD job runs
-    * OUTSIDE the map lock (get-then-putIfAbsent): `computeIfAbsent`
-    * would hold the bin lock across multi-second Spark jobs and block
-    * unrelated same-bin callers. */
-  private val trainMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Any, Int, Double),
-    Seq[(Int, Double, Double, Double, Double, Double)]]()
-
-  def clearCaches(): Unit = trainMemo.clear()
+    * canonicalized plan OBJECT, never a plan string). */
+  private val trainMemo = graft.SessionMemo[(Any, Int, Double),
+    Seq[(Int, Double, Double, Double, Double, Double)]]("lr_train")
 
   /** The memoized per-iteration training rows (rounded like the graded
     * output). */
   private[graft] def trainRows(docs: DataFrame, iters: Int, lrate: Double)
-      : Seq[(Int, Double, Double, Double, Double, Double)] = {
-    val key = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized: Any, iters, lrate)
-    val hit = trainMemo.get(key)
-    if (hit != null) hit
-    else {
-      val rows = trainUncached(docs, iters, lrate)
-      val prev = trainMemo.putIfAbsent(key, rows)
-      if (prev != null) prev else rows
+      : Seq[(Int, Double, Double, Double, Double, Double)] =
+    trainMemo(docs.sparkSession,
+      (docs.queryExecution.analyzed.canonicalized, iters, lrate)) {
+      trainUncached(docs, iters, lrate)
     }
-  }
 
   /** Train `iters` full-batch GD steps from w = 0 at learning rate
     * `lrate`; one output row per iteration: the post-step weights and

@@ -52,11 +52,9 @@ object DedupOps {
     * cluster edges are all cheap arithmetic over these two frames, and
     * before this memo each graded consumer re-ran the full Σ df² join —
     * the single most expensive shuffle on the board — from the shared
-    * shingle checkpoint. Same sweep/bound hygiene as the truth memo;
-    * correctness never depends on a hit. */
-  private val commonCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Long),
-    (DataFrame, DataFrame)]()
+    * shingle checkpoint. Correctness never depends on a hit. */
+  private[graft] val commonMemo = graft.SessionMemo[(Int, Int, Long),
+    (DataFrame, DataFrame)]("dedup_common_counts")
 
   /** The pair pass as a PLAN (uncheckpointed) — [[commonCounts]]'s
     * builder, and the surface `ShuffleKeySpec` audits for the
@@ -92,20 +90,12 @@ object DedupOps {
   }
 
   private def commonCounts(docs: DataFrame, n: Int,
-                           maxDf: Long): (DataFrame, DataFrame) = {
-    sweep(commonCache)
-    val key =
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(), n, maxDf)
-    val hit = commonCache.get(key)
-    if (hit != null) hit
-    else {
-      // compute OUTSIDE the map lock (same discipline as truthCache)
+                           maxDf: Long): (DataFrame, DataFrame) =
+    commonMemo(docs.sparkSession,
+        (docs.queryExecution.analyzed.semanticHash(), n, maxDf)) {
       val (common, sizes) = commonCountsPlan(docs, n, maxDf)
-      val built = (common.localCheckpoint(), sizes.localCheckpoint())
-      val prev = commonCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      (common.localCheckpoint(), sizes.localCheckpoint())
     }
-  }
 
   /** Exact n-gram Jaccard over every pair sharing ≥1 shingle:
     * inverted-index join on shingle, then |A∩B| / (|A|+|B|-|A∩B|).
@@ -164,57 +154,11 @@ object DedupOps {
   def ngramJaccardPairsAbove(docs: DataFrame, n: Int, tau: Double): DataFrame =
     ngramJaccardPairs(docs, n).filter(col("jaccard") >= tau)
 
-  private val truthCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Double), DataFrame]()
+  private val truthMemo = graft.SessionMemo[(Int, Int, Double), DataFrame](
+    "dedup_truth_pairs")
 
-  /** Memo-cache hygiene shared by [[truthCache]] and [[clusterCache]]:
-    * entries are keyed by the owning SparkSession, and a stopped session's
-    * checkpoints are unreachable garbage — sweep them on every access so
-    * spec suites that build/stop many sessions can't pin them for the JVM
-    * lifetime. `maxEntries` bounds each map outright (the graded board
-    * needs a handful of entries; hitting the bound means a runaway caller,
-    * and dropping the memo only costs recompute, never correctness). */
-  private val maxEntries = 64
-  private def sweep[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit = {
-    val it = m.keySet.iterator()
-    while (it.hasNext) it.next().productElement(0) match {
-      case s: org.apache.spark.sql.SparkSession
-        if s.sparkContext.isStopped => it.remove()
-      case _ => ()
-    }
-    if (m.size > maxEntries) m.clear()
-  }
-
-  /** Drop every memoized truth/cluster/shingle frame. Verify/Bench call
-    * this after the query loop so the checkpoint blocks don't outlive
-    * the board run. */
-  def clearCaches(): Unit = {
-    truthCache.clear(); clusterCache.clear(); shingleCache.clear()
-    commonCache.clear(); minhashSigCache.clear()
-    // the corpus index seals by persist, not checkpoint — unpersist so a
-    // long-lived session (ScaleBench clears per rep) doesn't accumulate
-    // orphaned cache blocks
-    val it = corpusIndexCache.values.iterator()
-    while (it.hasNext) {
-      val ci = it.next()
-      try {
-        ci.digests.unpersist(false); ci.sh.unpersist(false)
-        ci.sz.unpersist(false)
-      } catch { case _: Throwable => () }
-    }
-    corpusIndexCache.clear()
-  }
-
-  /** Test hook (R17OptimizationSpec): partition widths of the memoized
-    * shingle checkpoints — pins the spread-before-seal property. */
-  private[graft] def shingleMemoWidths: Seq[Int] = {
-    import scala.jdk.CollectionConverters._
-    shingleCache.values.asScala.map(_.rdd.getNumPartitions).toSeq
-  }
-
-  private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int), DataFrame]()
+  private[graft] val shingleMemo =
+    graft.SessionMemo[(Int, Int), DataFrame]("dedup_shingles")
 
   /** The materialized shingle set, memoized per (session, input plan, n):
     * the split+explode over the full corpus is the common prefix of the
@@ -222,22 +166,17 @@ object DedupOps {
     * recall truths, the corpus pipeline's near-dup stage), and each of
     * those already needs it localCheckpoint'd for its own multi-consumer
     * plan — serving the same checkpoint across the family removes the
-    * recompute without changing any result. Same sweep/bound hygiene as
-    * the truth memo; correctness never depends on a hit.
+    * recompute without changing any result; correctness never depends
+    * on a hit.
     *
     * Stores `(doc_id, shingle_h, shingle_l)` — the [[fingerprinted]]
     * key pair, never the raw n-gram string: both consumers
     * ([[ngramJaccardPairs]], [[containmentTopPairs]]) only ever
     * group/join on the shingle, so the checkpoint AND every downstream
     * shuffle carry 12-byte keys instead of ~80-byte strings. */
-  private[graft] def shinglesCheckpointed(docs: DataFrame, n: Int): DataFrame = {
-    sweep(shingleCache)
-    val key =
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(), n)
-    val hit = shingleCache.get(key)
-    if (hit != null) hit
-    else {
-      // compute OUTSIDE the map lock (same discipline as truthCache).
+  private[graft] def shinglesCheckpointed(docs: DataFrame, n: Int): DataFrame =
+    shingleMemo(docs.sparkSession,
+        (docs.queryExecution.analyzed.semanticHash(), n)) {
       // r17: spread the checkpoint across the session's cores before
       // sealing — the explode-only lineage inherits the corpus scan's
       // split count (ONE for a single-row-group local file), so every
@@ -252,15 +191,12 @@ object DedupOps {
       // doc_id: uniform, deterministic. One-time build cost inside the
       // memo; the explode and the checkpoint then materialize evenly
       // across the session's cores.
-      val built = fingerprinted(
+      fingerprinted(
           shingles(docs.repartition(
             docs.sparkSession.sparkContext.defaultParallelism,
             col("doc_id")), n), "shingle")
         .localCheckpoint()
-      val prev = shingleCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   /** The exact-Jaccard ≥ `tau` truth pairs, memoized per (session, input
     * plan, n, tau). The truth is the Σ df² inverted-index join — the
@@ -273,23 +209,12 @@ object DedupOps {
     * different corpus (or different n/tau) can never be served a stale
     * truth. */
   private[graft] def truthPairsAbove(docs: DataFrame, n: Int,
-                                     tau: Double): DataFrame = {
-    sweep(truthCache)
-    val key =
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(), n, tau)
-    val hit = truthCache.get(key)
-    if (hit != null) hit
-    else {
-      // compute OUTSIDE the map lock — computeIfAbsent would run the full
-      // inverted-index join while holding the bin lock, serializing every
-      // concurrent caller behind it. A rare duplicate compute loses the
-      // race benignly: its checkpoint blocks are session-scoped.
-      val built = ngramJaccardPairsAbove(docs, n, tau)
+                                     tau: Double): DataFrame =
+    truthMemo(docs.sparkSession,
+        (docs.queryExecution.analyzed.semanticHash(), n, tau)) {
+      ngramJaccardPairsAbove(docs, n, tau)
         .select("doc_a", "doc_b").localCheckpoint()
-      val prev = truthCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   /** Differential recall of a candidate-pair set against the exact-Jaccard
     * truth at threshold `tau`: emits the truth size (which an external SQL
@@ -380,22 +305,14 @@ object DedupOps {
     * every round O(|edges|). Output: (doc_id, cluster_id) for every doc
     * in at least one pair. */
   def duplicateClusters(docs: DataFrame, n: Int, tau: Double,
-                        iters: Int = 6): DataFrame = {
-    sweep(clusterCache)
-    val key = (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(),
-      n, tau, iters)
-    val hit = clusterCache.get(key)
-    if (hit != null) hit
-    else {
-      // multi-round propagation runs outside the lock (see truthPairsAbove)
-      val built = duplicateClustersUncached(docs, n, tau, iters)
-      val prev = clusterCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+                        iters: Int = 6): DataFrame =
+    clusterMemo(docs.sparkSession,
+        (docs.queryExecution.analyzed.semanticHash(), n, tau, iters)) {
+      duplicateClustersUncached(docs, n, tau, iters)
     }
-  }
 
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Double, Int), DataFrame]()
+  private val clusterMemo = graft.SessionMemo[(Int, Int, Double, Int),
+    DataFrame]("dedup_clusters")
 
   private def duplicateClustersUncached(docs: DataFrame, n: Int, tau: Double,
                                         iters: Int): DataFrame = {
@@ -619,21 +536,21 @@ object DedupOps {
     * corpus plan, n) like the MinHash signatures, so a streaming
     * ingest's micro-batches (and repeated seats over the same corpus)
     * share one build; ScaleBench still measures the cold standalone
-    * cost (it clears every memo per repetition). */
+    * cost (it clears every memo per repetition). The index seals by
+    * persist, not checkpoint, so clearing the memo unpersists it — a
+    * long-lived session doesn't accumulate orphaned cache blocks. */
   final case class CorpusIndex(digests: DataFrame, sh: DataFrame,
                                sz: DataFrame)
-  private val corpusIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    CorpusIndex]()
+  private val corpusIndexMemo = graft.SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
+    CorpusIndex]("dedup_corpus_index", release = { ci =>
+      ci.digests.unpersist(false); ci.sh.unpersist(false)
+      ci.sz.unpersist(false); ()
+    })
 
-  def corpusIndex(corpus: DataFrame, n: Int): CorpusIndex = {
-    sweep(corpusIndexCache)
-    val key = (corpus.sparkSession,
-      corpus.queryExecution.analyzed.canonicalized, n)
-    val hit = corpusIndexCache.get(key)
-    if (hit != null) hit
-    else {
+  def corpusIndex(corpus: DataFrame, n: Int): CorpusIndex =
+    corpusIndexMemo(corpus.sparkSession,
+        (corpus.queryExecution.analyzed.canonicalized, n)) {
       // pre-partition (and pre-sort) every index side ON ITS JOIN KEY
       // before sealing, with an EXPLICIT partition count, and seal by
       // CACHING, not checkpointing: InMemoryTableScan advertises the
@@ -663,11 +580,8 @@ object DedupOps {
         .sortWithinPartitions("shingle_h", "shingle_l"))
       val sz = seal(sh.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
         .repartition(parts, col("doc_id")))
-      val built = CorpusIndex(digests, sh, sz)
-      val prev = corpusIndexCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      CorpusIndex(digests, sh, sz)
     }
-  }
 
   /** [[incrementalDedup]] served from a pre-built [[CorpusIndex]] — the
     * streaming ingest form (t53): each micro-batch triages against the
@@ -811,24 +725,17 @@ object DedupOps {
     // precision-graded bandings spend the SAME 16-hash budget (8×2 vs
     // 4×4), so the shingle explode + numHashes min-aggregates — the
     // heavy half of both seats — is one computation serving both (the
-    // shingleCache discipline; banding happens downstream per config).
+    // shingleMemo discipline; banding happens downstream per config).
     // doc_id + numHashes longs per doc, localCheckpoint'd.
-    sweep(minhashSigCache)
-    val key = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized, n, numHashes)
-    val hit = minhashSigCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = minHashSignaturesUncached(docs, n, numHashes).localCheckpoint()
-      val prev = minhashSigCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+    minhashSigMemo(docs.sparkSession,
+        (docs.queryExecution.analyzed.canonicalized, n, numHashes)) {
+      minHashSignaturesUncached(docs, n, numHashes).localCheckpoint()
     }
   }
 
-  private val minhashSigCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    DataFrame]()
+  private val minhashSigMemo = graft.SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
+    DataFrame]("dedup_minhash_signatures")
 
   private[graft] def minHashSignaturesUncached(docs: DataFrame, n: Int,
                                                numHashes: Int): DataFrame = {

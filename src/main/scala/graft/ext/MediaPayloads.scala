@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
+
 /** Session-memoized staged media payload tables — the mm_* seats' input
   * fixtures (real PNG/JPEG/WAV/AVI bytes synthesized per document).
   *
@@ -20,29 +22,22 @@ import org.apache.spark.sql.functions._
   * The memo key carries the fixture's mtime/length fingerprint
   * ([[graft.Tables.fingerprint]]) so an in-process rewrite of a scratch
   * fixture dir misses the cache instead of serving payloads encoded
-  * from the OLD documents, and the build runs OUTSIDE the map lock
-  * (get/putIfAbsent — the Tables.relMemo discipline).
+  * from the OLD documents.
   *
   * The AVI kind carries the board's sparse-media shape (clips ride every
   * EVEN doc_id) — that filter is part of the fixture definition, so it
   * lives here with the staging.
   */
 object MediaPayloads {
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Long), DataFrame]()
-
-  def clearCaches(): Unit = memo.clear()
+  private val memo = SessionMemo[(String, String, Long), DataFrame]("media_payloads")
 
   /** The staged payload table (doc_id, media_bytes) for `kind` in
     * {png, jpg, wav, avi}. First access per (session, dir, kind) pays
     * one encode+write pass; later accesses are a resolved-relation
     * lookup. */
-  def payload(spark: SparkSession, dir: String, kind: String): DataFrame = {
-    val key = (spark, dir, kind,
-      graft.Tables.fingerprint(s"$dir/documents.parquet"))
-    val hit = memo.get(key)
-    if (hit != null) hit
-    else {
+  def payload(spark: SparkSession, dir: String, kind: String): DataFrame =
+    memo(spark, (dir, kind,
+        graft.Tables.fingerprint(s"$dir/documents.parquet"))) {
       val docs = graft.Tables.documents(spark, dir)
       val df = kind match {
         case "png" | "jpg" => ImageCodec.withImagePayload(spark, docs, kind)
@@ -54,9 +49,6 @@ object MediaPayloads {
       val out = graft.TmpDirs.create(s"graft_media_${kind}_")
         .resolve("payload").toString
       df.write.parquet(out)
-      val built = spark.read.parquet(out)
-      val prev = memo.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      spark.read.parquet(out)
     }
-  }
 }

@@ -616,14 +616,10 @@ object TextOps {
     * ([[bpeMerges]]) learns, and re-running the 8-round loop for the
     * apply would double the board's cost for zero information (the
     * pqMemo discipline, including its key: session OBJECT +
-    * canonicalized plan OBJECT). Released by [[clearCaches]]. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    Seq[(Int, String, String, String, Long)]]()
-
-  /** Release the BPE training memos (Verify/Bench teardown). */
-  def clearCaches(): Unit = bpeMemo.clear()
+    * canonicalized plan OBJECT). */
+  private val bpeMemo = graft.SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
+    Seq[(Int, String, String, String, Long)]]("bpe_train")
 
   private def bpeTrain(docs: DataFrame,
                        nMerges: Int): Seq[(Int, String, String, String, Long)] =
@@ -631,10 +627,10 @@ object TextOps {
     // equality — for a LocalRelation that includes the DATA, which its
     // toString omits; for scans, the normalized paths), so two
     // same-schema in-memory fixtures can never collide
-    bpeMemo.computeIfAbsent(
-      (docs.sparkSession,
-        docs.queryExecution.analyzed.canonicalized, nMerges),
-      { _ => bpeTrainUncached(docs, nMerges) })
+    bpeMemo(docs.sparkSession,
+      (docs.queryExecution.analyzed.canonicalized, nMerges)) {
+      bpeTrainUncached(docs, nMerges)
+    }
 
   def bpeMerges(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession

@@ -42,37 +42,11 @@ object FuzzyJoin {
     * [[graft.ext.DedupOps]] `commonCounts` discipline applied here):
     * both frames are constant-factor explosions of their inputs, keyed
     * on (session, analyzed-plan semanticHash, column(s), k), served as
-    * `localCheckpoint`s. Correctness never depends on a hit; a stopped
-    * session's entries are swept, and the bound caps runaway callers. */
-  private val probeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, String, Seq[String], Int),
-    DataFrame]()
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, String, Int), DataFrame]()
-
-  private val maxEntries = 64
-  private def sweep[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit = {
-    val it = m.keySet.iterator()
-    while (it.hasNext) it.next().productElement(0) match {
-      case s: org.apache.spark.sql.SparkSession
-        if s.sparkContext.isStopped => it.remove()
-      case _ => ()
-    }
-    if (m.size > maxEntries) m.clear()
-  }
-
-  /** Drop the memoized probe/index checkpoints (Bench/Verify call this
-    * after the board loop, like the other session memos). */
-  def clearCaches(): Unit = { probeCache.clear(); indexCache.clear() }
-
-  /** Test hook (R17OptimizationSpec): partition widths of the memoized
-    * probe checkpoints — pins the spread-before-seal property (a
-    * single-partition probe seal serializes the whole verify pipeline). */
-  private[graft] def memoizedProbeWidths: Seq[Int] = {
-    import scala.jdk.CollectionConverters._
-    probeCache.values.asScala.map(_.rdd.getNumPartitions).toSeq
-  }
+    * `localCheckpoint`s. Correctness never depends on a hit. */
+  private[graft] val probeMemo = graft.SessionMemo[
+    (Int, String, Seq[String], Int), DataFrame]("fuzzy_probe")
+  private[graft] val indexMemo =
+    graft.SessionMemo[(Int, String, Int), DataFrame]("fuzzy_index")
 
   /** Segment-start / segment-length arithmetic as SQL snippets over a
     * lambda-bound length variable `L` and segment index `i`, with the
@@ -150,57 +124,40 @@ object FuzzyJoin {
                        clean: DataFrame, cleanCol: String,
                        k: Int = 2): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    sweep(probeCache); sweep(indexCache)
-    val probeKey = (dirty.sparkSession,
-      dirty.queryExecution.analyzed.semanticHash(), dirtyCol, carryCols, k)
-    val probes = {
-      val hit = probeCache.get(probeKey)
-      if (hit != null) hit
-      else {
-        // compute OUTSIDE the map lock (the DedupOps.truthCache discipline).
-        // r17: spread the checkpoint across the session's cores BEFORE
-        // sealing it — the dirty side reads from a dimension-sized
-        // single-split scan here, so an as-is checkpoint pins ONE
-        // partition and the whole verify pipeline (probe × index join +
-        // banded levenshtein + distinct partials: measured 1.37 s of a
-        // 1.76 s run, 93k candidate pairs) ran single-threaded on every
-        // graded call. The spread happens on the DIRTY rows BEFORE the
-        // grid explode (guide §8: move the small rows, multiply after):
-        // shuffling the exploded grid itself moves ~31× the bytes
-        // (segment strings included) and the 10× fixture measured that
-        // at +3 s scaled (a keyless round-robin was worse still —
-        // sortBeforeRepartition from a one-partition input is a
-        // single-threaded full sort of the whole grid). Hash on the
-        // dirty string: near-unique, so the explode AND the checkpoint
-        // materialize evenly across the session's cores. The join is a
-        // broadcast hash join, so any deterministic probe spread
-        // load-balances the levenshtein work equally. One-time build
-        // cost, inside the memo; width tracks defaultParallelism.
-        val spreadDirty = dirty.repartition(
-          dirty.sparkSession.sparkContext.defaultParallelism, col(dirtyCol))
-        val built = probeRows(spreadDirty, dirtyCol, carryCols, k)
-          .localCheckpoint()
-        val prev = probeCache.putIfAbsent(probeKey, built)
-        if (prev != null) prev else built
-      }
+    val probes = probeMemo(dirty.sparkSession,
+        (dirty.queryExecution.analyzed.semanticHash(), dirtyCol, carryCols, k)) {
+      // r17: spread the checkpoint across the session's cores BEFORE
+      // sealing it — the dirty side reads from a dimension-sized
+      // single-split scan here, so an as-is checkpoint pins ONE
+      // partition and the whole verify pipeline (probe × index join +
+      // banded levenshtein + distinct partials: measured 1.37 s of a
+      // 1.76 s run, 93k candidate pairs) ran single-threaded on every
+      // graded call. The spread happens on the DIRTY rows BEFORE the
+      // grid explode (guide §8: move the small rows, multiply after):
+      // shuffling the exploded grid itself moves ~31× the bytes
+      // (segment strings included) and the 10× fixture measured that
+      // at +3 s scaled (a keyless round-robin was worse still —
+      // sortBeforeRepartition from a one-partition input is a
+      // single-threaded full sort of the whole grid). Hash on the
+      // dirty string: near-unique, so the explode AND the checkpoint
+      // materialize evenly across the session's cores. The join is a
+      // broadcast hash join, so any deterministic probe spread
+      // load-balances the levenshtein work equally. One-time build
+      // cost, inside the memo; width tracks defaultParallelism.
+      val spreadDirty = dirty.repartition(
+        dirty.sparkSession.sparkContext.defaultParallelism, col(dirtyCol))
+      probeRows(spreadDirty, dirtyCol, carryCols, k).localCheckpoint()
     }
-    val indexKey = (clean.sparkSession,
-      clean.queryExecution.analyzed.semanticHash(), cleanCol, k)
-    val index = {
-      val hit = indexCache.get(indexKey)
-      if (hit != null) hit
-      else {
-        val built = clean
-          .withColumn("_cl", length(col(cleanCol)))
-          .filter(col("_cl") >= k + 1)
-          .select(col(cleanCol),
-            explode(expr(segmentsExpr(k, cleanCol))).as("cs"))
-          .select(col(cleanCol), col("cs.tlen").as("c_tlen"),
-            col("cs.seg_i").as("c_seg_i"), col("cs.seg").as("c_seg"))
-          .localCheckpoint()
-        val prev = indexCache.putIfAbsent(indexKey, built)
-        if (prev != null) prev else built
-      }
+    val index = indexMemo(clean.sparkSession,
+        (clean.queryExecution.analyzed.semanticHash(), cleanCol, k)) {
+      clean
+        .withColumn("_cl", length(col(cleanCol)))
+        .filter(col("_cl") >= k + 1)
+        .select(col(cleanCol),
+          explode(expr(segmentsExpr(k, cleanCol))).as("cs"))
+        .select(col(cleanCol), col("cs.tlen").as("c_tlen"),
+          col("cs.seg_i").as("c_seg_i"), col("cs.seg").as("c_seg"))
+        .localCheckpoint()
     }
     // Verify BEFORE dedup: candidate multiplicity is small (a pair can
     // arise from at most k+1 segment hits), so running the banded

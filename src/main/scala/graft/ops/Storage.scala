@@ -56,37 +56,11 @@ object Storage {
     * one event type and scanning the firehose; the date/type/tenant
     * column every big fact table partitions by. The pruning is asserted
     * by a plan spec; the query result is oracle-graded. */
-  private val partDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, String), String]()
+  private val partDirs =
+    graft.SessionMemo[(Int, String), String]("storage_partitioned")
 
-  /** Layout-memo hygiene (same discipline as DedupOps's truth memo):
-    * entries key on the owning SparkSession, so a stopped session's rows
-    * are dead weight — sweep them on access, bound each map outright, and
-    * expose a clear hook for Verify/Bench to call after the query loop.
-    * Values are temp-dir paths (cheap); the sweep exists to stop the maps
-    * and their session references growing for the JVM lifetime. */
-  private val maxEntries = 64
-  private def sweep[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit = {
-    val it = m.keySet.iterator()
-    while (it.hasNext) it.next().productElement(0) match {
-      case s: SparkSession if s.sparkContext.isStopped => it.remove()
-      case _ => ()
-    }
-    if (m.size > maxEntries) m.clear()
-  }
-
-  /** Drop every memoized layout directory entry (the directories
-    * themselves are temp-rooted and reaped with the container). */
-  def clearCaches(): Unit = {
-    partDirs.clear(); evolveDirs.clear()
-    compactDirs.clear(); zorderDirs.clear()
-    dynDirs.clear(); codecDirs.clear(); sortedDirs.clear()
-    cboRegistered.clear()
-  }
-
-  private val dynDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, String), String]()
+  private val dynDirs =
+    graft.SessionMemo[(Int, String), String]("storage_dynamic_overwrite")
 
   /** Dynamic partition OVERWRITE — the lakehouse daily-restate pattern:
     * `INSERT OVERWRITE` in dynamic mode replaces ONLY the partitions the
@@ -97,25 +71,20 @@ object Storage {
     * Memoized per (session, plans, column) like its siblings. */
   def dynamicOverwriteRoundTrip(base: DataFrame, restated: DataFrame,
                                 partCol: String): String = {
-    sweep(dynDirs)
-    val key = (base.sparkSession,
-      base.queryExecution.analyzed.semanticHash() * 31 +
-        restated.queryExecution.analyzed.semanticHash(), partCol)
-    dynDirs.compute(key, { (_, cur) =>
-      if (cur != null && new java.io.File(cur).exists()) cur
-      else {
-        val dir = graft.TmpDirs.create("graft_dynover_").toString
-        base.write.partitionBy(partCol).mode("overwrite").parquet(dir)
-        restated.write.partitionBy(partCol).mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(dir)
-        dir
-      }
-    })
+    val key = (base.queryExecution.analyzed.semanticHash() * 31 +
+      restated.queryExecution.analyzed.semanticHash(), partCol)
+    dynDirs(base.sparkSession, key, valid = graft.SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_dynover_").toString
+      base.write.partitionBy(partCol).mode("overwrite").parquet(dir)
+      restated.write.partitionBy(partCol).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(dir)
+      dir
+    }
   }
 
-  private val sortedDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, String, Int), String]()
+  private val sortedDirs =
+    graft.SessionMemo[(Int, String, Int), String]("storage_sorted_export")
 
   /** Globally-sorted table export: `repartitionByRange` + per-partition
     * sort gives a layout whose files hold NON-OVERLAPPING key ranges in
@@ -127,26 +96,21 @@ object Storage {
     * grade proves. */
   def sortedExportRoundTrip(df: DataFrame, sortCol: String,
                             nFiles: Int): String = {
-    sweep(sortedDirs)
     // nFiles is part of the key: a second call with a different file
     // count must not be served the first call's layout.
-    sortedDirs.compute(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash(), sortCol,
-        nFiles),
-      { (_, cur) =>
-        if (cur != null && new java.io.File(cur).exists()) cur
-        else {
-          val dir = graft.TmpDirs.create("graft_sorted_").toString
-          df.repartitionByRange(nFiles, col(sortCol))
-            .sortWithinPartitions(sortCol)
-            .write.mode("overwrite").parquet(dir)
-          dir
-        }
-      })
+    sortedDirs(df.sparkSession,
+        (df.queryExecution.analyzed.semanticHash(), sortCol, nFiles),
+        valid = graft.SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_sorted_").toString
+      df.repartitionByRange(nFiles, col(sortCol))
+        .sortWithinPartitions(sortCol)
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
   }
 
-  private val codecDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, String), String]()
+  private val codecDirs =
+    graft.SessionMemo[(Int, String), String]("storage_codec")
 
   /** Compression-codec round trip: the same table written under a chosen
     * parquet codec (zstd here — the modern scan-speed/size tradeoff;
@@ -154,41 +118,30 @@ object Storage {
     * choice is a pure storage knob — results must be bit-identical —
     * which is exactly what the differential grade proves. */
   def codecRoundTrip(df: DataFrame, codec: String): String = {
-    sweep(codecDirs)
-    codecDirs.compute(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash(), codec),
-      { (_, cur) =>
-        if (cur != null && new java.io.File(cur).exists()) cur
-        else {
-          val dir = graft.TmpDirs.create("graft_codec_").toString
-          df.write.mode("overwrite").option("compression", codec).parquet(dir)
-          dir
-        }
-      })
+    codecDirs(df.sparkSession,
+        (df.queryExecution.analyzed.semanticHash(), codec),
+        valid = graft.SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_codec_").toString
+      df.write.mode("overwrite").option("compression", codec).parquet(dir)
+      dir
+    }
   }
 
   def partitionedRoundTrip(df: DataFrame, partCol: String): String = {
-    sweep(partDirs)
     // one layout per (session, dataset, column): repeated bench/verify
     // executions reuse the written copy instead of leaking a fresh one per
     // run. The key includes the ANALYZED PLAN's semanticHash — content
     // identity — so a second caller with different data but the same
-    // partition column gets its own directory, never a stale one; holding
-    // the session object itself (not identityHashCode) rules out
-    // hash collisions across GC'd sessions.
-    partDirs.compute(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash(), partCol),
-      { (_, cur) =>
-        if (cur != null && new java.io.File(cur).exists()) cur
-        else {
-          val dir = graft.TmpDirs
-            .create("graft_part_").toString
-          // overwrite: createTempDirectory already created the (empty)
-          // target, which a default-mode write refuses
-          df.write.partitionBy(partCol).mode("overwrite").parquet(dir)
-          dir
-        }
-      })
+    // partition column gets its own directory, never a stale one.
+    partDirs(df.sparkSession,
+        (df.queryExecution.analyzed.semanticHash(), partCol),
+        valid = graft.SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_part_").toString
+      // overwrite: createTempDirectory already created the (empty)
+      // target, which a default-mode write refuses
+      df.write.partitionBy(partCol).mode("overwrite").parquet(dir)
+      dir
+    }
   }
 
   /** Scan one partition of a partitioned layout: the `partCol = value`
@@ -201,25 +154,18 @@ object Storage {
     * carries columns batch 1 lacks (the long-lived-table reality
     * [[evolvingRead]] exists for). Memoized per (session, both batches'
     * plan identity), same discipline as [[partitionedRoundTrip]]. */
-  private val evolveDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, Int), String]()
-  def evolvingRoundTrip(batch1: DataFrame, batch2: DataFrame): String = {
-    sweep(evolveDirs)
-    evolveDirs.compute(
-      (batch1.sparkSession,
-        batch1.queryExecution.analyzed.semanticHash(),
-        batch2.queryExecution.analyzed.semanticHash()),
-      { (_, cur) =>
-        if (cur != null && new java.io.File(cur).exists()) cur
-        else {
-          val dir = graft.TmpDirs
-            .create("graft_evolve_").toString
-          batch1.write.mode("overwrite").parquet(dir)
-          batch2.write.mode("append").parquet(dir)
-          dir
-        }
-      })
-  }
+  private val evolveDirs =
+    graft.SessionMemo[(Int, Int), String]("storage_evolving")
+  def evolvingRoundTrip(batch1: DataFrame, batch2: DataFrame): String =
+    evolveDirs(batch1.sparkSession,
+        (batch1.queryExecution.analyzed.semanticHash(),
+          batch2.queryExecution.analyzed.semanticHash()),
+        valid = graft.SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_evolve_").toString
+      batch1.write.mode("overwrite").parquet(dir)
+      batch2.write.mode("append").parquet(dir)
+      dir
+    }
 
   /** Schema-evolving read: union the schemas of every parquet batch in
     * `dir` (columns added over a table's life appear as nulls in old
@@ -237,27 +183,19 @@ object Storage {
     * compact it to `targetRowsPerFile`, and return (compacted dir,
     * file count). Memoized per (session, plan identity, params) like the
     * other layout caches. */
-  private val compactDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, Int, Long), (String, Long)]()
+  private val compactDirs =
+    graft.SessionMemo[(Int, Int, Long), (String, Long)]("storage_compact")
   def compactRoundTrip(df: DataFrame, smallFiles: Int,
-                       targetRowsPerFile: Long): (String, Long) = {
-    sweep(compactDirs)
-    compactDirs.compute(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash(),
-        smallFiles, targetRowsPerFile),
-      { (_, cur) =>
-        if (cur != null && new java.io.File(cur._1).exists()) cur
-        else {
-          val inDir = graft.TmpDirs
-            .create("graft_small_").toString
-          val outDir = graft.TmpDirs
-            .create("graft_compacted_").toString
-          df.repartition(smallFiles).write.mode("overwrite").parquet(inDir)
-          val n = compact(df.sparkSession, inDir, outDir, targetRowsPerFile)
-          (outDir, n)
-        }
-      })
-  }
+                       targetRowsPerFile: Long): (String, Long) =
+    compactDirs(df.sparkSession,
+        (df.queryExecution.analyzed.semanticHash(), smallFiles,
+          targetRowsPerFile),
+        valid = c => graft.SessionMemo.dirExists(c._1)) {
+      val inDir = graft.TmpDirs.create("graft_small_").toString
+      val outDir = graft.TmpDirs.create("graft_compacted_").toString
+      df.repartition(smallFiles).write.mode("overwrite").parquet(inDir)
+      (outDir, compact(df.sparkSession, inDir, outDir, targetRowsPerFile))
+    }
 
   /** Compact a directory of (potentially many small) parquet files to
     * ~`targetRowsPerFile` rows per output file. At scale, writers that
@@ -298,28 +236,21 @@ object Storage {
     * on the first. A linear sort by (a, b) would leave b's per-file
     * ranges as wide as the table; interleaving bounds both. Memoized per
     * (session, plan identity, params) like the other layout caches. */
-  private val zorderDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, String, String, Int), String]()
+  private val zorderDirs = graft.SessionMemo[
+    (Int, String, String, Int), String]("storage_zorder")
   def zorderRoundTrip(df: DataFrame, colA: String, colB: String,
-                      nFiles: Int): String = {
-    sweep(zorderDirs)
-    zorderDirs.compute(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash(),
-        colA, colB, nFiles),
-      { (_, cur) =>
-        if (cur != null && new java.io.File(cur).exists()) cur
-        else {
-          val dir = graft.TmpDirs
-            .create("graft_zorder_").toString
-          df.withColumn("__z", zValue(col(colA), col(colB)))
-            .repartitionByRange(nFiles, col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.mode("overwrite").parquet(dir)
-          dir
-        }
-      })
-  }
+                      nFiles: Int): String =
+    zorderDirs(df.sparkSession,
+        (df.queryExecution.analyzed.semanticHash(), colA, colB, nFiles),
+        valid = graft.SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_zorder_").toString
+      df.withColumn("__z", zValue(col(colA), col(colB)))
+        .repartitionByRange(nFiles, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
 
   /** Confs under which [[cboStarJoin]] plans: cost-based optimization +
     * its join-reorder pass. Both default OFF in Spark; a 100 TB
@@ -329,8 +260,8 @@ object Storage {
     "spark.sql.cbo.enabled" -> "true",
     "spark.sql.cbo.joinReorder.enabled" -> "true")
 
-  private val cboRegistered = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, String), String]()
+  private val cboRegistered =
+    graft.SessionMemo[(String, String, String), String]("storage_cbo_tables")
 
   /** One JVM-global lock PER DERIVED TABLE NAME: two sessions sharing a
     * warehouse derive the same catalog name, so serializing on the
@@ -351,19 +282,15 @@ object Storage {
     * scale factors — or two registrations of the same table with
     * different stats columns — are distinct tables that can never
     * clobber each other's DDL or serve stats computed for a different
-    * request. DDL+ANALYZE run OUTSIDE the map lock (the truthCache
-    * discipline); a lost race re-runs idempotent DDL on the same name,
-    * harmlessly. Returns the qualified name per requested table. */
+    * request. Returns the qualified name per requested table. */
   private[graft] def cboTables(spark: SparkSession, sfDir: String,
       tables: Map[String, Seq[String]]): Map[String, String] = {
-    sweep(cboRegistered)
     val sfx = java.lang.Integer.toHexString(sfDir.hashCode & 0x7fffffff)
     tables.map { case (t, statsCols) =>
       val cols = statsCols.mkString(",")
       val name = s"g_cbo_${t}_${sfx}_" +
         java.lang.Integer.toHexString(cols.hashCode & 0x7fffffff)
-      val key = (spark, sfDir, t, cols)
-      if (cboRegistered.get(key) == null) {
+      t -> cboRegistered(spark, (sfDir, t, cols)) {
         cboDdlLocks.computeIfAbsent(name, _ => new Object).synchronized {
           spark.sql(s"DROP TABLE IF EXISTS $name")
           spark.sql(s"CREATE TABLE $name USING parquet " +
@@ -371,9 +298,8 @@ object Storage {
           spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS " +
             s"FOR COLUMNS ${statsCols.mkString(", ")}")
         }
-        cboRegistered.putIfAbsent(key, name)
+        name
       }
-      t -> name
     }
   }
 

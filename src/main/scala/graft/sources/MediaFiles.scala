@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.SessionMemo
+
 /** Per-document FILE staging for the raw-file sources — the multimodal
   * ingestion path: real corpora arrive as directories of files (one
   * image/audio/text blob each), and Spark's `binaryFile` and `image`
@@ -19,19 +21,15 @@ import org.apache.spark.sql.SparkSession
   * kind): the three consumers of a staged dir share one write. */
 object MediaFiles {
 
-  private val dirs =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), String]()
+  private val dirs = SessionMemo[(String, String), String]("media_files")
 
   private def staged(spark: SparkSession, sfDir: String, kind: String)
                     (write: (SparkSession, String) => Unit): String =
-    dirs.compute((System.identityHashCode(spark), sfDir, kind), { (_, cur) =>
-      if (cur != null && new java.io.File(cur).exists()) cur
-      else {
-        val dir = graft.TmpDirs.create(s"graft_files_${kind}_").toString
-        write(spark, dir)
-        dir
-      }
-    })
+    dirs(spark, (sfDir, kind), valid = SessionMemo.dirExists) {
+      val dir = graft.TmpDirs.create(s"graft_files_${kind}_").toString
+      write(spark, dir)
+      dir
+    }
 
   /** One `<doc_id>.bin` file per document holding the UTF-8 text bytes. */
   def textFileDir(spark: SparkSession, sfDir: String): String =

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
+
 /** Structured-Streaming realizations of the reference pipeline (SURVEY.md
   * §2.8). The reference's Spark job is truncated right before these stages
   * (`/root/reference/spark-streaming.py:77-81`); the architecture notes
@@ -30,6 +32,9 @@ object StreamOps {
   final case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
                       event_type: String, value: Double)
 
+  /** The two staged arrival files of a one-pass split. */
+  private type StagedPair = (java.nio.file.Path, java.nio.file.Path)
+
   private val nameCounter = new AtomicLong(0)
   private def freshName(prefix: String): String =
     s"${prefix}_${nameCounter.incrementAndGet()}"
@@ -44,8 +49,7 @@ object StreamOps {
     * testdata's physical `ts` type has varied across generations — and
     * normalized to TimestampType in-plan (see
     * [[graft.Tables.normalizeTs]]). */
-  private val topicDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val topicDirs = SessionMemo[String, String]("stream_events_topic")
 
   /** The file stream source consumes a *directory* (a "topic" that receives
     * files over time). The driver fixture is a single read-only file, so
@@ -59,10 +63,10 @@ object StreamOps {
     * insensitive). Symlinking a directory whole would silently yield an
     * EMPTY stream — zero batches, vacuous results (the round-14 scaling
     * run caught exactly that). */
-  private def eventsTopicDir(dir: String): String =
-    topicDirs.computeIfAbsent(dir, { d =>
+  private def eventsTopicDir(spark: SparkSession, dir: String): String =
+    topicDirs(spark, dir) {
       val topic = graft.TmpDirs.create("graft_events_topic_")
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
+      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
       if (Files.isDirectory(src)) {
         Option(src.toFile.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -72,7 +76,7 @@ object StreamOps {
         Files.createSymbolicLink(topic.resolve("events.parquet"), src)
       }
       topic.toString
-    })
+    }
 
   /** Two-phase topic staging shared by the kill/restart, late-drop, and
     * watermarked-dedup harnesses: write `df` as ONE parquet file into the
@@ -143,12 +147,11 @@ object StreamOps {
     * two fsync-heavy commits to two O(1) link calls. The links are
     * fresh paths per topic, so each query's offset log tracks its own
     * arrivals; the shared bytes are immutable. */
-  private val parityStageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
+  private val parityStageMemo =
+    SessionMemo[String, StagedPair]("stream_parity_stage")
 
-  private def parityStagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    parityStageMemo.computeIfAbsent((spark, dir), { _ =>
+  private def parityStagedFiles(spark: SparkSession, dir: String): StagedPair =
+    parityStageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_parity_stage_")
       val staged = root.resolve("staged")
       val ev = graft.Tables.events(spark, dir)
@@ -168,18 +171,18 @@ object StreamOps {
           stageEmptySinglePart(root.resolve(s"empty_$parity"), ev))
       }
       (part(0), part(1))
-    })
+    }
 
   /** One-pass parity split of the DOCUMENTS table (doc_id, text only —
     * the streamed corpus front end needs nothing else) — the staged
     * layout behind [[streamingCanonicalDedup]], memoized per (session,
     * fixture dir) like [[parityStagedFiles]]. */
-  private val docParityMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
+  private val docParityMemo =
+    SessionMemo[String, StagedPair]("stream_doc_parity")
 
   private def docParityStagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    docParityMemo.computeIfAbsent((spark, dir), { _ =>
+      : StagedPair =
+    docParityMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_docparity_stage_")
       val staged = root.resolve("staged")
       val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
@@ -196,18 +199,18 @@ object StreamOps {
           stageEmptySinglePart(root.resolve(s"empty_$parity"), docs))
       }
       (part(0), part(1))
-    })
+    }
 
   /** One-pass USER-keyed split of the events table (`user_id % 3 != 0`
     * vs the rest) — the staged layout behind the seats whose second
     * batch must introduce NEW state keys (t41 time-travel). Memoized per
     * (session, fixture dir) like [[parityStagedFiles]]. */
-  private val userSplitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
+  private val userSplitMemo =
+    SessionMemo[String, StagedPair]("stream_user_split")
 
   private def userSplitStagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    userSplitMemo.computeIfAbsent((spark, dir), { _ =>
+      : StagedPair =
+    userSplitMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_usersplit_stage_")
       val staged = root.resolve("staged")
       val ev = graft.Tables.events(spark, dir)
@@ -228,7 +231,7 @@ object StreamOps {
           stageEmptySinglePart(root.resolve(s"empty_$b"), ev))
       }
       (part(0), part(1))
-    })
+    }
 
   /** One-pass TIME split of the events table at the midpoint of its ts
     * range — the staged layout behind the session seats (t9/t44), whose
@@ -242,12 +245,12 @@ object StreamOps {
     * straddle the boundary genuinely merge across the two batches —
     * the t13/t19/t22 cross-batch discipline, now real for sessions too.
     * Memoized per (session, fixture dir) like [[parityStagedFiles]]. */
-  private val timeSplitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
+  private val timeSplitMemo =
+    SessionMemo[String, StagedPair]("stream_time_split")
 
   private def timeSplitStagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    timeSplitMemo.computeIfAbsent((spark, dir), { _ =>
+      : StagedPair =
+    timeSplitMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_timesplit_stage_")
       val staged = root.resolve("staged")
       val ev = graft.Tables.events(spark, dir)
@@ -273,7 +276,7 @@ object StreamOps {
           stageEmptySinglePart(root.resolve(s"empty_$h"), ev))
       }
       (part(0), part(1))
-    })
+    }
 
   /** Land a staged file in `topic` as arrival `name` — a hard link
     * (src and topics share the [[graft.TmpDirs]] scratch filesystem),
@@ -309,12 +312,12 @@ object StreamOps {
     * topic dirs are SHARED across every join in the session — the
     * per-query source cost drops from two full-table scans to two
     * type-only three-column scans. */
-  private val typeTopicMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[String, java.nio.file.Path]]()
+  private val typeTopicMemo =
+    SessionMemo[String, Map[String, java.nio.file.Path]]("stream_type_topic")
 
   private def typedTopicDirs(spark: SparkSession, dir: String)
       : Map[String, java.nio.file.Path] =
-    typeTopicMemo.computeIfAbsent((spark, dir), { _ =>
+    typeTopicMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_type_topics_")
       val staged = root.resolve("staged")
       val types = Seq("click", "purchase")
@@ -335,7 +338,7 @@ object StreamOps {
         }
         t -> topic
       }.toMap
-    })
+    }
 
   /** Stream of ONE event type from the staged split — the staged file's
     * ts was written post-[[graft.Tables.normalizeTs]], so a plain
@@ -358,8 +361,7 @@ object StreamOps {
     * a listing + schema job per call, and every streaming query starts by
     * building this source, so memoize it (the fixture file is immutable
     * for the life of the process). */
-  private val tsDecls =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val tsDecls = SessionMemo[String, String]("stream_ts_decl")
 
   /** Arrival-metering knob (`SPARK_GRAFT_STREAM_MAX_FILES`), parsed
     * once with a validating error: a malformed value used to surface as
@@ -378,9 +380,9 @@ object StreamOps {
     // File sources need a declared schema; probe the static fixture once
     // (footer-only read) so the declaration matches the file's physical
     // ts type, then normalize in-plan exactly like the batch reader.
-    val tsDecl = tsDecls.computeIfAbsent(dir, { d =>
-      spark.read.parquet(s"$d/events.parquet").schema("ts").dataType.sql
-    })
+    val tsDecl = tsDecls(spark, dir) {
+      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType.sql
+    }
     graft.Tables.normalizeTs(
       spark.readStream
         .schema(s"event_id BIGINT, ts $tsDecl, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
@@ -390,7 +392,7 @@ object StreamOps {
         // scaling harness to SEPARATE per-row cost from per-batch commit
         // machinery — e.g. 32 collapses the scaled topic to one batch
         .option("maxFilesPerTrigger", streamMaxFiles)
-        .parquet(eventsTopicDir(dir)))
+        .parquet(eventsTopicDir(spark, dir)))
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
@@ -1204,8 +1206,8 @@ object StreamOps {
     * item). */
   private final case class CorpusRun(out: String, topic: java.nio.file.Path,
                                      recoverCkpt: String, recoverOut: String)
-  private val corpusRunMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), CorpusRun]()
+  private val corpusRunMemo =
+    SessionMemo[(String, Int), CorpusRun]("stream_corpus_run")
 
   /** `tolerateVanishing` is for CHECKPOINT trees only: the HDFS state
     * store's MAINTENANCE thread may rename a .snapshot temp file
@@ -1231,7 +1233,7 @@ object StreamOps {
 
   private def corpusFrontEndRun(spark: SparkSession, dir: String,
                                 width: Int): CorpusRun =
-    corpusRunMemo.computeIfAbsent((spark, dir, width), { _ =>
+    corpusRunMemo(spark, (dir, width)) {
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val (root, topic) = freshTopic("graft_t45_")
         val (even, odd) = docParityStagedFiles(spark, dir)
@@ -1261,7 +1263,7 @@ object StreamOps {
         } finally q.stop()
         CorpusRun(out, topic, recoverCkpt.toString, recoverOut.toString)
       } }
-    })
+    }
 
   /** T46: MULTI-QUERY CONCURRENCY — two independent stateful streaming
     * queries over the SAME topic, running CONCURRENTLY in one
@@ -1356,11 +1358,11 @@ object StreamOps {
     * Memoized so a post-board resample doesn't re-drive the stream
     * against an already-consumed checkpoint (the seat is flagged
     * `resampled_memoized` in the bench artifact). */
-  private val corpusRecoverMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), String]()
+  private val corpusRecoverMemo =
+    SessionMemo[(String, Int), String]("stream_corpus_recover")
   private def corpusRecoverRun(spark: SparkSession, dir: String,
                                width: Int): String =
-    corpusRecoverMemo.computeIfAbsent((spark, dir, width), { _ =>
+    corpusRecoverMemo(spark, (dir, width)) {
       val run = corpusFrontEndRun(spark, dir, width)
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val q2 = startDigestFold(gatedDigestUpdates(spark, run.topic),
@@ -1368,7 +1370,7 @@ object StreamOps {
         try q2.processAllAvailable() finally q2.stop()
       } }
       run.recoverOut
-    })
+    }
 
   /** T49: BOUNDED-STATE corpus front end — the watermark/TTL-evicted
     * sibling of [[streamingCanonicalDedup]], closing the one remaining
@@ -1444,11 +1446,9 @@ object StreamOps {
     * groups); batch 1 re-delivers the whole table at the late anchor.
     * Each arrival is ONE file, so the batch split — and therefore the
     * watermark schedule the oracle replays — is exact. */
-  private val t49StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-  private def t49StagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    t49StageMemo.computeIfAbsent((spark, dir), { _ =>
+  private val t49StageMemo = SessionMemo[String, StagedPair]("stream_t49_stage")
+  private def t49StagedFiles(spark: SparkSession, dir: String): StagedPair =
+    t49StageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t49_stage_")
       val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
       stageTopicFile(root, root, "arrival0", docs.withColumn("ts",
@@ -1457,7 +1457,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1", docs.withColumn("ts",
         expr("timestamp'2024-01-11 00:00:00'")))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T50: STREAMING MULTIMODAL INGEST GATE — the mm tier's batch
     * kernels applied on the continuous path a 100 TB multimodal
@@ -1512,11 +1512,9 @@ object StreamOps {
     * reader sees a valid magic and no IHDR), split into two single-file
     * arrivals by doc parity so the admission counters provably update
     * across a batch boundary. */
-  private val t50StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-  private def t50StagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    t50StageMemo.computeIfAbsent((spark, dir), { _ =>
+  private val t50StageMemo = SessionMemo[String, StagedPair]("stream_t50_stage")
+  private def t50StagedFiles(spark: SparkSession, dir: String): StagedPair =
+    t50StageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t50_stage_")
       val pay = graft.ext.MediaPayloads.payload(spark, dir, "png")
         .withColumn("media_bytes",
@@ -1528,7 +1526,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         pay.filter(pmod(col("doc_id"), lit(2)) === 1))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T54: STREAMING AUDIO INGEST GATE — the t50 discipline applied to
     * the audio modality, so the mm tier's continuous path covers more
@@ -1580,11 +1578,9 @@ object StreamOps {
     * truncated to its 8-byte RIFF prefix (a REAL undecodable stub),
     * split into two single-file arrivals by doc parity so the
     * admission counters provably update across a batch boundary. */
-  private val t54StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-  private def t54StagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    t54StageMemo.computeIfAbsent((spark, dir), { _ =>
+  private val t54StageMemo = SessionMemo[String, StagedPair]("stream_t54_stage")
+  private def t54StagedFiles(spark: SparkSession, dir: String): StagedPair =
+    t54StageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t54_stage_")
       val pay = graft.ext.MediaPayloads.payload(spark, dir, "wav")
         .withColumn("media_bytes",
@@ -1596,7 +1592,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         pay.filter(pmod(col("doc_id"), lit(2)) === 1))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T55: STREAMING VIDEO INGEST GATE — the third codec family on the
     * continuous path, completing the t50 (image) / t54 (audio)
@@ -1654,11 +1650,9 @@ object StreamOps {
     * 8-byte RIFF prefix, split into two single-file arrivals by
     * doc_id % 4 parity so both arrivals carry clips AND corrupt
     * payloads across a batch boundary. */
-  private val t55StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-  private def t55StagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    t55StageMemo.computeIfAbsent((spark, dir), { _ =>
+  private val t55StageMemo = SessionMemo[String, StagedPair]("stream_t55_stage")
+  private def t55StagedFiles(spark: SparkSession, dir: String): StagedPair =
+    t55StageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t55_stage_")
       val pay = graft.ext.MediaPayloads.payload(spark, dir, "avi")
         .withColumn("media_bytes",
@@ -1670,7 +1664,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         pay.filter(pmod(col("doc_id"), lit(4)) === 2))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T51: STREAM-SIDE SCHEMA DRIFT on the corpus front end — a new
     * column starts arriving mid-topic (the r16 verdict's thin-surface
@@ -1715,18 +1709,18 @@ object StreamOps {
     * new `lang` column), memoized per (session, fixture) — the narrow
     * pre-drift arrival reuses [[docParityStagedFiles]]' even file
     * as-is, so only this one staging write is t51's own. */
-  private val t51StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.nio.file.Path]()
+  private val t51StageMemo =
+    SessionMemo[String, java.nio.file.Path]("stream_t51_stage")
   private def t51StagedWideFile(spark: SparkSession,
                                 dir: String): java.nio.file.Path =
-    t51StageMemo.computeIfAbsent((spark, dir), { _ =>
+    t51StageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t51_stage_")
       stageTopicFile(root, root, "arrival1",
         graft.Tables.documents(spark, dir)
           .filter(pmod(col("doc_id"), lit(2)) === 1)
           .select("doc_id", "text", "lang"))
       root.resolve("arrival1.parquet")
-    })
+    }
 
   /** T53: STREAMING INCREMENTAL DEDUP — the batch `dedup_incremental`
     * triage run the way a production crawler actually runs it: the new
@@ -1798,11 +1792,9 @@ object StreamOps {
     * the dedup_incremental fixture's increment (new docs + re-keyed
     * recrawls) split into two single-file arrivals so the triage
     * provably spans a batch boundary. */
-  private val t53StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-  private def t53StagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    t53StageMemo.computeIfAbsent((spark, dir), { _ =>
+  private val t53StageMemo = SessionMemo[String, StagedPair]("stream_t53_stage")
+  private def t53StagedFiles(spark: SparkSession, dir: String): StagedPair =
+    t53StageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t53_stage_")
       val docs = graft.Tables.documents(spark, dir)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
@@ -1815,7 +1807,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         increment.filter(pmod(col("doc_id"), lit(2)) === 1))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T48: TWO-HOP streaming pipeline chained through an exactly-once
     * FILE SINK — the multi-job topology a 100 TB platform actually
@@ -1880,12 +1872,12 @@ object StreamOps {
     * seats are flagged `resampled_memoized` in the bench artifact. */
   private final case class TwoHopRun(table: String, rowsAOut: Long,
                                      rowsBIn: Long)
-  private val twoHopRunMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), TwoHopRun]()
+  private val twoHopRunMemo =
+    SessionMemo[(String, Int), TwoHopRun]("stream_two_hop_run")
 
   private def twoHopRun(spark: SparkSession, dir: String,
                         width: Int): TwoHopRun =
-    twoHopRunMemo.computeIfAbsent((spark, dir, width), { _ =>
+    twoHopRunMemo(spark, (dir, width)) {
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val (root, topic) = freshTopic("graft_t48_")
         val mid = root.resolve("mid").toString
@@ -1939,7 +1931,7 @@ object StreamOps {
         TwoHopRun(tableB, observedSum(qA, "hopA", "rows_out"),
           observedSum(qB, "hopB", "rows_in"))
       } }
-    })
+    }
 
   /** T5: stateful streaming dedup — the engine form of the reference's
     * UNIQUE(voter_id) gate (`/root/reference/main.py:55-59`). Emits each
@@ -1967,12 +1959,12 @@ object StreamOps {
     * the memory sink's temp view outlives the stopped query, and the
     * two paced arrivals guarantee the checkpoint's state crossed a
     * batch boundary (the t27 grading requirement). */
-  private val dedupRunMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (String, String)]()
+  private val dedupRunMemo =
+    SessionMemo[(String, Int), (String, String)]("stream_dedup_run")
 
   private def dedupPipelineRun(spark: SparkSession, dir: String,
                                width: Int): (String, String) =
-    dedupRunMemo.computeIfAbsent((spark, dir, width), { _ =>
+    dedupRunMemo(spark, (dir, width)) {
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val (root, topic) = freshTopic("graft_t5_")
         val ckpt = root.resolve("ckpt").toString
@@ -1991,7 +1983,7 @@ object StreamOps {
         try q.processAllAvailable() finally q.stop()
         (table, ckpt)
       } }
-    })
+    }
 
   /** The t5 GRADED entry: the shared pipeline run's append emissions
     * (see [[dedupPipelineRun]] — same pipeline, same oracle as
@@ -2087,12 +2079,12 @@ object StreamOps {
     * (never the warm pass). RocksDB provider is inherent — TWS refuses
     * the HDFS-heap provider — and the conf scope closes before the
     * memo returns, so the provider override cannot leak. */
-  private val twsTotalsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (String, String)]()
+  private val twsTotalsMemo =
+    SessionMemo[(String, Int), (String, String)]("stream_tws_totals")
 
   private def twsTotalsRun(spark: SparkSession, dir: String,
                            width: Int): (String, String) =
-    twsTotalsMemo.computeIfAbsent((spark, dir, width), { _ =>
+    twsTotalsMemo(spark, (dir, width)) {
       withConf(spark, Map(
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
@@ -2117,7 +2109,7 @@ object StreamOps {
           (table, ckpt)
         } }
       }
-    })
+    }
 
   /** V1 state for [[stateSchemaUpgradeTotals]] — named-field case class,
     * because Avro state-schema evolution resolves fields BY NAME: the V2
@@ -2308,24 +2300,9 @@ object StreamOps {
   /** The memoized ingest behind the two t29 serving shapes: one grown
     * corpus per (session, fixture dir), exactly like the Storage layout
     * memos — the ingest cost lands on whichever serve runs first (its
-    * graded surface), the second measures pure serving. Cleared by
-    * [[clearCaches]] at driver teardown. */
-  private val ivfIngestMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, Array[(Long, Array[Double])])]()
-
-  /** Release the per-session ingest layouts and staged parity splits
-    * (Verify/Bench teardown — the DedupOps/Storage clearCaches
-    * discipline). */
-  def clearCaches(): Unit = {
-    ivfIngestMemo.clear(); parityStageMemo.clear(); typeTopicMemo.clear()
-    maxTsMemo.clear(); sentinelMemo.clear()
-    t37WarmMemo.clear(); userSplitMemo.clear(); docParityMemo.clear()
-    timeSplitMemo.clear(); dedupRunMemo.clear(); twsTotalsMemo.clear()
-    corpusRunMemo.clear(); corpusRecoverMemo.clear()
-    twoHopRunMemo.clear(); t49StageMemo.clear(); t50StageMemo.clear()
-    t51StageMemo.clear(); t5bStageMemo.clear(); t53StageMemo.clear()
-    t54StageMemo.clear(); t55StageMemo.clear()
-  }
+    * graded surface), the second measures pure serving. */
+  private val ivfIngestMemo = SessionMemo[String,
+    (String, String, Array[(Long, Array[Double])])]("stream_ivf_ingest")
 
   /** Bench warm hook: materialize the session's memoized staged
     * layouts for `dir` — the parity split (t1/t34/t35/t37/s9/s10) and
@@ -2373,67 +2350,67 @@ object StreamOps {
 
   private def ivfIngestedSegments(spark: SparkSession, dir: String)
       : (String, String, Array[(Long, Array[Double])]) =
-    ivfIngestMemo.computeIfAbsent((spark, dir), { _ =>
-        import graft.ext.SimilarityOps.{vecD, centroidsOf}
-        graft.functions.GraftExtensions.register(spark)
-        val (root, topic) = freshTopic("graft_t29_")
-        val ckpt = root.resolve("ckpt").toString
-        val baseDir = root.resolve("base").toString
-        val ingestDir = root.resolve("ingest").toString
+    ivfIngestMemo(spark, dir) {
+      import graft.ext.SimilarityOps.{vecD, centroidsOf}
+      graft.functions.GraftExtensions.register(spark)
+      val (root, topic) = freshTopic("graft_t29_")
+      val ckpt = root.resolve("ckpt").toString
+      val baseDir = root.resolve("base").toString
+      val ingestDir = root.resolve("ingest").toString
 
-        val emb = graft.Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("label").cast("long").as("cell"),
-            vecD("embedding").as("v"))
-        val base = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
-        base.select("vec_id", "v", "cell")
-          .write.partitionBy("cell").parquet(baseDir)
+      val emb = graft.Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("label").cast("long").as("cell"),
+          vecD("embedding").as("v"))
+      val base = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+      base.select("vec_id", "v", "cell")
+        .write.partitionBy("cell").parquet(baseDir)
 
-        // build-time quantizer: per-cell centroids of the SEALED base
-        // only (one bounded collect — cells·d doubles)
-        val cents = centroidsOf(base, "cell").collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val unit = cents.sortBy(_._1).map { case (cell, cv) =>
-          val n = math.sqrt(cv.map(x => x * x).sum)
-          (cell, cv.map(_ / n).toSeq)
-        }.toSeq
+      // build-time quantizer: per-cell centroids of the SEALED base
+      // only (one bounded collect — cells·d doubles)
+      val cents = centroidsOf(base, "cell").collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      val unit = cents.sortBy(_._1).map { case (cell, cv) =>
+        val n = math.sqrt(cv.map(x => x * x).sum)
+        (cell, cv.map(_ / n).toSeq)
+      }.toSeq
 
-        // continuous ingest: two staged arrival files = two micro-batches
-        // (one partitioned write splits the arrivals — the t4 one-pass
-        // staging pattern; the flag is a partition dir, not a column)
-        val stagedDir = root.resolve("staged")
-        emb.filter(pmod(col("vec_id"), lit(2)) === 1)
-          .select(col("vec_id"), col("v"),
-            pmod(col("vec_id"), lit(4)).as("__arr"))
-          .coalesce(1)
-          .write.partitionBy("__arr").parquet(stagedDir.toString)
-        Seq(1 -> "f0", 3 -> "f1").foreach { case (flag, name) =>
-          moveStagedPart(stagedDir, s"__arr=$flag", topic, name)
-        }
-        // centroids through a broadcast one-row COLUMN (stream-static
-        // equi-join on a constant key), not a typedlit: the literal
-        // would inline cells·d doubles into the expression tree — the
-        // compile-once rationale the PQ family documents at
-        // [[graft.ext.SimilarityOps.pqCodesAndBooksUncached]], applied
-        // to the one site that still carried the literal form
-        val unitRow = spark.createDataFrame(Seq(Tuple1(unit)))
-          .toDF("cents").withColumn("__one", lit(1))
-        val q = spark.readStream
-          .schema("vec_id BIGINT, v ARRAY<DOUBLE>")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(topic.toString)
-          .withColumn("__one", lit(1))
-          .join(broadcast(unitRow), "__one")
-          .select(col("vec_id"), col("v"),
-            call_function("centroid_argmax", col("v"),
-              col("cents")).as("cell"))
-          .writeStream.format("parquet")
-          .option("path", ingestDir)
-          .option("checkpointLocation", ckpt)
-          .partitionBy("cell")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        (baseDir, ingestDir, cents)
-      })
+      // continuous ingest: two staged arrival files = two micro-batches
+      // (one partitioned write splits the arrivals — the t4 one-pass
+      // staging pattern; the flag is a partition dir, not a column)
+      val stagedDir = root.resolve("staged")
+      emb.filter(pmod(col("vec_id"), lit(2)) === 1)
+        .select(col("vec_id"), col("v"),
+          pmod(col("vec_id"), lit(4)).as("__arr"))
+        .coalesce(1)
+        .write.partitionBy("__arr").parquet(stagedDir.toString)
+      Seq(1 -> "f0", 3 -> "f1").foreach { case (flag, name) =>
+        moveStagedPart(stagedDir, s"__arr=$flag", topic, name)
+      }
+      // centroids through a broadcast one-row COLUMN (stream-static
+      // equi-join on a constant key), not a typedlit: the literal
+      // would inline cells·d doubles into the expression tree — the
+      // compile-once rationale the PQ family documents at
+      // [[graft.ext.SimilarityOps.pqCodesAndBooksUncached]], applied
+      // to the one site that still carried the literal form
+      val unitRow = spark.createDataFrame(Seq(Tuple1(unit)))
+        .toDF("cents").withColumn("__one", lit(1))
+      val q = spark.readStream
+        .schema("vec_id BIGINT, v ARRAY<DOUBLE>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(topic.toString)
+        .withColumn("__one", lit(1))
+        .join(broadcast(unitRow), "__one")
+        .select(col("vec_id"), col("v"),
+          call_function("centroid_argmax", col("v"),
+            col("cents")).as("cell"))
+        .writeStream.format("parquet")
+        .option("path", ingestDir)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("cell")
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      (baseDir, ingestDir, cents)
+    }
 
   /** The grown corpus: sealed base segment ∪ streamed ingest segment,
     * each Hive-partitioned by cell (explicit schema: the partition
@@ -2719,11 +2696,11 @@ object StreamOps {
   /** The t5b late re-delivery arrival (a third of the users' events,
     * one hour older, fresh event ids), memoized per (session, fixture)
     * like the parity splits. */
-  private val t5bStageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.nio.file.Path]()
+  private val t5bStageMemo =
+    SessionMemo[String, java.nio.file.Path]("stream_t5b_stage")
   private def t5bRedeliveryFile(spark: SparkSession,
                                 dir: String): java.nio.file.Path =
-    t5bStageMemo.computeIfAbsent((spark, dir), { _ =>
+    t5bStageMemo(spark, dir) {
       val root = graft.TmpDirs.create("graft_t5b_stage_")
       stageTopicFile(root, root, "redelivery",
         graft.Tables.events(spark, dir)
@@ -2732,22 +2709,21 @@ object StreamOps {
           .withColumn("ts", col("ts") - expr("INTERVAL 1 HOUR"))
           .withColumn("event_id", col("event_id") + lit(10000000L)))
       root.resolve("redelivery.parquet")
-    })
+    }
 
   /** Max event time per (session, fixture) — the sentinel/finalization
     * anchor several watermark harnesses need (t4, t9, t42, t44). One
     * bounded scalar from a ts-column-only scan, memoized so the board
     * pays the job once per fixture, not once per seat. */
-  private val maxTsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Option[Timestamp]]()
+  private val maxTsMemo =
+    SessionMemo[String, Option[Timestamp]]("stream_max_ts")
   /** None iff the events fixture is EMPTY (max over zero rows is null —
     * the degenerate-fixture case every harness here must survive, per
-    * the [[moveStagedPart]] contract). `computeIfAbsent` would drop a
-    * null mapping, so the memo stores the Option. */
+    * the [[moveStagedPart]] contract), so the memo stores the Option. */
   private[streaming] def maxEventTs(spark: SparkSession, dir: String): Option[Timestamp] =
-    maxTsMemo.computeIfAbsent((spark, dir), { _ =>
+    maxTsMemo(spark, dir) {
       Option(graft.Tables.events(spark, dir).agg(max("ts")).head().getTimestamp(0))
-    })
+    }
 
   /** One staged single-row watermark-sentinel parquet file per (session,
     * instant): the sentinel row's CONTENT depends only on its event time
@@ -2756,10 +2732,10 @@ object StreamOps {
     * machinery — is memoized and each harness hard-links the shared
     * immutable file into its own topic as a fresh arrival. t4 and t42
     * both flush at max(ts); t9 and t44 share one far-future anchor. */
-  private val sentinelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Long), java.nio.file.Path]()
+  private val sentinelMemo =
+    SessionMemo[Long, java.nio.file.Path]("stream_sentinel")
   private def sentinelFile(spark: SparkSession, atMs: Long): java.nio.file.Path =
-    sentinelMemo.computeIfAbsent((spark, atMs), { _ =>
+    sentinelMemo(spark, atMs) {
       val dir = graft.TmpDirs.create("graft_sentinel_")
       val staged = dir.resolve("staged")
       spark.range(1).select(
@@ -2773,7 +2749,7 @@ object StreamOps {
         .find(_.getName.endsWith(".parquet"))
         .map(_.toPath)
         .getOrElse(sys.error(s"sentinel stage produced no part under $staged"))
-    })
+    }
   private def sentinelArrival(spark: SparkSession, atMs: Long,
                               topic: java.nio.file.Path, name: String): Unit =
     linkArrival(sentinelFile(spark, atMs), topic, name)
@@ -3843,10 +3819,9 @@ object StreamOps {
   /** The t37 prior-deployment warm table (departed users' complete
     * history + active users' even half, folded to per-user totals),
     * staged once per (session, fixture) — see [[twsInitialStateTotals]]. */
-  private val t37WarmMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val t37WarmMemo = SessionMemo[String, DataFrame]("stream_t37_warm")
   private def t37WarmTable(spark: SparkSession, dir: String): DataFrame =
-    t37WarmMemo.computeIfAbsent((spark, dir), { _ =>
+    t37WarmMemo(spark, dir) {
       val warmPath = graft.TmpDirs.create("graft_t37_warm_")
         .resolve("warm").toString
       graft.Tables.events(spark, dir)
@@ -3858,7 +3833,7 @@ object StreamOps {
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
         .write.parquet(warmPath)
       spark.read.parquet(warmPath)
-    })
+    }
 
   /** T37: `transformWithState` with **INITIAL STATE** — the warm-start
     * migration a live deployment actually performs: keyed state
@@ -4025,18 +4000,17 @@ object StreamOps {
     * small keyed count. Batch/stream parity is exact (same predicate
     * expressions), which is what lets the batch SQL oracle grade the
     * streaming execution. */
-  private val docTopicDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val docTopicDirs = SessionMemo[String, String]("stream_docs_topic")
   /** The documents table as a file-stream source (symlinked topic dir,
     * same discipline as [[eventsTopicDir]]). */
   private def docStream(spark: SparkSession, dir: String): DataFrame = {
-    val topic = docTopicDirs.computeIfAbsent(dir, { d =>
+    val topic = docTopicDirs(spark, dir) {
       val t = graft.TmpDirs.create("graft_docs_topic_")
       Files.createSymbolicLink(
         t.resolve("documents.parquet"),
-        java.nio.file.Paths.get(s"$d/documents.parquet"))
+        java.nio.file.Paths.get(s"$dir/documents.parquet"))
       t.toString
-    })
+    }
     spark.readStream
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
       .option("maxFilesPerTrigger", 1)

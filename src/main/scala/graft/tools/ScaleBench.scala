@@ -65,26 +65,13 @@ object ScaleBench {
     "j9_bloom_join",
     // classifier SERVING at scale (train excluded — the memoized-weights
     // broadcast is the part that could hide a driver-side bottleneck;
-    // clearAll() per rep means each reading retrains, so the exponent
-    // upper-bounds the serve-only cost)
+    // SessionMemo.clearAll() per rep means each reading retrains, so the
+    // exponent upper-bounds the serve-only cost)
     "quality_lr_score")
 
   def seats: Seq[String] = sys.env.get("SPARK_GRAFT_SCALE_SEATS")
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     .getOrElse(defaultSeats)
-
-  private def clearAll(): Unit = {
-    graft.ext.DedupOps.clearCaches()
-    graft.ops.Storage.clearCaches()
-    graft.ops.FuzzyJoin.clearCaches()
-    graft.streaming.StreamOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.ext.TextOps.clearCaches()
-    graft.ext.ClassifierOps.clearCaches()
-    graft.ext.MediaPayloads.clearCaches()
-    graft.SparkEntry.clearCaches()
-    graft.Tables.clearCaches()
-  }
 
   def main(args: Array[String]): Unit = {
     graft.TmpDirs.install()
@@ -125,7 +112,7 @@ object ScaleBench {
 
     def timeSeat(name: String, dir: String): Double =
       (1 to reps).map { _ =>
-        clearAll()
+        graft.SessionMemo.clearAll()
         val t0 = System.nanoTime()
         try { queries(name)(spark, dir).count(); () }
         catch { case e: Throwable =>
@@ -162,7 +149,7 @@ object ScaleBench {
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
     println(json)
-    clearAll()
+    graft.SessionMemo.clearAll()
     spark.stop()
   }
 }

@@ -19,23 +19,23 @@ class R17OptimizationSpec extends SparkSpec {
   private val width = spark.sparkContext.defaultParallelism
 
   test("fuzzy-join probe memo is sealed at session width, not one partition") {
-    graft.ops.FuzzyJoin.clearCaches()
+    graft.ops.FuzzyJoin.probeMemo.clear(); graft.ops.FuzzyJoin.indexMemo.clear()
     val dirty = Seq(1L -> "red widget", 2L -> "blue bolt").toDF("dirty_id", "dirty_name")
     val clean = Seq("red widget", "blue bolt", "hot gear").toDF("entity")
     graft.ops.FuzzyJoin
       .editDistanceJoin(dirty, "dirty_name", Seq("dirty_id"), clean, "entity", 2)
       .count()
-    val widths = graft.ops.FuzzyJoin.memoizedProbeWidths
+    val widths = graft.ops.FuzzyJoin.probeMemo.values.map(_.rdd.getNumPartitions)
     assert(widths.nonEmpty, "probe memo not populated")
     assert(widths.forall(_ == width),
       s"probe checkpoint widths $widths != defaultParallelism $width")
   }
 
   test("shingle memo is sealed at session width, not one partition") {
-    graft.ext.DedupOps.clearCaches()
+    graft.ext.DedupOps.shingleMemo.clear(); graft.ext.DedupOps.commonMemo.clear()
     val docs = Tables.documents(spark, sfDir)
     graft.ext.DedupOps.ngramJaccardTopPairs(docs, 3, 5).count()
-    val widths = graft.ext.DedupOps.shingleMemoWidths
+    val widths = graft.ext.DedupOps.shingleMemo.values.map(_.rdd.getNumPartitions)
     assert(widths.nonEmpty, "shingle memo not populated")
     assert(widths.forall(_ == width),
       s"shingle checkpoint widths $widths != defaultParallelism $width")
