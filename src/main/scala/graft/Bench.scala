@@ -384,17 +384,18 @@ object Bench {
           spark.range(1000).selectExpr("id", "id * 31 AS v")
             .coalesce(1).write.parquet(topic)
           val table = s"graft_calib_stream_$i"
-          val q = spark.readStream.schema("id BIGINT, v BIGINT")
-            .parquet(topic)
-            .groupBy(org.apache.spark.sql.functions.pmod(
-              org.apache.spark.sql.functions.col("id"),
-              org.apache.spark.sql.functions.lit(8)).as("b"))
-            .count()
-            .writeStream.format("memory").queryName(table)
-            .option("checkpointLocation", d.resolve("ckpt").toString)
-            .outputMode("complete")
-            .start()
-          try q.processAllAvailable() finally q.stop()
+          // the seats' own start/drain/stop harness
+          graft.streaming.StreamOps.drain()(
+            spark.readStream.schema("id BIGINT, v BIGINT")
+              .parquet(topic)
+              .groupBy(org.apache.spark.sql.functions.pmod(
+                org.apache.spark.sql.functions.col("id"),
+                org.apache.spark.sql.functions.lit(8)).as("b"))
+              .count()
+              .writeStream.format("memory").queryName(table)
+              .option("checkpointLocation", d.resolve("ckpt").toString)
+              .outputMode("complete")
+              .start())
           // the memory sink registers a TEMP VIEW, not a table
           spark.catalog.dropTempView(table)
           (System.nanoTime() - t0) / 1e9

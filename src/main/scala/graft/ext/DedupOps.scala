@@ -79,7 +79,7 @@ object DedupOps {
     // maxDf cap) lets the (doc_a, doc_b) count complete in place.
     // Interleaved in-JVM A/B at 32 cores on the memoized shingle input:
     // 2.60-3.08 s -> 1.58-2.18 s for the full pair pass, 1 130 536 rows
-    // identical (OPTIMIZATION_r18.md).
+    // identical (plans: plans/r18/dedup_paircount_{before,after}.txt).
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val common = a.join(b, shKey)
       .filter(col("doc_a") < col("doc_b"))
@@ -621,7 +621,7 @@ object DedupOps {
     // the increment), so the partition count tracks the session's
     // configured shuffle width, never a local constant. Interleaved
     // in-JVM A/B at 32 cores: shipped 1.12–2.00 s vs 0.90–1.38 s per
-    // batch, rows identical (OPTIMIZATION_r18.md).
+    // batch, rows identical (plans: plans/r18/t53_triage_{before,after}.txt).
     val parts = increment.sparkSession.sessionState.conf.numShufflePartitions
     val nearDup = shInc.select((col("doc_id").as("inc_id") +: shKey.map(col)): _*)
       .join(idx.sh.select((col("doc_id").as("corp_id") +: shKey.map(col)): _*),

@@ -52,7 +52,7 @@ class StateSchemaUpgradeSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "value")
     // the file source lists the topic dir non-recursively: stage the
-    // parquet part FILE into it (the StreamOps.stageTopicFile discipline)
+    // parquet part FILE into it (as StreamOps' staged arrivals do)
     def stage(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val staged = root.resolve(s"${name}_stage").toString
       df.coalesce(1).write.parquet(staged)

@@ -348,10 +348,12 @@ class StreamingSpec extends SparkSpec {
 
   test("T9/T44 pacing: real events genuinely span two micro-batches " +
        "(the time-split stage, not a single drain)") {
-    StreamOps.lastSessionRealBatches = -1
     StreamOps.streamingSessionCounts(spark, sfDir).count()
-    assert(StreamOps.lastSessionRealBatches >= 2,
-      s"session harness processed ${StreamOps.lastSessionRealBatches} " +
+    // batches with >1 input row are the REAL halves (each sentinel batch
+    // carries exactly 1 row)
+    val real = StreamOps.lastDrained.recentProgress.count(_.numInputRows > 1)
+    assert(real >= 2,
+      s"session harness processed $real " +
         "real-data batches — cross-batch session merging is no longer " +
         "exercised (the r15 advisory's single-drain regression)")
   }
@@ -1098,5 +1100,61 @@ class StreamingSpec extends SparkSpec {
     // keeps exactly one — survivors equal per-lang distinct-text counts
     // (planted exact-dup texts collapse too)
     assert(out === want)
+  }
+
+  test("drain lands each arrival group as exactly one data micro-batch " +
+       "(t50, t53)") {
+    Seq[(String, () => Unit)](
+      "t50" -> (() => StreamOps.streamingMediaGate(spark, sfDir).collect()),
+      "t53" -> (() => StreamOps.streamingIncrementalDedup(spark, sfDir).collect())
+    ).foreach { case (seat, run) =>
+      run()
+      val data = StreamOps.lastDrained.recentProgress.count(_.numInputRows > 0)
+      assert(data === 2,
+        s"$seat ran $data data micro-batches, want one per arrival group (2)")
+    }
+  }
+
+  test("a layout with an empty arrival stages a zero-row file, and the " +
+       "seat still returns its batch truth (s9 over an even-only fixture)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_even_only_fixture_")
+    Tables.events(spark, sfDir).filter(pmod(col("event_id"), lit(2)) === 0)
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val Seq(even, odd) =
+      StreamOps.stagedFiles(spark, dir.toString, "stream_parity_stage")
+    assert(spark.read.parquet(odd.toString).count() === 0L,
+      "the empty odd arrival must be a zero-row file")
+    assert(spark.read.parquet(even.toString).count() > 0L)
+    val got = StreamOps.fileSinkExactlyOnce(spark, dir.toString)
+      .as[(String, Long, Long)].collect().toSet
+    val want = Tables.events(spark, dir.toString)
+      .groupBy("event_type")
+      .agg(count(lit(1)), sum(round(col("value") * 100).cast("long")))
+      .as[(String, Long, Long)].collect().toSet
+    assert(got.nonEmpty && got === want)
+  }
+
+  test("a staging write with more than one part file per arrival fails " +
+       "the require") {
+    val root = Files.createTempDirectory("graft_stage_require_")
+    val rows = spark.range(3).select(col("id"), lit(0).as(StreamOps.Arrival))
+    val e = intercept[IllegalArgumentException] {
+      StreamOps.withConf(spark, Map("spark.sql.files.maxRecordsPerFile" -> "1")) {
+        StreamOps.stageArrivals(rows, 1, root)
+      }
+    }
+    assert(e.getMessage.contains("part files"))
+  }
+
+  test("a layout whose staged file was cleaned from under the memo " +
+       "re-stages: t50 returns the same rows") {
+    val before = StreamOps.streamingMediaGate(spark, sfDir).collect().toSet
+    val staged = StreamOps.stagedFiles(spark, sfDir, "stream_t50_stage")
+    Files.delete(staged(1))
+    val after = StreamOps.streamingMediaGate(spark, sfDir).collect().toSet
+    assert(after === before)
+    val restaged = StreamOps.stagedFiles(spark, sfDir, "stream_t50_stage")
+    assert(restaged.forall(Files.exists(_)) && restaged != staged)
   }
 }
