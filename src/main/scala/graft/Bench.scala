@@ -46,18 +46,108 @@ object Bench {
     // board per micro-batch.
     "vote_e2e_party_tally", "vote_e2e_turnout_by_state")
 
+  /** The two timing flags; neither set = the driver's board run.
+    *  - `--reps N`: time each seat `SPARK_GRAFT_BENCH_FILTER` selects N
+    *    times after the warm pass.
+    *  - `--ab <conf>=<a>,<b>` (repeatable): an in-JVM interleaved A/B.
+    *    Arm a sets every flag's `a`, arm b every `b`, scoped by
+    *    [[graft.streaming.StreamOps.withConf]]; each arm runs a seat once
+    *    untimed, then the arms alternate `--reps` times (default 1) and
+    *    the min per arm counts. Host drift cancels per seat, unlike
+    *    cross-JVM run pairs.
+    * Either flag skips the calib probes, the resample pass and every
+    * JSON or artifact write. */
+  private[graft] final case class Mode(reps: Option[Int] = None,
+                                       ab: Seq[(String, String, String)] = Nil) {
+    def board: Boolean = reps.isEmpty && ab.isEmpty
+    def arms: Seq[Map[String, String]] =
+      Seq(ab.map(f => f._1 -> f._2).toMap, ab.map(f => f._1 -> f._3).toMap)
+  }
+
+  private val AbFlag = "([^=,]+)=([^,]+),([^,]+)".r
+
+  private[graft] def parseArgs(args: List[String], m: Mode = Mode()): Either[String, Mode] =
+    args match {
+      case Nil => Right(m)
+      case "--reps" :: n :: rest => n.toIntOption.filter(_ > 0) match {
+        case Some(r) => parseArgs(rest, m.copy(reps = Some(r)))
+        case None => Left(s"--reps takes a positive integer, got '$n'")
+      }
+      case "--ab" :: AbFlag(k, a, b) :: rest => parseArgs(rest, m.copy(ab = m.ab :+ ((k, a, b))))
+      case "--ab" :: f :: _ => Left(s"--ab takes <conf>=<a>,<b>, got '$f'")
+      case f :: _ => Left(s"unknown or incomplete argument '$f'")
+    }
+
+  private[graft] type Seat = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** One timed run; NaN when the seat fails, so a failure can never read
+    * as a fast arm. */
+  private def timeOnce(spark: SparkSession, sfDir: String, name: String, fn: Seat): Double = {
+    val t0 = System.nanoTime()
+    try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      Double.NaN
+    }
+  }
+
+  /** Per seat, the min reading of each arm. A memo-backed seat's later
+    * runs read a memo hit, so it is flagged and left out of the totals,
+    * as is a seat that failed in either arm. */
+  private[graft] final case class AbRow(seat: String, a: Double, b: Double) {
+    def counted: Boolean = !a.isNaN && !b.isNaN && !memoBackedSeats(seat)
+  }
+
+  private[graft] def abCompare(spark: SparkSession, sfDir: String, seats: Seq[(String, Seat)],
+                               arms: Seq[Map[String, String]], reps: Int): Seq[AbRow] =
+    seats.map { case (name, fn) =>
+      def run(arm: Map[String, String]) =
+        graft.streaming.StreamOps.withConf(spark, arm)(timeOnce(spark, sfDir, name, fn))
+      arms.foreach(run)
+      val mins = (1 to reps).map(_ => arms.map(run)).transpose
+        .map(xs => if (xs.exists(_.isNaN)) Double.NaN else xs.min)
+      AbRow(name, mins(0), mins(1))
+    }
+
+  /** Runs and prints the `--reps` or `--ab` timing over `seats`. */
+  private def timeFlags(spark: SparkSession, sfDir: String, seats: Seq[(String, Seat)],
+                        mode: Mode): Unit = {
+    def note(seat: String, failed: Boolean) =
+      if (failed) "  FAILED, not in totals"
+      else if (memoBackedSeats(seat)) "  memo-backed, not in totals" else ""
+    if (mode.ab.isEmpty) {
+      val mins = seats.map { case (name, fn) =>
+        val ts = (1 to mode.reps.get).map(_ => timeOnce(spark, sfDir, name, fn))
+        val failed = ts.exists(_.isNaN)
+        println(f"reps $name%-34s ${ts.map(t => f"$t%7.3f").mkString(" ")}${note(name, failed)}")
+        if (failed || memoBackedSeats(name)) 0.0 else ts.min
+      }
+      println(f"reps TOTAL of minimums ${mins.sum}%.3f (${seats.size} seats)")
+    } else {
+      val Seq(a, b) = mode.arms.map(_.map { case (k, v) => s"$k=$v" }.mkString(" "))
+      println(s"ab arm a: $a\nab arm b: $b")
+      val rows = abCompare(spark, sfDir, seats, mode.arms, mode.reps.getOrElse(1))
+      rows.foreach { r =>
+        println(f"ab ${r.seat}%-34s a=${r.a}%7.3f b=${r.b}%7.3f delta=${r.b - r.a}%+7.3f" +
+          note(r.seat, r.a.isNaN || r.b.isNaN))
+      }
+      val counted = rows.filter(_.counted)
+      println(f"ab TOTAL a=${counted.map(_.a).sum}%.3f b=${counted.map(_.b).sum}%.3f " +
+        s"(${counted.size} of ${rows.size} seats counted)")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    TmpDirs.install()
-    // Explicit here, not only in the codec objects' static init: the
-    // flag must hold for EVERY ImageIO user in this run (incl. Spark's
-    // `image` datasource) regardless of which class loads first.
-    javax.imageio.ImageIO.setUseCache(false)
+    val mode = parseArgs(args.toList).fold({ msg =>
+      System.err.println(s"[bench] $msg\nusage: graft.Bench [--reps N] [--ab <conf>=<a>,<b>]...")
+      sys.exit(2)
+    }, identity)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // The timed session config lives in TmpDirs.timedSessionBuilder (r18:
-    // one definition shared with Profile/OptProbe — the copies had been
-    // flagged as a drift hazard). AQE ON by default for the timed board
+    // one definition for every driving session — hand-kept copies had
+    // been flagged as a drift hazard). AQE ON by default for the timed board
     // (SPARK_GRAFT_AQE=0 restores static plans): adaptive execution with
     // post-shuffle coalescing is the production posture, and the measured
     // A/B on the 139-seat batch slice read 57.2 s (AQE) vs 67.6 s
@@ -70,12 +160,7 @@ object Bench {
     // disables AQE inside MicroBatchExecution). PLANS.md stays AQE-off:
     // it audits the static optimizer's plan shape, not runtime
     // re-planning.
-    val spark = TmpDirs.timedSessionBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r17: the NativeVectorMathRule fusion must be installed in
-    // EVERY driving session (it was previously spec-only - the graded
-    // similarity paths ran interpreted HOF dot products)
-    graft.functions.GraftExtensions.installOptimizations(spark)
+    val spark = TmpDirs.session(cpus, aqeByDefault = true)
     // Optional comma-separated name-prefix filter for local profiling runs
     // (unset in the driver's invocation → full surface, contract
     // unchanged). Parsed HERE so the whole-board warm pass below can skip
@@ -303,6 +388,17 @@ object Bench {
     // and generated classes survive; a full GC here stops the warm
     // pass's dead allocations from becoming timed-region GC pauses)
     System.gc()
+    if (mode.board) board(spark, sfDir, outPath, filter.nonEmpty, inFilter)
+    else timeFlags(spark, sfDir,
+      SparkEntry.queries.toSeq.filter { case (n, _) => inFilter(n) }.sortBy(_._1), mode)
+    SessionMemo.clearAll()
+    spark.stop()
+  }
+
+  /** The driver's board run after the warm pass: the calib probes, every
+    * selected seat timed once, the resample pass and the JSON writes. */
+  private def board(spark: SparkSession, sfDir: String, outPath: String,
+                    filtered: Boolean, inFilter: String => Boolean): Unit = {
     // Machine-speed calibration: a fixed, deterministic, CPU-bound op
     // (no I/O, no shuffle) timed in the same warmed JVM. Reported as
     // "calib" in the JSON so per-round totals can be normalized for
@@ -317,8 +413,9 @@ object Bench {
     // does real per-row work, so the reading is long enough to be stable.
     val calib = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      warm { spark.range(3000000000L)
+      try { spark.range(3000000000L)
         .selectExpr("max(xxhash64(id))").collect() }
+      catch { case _: Throwable => () }
       (System.nanoTime() - t0) / 1e9
     }.min
     System.err.println(f"[bench] calib $calib%.2f s")
@@ -454,7 +551,7 @@ object Bench {
     // median ~ 1 with specific seats high = code. -1.0 when no history.
     var medianRatioVsFloor: Double = -1.0
     val resampled: Map[String, (Double, Double)] =
-      if (filter.nonEmpty || !roundSf) Map.empty
+      if (filtered || !roundSf) Map.empty
       else try {
         val history = rootOpt.map { root =>
           val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -544,7 +641,7 @@ object Bench {
     // SF only — a prefix-filtered or profiling-scale (sf0.001/sf0.01)
     // run must not masquerade as, or clobber, the round series, whose
     // points are only comparable at the driver's sf0.1.
-    if (filter.isEmpty && roundSf) {
+    if (!filtered && roundSf) {
       val root = rootOpt
         .getOrElse {
           System.err.println(
@@ -575,7 +672,5 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] write $pq failed: ${e.getMessage}") }
     }
-    SessionMemo.clearAll()
-    spark.stop()
   }
 }

@@ -123,7 +123,13 @@ object SparkEntry {
         .withColumn("par", pmod(col("event_id"), lit(2)))
         .groupBy("par")
         .agg(expr("approx_top_k_accumulate(event_type, 10000)").as("st"))
-      val approx = shards
+      // grouped on a constant, not a global aggregate: a global
+      // aggregate emits a partial buffer for every EMPTY input partition,
+      // and Spark 4.1's combine cannot serialize one (MatchError in
+      // genSketchSerDe: no sketch, no item type) — with static plans the
+      // two shard rows leave shuffle partitions empty; a grouped
+      // aggregate emits nothing for them
+      val approx = shards.groupBy(lit(true))
         .agg(expr("approx_top_k_combine(st)").as("c"))
         .select(explode(expr("approx_top_k_estimate(c, 10)")).as("e"))
         .select(col("e.item").as("event_type"), col("e.count").as("approx_n"))

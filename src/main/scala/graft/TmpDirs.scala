@@ -93,20 +93,22 @@ object TmpDirs {
     * checkpoint managers ([[localFsFastConfs]], `SPARK_GRAFT_LOCALFS_FAST=0`
     * restores stock), and the adaptive-execution posture the driver
     * times (AQE + post-shuffle coalescing to the 8 MB advisory target,
-    * `SPARK_GRAFT_AQE=0` restores static plans, `SPARK_GRAFT_AQE_ADVISORY`
-    * overrides the target). Bench, Profile and OptProbe all build from
-    * here — profiled readings must match the driver's config exactly,
-    * and three hand-maintained copies of this block had already been
-    * flagged as a drift hazard ("optimized the wrong plan"). Rationale
-    * for each value: see the comments in [[graft.Bench]]'s history. */
-  def timedSessionBuilder(cpus: String): org.apache.spark.sql.SparkSession.Builder = {
+    * `SPARK_GRAFT_AQE_ADVISORY` overrides the target). `SPARK_GRAFT_AQE`
+    * picks the posture (`1` adaptive, `0` not); unset, `aqeByDefault`
+    * decides. Every driving session builds from here through
+    * [[session]] — profiled readings must match the driver's config
+    * exactly, and hand-maintained copies of this block had already
+    * drifted ("optimized the wrong plan"). Rationale for each value: see
+    * the comments in [[graft.Bench]]'s history. */
+  def timedSessionBuilder(cpus: String, aqeByDefault: Boolean = true)
+      : org.apache.spark.sql.SparkSession.Builder = {
     val builder = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
     if (sys.env.getOrElse("SPARK_GRAFT_LOCALFS_FAST", "1") == "1")
       localFsFastConfs.foreach { case (k, v) => builder.config(k, v) }
-    if (sys.env.getOrElse("SPARK_GRAFT_AQE", "1") == "1") {
+    if (aqeOn(aqeByDefault)) {
       builder.config("spark.sql.adaptive.enabled", "true")
       builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       builder.config(
@@ -115,5 +117,31 @@ object TmpDirs {
         sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
     }
     builder
+  }
+
+  private def aqeOn(aqeByDefault: Boolean): Boolean =
+    sys.env.getOrElse("SPARK_GRAFT_AQE", if (aqeByDefault) "1" else "0") == "1"
+
+  /** The one driving session: Bench (`aqeByDefault = true`), Verify
+    * (`false`, the driver's gate config) and the tool mains. Scratch
+    * install, the ImageIO cache opt-out (explicit here, not only in the
+    * codec objects' static init: it must hold for EVERY ImageIO user in
+    * the run, incl. Spark's `image` datasource, whichever class loads
+    * first), the [[timedSessionBuilder]] config in UTC, and the
+    * [[graft.functions.NativeVectorMathRule]] fusion, which every
+    * driving session needs (r17: the graded similarity paths otherwise
+    * run interpreted HOF dot products). The static posture sets AQE off
+    * explicitly: Spark's own default is adaptive. */
+  def session(cpus: String, aqeByDefault: Boolean)
+      : org.apache.spark.sql.SparkSession = {
+    install()
+    javax.imageio.ImageIO.setUseCache(false)
+    val builder = timedSessionBuilder(cpus, aqeByDefault)
+      .config("spark.sql.session.timeZone", "UTC")
+    if (!aqeOn(aqeByDefault)) builder.config("spark.sql.adaptive.enabled", "false")
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftExtensions.installOptimizations(spark)
+    spark
   }
 }

@@ -433,7 +433,11 @@ object StreamOps {
     // session. Every current driver is sequential; the lock makes the
     // scoping hold even if one isn't.
     spark.synchronized {
-      val prev = kvs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      // the explicit settings, not getOption: that returns a registered
+      // key's default when it is unset, and restoring it would pin the
+      // default as a setting
+      val set = spark.conf.getAll
+      val prev = kvs.keys.map(k => k -> set.get(k)).toMap
       kvs.foreach { case (k, v) => spark.conf.set(k, v) }
       try body finally prev.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)

@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Prints physical plans for representative queries — the scale audit:
   * filters pushed to the parquet scan, projections pruned, dims broadcast,
-  * aggregates partial'd, no stray shuffles. Run:
-  * `sbt "runMain graft.tools.PlanAudit /root/testdata/sf0.01 q6_filtered_agg j1_broadcast_enrich"`
+  * aggregates partial'd, no stray shuffles. The project's one plan
+  * printer: named queries print their formatted plans,
+  * `sbt "runMain graft.tools.PlanAudit /root/testdata/sf0.01 q6_filtered_agg j1_broadcast_enrich"`;
+  * `--summary` prints PLANS.md's table (`tools/gate.sh` checks it with
+  * `tools/plans_check.py`); `--aqe-skew` runs the runtime skew audit.
   */
 object PlanAudit {
 
@@ -143,27 +146,18 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    // see Bench.main: load-order-independent ImageIO cache opt-out
-    javax.imageio.ImageIO.setUseCache(false)
     val summaryMode = args.contains("--summary")
     val aqeSkewMode = args.contains("--aqe-skew")
     val rest = args.filterNot(a => a == "--summary" || a == "--aqe-skew")
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val which = rest.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // T7 plan-stability mode (the reference disables AQE too,
-      // spark-streaming.py:27): final plans, codegen spans visible
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.TmpDirs.session("4", aqeByDefault = false)
+    // T7 plan-stability mode (the reference disables AQE too,
+    // spark-streaming.py:27): final plans, codegen spans visible — set
+    // after the factory so an exported SPARK_GRAFT_AQE=1 cannot change
+    // the audited plans
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
-    // r17: the NativeVectorMathRule fusion must be installed in
-    // EVERY driving session (it was previously spec-only - the graded
-    // similarity paths ran interpreted HOF dot products)
-    graft.functions.GraftExtensions.installOptimizations(spark)
     if (aqeSkewMode) { aqeSkewAudit(spark, dir); spark.stop(); return }
     if (summaryMode) { summary(spark, dir); spark.stop(); return }
     graft.SparkEntry.queries

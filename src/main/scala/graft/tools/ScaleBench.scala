@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured-scaling harness (VERDICT round-13 directive #1): time the
   * board's most expensive BATCH seats at sf0.1 and at the 10× fixture
   * [[ScaleUp]] writes, and emit per-seat exponents
@@ -74,24 +72,12 @@ object ScaleBench {
     .getOrElse(defaultSeats)
 
   def main(args: Array[String]): Unit = {
-    graft.TmpDirs.install()
-    javax.imageio.ImageIO.setUseCache(false)
     val Array(baseDir, scaledDir, factorStr, outPath) = args
     val factor = factorStr.toDouble
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    if (sys.env.getOrElse("SPARK_GRAFT_LOCALFS_FAST", "1") == "1")
-      graft.TmpDirs.localFsFastConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r17: the NativeVectorMathRule fusion must be installed in
-    // EVERY driving session (it was previously spec-only - the graded
-    // similarity paths ran interpreted HOF dot products)
-    graft.functions.GraftExtensions.installOptimizations(spark)
+    // the bench's timed posture; SPARK_GRAFT_AQE=0 for static plans
+    val spark = graft.TmpDirs.session(cpus, aqeByDefault = true)
 
     val queries = graft.SparkEntry.queries
     val run = seats.filter { s =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf0.1 → sf1 deterministic scale-up: ten key-disjoint replicas of the
@@ -59,16 +59,10 @@ object ScaleUp {
     col(c) + col("_r") * Stride
 
   def main(args: Array[String]): Unit = {
-    graft.TmpDirs.install()
     val Array(inDir, outDir, nStr) = args
     val n = nStr.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.TmpDirs.session(cpus, aqeByDefault = true)
 
     def in(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {

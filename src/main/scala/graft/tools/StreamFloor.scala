@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Micro-profiler for the PER-SEAT STREAMING MACHINERY FLOOR — the
   * ~0.7 s/seat of stream-start + per-micro-batch commit + state-store
@@ -22,26 +24,19 @@ import org.apache.spark.sql.functions._
   * discipline as the bench probes. Prints one line per cell:
   * `floor provider=rocksdb parts=4 batches=2 min=0.61 med=0.66`.
   *
+  * Every run goes through the seats' own harness
+  * ([[graft.streaming.StreamOps.drain]] under
+  * [[graft.streaming.StreamOps.withConf]]), so the cell confs are
+  * restored after each run.
+  *
   * Usage: `sbt "runMain graft.tools.StreamFloor [reps]"`.
   */
 object StreamFloor {
   def main(args: Array[String]): Unit = {
-    graft.TmpDirs.install()
     val reps = args.headOption.map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    if (sys.env.getOrElse("SPARK_GRAFT_LOCALFS_FAST", "1") == "1")
-      graft.TmpDirs.localFsFastConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r17: the NativeVectorMathRule fusion must be installed in
-    // EVERY driving session (it was previously spec-only - the graded
-    // similarity paths ran interpreted HOF dot products)
-    graft.functions.GraftExtensions.installOptimizations(spark)
-    import spark.implicits._
+    val spark = graft.TmpDirs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), aqeByDefault = true)
+    val S = graft.streaming.StreamOps
 
     val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
@@ -55,89 +50,51 @@ object StreamFloor {
     def partFile(i: Int) = Option(stage.resolve(s"b$i").toFile.listFiles())
       .get.filter(_.getName.endsWith(".parquet")).head.toPath
 
-    def runOnce(provider: String, parts: Int, batches: Int): Double = {
+    /** One cell run: seconds from landing the first arrival to the
+      * stopped query, and that query (its `recentProgress` carries the
+      * per-batch `durationMs`). */
+    def runOnce(provider: String, parts: Int, batches: Int): (Double, StreamingQuery) = {
       val root = graft.TmpDirs.create("graft_floor_")
-      val topic = root.resolve("topic")
-      java.nio.file.Files.createDirectory(topic)
-      java.nio.file.Files.createLink(topic.resolve("f0.parquet"), partFile(0))
+      val topic = java.nio.file.Files.createDirectory(root.resolve("topic"))
+      val land = (0 until batches).map { i => () =>
+        java.nio.file.Files.createLink(topic.resolve(s"f$i.parquet"), partFile(i)); ()
+      }
       val t0 = System.nanoTime()
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
+      S.withConf(spark, Map(
+          "spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.streaming.stateStore.providerClass" -> provider,
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
         val table = s"floor_${System.nanoTime()}"
-        val q = spark.readStream.schema("k BIGINT, v BIGINT")
+        val q = S.drain(land: _*)(spark.readStream.schema("k BIGINT, v BIGINT")
           .parquet(topic.toString)
           .groupBy(pmod(col("k"), lit(16)).as("b"))
           .agg(sum("v").as("s"), count(lit(1)).as("n"))
           .writeStream.format("memory").queryName(table)
           .option("checkpointLocation", root.resolve("ckpt").toString)
           .outputMode("update")
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 until batches).foreach { i =>
-            java.nio.file.Files.createLink(topic.resolve(s"f$i.parquet"), partFile(i))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+          .start())
         spark.catalog.dropTempView(table)
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+        ((System.nanoTime() - t0) / 1e9, q)
       }
-      (System.nanoTime() - t0) / 1e9
     }
+    def label(provider: String) = if (provider == rocks) "rocksdb" else "hdfs"
 
     for (provider <- Seq(hdfs, rocks); parts <- Seq(1, 2, 4, 8);
          batches <- Seq(1, 2, 3)) {
       runOnce(provider, parts, batches) // warm the cell shape
-      val ts = (1 to reps).map(_ => runOnce(provider, parts, batches)).sorted
-      val name = if (provider == rocks) "rocksdb" else "hdfs"
-      println(f"floor provider=$name%-7s parts=$parts batches=$batches " +
+      val ts = (1 to reps).map(_ => runOnce(provider, parts, batches)._1).sorted
+      println(f"floor provider=${label(provider)}%-7s parts=$parts batches=$batches " +
         f"min=${ts.head}%.3f med=${ts(ts.size / 2)}%.3f")
     }
 
     // WHERE the per-batch time goes: rerun one representative cell and
     // dump the engine's own durationMs decomposition per micro-batch
-    def dumpDurations(provider: String, parts: Int, batches: Int): Unit = {
-      val root = graft.TmpDirs.create("graft_floor_")
-      val topic = root.resolve("topic")
-      java.nio.file.Files.createDirectory(topic)
-      java.nio.file.Files.createLink(topic.resolve("f0.parquet"), partFile(0))
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val table = s"floor_${System.nanoTime()}"
-      val q = spark.readStream.schema("k BIGINT, v BIGINT")
-        .parquet(topic.toString)
-        .groupBy(pmod(col("k"), lit(16)).as("b"))
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .outputMode("update")
-        .start()
-      try {
-        q.processAllAvailable()
-        (1 until batches).foreach { i =>
-          java.nio.file.Files.createLink(topic.resolve(s"f$i.parquet"), partFile(i))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      val name = if (provider == rocks) "rocksdb" else "hdfs"
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        println(s"durations provider=$name parts=$parts batch=${p.batchId} " +
-          scala.jdk.CollectionConverters.MapHasAsScala(d).asScala.toSeq
-            .sortBy(-_._2).map { case (k, v) => s"$k=$v" }.mkString(" "))
+    for (provider <- Seq(hdfs, rocks))
+      runOnce(provider, 4, 3)._2.recentProgress.foreach { p =>
+        println(s"durations provider=${label(provider)} parts=4 batch=${p.batchId} " +
+          p.durationMs.asScala.toSeq.sortBy(-_._2).map { case (k, v) => s"$k=$v" }
+            .mkString(" "))
       }
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-    }
-    dumpDurations(hdfs, 4, 3)
-    dumpDurations(rocks, 4, 3)
     spark.stop()
   }
 }

@@ -70,6 +70,16 @@ class SketchSpec extends SparkSpec {
       "shard-accumulate + combine must merge losslessly below capacity")
   }
 
+  test("sketch_approx_topk_merge is exact with static plans, where shard " +
+       "sketches leave shuffle partitions empty") {
+    val rows = graft.streaming.StreamOps.withConf(spark,
+        Map("spark.sql.adaptive.enabled" -> "false")) {
+      SparkEntry.queries("sketch_approx_topk_merge")(spark, sfDir)
+        .select("sketch_exact").as[Boolean].collect()
+    }
+    assert(rows.nonEmpty && rows.forall(identity))
+  }
+
   test("approx_top_k over capacity: planted heavy hitters surface with " +
        "bounded estimates on a deterministic single-partition fixture") {
     // 3 heavy keys (1000 each) over a 200-key uniform background (15

@@ -10,6 +10,14 @@ OUT="/tmp/graft_gate_$$"
 echo "== compile + test =="
 sbt -batch compile test
 
+# PLANS.md is generated at sf0.01 whatever SF the gate runs; every row a
+# fresh audit shares with it must be identical (tools/plans_check.py)
+echo "== PLANS.md identity (PlanAudit --summary sf0.01) =="
+PLANS_FRESH="$(mktemp)"
+trap 'rm -f "$PLANS_FRESH"' EXIT
+sbt -batch "runMain graft.tools.PlanAudit --summary /root/testdata/sf0.01" > "$PLANS_FRESH"
+python3 tools/plans_check.py PLANS.md "$PLANS_FRESH"
+
 echo "== verify dump ($SF, CPUS=$CPUS) =="
 rm -rf "$OUT"
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch "runMain graft.Verify $SF $OUT"
