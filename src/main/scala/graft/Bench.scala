@@ -367,17 +367,6 @@ object Bench {
         allQueries.foreach { case (name, fn) =>
           if (inFilter(name)) warm { fn(spark, warmSf).count() }
         }
-        val sp = Some(2)
-        val S = graft.streaming.StreamOps
-        warm { S.cumulativeTally(spark, warmSf, sp).count() }            // streaming agg
-        warm { S.streamingSessionCounts(spark, warmSf, "30 minutes", sp).count() } // session_window
-        warm { S.streamingDedupUsers(spark, warmSf, sp).count() }        // dedup state
-        warm { S.streamingDedupUsersWatermarked(spark, warmSf, statePartitions = sp).count() } // watermarked dedup
-        warm { S.streamStreamIntervalJoin(spark, warmSf, statePartitions = sp).count() } // symmetric hash join
-        warm { S.streamingAsOfAttribution(spark, warmSf, statePartitions = sp).count() } // flatMapGroupsWithState
-        warm { S.streamingTimeoutSessions(spark, warmSf, statePartitions = sp).count() } // event-time timers
-        warm { S.hourlyWindowCounts(spark, warmSf, sp).count() }         // windowed agg
-        warm { S.streamingDedupUsersRocksDB(spark, warmSf, sp).count() } // rocksdbjni load + provider init
       }
     }
     // diagnostic only (stderr, not part of the JSON contract): how much

@@ -1456,11 +1456,11 @@ object SparkEntry {
     // at-least-once replay) — the idempotent sink must converge to the
     // batch per-user totals the oracle recomputes
     "s5c_jdbc_upsert_replay" -> ((s, d) =>
-      StreamOps.jdbcUpsertReplay(s, d, statePartitions = Some(8))),
+      StreamOps.jdbcUpsertReplay(s, d)),
     // the delta-sink sibling: stateless increments, exactly-once carried
     // by the (batch, partition) transaction log; every epoch applied twice
     "s5d_jdbc_txnlog_replay" -> ((s, d) =>
-      StreamOps.jdbcTxnLogReplay(s, d, statePartitions = Some(8))),
+      StreamOps.jdbcTxnLogReplay(s, d)),
 
     // ---- SQL surface / DDL (SURVEY §2.1 S6) ----
     "s6_sql_over_view" -> ((s, d) => {
@@ -1633,8 +1633,7 @@ object SparkEntry {
     // ceil(rows/step) genuine micro-batches) — the Kafka-shaped source
     // surface minus the broker, graded against the batch formula
     "s7e_stream_source" -> ((s, _) =>
-      StreamOps.customSourceStreamTally(s, rows = 1000L, step = 256L,
-        statePartitions = Some(4))),
+      StreamOps.customSourceStreamTally(s, rows = 1000L, step = 256L)),
     // the WRITE half of the connector story: a DSv2 sink running the
     // real two-phase commit protocol (task temp files → driver rename +
     // _SUCCESS manifest; abort sweeps) — the round trip through it must
@@ -1704,103 +1703,100 @@ object SparkEntry {
 
     // ---- streaming (SURVEY §2.8) — real MemoryStream executions ----
     "t3_stream_cumulative" -> ((s, d) =>
-      StreamOps.cumulativeTally(s, d, statePartitions = Some(8))),
+      StreamOps.cumulativeTally(s, d)),
     // same tally consumed through the Wire seam as binary key/value frames
     // (S1 wire schema + P1-P3 decode chain on the graded path)
     "t3b_wire_tally" -> ((s, d) =>
-      StreamOps.wireCumulativeTally(s, d, statePartitions = Some(8))),
+      StreamOps.wireCumulativeTally(s, d)),
     // checkpointed aggregate killed after batch 1 and restarted: the full
     // tally can only come from recovered state (offset log bars a re-read)
     "t1_stream_recover" -> ((s, d) =>
-      StreamOps.recoverableTally(s, d, statePartitions = Some(8))),
+      StreamOps.recoverableTally(s, d)),
     // exactly-once parquet sink across a kill-restart: the sink's
     // _spark_metadata log is what the re-read trusts; match vs the
     // source is proof of no loss AND no reprocessing
     "s9_file_sink_exactly_once" -> ((s, d) =>
-      StreamOps.fileSinkExactlyOnce(s, d, statePartitions = Some(8))),
+      StreamOps.fileSinkExactlyOnce(s, d)),
     // exactly-once EMIT through the wire seam: every epoch's Kafka-shaped
     // frames delivered TWICE (injected producer retry); the consumer's
     // (epoch, key) dedup — the transactional-producer shape without the
     // broker — must still reproduce the batch truth
     "s10_wire_emit_exactly_once" -> ((s, d) =>
-      StreamOps.wireEmitExactlyOnce(s, d, statePartitions = Some(8))),
+      StreamOps.wireEmitExactlyOnce(s, d)),
     "t2_stream_hourly_window" -> ((s, d) =>
-      StreamOps.hourlyWindowCounts(s, d, statePartitions = Some(8))),
+      StreamOps.hourlyWindowCounts(s, d)),
     // sliding 2h/1h event-time windows: each event lands in TWO
     // overlapping windows; the oracle replays the expansion as a UNION ALL
     "t16_stream_sliding_window" -> ((s, d) =>
-      StreamOps.slidingWindowCounts(s, d, statePartitions = Some(8))),
+      StreamOps.slidingWindowCounts(s, d)),
     // dynamic-gap session windows as a STATEFUL STREAMING aggregate —
     // stream/batch parity graded by the batch seat's gaps-and-islands
     // oracle (state = open sessions, merged across micro-batches)
     "t44_stream_dynamic_sessions" -> ((s, d) =>
-      StreamOps.streamingDynamicGapSessions(s, d, statePartitions = Some(4))),
+      StreamOps.streamingDynamicGapSessions(s, d)),
     // the corpus-preparation front end as a STREAM over the documents
     // table: language+quality gates as in-query scan predicates, exact
     // dedup as a content-digest stateful agg (canonical id, multiplicity,
     // token count); duplicates span the two arrivals, so the oracle's
     // batch GROUP BY md5(text) only matches if dedup state crossed batches
     "t45_stream_canonical_dedup" -> ((s, d) =>
-      StreamOps.streamingCanonicalDedup(s, d, statePartitions = Some(4))),
+      StreamOps.streamingCanonicalDedup(s, d)),
     // two stateful queries live CONCURRENTLY in one session/state pool —
     // the multi-tenant deployment property; oracle replays both sides
     "t46_stream_concurrent_queries" -> ((s, d) =>
-      StreamOps.concurrentSharedSession(s, d, statePartitions = Some(4))),
+      StreamOps.concurrentSharedSession(s, d)),
     // kill + restart of the t45 corpus front end from its checkpoint:
     // spanning digests keep their cross-arrival counts only via
     // recovered state (same oracle as t45 — recovery is semantics-free)
     "t47_stream_corpus_recover" -> ((s, d) =>
-      StreamOps.corpusFrontEndRecover(s, d, statePartitions = Some(4))),
+      StreamOps.corpusFrontEndRecover(s, d)),
     // two-hop pipeline chained through an exactly-once parquet sink:
     // hop B tails hop A's sink log; totals match batch truth only if
     // every event crossed the storage handoff exactly once
     "t48_stream_two_hop" -> ((s, d) =>
-      StreamOps.twoHopPipeline(s, d, statePartitions = Some(4))),
+      StreamOps.twoHopPipeline(s, d)),
     // BOUNDED-state corpus dedup: digest state evicted past the ingest
     // watermark — duplicates planted inside AND beyond the horizon, so
     // the oracle proves the eviction semantics (n_emits = 2 iff evicted)
     "t49_stream_dedup_evicted" -> ((s, d) =>
-      StreamOps.streamingDedupEvicted(s, d, statePartitions = Some(4))),
+      StreamOps.streamingDedupEvicted(s, d)),
     // streaming multimodal ingest: real PNG bytes decoded per batch,
     // malformed payloads quarantined, per-geometry admission counters
     "t50_stream_mm_gate" -> ((s, d) =>
-      StreamOps.streamingMediaGate(s, d, statePartitions = Some(4))),
+      StreamOps.streamingMediaGate(s, d)),
     // the audio modality on the same continuous path: JDK WAV decode
     // per micro-batch, reader-rejected payloads quarantined, per-rate
     // admission counters against the closed-form PCM sample sums
     "t54_stream_audio_gate" -> ((s, d) =>
-      StreamOps.streamingAudioGate(s, d, statePartitions = Some(4))),
+      StreamOps.streamingAudioGate(s, d)),
     // the video modality completes the streaming codec sweep: RIFF
     // demux + per-frame JPEG decode per micro-batch, truncated clips
     // quarantined, per-frame-count counters + header-vs-decode verdicts
     "t55_stream_video_gate" -> ((s, d) =>
-      StreamOps.streamingVideoGate(s, d, statePartitions = Some(4))),
+      StreamOps.streamingVideoGate(s, d)),
     // additive schema drift mid-topic: narrow pre-drift files read as
     // NULL-filled under the wide declared schema, no restart
     "t51_stream_schema_drift" -> ((s, d) =>
-      StreamOps.streamingSchemaDrift(s, d, statePartitions = Some(4))),
+      StreamOps.streamingSchemaDrift(s, d)),
     // the t48 run's observed conservation counters as a graded row:
     // rows hop A committed == rows hop B read == batch count(*)
     "t52_stream_two_hop_lineage" -> ((s, d) =>
-      StreamOps.twoHopLineage(s, d, statePartitions = Some(4))),
+      StreamOps.twoHopLineage(s, d)),
     // the crawler topology: the dedup_incremental triage run per
     // micro-batch against the sealed corpus — per-doc status depends
     // only on doc-vs-corpus, so the streamed union equals the batch
     // triage and shares its oracle
-    // no stateful operator here (foreachBatch triage), so no narrow
-    // state width: the per-batch joins keep the session's parallelism
-    // AND match the width the sealed index was partitioned at
     "t53_stream_incremental_dedup" -> ((s, d) =>
       StreamOps.streamingIncrementalDedup(s, d)),
     // dead-letter routing: poison rows quarantined per micro-batch, the
     // rest aggregated — conservation (valid + dead = all) oracle-checked
     "t17_stream_dead_letter" -> ((s, d) =>
-      StreamOps.deadLetterSplit(s, d, statePartitions = Some(8))),
+      StreamOps.deadLetterSplit(s, d)),
     // dead-letter triage under injected key skew: ~90% of quarantined
     // rows share one key; the offender count folds through the salted
     // two-level aggregation instead of straggling one task
     "t17b_dead_letter_skew_triage" -> ((s, d) =>
-      StreamOps.deadLetterTriageSkewed(s, d, statePartitions = Some(8))),
+      StreamOps.deadLetterTriageSkewed(s, d)),
     // incremental sketch maintenance: per-batch HLL partials union'd with
     // the prior KB-sized snapshot — history never re-scanned
     "t18_stream_sketch_maintain" -> ((s, d) =>
@@ -1813,126 +1809,121 @@ object SparkEntry {
       StreamOps.streamingOhlcMaintenance(s, d)),
     // late rows (held-back fifth, delivered after the watermark advanced)
     // are DROPPED; append mode emits only watermark-finalized windows
-    // state sized to the keys (720 hourly windows), not the cluster —
-    // every micro-batch commits one store per partition, so width 4
-    // halves the fixed per-batch I/O vs 8 (results width-invariant,
-    // PartitionInvarianceSpec board property)
     "t4_stream_late_drop" -> ((s, d) =>
-      StreamOps.lateDropHourly(s, d, statePartitions = Some(4))),
+      StreamOps.lateDropHourly(s, d)),
     // shared pipeline run with t27 (dedupPipelineRun): t5 grades the
     // append emissions, t27 the checkpoint's state read
     "t5_stream_dedup_users" -> ((s, d) =>
-      StreamOps.streamingDedupUsersShared(s, d, statePartitions = Some(8))),
+      StreamOps.streamingDedupUsersShared(s, d)),
     // bounded-state dedup: late re-delivered duplicates (batch 2, 1h older)
     // land within the watermark and must be suppressed
     "t5b_stream_dedup_watermarked" -> ((s, d) =>
-      StreamOps.streamingDedupUsersWatermarked(s, d, statePartitions = Some(8))),
+      StreamOps.streamingDedupUsersWatermarked(s, d)),
     // t5's keyed-state dedup with state in ROCKSDB — the disk-backed
     // backend a 100 TB deployment runs (heap-backed default caps state at
     // JVM memory); same oracle as t5, so the hash match grades the
     // backend swap as semantics-free on the driver's own gate
     "t25_stream_rocksdb_dedup" -> ((s, d) =>
-      StreamOps.streamingDedupUsersRocksDB(s, d, statePartitions = Some(8))),
+      StreamOps.streamingDedupUsersRocksDB(s, d)),
     // t25's backend under CHANGELOG checkpointing + kill-and-restart:
     // per-batch checkpoints upload only state deltas, recovery replays
     // changelog over snapshot; the union of the two phases' emissions
     // hash-matches t5's oracle only if phase 2 recovered the store
     "t35_stream_changelog_recover" -> ((s, d) =>
-      StreamOps.changelogRecoverDedup(s, d, statePartitions = Some(8))),
+      StreamOps.changelogRecoverDedup(s, d)),
     // Spark 4's transformWithState (arbitrary typed state cells behind a
     // StatefulProcessor, RocksDB-only backend): per-user running totals,
     // last emit per key graded against the batch GROUP BY
     "t26_stream_transform_with_state" -> ((s, d) =>
-      StreamOps.transformWithStateTotals(s, d, statePartitions = Some(8))),
+      StreamOps.transformWithStateTotals(s, d)),
     // TWS MapState cell: per-(user, type) running totals — one state
     // row per map ENTRY, the layout a growing per-key map needs
     "t32_stream_tws_map_state" -> ((s, d) =>
-      StreamOps.twsMapStateTotals(s, d, statePartitions = Some(4))),
+      StreamOps.twsMapStateTotals(s, d)),
     // TWS ListState cell: bounded last-3-events buffer per user —
     // incremental append + trim, the recent-activity window shape
     "t33_stream_tws_list_state" -> ((s, d) =>
-      StreamOps.twsListStateLastK(s, d, k = 3, statePartitions = Some(4))),
+      StreamOps.twsListStateLastK(s, d, k = 3)),
     // TWS state TTL: two staged micro-batches under a 1 ms
     // processing-time TTL — batch 0's cells have EXPIRED when batch 1
     // reads them, so the odd half re-counts from zero; the union of
     // both batches' emissions only matches the per-half oracle if
     // expiry really reset the fold
     "t34_stream_tws_ttl" -> ((s, d) =>
-      StreamOps.twsTtlTotals(s, d, statePartitions = Some(4))),
+      StreamOps.twsTtlTotals(s, d)),
     // TWS INITIAL STATE: keyed state warm-starts from a batch frame
     // (prior deployment's even-half totals), the stream folds only the
     // odd half — the serving view must equal the full-table GROUP BY
     // (t26's oracle), proving the handoff lost and re-read nothing
     "t37_stream_tws_initial_state" -> ((s, d) =>
-      StreamOps.twsInitialStateTotals(s, d, statePartitions = Some(4))),
+      StreamOps.twsInitialStateTotals(s, d)),
     // state data source over TWS state: read the "totals" ValueState
     // cell back out of the checkpoint (stateVarName addressing, column
     // families, state schema v2) — the audit must equal the batch
     // GROUP BY, certifying writer and reader at once
     "t39_tws_state_source_read" -> ((s, d) =>
-      // width 8 = t26's, so the pair shares one twsTotalsRun
-      StreamOps.twsStateSourceAudit(s, d, statePartitions = Some(8))),
+      StreamOps.twsStateSourceAudit(s, d)),
     // Spark 4's state data source: read the dedup state back OUT of the
     // checkpoint as a batch frame — the state-audit surface; the keys
     // must be exactly the distinct-user set (t5's oracle)
     "t27_state_source_read" -> ((s, d) =>
-      StreamOps.stateSourceDedupAudit(s, d, statePartitions = Some(8))),
+      StreamOps.stateSourceDedupAudit(s, d)),
     // state TIME-TRAVEL over a changelog checkpoint: as-of read at
     // batchId=0 (must be the even half alone — no backward leakage) +
     // the change feed from batch 1 (exactly the odd half's new users);
     // the post-incident state-audit surface
     "t41_state_time_travel" -> ((s, d) =>
-      StreamOps.stateTimeTravelDedup(s, d, statePartitions = Some(8))),
+      StreamOps.stateTimeTravelDedup(s, d)),
     // checkpoint UPGRADE: restart the TWS totals stream on the same
     // checkpoint with a WIDENED state schema (V2 adds a since-upgrade
     // counter) under the Avro state encoding — totals must keep
     // accumulating across the code swap, the evolved field must count
     // exactly the post-upgrade events
     "t28_stream_state_upgrade" -> ((s, d) =>
-      StreamOps.stateSchemaUpgradeTotals(s, d, statePartitions = Some(4))),
+      StreamOps.stateSchemaUpgradeTotals(s, d)),
     // streaming IVF ingest: new vectors arrive in micro-batches, are
     // assigned to their nearest build-time cell, and land in the
     // partitioned layout; top-k is then served against the GROWN corpus
     // (base ∪ ingested, probed cells only) — the oracle replays the
     // assignment, the probe, and the post-ingest ranking exactly
     "t29_stream_ivf_ingest" -> ((s, d) =>
-      StreamOps.streamingIvfIngestServe(s, d, statePartitions = Some(4))),
+      StreamOps.streamingIvfIngestServe(s, d)),
     // the batched serving shape over the SAME grown corpus (memoized
     // ingest): 10 queries — five of them JUST-INGESTED vectors — one
     // pruned scan of their probe-cell union, bounded-heap top-k
     "t29b_stream_ivf_batch_serve" -> ((s, d) =>
-      StreamOps.streamingIvfIngestBatchServe(s, d, statePartitions = Some(4))),
+      StreamOps.streamingIvfIngestBatchServe(s, d)),
     "t8_stream_asof" -> ((s, d) =>
-      StreamOps.streamingAsOfAttribution(s, d, statePartitions = Some(8))),
+      StreamOps.streamingAsOfAttribution(s, d)),
     // streaming SCD2: each change CLOSES the key's open version (append
     // mode); open versions live in state, so the oracle is the batch
     // lead() assembly filtered to closed intervals
     "t13_stream_scd2" -> ((s, d) =>
-      StreamOps.streamingScd2(s, d, statePartitions = Some(8))),
+      StreamOps.streamingScd2(s, d)),
     // streaming decontamination feed: per-batch window explode + broadcast
     // eval-window semi join (stateless), per-lang contaminated counts in
     // complete mode; the batch decontaminate's quarantine side, live
     "t14_stream_decontaminate" -> ((s, d) =>
-      StreamOps.streamingDecontaminationFeed(s, d, statePartitions = Some(4))
+      StreamOps.streamingDecontaminationFeed(s, d)
         .orderBy("lang")),
     // timer-based session close (EventTimeTimeout): in-batch closes on
     // gap-exceed, tail sessions close when the watermark passes
     // last + gap — the oracle replays the exec's exact ms fire condition
     "t15_stream_timeout_sessions" -> ((s, d) =>
-      StreamOps.streamingTimeoutSessions(s, d, statePartitions = Some(8))
+      StreamOps.streamingTimeoutSessions(s, d)
         .orderBy("user_id", "start_us")),
     // the SAME session machine on transformWithState TIMERS
     // (registerTimer/deleteTimer/handleExpiredTimer, TimeMode.EventTime)
     // — graded by t15's oracle, so a hash match certifies the two timer
     // APIs' close semantics are identical (the TWS migration contract)
     "t30_stream_tws_timer_sessions" -> ((s, d) =>
-      StreamOps.twsTimerSessions(s, d, statePartitions = Some(4))
+      StreamOps.twsTimerSessions(s, d)
         .orderBy("user_id", "start_us")),
     // Trigger.AvailableNow: drain the backlog in admission-controlled
     // micro-batches, then the ENGINE stops itself — termination is the
     // query's own decision, graded by reaching the full tally
     "t31_stream_available_now" -> ((s, d) =>
-      StreamOps.availableNowTally(s, d, statePartitions = Some(4))
+      StreamOps.availableNowTally(s, d)
         .orderBy("event_type")),
     // data-quality audit: scan rules fold in ONE multi-aggregate pass,
     // referential integrity is the one anti join; the fixture is clean,
@@ -2003,77 +1994,74 @@ object SparkEntry {
     // stream-stream interval join: every click within the hour before the
     // purchase, both sides streaming + watermarked (state evicted by the
     // range condition); oracle = the batch SQL range join
-    // state partitions sized to the key cardinality (~150 users), not the
-    // session shuffle width — see streamStreamIntervalJoin scaladoc
     "t10_stream_stream_join" -> ((s, d) =>
-      StreamOps.streamStreamIntervalJoin(s, d, statePartitions = Some(4))),
+      StreamOps.streamStreamIntervalJoin(s, d)),
     // stream-stream LEFT OUTER interval join: matched pairs emit as they
     // match; unmatched purchases emit a NULL-click row when the watermark
     // evicts their state (the no-data batch) — purchases inside the final
     // watermark delay stay in state, as live pipelines leave them
     "t20_stream_left_outer_join" -> ((s, d) =>
-      StreamOps.streamStreamLeftOuterJoin(s, d, statePartitions = Some(4))),
+      StreamOps.streamStreamLeftOuterJoin(s, d)),
     // stream-stream FULL OUTER interval join: null rows emit on BOTH
     // eviction directions — unmatched purchases when the watermark
     // passes purchase_ts, unmatched clicks when it passes
     // click_ts + tolerance (no future purchase can land in range)
     "t36_stream_full_outer_join" -> ((s, d) =>
-      StreamOps.streamStreamFullOuterJoin(s, d, statePartitions = Some(4))),
+      StreamOps.streamStreamFullOuterJoin(s, d)),
     // stream-stream LEFT SEMI: the existence flavor — one row per
     // matched purchase regardless of click fan-out, unmatched never
     // emit; the batch EXISTS is the oracle (no eviction arithmetic)
     "t38_stream_semi_join" -> ((s, d) =>
-      StreamOps.streamStreamSemiJoin(s, d, statePartitions = Some(4))),
+      StreamOps.streamStreamSemiJoin(s, d)),
     // stream-stream RIGHT OUTER: the last supported flavor — null rows
     // emit ONLY on the click side, when the watermark passes
     // click_ts + tolerance (t36's second eviction direction alone);
     // unmatched purchases never emit
     "t40_stream_right_outer_join" -> ((s, d) =>
-      StreamOps.streamStreamRightOuterJoin(s, d, statePartitions = Some(4))),
+      StreamOps.streamStreamRightOuterJoin(s, d)),
     // streaming observability: observe() counters ride the scan (zero
     // extra jobs) and surface per micro-batch in the progress log —
     // the alerting surface a 100 TB pipeline monitors; oracle replays
     // each batch's counters from the parity arrival split
     "t43_stream_observe" -> ((s, d) =>
-      StreamOps.streamingObservedGate(s, d, statePartitions = Some(4))),
+      StreamOps.streamingObservedGate(s, d)),
     // MULTIPLE STATEFUL OPERATORS in one query: hourly windowed counts
     // chained into epoch-aligned 4 h buckets (append mode, one job —
     // the single-query rollup topology instead of a two-hop pipeline);
     // n_hours counts populated hourly windows per bucket, a value only
     // the two-level chain can produce
     "t42_stream_chained_agg" -> ((s, d) =>
-      StreamOps.chainedWindowRollup(s, d, statePartitions = Some(8))),
+      StreamOps.chainedWindowRollup(s, d)),
     // live leaderboard: stream maintains ONLY the O(keys) tally state;
     // rank / share / gap-to-leader computed over the |keys|-row snapshot
     // (ranking inside the stream would global-sort state per batch)
     "t21_stream_leaderboard" -> ((s, d) =>
-      StreamOps.streamingLeaderboard(s, d, statePartitions = Some(4))),
+      StreamOps.streamingLeaderboard(s, d)),
     // streaming CDC apply: latest-wins compaction as a mergeable
     // complete-mode max(struct) — O(keys) state — then the tombstone
     // MERGE on the snapshot; the batch oracle grades stream/batch parity
     "t22_stream_merge_delete" -> ((s, d) =>
       StreamOps.streamingMergeDelete(s, d,
-        Tables.customer(s, d).select("c_custkey", "c_acctbal"),
-        statePartitions = Some(8))),
+        Tables.customer(s, d).select("c_custkey", "c_acctbal"))),
     // streaming drift monitor: the dq_drift_psi audit run continuously —
     // per-category counters in complete mode (O(categories) state),
     // PSI scored on the emitted snapshot vs the pinned batch baseline
     "t23_stream_drift_psi" -> ((s, d) =>
-      StreamOps.streamingDriftPsi(s, d, statePartitions = Some(4))),
+      StreamOps.streamingDriftPsi(s, d)),
     "t9_stream_sessions" -> ((s, d) =>
-      StreamOps.streamingSessionCounts(s, d, statePartitions = Some(4))),
+      StreamOps.streamingSessionCounts(s, d)),
     // streaming corpus curation: the language+quality scan gates applied
     // to a document stream, per-lang survivor counts in complete mode
     // t24: stateful streaming dedup keyed on the native nfc_normalize —
     // two byte-different spellings per doc collapse to one state entry
     "t24_stream_nfc_dedup" -> ((s, d) =>
-      StreamOps.streamingNfcDedup(s, d, statePartitions = Some(8))),
+      StreamOps.streamingNfcDedup(s, d)),
     "t12_stream_quality_gate" -> ((s, d) =>
-      StreamOps.streamingQualityGate(s, d, statePartitions = Some(4))),
+      StreamOps.streamingQualityGate(s, d)),
     // streaming funnel: the batch funnel_stages semantics as a keyed
     // monotone stage machine (O(1) state per user); same oracle SQL
     "t11_stream_funnel" -> ((s, d) =>
-      StreamOps.streamingFunnel(s, d, statePartitions = Some(8))),
+      StreamOps.streamingFunnel(s, d)),
     "s8_write_then_emit" -> ((s, d) => StreamOps.writeThenEmit(s, d)),
 
     // ---- LLM pipeline: dedup family ----

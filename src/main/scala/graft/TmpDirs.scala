@@ -88,18 +88,20 @@ object TmpDirs {
     "spark.sql.streaming.checkpointFileManagerClass" ->
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
-  /** The bench's TIMED session configuration, in one place (r18):
+  /** The bench's TIMED session configuration, in one place:
     * `local[cpus]`, shuffle width = cpus, UI off, the fast local
     * checkpoint managers ([[localFsFastConfs]], `SPARK_GRAFT_LOCALFS_FAST=0`
     * restores stock), and the adaptive-execution posture the driver
     * times (AQE + post-shuffle coalescing to the 8 MB advisory target,
-    * `SPARK_GRAFT_AQE_ADVISORY` overrides the target). `SPARK_GRAFT_AQE`
-    * picks the posture (`1` adaptive, `0` not); unset, `aqeByDefault`
-    * decides. Every driving session builds from here through
-    * [[session]] — profiled readings must match the driver's config
-    * exactly, and hand-maintained copies of this block had already
-    * drifted ("optimized the wrong plan"). Rationale for each value: see
-    * the comments in [[graft.Bench]]'s history. */
+    * `parallelismFirst` off). `SPARK_GRAFT_AQE` picks the posture (`1`
+    * adaptive, `0` not); unset, `aqeByDefault` decides. To A/B another
+    * advisory target in one JVM, run `Bench --ab
+    * spark.sql.adaptive.advisoryPartitionSizeInBytes=64m,8m`. Every
+    * driving session builds from here through [[session]] — profiled
+    * readings must match the driver's config exactly, and
+    * hand-maintained copies of this block had already drifted
+    * ("optimized the wrong plan"). perfbench calls the one-argument
+    * form (`aqeByDefault = true`). */
   def timedSessionBuilder(cpus: String, aqeByDefault: Boolean = true)
       : org.apache.spark.sql.SparkSession.Builder = {
     val builder = org.apache.spark.sql.SparkSession.builder()
@@ -113,8 +115,7 @@ object TmpDirs {
       builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       builder.config(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
+      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
     }
     builder
   }

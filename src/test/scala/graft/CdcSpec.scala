@@ -57,7 +57,7 @@ class CdcSpec extends SparkSpec {
 
   test("streaming scd2 emits exactly the batch assembly's closed intervals") {
     val streamed = graft.streaming.StreamOps
-      .streamingScd2(spark, sfDir, statePartitions = Some(4))
+      .streamingScd2(spark, sfDir)
       .select("user_id", "event_id", "event_type",
               "valid_from_us", "valid_to_us")
       .collect().toSet

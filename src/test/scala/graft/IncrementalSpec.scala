@@ -31,7 +31,7 @@ class IncrementalSpec extends SparkSpec {
   test("timeout sessions: closed + still-open partition the batch sessions") {
     val gapUs = 1800L * 1000000L
     val closed = graft.streaming.StreamOps
-      .streamingTimeoutSessions(spark, sfDir, statePartitions = Some(4))
+      .streamingTimeoutSessions(spark, sfDir)
       .cache()
     // batch replay of all sessions in the same µs arithmetic
     import org.apache.spark.sql.expressions.Window
@@ -102,7 +102,7 @@ class IncrementalSpec extends SparkSpec {
       .groupBy("lang").agg(countDistinct("doc_id").as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val streamed = graft.streaming.StreamOps
-      .streamingDecontaminationFeed(spark, sfDir, statePartitions = Some(2))
+      .streamingDecontaminationFeed(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(streamed == batch)
     assert(batch.nonEmpty, "vacuous: no contaminated docs in fixture")

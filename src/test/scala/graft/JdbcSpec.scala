@@ -64,7 +64,7 @@ class JdbcSpec extends SparkSpec {
   test("jdbcUpsertReplay converges to batch per-user cent totals despite " +
        "every epoch being applied twice") {
     val got = graft.streaming.StreamOps
-      .jdbcUpsertReplay(spark, sfDir, statePartitions = Some(4))
+      .jdbcUpsertReplay(spark, sfDir)
       .as[(Long, Long)].collect().toSeq
     val want = Tables.events(spark, sfDir)
       .withColumn("cents", round(col("value") * 100).cast("long"))
@@ -118,7 +118,7 @@ class JdbcSpec extends SparkSpec {
 
   test("jdbcTxnLogReplay converges to batch per-user cent totals with doubled epochs") {
     val got = graft.streaming.StreamOps
-      .jdbcTxnLogReplay(spark, sfDir, statePartitions = Some(4))
+      .jdbcTxnLogReplay(spark, sfDir)
       .as[(Long, Long)].collect().toSeq
     val want = Tables.events(spark, sfDir)
       .withColumn("cents", round(col("value") * 100).cast("long"))

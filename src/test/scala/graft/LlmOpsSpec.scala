@@ -236,8 +236,7 @@ class LlmOpsSpec extends SparkSpec {
   test("streaming IVF ingest: top-k served from the grown corpus, both " +
        "segments pruned at the directory level") {
     val served = graft.streaming.StreamOps
-      .streamingIvfIngestServe(spark, sfDir, k = 10, nprobe = 3,
-        statePartitions = Some(2))
+      .streamingIvfIngestServe(spark, sfDir, k = 10, nprobe = 3)
     val rows = served.as[(Long, Double)].collect()
     assert(rows.length === 10)
     // rank order is the cosine/vec_id contract

@@ -154,7 +154,7 @@ class SkewSpec extends SparkSpec {
 
   test("t17b triage ranks the flooding key first with a dominant share") {
     val triage = graft.streaming.StreamOps
-      .deadLetterTriageSkewed(spark, sfDir, statePartitions = Some(4))
+      .deadLetterTriageSkewed(spark, sfDir)
       .as[(Long, Long)].collect()
     assert(triage.nonEmpty)
     val (topKey, topCount) = triage.head

@@ -14,7 +14,7 @@ class StateSchemaUpgradeSpec extends SparkSpec {
   test("avro encoding: widened TWS state restarts over the same " +
        "checkpoint and keeps accumulating") {
     val got = StreamOps
-      .stateSchemaUpgradeTotals(spark, sfDir, statePartitions = Some(4))
+      .stateSchemaUpgradeTotals(spark, sfDir)
       .as[(Long, Long, Long, Long)].collect()
       .map { case (u, n, c, n2) => u -> ((n, c, n2)) }.toMap
     val truth = Tables.events(spark, sfDir)
@@ -34,8 +34,7 @@ class StateSchemaUpgradeSpec extends SparkSpec {
 
   test("unsaferow encoding (the default) refuses the widened restart") {
     val e = intercept[Exception] {
-      StreamOps.stateSchemaUpgradeTotals(spark, sfDir,
-        statePartitions = Some(4), encoding = "unsaferow").collect()
+      StreamOps.stateSchemaUpgradeTotals(spark, sfDir, encoding = "unsaferow").collect()
     }
     val msg = (e.getMessage +: Iterator.iterate(e.getCause)(_.getCause)
         .takeWhile(_ != null).map(_.getMessage).toSeq).mkString(" | ")

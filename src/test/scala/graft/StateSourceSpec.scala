@@ -11,7 +11,7 @@ class StateSourceSpec extends SparkSpec {
 
   test("statestore readback equals the batch distinct-user set") {
     val fromState = StreamOps
-      .stateSourceDedupAudit(spark, sfDir, statePartitions = Some(4))
+      .stateSourceDedupAudit(spark, sfDir)
       .as[Long].collect().toSet
     val want = Tables.events(spark, sfDir)
       .select("user_id").distinct().as[Long].collect().toSet
@@ -21,8 +21,7 @@ class StateSourceSpec extends SparkSpec {
   test("t41 time-travel: the as-of-batch-0 read is prefix-consistent — " +
        "batch 1's users never leak backward, the feed is exactly the delta") {
     import org.apache.spark.sql.functions._
-    val got = StreamOps.stateTimeTravelDedup(spark, sfDir,
-        statePartitions = Some(4))
+    val got = StreamOps.stateTimeTravelDedup(spark, sfDir)
       .as[(Long, String)].collect().toSet
     val asOf = got.collect { case (u, "asof_batch0") => u }
     val feed = got.collect { case (u, "feed_batch1") => u }
@@ -45,12 +44,13 @@ class StateSourceSpec extends SparkSpec {
 
   test("state-metadata names the operator and the committed batch range") {
     val (_, ckpt) = StreamOps
-      .stateSourceDedupAuditWithCkpt(spark, sfDir, Some(4))
+      .stateSourceDedupAuditWithCkpt(spark, sfDir)
     val m = spark.read.format("state-metadata").load(ckpt).collect()
     assert(m.length === 1, s"one stateful operator expected: ${m.toSeq}")
     val row = m.head
     assert(row.getAs[String]("operatorName") === "dedupe")
-    assert(row.getAs[Int]("numPartitions") === 4)
+    // the shared t5/t27 run's own width, not the session's 4
+    assert(row.getAs[Int]("numPartitions") === 8)
     // two paced files → batches 0 and 1 committed
     assert(row.getAs[Long]("minBatchId") === 0L)
     assert(row.getAs[Long]("maxBatchId") === 1L)

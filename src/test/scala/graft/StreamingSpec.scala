@@ -308,14 +308,16 @@ class StreamingSpec extends SparkSpec {
 
   test("state-partition sizing: same results, session width restored") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val sized = StreamOps.streamingSessionCounts(spark, sfDir,
-        statePartitions = Some(2))
-      .as[(Long, Long)].collect().toSet
+    def dedup(width: Int) =
+      StreamOps.streamTable(spark, StreamOps.eventStream(spark, sfDir),
+          "append", Some(width))(_.dropDuplicates("user_id").select("user_id"))
+        .as[Long].collect().toSet
+    val narrow = dedup(2)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
       "session shuffle width must be restored after the query")
-    val default = StreamOps.streamingSessionCounts(spark, sfDir)
-      .as[(Long, Long)].collect().toSet
-    assert(sized === default, "state partitioning must not change results")
+    val wide = dedup(8)
+    assert(narrow.nonEmpty && narrow === wide,
+      "state partitioning must not change results")
   }
 
   test("T45 streamed corpus front end equals the batch gates + canonical " +
@@ -773,8 +775,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T35 changelog checkpointing recovers dedup state across restart") {
-    val got = StreamOps.changelogRecoverDedup(spark, sfDir,
-        statePartitions = Some(4))
+    val got = StreamOps.changelogRecoverDedup(spark, sfDir)
       .as[Long].collect().sorted
     val want = Tables.events(spark, sfDir)
       .select("user_id").distinct().as[Long].collect().sorted
@@ -898,7 +899,7 @@ class StreamingSpec extends SparkSpec {
 
   test("s10: every emit epoch lands twice on the wire; the keyed dedup converges") {
     import spark.implicits._
-    val emitted = StreamOps.wireEmitRun(spark, sfDir, Some(4))
+    val emitted = StreamOps.wireEmitRun(spark, sfDir)
     val frames = spark.read.parquet(emitted)
       .select(from_json(col("value").cast("string"),
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -1092,7 +1093,7 @@ class StreamingSpec extends SparkSpec {
 
   test("t24: nfc-keyed streaming dedup collapses both spellings per doc") {
     import spark.implicits._
-    val out = StreamOps.streamingNfcDedup(spark, sfDir, Some(4))
+    val out = StreamOps.streamingNfcDedup(spark, sfDir)
       .as[(String, Long)].collect().toMap
     val want = Tables.documents(spark, sfDir).groupBy("lang")
       .agg(countDistinct("text")).as[(String, Long)].collect().toMap

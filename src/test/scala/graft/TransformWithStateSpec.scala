@@ -11,7 +11,7 @@ class TransformWithStateSpec extends SparkSpec {
 
   test("TWS running totals equal the batch group-by") {
     val got = StreamOps
-      .transformWithStateTotals(spark, sfDir, statePartitions = Some(4))
+      .transformWithStateTotals(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = Tables.events(spark, sfDir)
       .select(col("user_id"),
@@ -23,8 +23,10 @@ class TransformWithStateSpec extends SparkSpec {
   }
 
   test("the RocksDB provider conf is scoped, not leaked") {
-    StreamOps.transformWithStateTotals(spark, sfDir,
-      statePartitions = Some(4)).count()
+    // drop the shared t26/t39 run the test above built, so a query
+    // really starts under the provider override
+    StreamOps.twsTotalsMemo.clear()
+    StreamOps.transformWithStateTotals(spark, sfDir).count()
     assert(!spark.conf
       .get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDB"),
@@ -37,18 +39,15 @@ class TransformWithStateSpec extends SparkSpec {
       df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
-    val tws = rows(StreamOps.twsTimerSessions(spark, sfDir,
-      statePartitions = Some(4)))
-    val legacy = rows(StreamOps.streamingTimeoutSessions(spark, sfDir,
-      statePartitions = Some(4)))
+    val tws = rows(StreamOps.twsTimerSessions(spark, sfDir))
+    val legacy = rows(StreamOps.streamingTimeoutSessions(spark, sfDir))
     assert(tws.nonEmpty && tws === legacy)
   }
 
   test("t30 emits both close paths: in-batch gap closes AND " +
        "watermark-fired timer closes") {
     val gapUs = 1800L * 1000000L
-    val closed = StreamOps.twsTimerSessions(spark, sfDir,
-        statePartitions = Some(4))
+    val closed = StreamOps.twsTimerSessions(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // in-batch closes: sessions followed by another session of the same
@@ -68,8 +67,7 @@ class TransformWithStateSpec extends SparkSpec {
   }
 
   test("t32 MapState per-(user, type) totals equal the batch group-by") {
-    val got = StreamOps.twsMapStateTotals(spark, sfDir,
-        statePartitions = Some(4))
+    val got = StreamOps.twsMapStateTotals(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -166,8 +164,7 @@ class TransformWithStateSpec extends SparkSpec {
 
   test("t37 initial state: the warm-start handoff reassembles the " +
        "full-table totals, both serving paths non-vacuous") {
-    val got = StreamOps.twsInitialStateTotals(spark, sfDir,
-        statePartitions = Some(4))
+    val got = StreamOps.twsInitialStateTotals(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = Tables.events(spark, sfDir)
       .select(col("user_id"),
@@ -196,8 +193,7 @@ class TransformWithStateSpec extends SparkSpec {
 
   test("t39 state source reads the TWS ValueState cell back as exactly " +
        "the batch GROUP BY") {
-    val got = StreamOps.twsStateSourceAudit(spark, sfDir,
-        statePartitions = Some(4))
+    val got = StreamOps.twsStateSourceAudit(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = Tables.events(spark, sfDir)
       .select(col("user_id"),
@@ -210,8 +206,7 @@ class TransformWithStateSpec extends SparkSpec {
   }
 
   test("t31 AvailableNow terminates itself and lands the full tally") {
-    val got = StreamOps.availableNowTally(spark, sfDir,
-        statePartitions = Some(4))
+    val got = StreamOps.availableNowTally(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getLong(2))).toMap
     val want = Tables.events(spark, sfDir)
       .groupBy("event_type").agg(count(lit(1)).as("n"))
