@@ -2615,11 +2615,8 @@ object SparkEntry {
         .orderBy("doc_id", "frame_idx"))
   )
 
-  private lazy val oracleSqlBase: Map[String, String] = Map(
+  private[graft] lazy val oracleSqlBase: Map[String, String] = Map(
     "a1_votes_per_candidate" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
-    "a1_salted_skew" ->
       """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
          FROM events GROUP BY event_type""",
     "a2_turnout_by_location" ->
@@ -2683,10 +2680,6 @@ object SparkEntry {
     // item tracked exactly, so both the estimate column and the verdict
     // replay as the exact histogram
     "sketch_approx_topk" ->
-      """SELECT event_type, count(*) AS approx_n, count(*) AS n_exact,
-                true AS sketch_exact
-         FROM events GROUP BY 1""",
-    "sketch_approx_topk_merge" ->
       """SELECT event_type, count(*) AS approx_n, count(*) AS n_exact,
                 true AS sketch_exact
          FROM events GROUP BY 1""",
@@ -2859,19 +2852,6 @@ object SparkEntry {
          FROM e JOIN customer ON skew_key = c_custkey
          GROUP BY c_mktsegment
          ORDER BY c_mktsegment""",
-    // AQE skew handling is runtime-only — the logical result is the same
-    // plain join, so the oracle is identical to j7b's
-    "j7c_aqe_skew_join" ->
-      """WITH e AS (SELECT event_id,
-                           CASE WHEN event_id % 100 < 90 THEN 1
-                                ELSE user_id END AS skew_key,
-                           value
-                    FROM events)
-         SELECT c_mktsegment, count(*) AS n_events,
-                round(sum(value), 2) AS total_value
-         FROM e JOIN customer ON skew_key = c_custkey
-         GROUP BY c_mktsegment
-         ORDER BY c_mktsegment""",
     // brute-force replay of the blocked fuzzy join: same deterministic
     // typo injection (integer surgery on p_partkey, 1-based substr on
     // both engines), then levenshtein <= 2 over dirty × distinct-clean.
@@ -2970,7 +2950,6 @@ object SparkEntry {
          WHERE o_totalprice > 400000
          GROUP BY o_orderkey
          ORDER BY o_orderkey""",
-    // same truth as sessionize_dynamic_gap: the stream/batch parity gate
     // batch replay of the streamed corpus front end: the same gates as
     // the corpus_prepare oracle, then canonical exact dedup per content
     "t45_stream_canonical_dedup" ->
@@ -3006,20 +2985,6 @@ object SparkEntry {
                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                   AS total_cents
          FROM events GROUP BY event_type ORDER BY event_type""",
-    // identical to t45's oracle: checkpoint recovery must be
-    // semantics-free on the corpus front end
-    "t47_stream_corpus_recover" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w
-                    FROM documents),
-              kept AS (SELECT doc_id, text, len(w) AS n_tokens FROM t
-                       WHERE round(len(list_filter(w, x -> x IN ('the','a')))
-                                   / CAST(len(w) AS DOUBLE), 4) > 0.03
-                         AND len(w) >= 10 AND len(w) <= 10000
-                         AND round(len(list_distinct(w))
-                                   / CAST(len(w) AS DOUBLE), 4) > 0.1)
-         SELECT min(doc_id) AS doc_id, count(*) AS n_copies,
-                CAST(min(n_tokens) AS BIGINT) AS n_tokens
-         FROM kept GROUP BY md5(text) ORDER BY doc_id""",
     // the eviction replayed flat: a gated digest is re-emitted by the
     // batch-1 re-delivery iff its batch-0 ingest time put it on the
     // evicted (even-text-length) side of the watermark horizon
@@ -3124,32 +3089,6 @@ object SparkEntry {
                   CAST(count(*) AS BIGINT)
            FROM events)
          ORDER BY event_type""",
-    "t44_stream_dynamic_sessions" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
-                           epoch_us(ts) + CASE WHEN event_type = 'purchase'
-                                               THEN 3600000000
-                                               ELSE 1800000000 END AS end_us
-                    FROM events),
-              o AS (SELECT user_id, ts_us, end_us,
-                           max(end_us) OVER (PARTITION BY user_id
-                             ORDER BY ts_us, end_us
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND 1 PRECEDING) AS prev_max_end
-                    FROM e),
-              f AS (SELECT user_id, ts_us, end_us,
-                           CASE WHEN prev_max_end IS NULL
-                                  OR ts_us >= prev_max_end
-                                THEN 1 ELSE 0 END AS new_s
-                    FROM o),
-              g AS (SELECT user_id, ts_us, end_us,
-                           sum(new_s) OVER (PARTITION BY user_id
-                             ORDER BY ts_us, end_us
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS sid
-                    FROM f)
-         SELECT user_id, min(ts_us) AS start_us, max(end_us) AS end_us,
-                count(*) AS n_events
-         FROM g GROUP BY user_id, sid""",
     // dynamic-gap merge replayed as gaps-and-islands over the per-event
     // [ts, ts+gap) intervals: sorted by start, an event joins the open
     // session iff its start lies below the running cummax of ends
@@ -3204,17 +3143,6 @@ object SparkEntry {
                 CAST(max(len) AS BIGINT) AS max_streak,
                 count(*) AS n_streaks
          FROM runs GROUP BY user_id""",
-    "sessionize_users_bigkey" ->
-      """WITH o AS (SELECT user_id, ts,
-                           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
-                    FROM events),
-              m AS (SELECT user_id,
-                           CASE WHEN pts IS NULL
-                                  OR date_diff('second', pts, ts) > 1800
-                                THEN 1 ELSE 0 END AS new_s
-                    FROM o)
-         SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions
-         FROM m GROUP BY user_id""",
     "q3_shipping_priority" ->
       """SELECT l_orderkey,
                 strftime(o_orderdate, '%Y-%m-%d') AS order_date,
@@ -3329,31 +3257,6 @@ object SparkEntry {
     // sessions replayed in µs arithmetic; the tail session's timeout uses
     // the exec's fire condition — timeout MS strictly below watermark MS
     "t15_stream_timeout_sessions" ->
-      """WITH o AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-                           lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS pus
-                    FROM events),
-              m AS (SELECT user_id, us,
-                           sum(CASE WHEN pus IS NULL OR us - pus > 1800000000
-                                    THEN 1 ELSE 0 END)
-                             OVER (PARTITION BY user_id ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-                    FROM o),
-              s AS (SELECT user_id, sid, min(us) AS start_us,
-                           max(us) AS end_us, count(*) AS n_events
-                    FROM m GROUP BY user_id, sid),
-              mx AS (SELECT max(epoch_us(ts)) AS max_us FROM events),
-              tl AS (SELECT user_id, max(sid) AS last_sid FROM s
-                     GROUP BY user_id)
-         SELECT s.user_id, s.start_us, s.end_us, s.n_events
-         FROM s JOIN tl USING (user_id) CROSS JOIN mx
-         WHERE s.sid < tl.last_sid
-            OR (s.end_us + 1800000000) // 1000 < mx.max_us // 1000
-         ORDER BY s.user_id, s.start_us""",
-    // t15's oracle VERBATIM: the TWS-timer form must close the exact
-    // same sessions under the exact same ms fire condition — the
-    // API-migration parity this seat grades
-    "t30_stream_tws_timer_sessions" ->
       """WITH o AS (SELECT user_id, epoch_us(ts) AS us, event_id,
                            lag(epoch_us(ts)) OVER (PARTITION BY user_id
                              ORDER BY ts, event_id) AS pus
@@ -3979,20 +3882,6 @@ object SparkEntry {
          SELECT doc_id, CAST(w AS BIGINT) AS w,
                 CAST(priority AS BIGINT) AS priority
          FROM p ORDER BY priority DESC, doc_id LIMIT 500""",
-    // the streaming funnel must land on the BATCH funnel's exact counts —
-    // same oracle, reached through the keyed state machine
-    "t11_stream_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-                    WHERE event_type = 'view' GROUP BY user_id),
-              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-                    JOIN v ON e.user_id = v.user_id AND e.ts > v.t1
-                    WHERE e.event_type = 'click' GROUP BY e.user_id),
-              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-                    JOIN c ON e.user_id = c.user_id AND e.ts > c.t2
-                    WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-         SELECT (SELECT count(*) FROM v) AS n_view,
-                (SELECT count(*) FROM c) AS n_click,
-                (SELECT count(*) FROM p) AS n_purchase""",
     "trailing_active_users" ->
       """WITH ud AS (SELECT DISTINCT user_id,
                             date_diff('day', DATE '2024-01-01',
@@ -4340,8 +4229,6 @@ object SparkEntry {
       """SELECT event_id,
                 to_json(struct_pack(event_type := event_type, value := value)) AS js
          FROM events""",
-    "f5b_xml_roundtrip" ->
-      "SELECT event_id, event_type, value FROM events",
     "f9_format_string" ->
       "SELECT event_id, printf('%s#%03d', event_type, user_id % 100) AS tag FROM events",
     // collated equality ≡ lower() equality; the fixture's event_type is
@@ -4353,21 +4240,12 @@ object SparkEntry {
                 count(*) AS n_events,
                 CAST(1 AS BIGINT) AS n_spellings_collated
          FROM events GROUP BY 1""",
-    "s4_json_source" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
     "s4_xml_source" ->
       """SELECT event_type,
                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                   AS total_cents,
                 count(*) AS n_events
          FROM events GROUP BY event_type ORDER BY event_type""",
-    "s4_csv_source" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
-    "s4_orc_source" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
     // the %.2f wire format is lossless for this 2-decimal data, so the
     // parsed fold must equal the original-table fold exactly
     "s4_text_log_source" ->
@@ -4451,11 +4329,6 @@ object SparkEntry {
                 CAST(sum(event_id) AS BIGINT) AS sum_ids,
                 round(sum(value), 2) AS sum_value
          FROM events""",
-    "storage_sorted_export" ->
-      """SELECT count(*) AS n_rows,
-                CAST(sum(event_id) AS BIGINT) AS sum_ids,
-                round(sum(value), 2) AS sum_value
-         FROM events""",
     // the Avro write→read trip is value-transparent: the oracle replays
     // the summary straight from the source table (doubles round-trip
     // bit-exactly through Avro)
@@ -4472,13 +4345,6 @@ object SparkEntry {
     // the table the doubly-applied streaming upsert must converge to:
     // plain per-user totals in exact integer cents
     "s5c_jdbc_upsert_replay" ->
-      """SELECT user_id,
-                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                  AS total_cents
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    // same ground truth as s5c: the delta sink must converge to the batch
-    // per-user totals despite double delivery of every epoch
-    "s5d_jdbc_txnlog_replay" ->
       """SELECT user_id,
                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                   AS total_cents
@@ -4596,19 +4462,6 @@ object SparkEntry {
     // TWS totals: the last emit per user must equal the batch GROUP BY
     // (integer cents — the same per-row rounding as incr_agg_merge)
     "t26_stream_transform_with_state" ->
-      """SELECT user_id, count(*) AS n_events,
-                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                  AS total_cents
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    // t26's truth verbatim, read back OUT of the checkpoint this time
-    "t39_tws_state_source_read" ->
-      """SELECT user_id, count(*) AS n_events,
-                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                  AS total_cents
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    // t26's truth verbatim: the warm-start handoff (batch even-half
-    // seed + odd-half stream) must reassemble the FULL-table totals
-    "t37_stream_tws_initial_state" ->
       """SELECT user_id, count(*) AS n_events,
                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                   AS total_cents
@@ -4821,43 +4674,14 @@ object SparkEntry {
                             WHEN 3 THEN 'WA' ELSE 'IL' END AS state,
                 count(*) AS turnout
          FROM range(1000) t(id) GROUP BY 1""",
-    "vote_e2e_stream_tally" ->
-      s"""SELECT ${partyCase("(id * 31 + 7)")} AS party_affiliation,
-                 count(*) AS total_votes
-          FROM range(1000) t(id) GROUP BY 1""",
     "vote_e2e_live_results" ->
       s"""SELECT 'candidate_' || CAST((id * 31 + 7) % 3 AS VARCHAR) AS candidate_name,
                  ${partyCase("((id * 31 + 7) % 3)")} AS party_affiliation,
                  count(*) AS total_votes
           FROM range(1000) t(id) GROUP BY 1, 2""",
-    // same standings, but produced through the second-topic wire hop — the
-    // re-emit/re-consume machinery must be value-neutral
-    "vote_e2e_reemit" ->
-      s"""SELECT 'candidate_' || CAST((id * 31 + 7) % 3 AS VARCHAR) AS candidate_name,
-                 ${partyCase("((id * 31 + 7) % 3)")} AS party_affiliation,
-                 count(*) AS total_votes
-          FROM range(1000) t(id) GROUP BY 1, 2""",
-    "t3_stream_cumulative" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
-    // the wire round-trip and the checkpoint restart must both land on the
-    // exact batch tally — same SQL, independent failure modes
-    "t3b_wire_tally" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
-    "t1_stream_recover" ->
-      """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
-         FROM events GROUP BY event_type""",
     // the fold over the SINK directory must equal the fold over the
     // source: exactly-once across the restart
     "s9_file_sink_exactly_once" ->
-      """SELECT event_type, count(*) AS n_events,
-                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                  AS cents
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    // the emit-side exactly-once twin: same batch truth — any redelivered
-    // frame the consumer fails to drop doubles a type's totals
-    "s10_wire_emit_exactly_once" ->
       """SELECT event_type, count(*) AS n_events,
                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                   AS cents
@@ -4866,20 +4690,6 @@ object SparkEntry {
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour_start,
                 count(*) AS n_events
          FROM events GROUP BY 1""",
-    // direct-from-ticks hour bars — the incremental bar snapshot must
-    // reproduce them exactly (same oracle shape as ts_ohlc_rollup)
-    "t19_stream_ohlc_maintain" ->
-      """SELECT event_type,
-                strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS bar_start,
-                round(arg_min(value, ts), 2) AS open,
-                round(max(value), 2) AS high,
-                round(min(value), 2) AS low,
-                round(arg_max(value, ts), 2) AS close,
-                count(*) AS n_events,
-                CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-                  AS vol_cents
-         FROM events
-         GROUP BY event_type, date_trunc('hour', ts)""",
     // the sketch chain is engine-internal; the contract is: exact distinct
     // matches, and the final snapshot's estimate landed within 5%
     "t18_stream_sketch_maintain" ->
@@ -4944,13 +4754,6 @@ object SparkEntry {
          WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= wm.w
          GROUP BY 1""",
     "t5_stream_dedup_users" -> "SELECT DISTINCT user_id FROM events",
-    // same truth as t5: the RocksDB backend swap must be semantics-free
-    "t25_stream_rocksdb_dedup" -> "SELECT DISTINCT user_id FROM events",
-    // t5's truth again: the union of the two phases' append emissions
-    // equals the distinct-user set only if the restart RECOVERED the
-    // dedup state (a lost store re-emits the even half as duplicates,
-    // which UNION ALL-style hashing would catch as multiplicity)
-    "t35_stream_changelog_recover" -> "SELECT DISTINCT user_id FROM events",
     // per-half totals: batch 0 = even event_ids, batch 1 = odd; the 1 ms
     // TTL guarantees batch 0's cells are expired reads by batch 1, so
     // the odd half re-counts from zero — cumulative (un-expired) totals
@@ -4978,8 +4781,6 @@ object SparkEntry {
          SELECT user_id, 'feed_batch1' AS src
          FROM (SELECT DISTINCT user_id FROM events WHERE user_id % 3 = 0)
          ORDER BY src, user_id""",
-    // any re-emission of a late duplicate adds a row and goes red
-    "t5b_stream_dedup_watermarked" -> "SELECT DISTINCT user_id FROM events",
     // session_window semantics at microsecond precision: a new session
     // starts when the gap reaches 30 min exactly (no fixture event sits on
     // the boundary, verified)
@@ -5005,28 +4806,6 @@ object SparkEntry {
            ON p.user_id = c.user_id
           AND c.ts <= p.ts AND p.ts <= c.ts + INTERVAL 3600 SECONDS
          WHERE p.event_type = 'purchase' AND c.event_type = 'click'""",
-    // streaming merge replay: identical to the batch cdc_merge_delete
-    // oracle — complete-mode max(struct(ts, event_id, ...)) IS the
-    // latest-wins window, so stream and batch share one truth
-    "t22_stream_merge_delete" ->
-      """WITH r AS (SELECT user_id, value, event_type,
-                           row_number() OVER (PARTITION BY user_id
-                             ORDER BY ts DESC, event_id DESC) AS rk
-                    FROM events),
-              ch AS (SELECT user_id * 11 AS ckey, value AS cval,
-                            CASE WHEN event_type = 'error' THEN 'delete'
-                                 ELSE 'upsert' END AS op
-                     FROM r WHERE rk = 1)
-         SELECT coalesce(c_custkey, ckey) AS key,
-                CASE WHEN ckey IS NULL THEN 'keep'
-                     WHEN op = 'delete' AND c_custkey IS NULL
-                       THEN 'noop_delete'
-                     WHEN op = 'delete' THEN 'delete'
-                     WHEN c_custkey IS NULL THEN 'insert'
-                     ELSE 'update' END AS action,
-                CASE WHEN op = 'delete' THEN CAST(NULL AS DOUBLE)
-                     ELSE coalesce(cval, c_acctbal) END AS value
-         FROM customer FULL OUTER JOIN ch ON c_custkey = ckey""",
     // leaderboard replay: the cumulative tally + rank/share/gap over it;
     // integer basis points (// with non-negative operands ≡ Spark div)
     "t21_stream_leaderboard" ->
@@ -5160,33 +4939,6 @@ object SparkEntry {
                 n_events, n_hours
          FROM b, wm
          WHERE bucket + INTERVAL 4 HOUR <= wm.w""",
-    "t8_stream_asof" ->
-      """WITH u AS (
-           SELECT user_id, ts, event_id, 1 AS tag,
-                  CAST(NULL AS BIGINT) AS r_id, CAST(NULL AS TIMESTAMP) AS r_ts
-           FROM events WHERE event_type = 'purchase'
-           UNION ALL
-           SELECT user_id, ts, event_id, 0 AS tag, event_id AS r_id, ts AS r_ts
-           FROM events WHERE event_type = 'click'),
-         w AS (
-           SELECT *,
-                  last_value(r_id IGNORE NULLS) OVER
-                    (PARTITION BY user_id ORDER BY ts, tag, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_r_id,
-                  last_value(r_ts IGNORE NULLS) OVER
-                    (PARTITION BY user_id ORDER BY ts, tag, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_r_ts
-           FROM u)
-         SELECT event_id AS left_id, user_id,
-                CASE WHEN last_r_ts IS NOT NULL
-                          AND date_diff('second', last_r_ts, ts) <= 3600
-                     THEN last_r_id END AS matched_right_id,
-                CASE WHEN last_r_ts IS NOT NULL
-                          AND date_diff('second', last_r_ts, ts) <= 3600
-                     THEN date_diff('second', last_r_ts, ts) END AS gap_s
-         FROM w WHERE tag = 1""",
-    "s8_write_then_emit" ->
-      "SELECT event_id, event_type, value FROM events",
     "dedup_exact" ->
       """SELECT md5(text) AS content_md5, min(doc_id) AS doc_id, count(*) AS n_copies
          FROM documents GROUP BY md5(text)""",
@@ -5265,22 +5017,6 @@ object SparkEntry {
                     JOIN sizes sb ON sb.doc_id = doc_b)
          SELECT count(*) AS n_true_pairs, true AS precision_ok,
                 true AS recall_ok FROM j WHERE jac >= 0.5""",
-    "dedup_simhash_recall" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              j AS (SELECT n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jac
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b)
-         SELECT count(*) AS n_true_pairs, true AS recall_ok FROM j WHERE jac >= 0.5""",
     // connected components of the >=tau pair graph: DuckDB computes the
     // exact transitive closure recursively; Spark's min-label propagation
     // must converge to the same clustering
@@ -5631,19 +5367,6 @@ object SparkEntry {
          FROM top t
          LEFT JOIN j ON j.doc_a = t.vec_a AND j.doc_b = t.vec_b
          ORDER BY t.cosine DESC, t.vec_a, t.vec_b""",
-    "ann_ivf_topk_full" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0)
-         SELECT n.vec_id,
-                round(list_sum(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]))
-                      / (n.nrm * q.qn), 6) AS cosine
-         FROM n, q WHERE n.vec_id <> 0
-         ORDER BY cosine DESC, vec_id LIMIT 10""",
     // per-query ranked id list, replayed with a window + ordered string_agg
     "ann_batch_topk" ->
       """WITH e AS (SELECT vec_id,
@@ -5852,19 +5575,6 @@ object SparkEntry {
                     ORDER BY d DESC, cell ASC) AS rn
            FROM s2) WHERE rn = 1
          ORDER BY vec_id""",
-    "ann_cosine_topk_native" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0)
-         SELECT n.vec_id,
-                round(list_sum(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]))
-                      / (n.nrm * q.qn), 6) AS cosine
-         FROM n, q WHERE n.vec_id <> 0
-         ORDER BY cosine DESC, vec_id LIMIT 10""",
     "vec_quantize_int8" ->
       """WITH e AS (SELECT vec_id,
                            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -6860,18 +6570,75 @@ object SparkEntry {
          ORDER BY d.doc_id, frame_idx"""
   )
 
-  // layout/execution variants compute identical results to their base
-  // queries and share the base replay verbatim: the pruned IVF reads a
-  // different storage layout; the Bloom-gated incremental dedup swaps
-  // how the exact gate is SERVED (sketch pre-filter + exact rejoin),
-  // never what it returns
+  /** One oracle per shared contract: each base seat's replay is also the
+    * oracle of its twins — seats that reach the base's exact result by
+    * another path (a layout, a source or sink, a stream, a restart, a
+    * backend). `OracleTwinSpec` pins that every twin returns its base's
+    * rows. */
+  private[graft] val sharedOracles: Seq[(String, Seq[String])] = Seq(
+    // the per-type tally through salting, the s4 file sources, the t3
+    // stream, the t3b wire round-trip and the t1 checkpoint restart
+    "a1_votes_per_candidate" -> Seq("a1_salted_skew", "s4_json_source",
+      "s4_csv_source", "s4_orc_source", "t3_stream_cumulative",
+      "t3b_wire_tally", "t1_stream_recover"),
+    // the row projection, through the XML round-trip and the write-then-
+    // emit wire sink
+    "p1p3_decode_flatten" -> Seq("f5b_xml_roundtrip", "s8_write_then_emit"),
+    // streaming forms land on their batch seat's exact result: the keyed
+    // state machines (t8, t11), the incremental bar snapshot (t19), the
+    // complete-mode latest-wins compaction (t22), the dynamic-gap session
+    // merge (t44)
+    "j4_asof_attribution" -> Seq("t8_stream_asof"),
+    "funnel_stages" -> Seq("t11_stream_funnel"),
+    "ts_ohlc_rollup" -> Seq("t19_stream_ohlc_maintain"),
+    "cdc_merge_delete" -> Seq("t22_stream_merge_delete"),
+    "sessionize_dynamic_gap" -> Seq("t44_stream_dynamic_sessions"),
+    // the TWS-timer form closes the exact same sessions under the exact
+    // same ms fire condition — the API-migration parity t30 grades
+    "t15_stream_timeout_sessions" -> Seq("t30_stream_tws_timer_sessions"),
+    // the distinct users: the RocksDB backend swap (t25), the changelog
+    // restart (t35, where a lost store re-emits the even half) and the
+    // watermarked dedup (t5b, where a re-emitted late duplicate adds a
+    // row) are all semantics-free
+    "t5_stream_dedup_users" -> Seq("t25_stream_rocksdb_dedup",
+      "t35_stream_changelog_recover", "t5b_stream_dedup_watermarked"),
+    // t26's totals, read back OUT of the checkpoint (t39) and reassembled
+    // from the warm-start handoff (t37)
+    "t26_stream_transform_with_state" -> Seq("t39_tws_state_source_read",
+      "t37_stream_tws_initial_state"),
+    // checkpoint recovery is semantics-free on the corpus front end
+    "t45_stream_canonical_dedup" -> Seq("t47_stream_corpus_recover"),
+    // the delta sink converges to the same per-user totals despite
+    // double delivery of every epoch
+    "s5c_jdbc_upsert_replay" -> Seq("s5d_jdbc_txnlog_replay"),
+    // the emit-side exactly-once twin: any redelivered frame the
+    // consumer fails to drop doubles a type's totals
+    "s9_file_sink_exactly_once" -> Seq("s10_wire_emit_exactly_once"),
+    // the streamed tally and the re-emitted board over the same votes
+    "vote_e2e_party_tally" -> Seq("vote_e2e_stream_tally"),
+    "vote_e2e_live_results" -> Seq("vote_e2e_reemit"),
+    // execution variants: a merged sketch, AQE skew handling (runtime
+    // only — the logical result is the same plain join), the secondary-
+    // sort sessionizer, a sorted export, the SimHash candidates (same
+    // recall truth), the native and full-scan top-k paths
+    "sketch_approx_topk" -> Seq("sketch_approx_topk_merge"),
+    "j7b_salted_join_skewed" -> Seq("j7c_aqe_skew_join"),
+    "sessionize_users" -> Seq("sessionize_users_bigkey"),
+    "storage_codec_zstd" -> Seq("storage_sorted_export"),
+    "dedup_minhash_recall" -> Seq("dedup_simhash_recall"),
+    "ann_cosine_topk" -> Seq("ann_cosine_topk_native", "ann_ivf_topk_full"),
+    // layout/execution variants: the pruned IVF reads a different
+    // storage layout; the Bloom-gated incremental dedup swaps how the
+    // exact gate is SERVED (sketch pre-filter + exact rejoin), never what
+    // it returns; the streamed crawl triage unions to the one-shot batch
+    // triage (per-doc status depends only on doc-vs-corpus)
+    "ann_ivf_topk" -> Seq("ann_ivf_topk_pruned"),
+    "dedup_incremental" -> Seq("dedup_incremental_bloom",
+      "t53_stream_incremental_dedup"),
+    // the streaming drift monitor converges to the batch audit exactly
+    "dq_drift_psi" -> Seq("t23_stream_drift_psi"))
+
   def oracleSql: Map[String, String] =
-    oracleSqlBase +
-      ("ann_ivf_topk_pruned" -> oracleSqlBase("ann_ivf_topk")) +
-      ("dedup_incremental_bloom" -> oracleSqlBase("dedup_incremental")) +
-      // the streamed crawl triage unions to the one-shot batch triage
-      // (per-doc status depends only on doc-vs-corpus)
-      ("t53_stream_incremental_dedup" -> oracleSqlBase("dedup_incremental")) +
-      // the streaming drift monitor converges to the batch audit exactly
-      ("t23_stream_drift_psi" -> oracleSqlBase("dq_drift_psi"))
+    oracleSqlBase ++ sharedOracles.flatMap { case (base, twins) =>
+      twins.map(_ -> oracleSqlBase(base)) }
 }

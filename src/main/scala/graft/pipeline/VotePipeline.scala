@@ -7,7 +7,7 @@ import graft.SessionMemo
 import graft.gen.Generator
 import graft.model.Schemas
 import graft.ops.Decode
-import graft.streaming.StreamOps.drain
+import graft.streaming.StreamOps.{drain, drainToTable}
 
 /** The reference's complete intended pipeline, batch form, over the full
   * 21-field vote schema (`/root/reference/spark-streaming.py:35-62`):
@@ -62,10 +62,22 @@ object VotePipeline {
   /** Decoded, flattened vote records — the reference's only written Spark
     * code, against the full 21-field nested schema. */
   def decoded(spark: SparkSession, nVoters: Long): DataFrame =
-    Decode.flatten(
-      Decode.jsonDecode(
-        Decode.castValueToString(wire(spark, nVoters)),
-        Schemas.VoteSchema))
+    decode(wire(spark, nVoters))
+
+  /** P1 cast → P2 from_json(VoteSchema) → P3 flatten, on a batch or a
+    * streaming wire frame. */
+  private def decode(wire: DataFrame): DataFrame =
+    Decode.flatten(Decode.jsonDecode(Decode.castValueToString(wire),
+      Schemas.VoteSchema))
+
+  /** The staged wire topic as a decoded vote stream; `filesPerTrigger`
+    * paces the file source (None admits every staged file at once). */
+  private def voteStream(spark: SparkSession, nVoters: Long,
+                         filesPerTrigger: Option[Int]): DataFrame = {
+    val r = spark.readStream.schema("key STRING, value BINARY")
+    decode(filesPerTrigger.fold(r)(r.option("maxFilesPerTrigger", _))
+      .parquet(stagedWireTopic(spark, nVoters)))
+  }
 
   /** ONE decoded-votes run per (session, nVoters), shared by the two batch
     * aggregate seats (r18, the t45/t47 shared-front-end pattern the r17
@@ -135,19 +147,11 @@ object VotePipeline {
     // REAL cross-batch state merge — 1-per-trigger exercised no more
     // merge coverage, at twice the micro-batch machinery) — the records
     // never pass through the driver, unlike a MemoryStream feed.
-    val topicDir = stagedWireTopic(spark, nVoters)
-    drain()(Decode.flatten(
-        Decode.jsonDecode(
-          Decode.castValueToString(
-            spark.readStream.schema("key STRING, value BINARY")
-              .option("maxFilesPerTrigger", 2).parquet(topicDir)),
-          Schemas.VoteSchema))
+    drainToTable()(voteStream(spark, nVoters, Some(2))
       .withWatermark("voting_time", "1 hour")
       .groupBy("party_affiliation")
-      .agg(sum("vote").as("total_votes"))
-      .writeStream.format("memory").queryName("vote_stream_tally")
-      .outputMode("complete").start())
-    spark.table("vote_stream_tally")
+      .agg(sum("vote").as("total_votes")),
+      "graft_vote_tally", "complete")
   }
 
   /** The COMPLETE re-emit loop the architecture notes specify
@@ -166,15 +170,9 @@ object VotePipeline {
     // the same standings (perfScope drops it; 2-file triggers halve the
     // board rewrites while keeping one real cross-batch merge)
     graft.streaming.StreamOps.perfScope(spark, Some(4)) {
-    val topicDir = stagedWireTopic(spark, nVoters)
     val boardTopic = graft.TmpDirs
       .create("graft_board_topic_").toString
-    drain()(Decode.flatten(
-        Decode.jsonDecode(
-          Decode.castValueToString(
-            spark.readStream.schema("key STRING, value BINARY")
-              .option("maxFilesPerTrigger", 2).parquet(topicDir)),
-          Schemas.VoteSchema))
+    drain()(voteStream(spark, nVoters, Some(2))
       .groupBy("candidate_id")
       .agg(sum("vote").as("total_votes"))
       .writeStream.outputMode("complete")
@@ -217,22 +215,14 @@ object VotePipeline {
     // 0.95–1.26 s (2 batches) vs 0.67–0.78 s (1), rows identical by
     // complete-mode construction.
     graft.streaming.StreamOps.perfScope(spark, Some(4)) {
-    val topicDir = stagedWireTopic(spark, nVoters)
     val dim = Generator.candidatesFull(spark)
       .select(concat(lit("c"), col("candidate_id")).as("candidate_id"),
         col("candidate_name"), col("party_affiliation"))
-    drain()(Decode.flatten(
-        Decode.jsonDecode(
-          Decode.castValueToString(
-            spark.readStream.schema("key STRING, value BINARY")
-              .parquet(topicDir)),
-          Schemas.VoteSchema))
+    drainToTable()(voteStream(spark, nVoters, None)
       .groupBy("candidate_id")
       .agg(sum("vote").as("total_votes"))
       .join(broadcast(dim), "candidate_id")
-      .select("candidate_name", "party_affiliation", "total_votes")
-      .writeStream.format("memory").queryName("vote_live_results")
-      .outputMode("complete").start())
-    spark.table("vote_live_results")
+      .select("candidate_name", "party_affiliation", "total_votes"),
+      "graft_vote_live", "complete")
   }
 }

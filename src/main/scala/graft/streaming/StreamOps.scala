@@ -355,8 +355,7 @@ object StreamOps {
     q
   }
 
-  /** Start `df` into a fresh memory table `<prefix>_N`; read it back with
-    * `spark.table(q.name)`. */
+  /** Start `df` into a fresh memory table `<prefix>_N`. */
   private def toMemory(df: DataFrame, prefix: String, mode: String,
                        ckpt: Option[String] = None): StreamingQuery = {
     val w = df.writeStream.format("memory").queryName(freshName(prefix))
@@ -364,21 +363,20 @@ object StreamOps {
     ckpt.fold(w)(w.option("checkpointLocation", _)).start()
   }
 
+  /** [[drain]] `df` into a fresh memory table `<prefix>_N` and read the
+    * table back. `df` is built when the query starts, after step 0 has
+    * landed its arrival group. */
+  private[graft] def drainToTable(steps: (() => Unit)*)(df: => DataFrame,
+      prefix: String, mode: String, ckpt: Option[String] = None): DataFrame = {
+    val q = drain(steps: _*)(toMemory(df, prefix, mode, ckpt))
+    q.sparkSession.table(q.name)
+  }
+
   /** The probed physical `ts` type per fixture dir — the footer read costs
     * a listing + schema job per call, and every streaming query starts by
     * building this source, so memoize it (the fixture file is immutable
     * for the life of the process). */
   private val tsDecls = SessionMemo[String, String]("stream_ts_decl")
-
-  /** Arrival-metering knob (`SPARK_GRAFT_STREAM_MAX_FILES`), parsed
-    * once with a validating error: a malformed value used to surface as
-    * a bare NumberFormatException deep inside stream construction with
-    * no hint which knob failed. */
-  private lazy val streamMaxFiles: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_MAX_FILES", "1")
-    raw.toIntOption.filter(_ > 0).getOrElse(sys.error(
-      s"SPARK_GRAFT_STREAM_MAX_FILES must be a positive int, got '$raw'"))
-  }
 
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -395,10 +393,8 @@ object StreamOps {
         .schema(s"event_id BIGINT, ts $tsDecl, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         // arrival metering: 1 file per micro-batch (a no-op on the
         // driver's single-file fixtures; on a multi-part scaled topic it
-        // paces one band per batch). The env override exists for the
-        // scaling harness to SEPARATE per-row cost from per-batch commit
-        // machinery — e.g. 32 collapses the scaled topic to one batch
-        .option("maxFilesPerTrigger", streamMaxFiles)
+        // paces one band per batch)
+        .option("maxFilesPerTrigger", 1)
         .parquet(eventsTopicDir(spark, dir)))
   }
 
@@ -447,6 +443,22 @@ object StreamOps {
       }
     }
 
+  /** The bundled RocksDB state-store provider. */
+  private[graft] val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** [[withConf]] with keyed state in RocksDB, plus `extra` confs — the
+    * one scope every RocksDB seat opens. */
+  private[graft] def withRocksDb[T](spark: SparkSession,
+                                    extra: (String, String)*)(body: => T): T =
+    withConf(spark, Map("spark.sql.streaming.stateStore.providerClass" ->
+      RocksDbProvider) ++ extra)(body)
+
+  /** RocksDB changelog checkpointing (t35, t41), an extra conf of
+    * [[withRocksDb]]. */
+  private val Changelog =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
+
   /** Run `body` with no-data micro-batches disabled. After the last data
     * batch Spark schedules one extra empty batch to let event-time
     * machinery advance — a full state-store commit round per stateful
@@ -466,8 +478,9 @@ object StreamOps {
 
   /** [[withNoDataBatchesOff]] + [[withShufflePartitions]] — the scope the
     * bespoke harnesses below run in, EXCEPT the ones whose emission
-    * needs the trailing empty batch — t15 timers and the t20/t36 outer
-    * evictions — which use [[withShufflePartitions]] alone. Keep that
+    * needs the trailing empty batch — the t15/t30 timers and the outer
+    * interval joins' evictions ([[intervalJoin]]) — which use
+    * [[withShufflePartitions]] alone. Keep that
     * list current: wrapping a new eviction- or timer-emitting harness
     * in this scope silently suppresses its watermark-fired rows. */
   private[graft] def perfScope[T](spark: SparkSession, statePartitions: Option[Int])
@@ -486,8 +499,7 @@ object StreamOps {
                   outputMode: String, statePartitions: Option[Int] = None)
                  (pipeline: DataFrame => DataFrame): DataFrame =
     perfScope(spark, statePartitions) {
-      spark.table(drain()(
-        toMemory(pipeline(source), "graft_stream", outputMode)).name)
+      drainToTable()(pipeline(source), "graft_stream", outputMode)
     }
 
   /** S1+P1–P3+T3 on one GRADED path: consume Kafka-shaped binary frames
@@ -522,14 +534,14 @@ object StreamOps {
       perfScope(spark, Some(8)) {
     val t = new Topic("graft_t1_")
     val Seq(even, odd) = parityStage(spark, dir)
-    def start(prefix: String) =
-      toMemory(t.read(spark, paced = true)
+    def phase(arrival: Path, prefix: String) =
+      drainToTable(t.group(arrival))(t.read(spark, paced = true)
         .groupBy("event_type")
         .agg(round(sum("value"), 2).as("total_value"),
              count(lit(1)).as("n_events")),
         prefix, "complete", Some(t.path("ckpt")))
-    drain(t.group(even))(start("graft_t1a"))
-    spark.table(drain(t.group(odd))(start("graft_t1b")).name)
+    phase(even, "graft_t1a")
+    phase(odd, "graft_t1b")
   }
 
   /** T35: RocksDB **changelog checkpointing** under kill-and-restart —
@@ -550,11 +562,7 @@ object StreamOps {
     * re-emit the even half's users as duplicates and break the hash.
     * Same oracle as t5: the checkpoint-format swap is semantics-free. */
   def changelogRecoverDedup(spark: SparkSession, dir: String): DataFrame =
-    withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")) {
+    withRocksDb(spark, Changelog) {
       perfScope(spark, Some(8)) {
         val t = new Topic("graft_t35_")
         // append-mode emissions land in a FILE sink (the s9 shape): the
@@ -595,11 +603,7 @@ object StreamOps {
     * exactly the keys batch 1 NEWLY added. Both grade against the batch
     * prefix oracle in one tagged frame. */
   def stateTimeTravelDedup(spark: SparkSession, dir: String): DataFrame =
-    withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")) {
+    withRocksDb(spark, Changelog) {
       perfScope(spark, Some(8)) {
         val t = new Topic("graft_t41_")
         val ckpt = t.path("ckpt")
@@ -945,8 +949,8 @@ object StreamOps {
     // sentinel itself can never surface); the staged 1-row file is
     // shared with t4 via [[sentinelFile]] (same max(ts) instant)
     val Seq(even, odd) = parityStage(spark, dir)
-    val q = drain(t.group(even, odd),
-        t.group(sentinelFile(spark, maxTs.getTime)))(toMemory(
+    drainToTable(t.group(even, odd),
+        t.group(sentinelFile(spark, maxTs.getTime)))(
       t.read(spark)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"))
@@ -958,8 +962,7 @@ object StreamOps {
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("bucket_start"),
           col("n_events"), col("n_hours")),
-      "graft_t42", "append"))
-    spark.table(q.name)
+      "graft_t42", "append")
       }
 
   /** T43: STREAMING OBSERVABILITY — `Dataset.observe` metrics on a live
@@ -1291,7 +1294,7 @@ object StreamOps {
     // each evicted digest re-emits EXACTLY once and each retained digest
     // never does, so the graded counts are invariant to which cleanup
     // discipline the operator uses.
-    val q = drain(t.group(f0), t.group(f1), t.group(f1))(toMemory(
+    drainToTable(t.group(f0), t.group(f1), t.group(f1))(
       t.read(spark, "doc_id BIGINT, text STRING, ts TIMESTAMP")
         .filter(graft.ext.TextOps.isEnglishPredicate &&
           graft.ext.TextOps.qualityOkPredicate)
@@ -1300,8 +1303,7 @@ object StreamOps {
         .withWatermark("ts", "2 days")
         .dropDuplicatesWithinWatermark("digest")
         .select("digest", "n_tokens"),
-      "graft_t49", "append", Some(t.path("ckpt"))))
-    spark.table(q.name)
+      "graft_t49", "append", Some(t.path("ckpt")))
       .groupBy("digest")
       .agg(count(lit(1)).as("n_emits"),
         min("n_tokens").cast("long").as("n_tokens"))
@@ -1327,20 +1329,30 @@ object StreamOps {
     * Output is key-bounded (13 widths + the quarantine row), so the
     * complete-mode memory sink collects O(groups), never O(docs). */
   def streamingMediaGate(spark: SparkSession, dir: String): DataFrame =
+    codecGate(spark, dir, "t50", t50Stage, graft.ext.ImageCodec.decodeGate,
+        concat(lit("w"), col("width").cast("string")))(
+      sum(when(col("ok"), col("width") * col("height")).otherwise(0L))
+        .as("total_px"),
+      sum("pix_sum").as("pix_sum"))
+
+  /** The codec-gate body of t50, t54 and t55: the two staged payload
+    * arrivals drain through `gate` (decode partition-parallel, flag
+    * undecodable payloads `ok = false`) into a complete-mode count per
+    * admitted `key`, every quarantined payload counted under
+    * "quarantined", plus the seat's `aggs`. */
+  private def codecGate(spark: SparkSession, dir: String, tag: String,
+                        stage: Layout,
+                        gate: (SparkSession, DataFrame) => DataFrame,
+                        key: org.apache.spark.sql.Column)
+                       (aggs: org.apache.spark.sql.Column*): DataFrame =
       perfScope(spark, Some(4)) {
-    val t = new Topic("graft_t50_")
-    val Seq(f0, f1) = t50Stage(spark, dir)
-    val q = drain(t.group(f0), t.group(f1))(toMemory(
-      graft.ext.ImageCodec.decodeGate(spark,
-          t.read(spark, "doc_id BIGINT, media_bytes BINARY"))
-        .groupBy(when(col("ok"), concat(lit("w"), col("width").cast("string")))
-          .otherwise(lit("quarantined")).as("k"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("ok"), col("width") * col("height")).otherwise(0L))
-            .as("total_px"),
-          sum("pix_sum").as("pix_sum")),
-      "graft_t50", "complete", Some(t.path("ckpt"))))
-    spark.table(q.name).orderBy("k")
+    val t = new Topic(s"graft_${tag}_")
+    val Seq(f0, f1) = stage(spark, dir)
+    drainToTable(t.group(f0), t.group(f1))(
+      gate(spark, t.read(spark, "doc_id BIGINT, media_bytes BINARY"))
+        .groupBy(when(col("ok"), key).otherwise(lit("quarantined")).as("k"))
+        .agg(count(lit(1)).as("n_docs"), aggs: _*),
+      s"graft_$tag", "complete", Some(t.path("ckpt"))).orderBy("k")
       }
 
   /** T54: STREAMING AUDIO INGEST GATE — the t50 discipline applied to
@@ -1359,22 +1371,11 @@ object StreamOps {
     * Output is key-bounded (5 rates + the quarantine row), so the
     * complete-mode memory sink collects O(groups), never O(docs). */
   def streamingAudioGate(spark: SparkSession, dir: String): DataFrame =
-      perfScope(spark, Some(4)) {
-    val t = new Topic("graft_t54_")
-    val Seq(f0, f1) = t54Stage(spark, dir)
-    val q = drain(t.group(f0), t.group(f1))(toMemory(
-      graft.ext.AudioCodec.decodeGate(spark,
-          t.read(spark, "doc_id BIGINT, media_bytes BINARY"))
-        .groupBy(when(col("ok"),
-            concat(lit("r"), col("sample_rate").cast("string")))
-          .otherwise(lit("quarantined")).as("k"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("ok"), col("n_samples")).otherwise(0L))
-            .as("total_samples"),
-          sum("sample_sum").as("sample_sum")),
-      "graft_t54", "complete", Some(t.path("ckpt"))))
-    spark.table(q.name).orderBy("k")
-      }
+    codecGate(spark, dir, "t54", t54Stage, graft.ext.AudioCodec.decodeGate,
+        concat(lit("r"), col("sample_rate").cast("string")))(
+      sum(when(col("ok"), col("n_samples")).otherwise(0L))
+        .as("total_samples"),
+      sum("sample_sum").as("sample_sum"))
 
   /** T55: STREAMING VIDEO INGEST GATE — the third codec family on the
     * continuous path, completing the t50 (image) / t54 (audio)
@@ -1395,24 +1396,13 @@ object StreamOps {
     * corpus — the mm_avi_demux fixture contract). Output is
     * key-bounded (2 frame counts + the quarantine row). */
   def streamingVideoGate(spark: SparkSession, dir: String): DataFrame =
-      perfScope(spark, Some(4)) {
-    val t = new Topic("graft_t55_")
-    val Seq(f0, f1) = t55Stage(spark, dir)
-    val q = drain(t.group(f0), t.group(f1))(toMemory(
-      graft.ext.VideoCodec.demuxGate(spark,
-          t.read(spark, "doc_id BIGINT, media_bytes BINARY"))
-        .groupBy(when(col("ok"),
-            concat(lit("f"), col("n_frames").cast("string")))
-          .otherwise(lit("quarantined")).as("k"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_frames").as("total_frames"),
-          sum(when(col("ok"),
-              col("n_frames") * col("frame_w") * col("frame_h"))
-            .otherwise(0L)).as("total_px"),
-          sum(when(col("hdr_ok"), 1L).otherwise(0L)).as("n_hdr_ok")),
-      "graft_t55", "complete", Some(t.path("ckpt"))))
-    spark.table(q.name).orderBy("k")
-      }
+    codecGate(spark, dir, "t55", t55Stage, graft.ext.VideoCodec.demuxGate,
+        concat(lit("f"), col("n_frames").cast("string")))(
+      sum("n_frames").as("total_frames"),
+      sum(when(col("ok"),
+          col("n_frames") * col("frame_w") * col("frame_h"))
+        .otherwise(0L)).as("total_px"),
+      sum(when(col("hdr_ok"), 1L).otherwise(0L)).as("n_hdr_ok"))
 
   /** T51: STREAM-SIDE SCHEMA DRIFT on the corpus front end — a new
     * column starts arriving mid-topic (the r16 verdict's thin-surface
@@ -1433,13 +1423,12 @@ object StreamOps {
     val t = new Topic("graft_t51_")
     val evenNarrow = docParityStage(spark, dir)(0)
     val oddWide = t51Stage(spark, dir)(0)
-    val q = drain(t.group(evenNarrow), t.group(oddWide))(toMemory(
+    drainToTable(t.group(evenNarrow), t.group(oddWide))(
       t.read(spark, "doc_id BIGINT, text STRING, lang STRING")
         .groupBy(coalesce(col("lang"), lit("pre_drift")).as("lang_k"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " "))).as("n_tokens")),
-      "graft_t51", "complete", Some(t.path("ckpt"))))
-    spark.table(q.name).orderBy("lang_k")
+      "graft_t51", "complete", Some(t.path("ckpt"))).orderBy("lang_k")
       }
 
   /** T53: STREAMING INCREMENTAL DEDUP — the batch `dedup_incremental`
@@ -1672,14 +1661,11 @@ object StreamOps {
     * pipeline, same oracle as t5 — a hash match grades that the backend
     * swap is semantics-free on the driver's own gate (the spec suite
     * additionally pins backend-independence for windowed aggs and
-    * session windows). Conf is query-scoped via [[withConf]] (reentrant
+    * session windows). Conf is query-scoped via [[withRocksDb]] (reentrant
     * on the session lock), so the rest of the board keeps the default
     * provider. */
   def streamingDedupUsersRocksDB(spark: SparkSession, dir: String): DataFrame =
-    withConf(spark, Map("spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      streamingDedupUsers(spark, dir)
-    }
+    withRocksDb(spark)(streamingDedupUsers(spark, dir))
 
   /** The processor behind [[transformWithStateTotals]]: one
     * `ValueState[(n, cents)]` per user, folded over each batch's rows and
@@ -1723,14 +1709,18 @@ object StreamOps {
     * LAST emit per user — n_events is strictly increasing per key, so
     * `max(struct(n_events, total_cents))` selects it deterministically —
     * which must equal the batch GROUP BY the oracle replays. */
-  def transformWithStateTotals(spark: SparkSession, dir: String): DataFrame = {
-    val snap = spark.table(twsTotalsRun(spark, dir)._1)
-    snap.groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("total_cents"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.total_cents").as("total_cents"))
-      .orderBy("user_id")
-  }
+  def transformWithStateTotals(spark: SparkSession, dir: String): DataFrame =
+    lastEmit(spark.table(twsTotalsRun(spark, dir)._1), Seq("user_id"),
+      "n_events", "total_cents").orderBy("user_id")
+
+  /** The last update-mode emit per `keys`: the leading `fields` value
+    * strictly increases per key across emits, so `max(struct(fields))`
+    * selects the last one deterministically (t26, t28, t32, t33, t37). */
+  private def lastEmit(emits: DataFrame, keys: Seq[String],
+                       fields: String*): DataFrame =
+    emits.groupBy(keys.map(col): _*)
+      .agg(max(struct(fields.map(col): _*)).as("m"))
+      .select(keys.map(col) ++ fields.map(f => col(s"m.$f").as(f)): _*)
 
   /** ONE `transformWithState` totals run per (session, fixture), at
     * width 8, shared by the t26 emission seat and the t39 TWS
@@ -1747,9 +1737,7 @@ object StreamOps {
 
   private def twsTotalsRun(spark: SparkSession, dir: String): (String, String) =
     twsTotalsMemo(spark, dir) {
-      withConf(spark, Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      withRocksDb(spark) {
         perfScope(spark, Some(8)) {
           import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
           import spark.implicits._
@@ -1849,10 +1837,8 @@ object StreamOps {
     * max-struct discipline (`n` is strictly increasing per key). */
   def stateSchemaUpgradeTotals(spark: SparkSession, dir: String,
                                encoding: String = "avro"): DataFrame = {
-    val emitted = withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.encodingFormat" -> encoding)) {
+    val emitted = withRocksDb(spark,
+        "spark.sql.streaming.stateStore.encodingFormat" -> encoding) {
       perfScope(spark, Some(4)) {
         val t = new Topic("graft_t28_")
         // parquet FILE sink, not memory: the memory sink refuses
@@ -1906,16 +1892,9 @@ object StreamOps {
           .parquet(out)
       }
     }
-    emitted
-      .withColumn("n2_since_upgrade",
-        coalesce(col("n2_since_upgrade"), lit(0L)))
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("total_cents"),
-        col("n2_since_upgrade"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.total_cents").as("total_cents"),
-        col("m.n2_since_upgrade").as("n2_since_upgrade"))
-      .orderBy("user_id")
+    lastEmit(emitted.withColumn("n2_since_upgrade",
+        coalesce(col("n2_since_upgrade"), lit(0L))), Seq("user_id"),
+      "n_events", "total_cents", "n2_since_upgrade").orderBy("user_id")
   }
 
   /** T29: STREAMING IVF INGEST + SERVE — continuous ingest into the
@@ -2144,14 +2123,13 @@ object StreamOps {
   def customSourceStreamTally(spark: SparkSession, rows: Long = 1000L,
                               step: Long = 256L): DataFrame =
       perfScope(spark, Some(4)) {
-        val q = drain()(toMemory(spark.readStream
+        drainToTable()(spark.readStream
           .format(classOf[graft.sources.GenSource].getName)
           .option("rows", rows).option("partitions", 4).option("step", step)
           .load()
           .groupBy("party_affiliation")
           .agg(count(lit(1)).as("n_voters")),
-          "graft_s7e", "complete"))
-        spark.table(q.name).orderBy("party_affiliation")
+          "graft_s7e", "complete").orderBy("party_affiliation")
       }
 
   /** T27: STATE-STORE READBACK — Spark 4's state data source (format
@@ -2234,8 +2212,8 @@ object StreamOps {
     // is shared with t42 (same max(ts) instant). Batch 3 is the held-back
     // late file — every row below the watermark (a fixture with NO late
     // rows lands a zero-row file, and the result is still the oracle's).
-    val q = drain(t.group(onTime), t.group(sentinelFile(spark, maxTs.getTime)),
-        t.group(lateFile))(toMemory(
+    drainToTable(t.group(onTime), t.group(sentinelFile(spark, maxTs.getTime)),
+        t.group(lateFile))(
       // no maxFilesPerTrigger: arrivals are already metered one file per
       // drain step
       t.read(spark)
@@ -2244,8 +2222,7 @@ object StreamOps {
         .agg(count(lit(1)).as("n_events"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour_start"),
           col("n_events")),
-      "graft_t4", "append"))
-    spark.table(q.name)
+      "graft_t4", "append")
       }
 
 
@@ -2270,14 +2247,13 @@ object StreamOps {
     // batch 2 the late re-delivery: same users, one hour earlier, fresh
     // event ids (memoized too, so its one-time write lands in
     // warmStagedLayouts, not this seat's timed region)
-    val q = drain(t.group(parityStage(spark, dir): _*),
-        t.group(t5bStage(spark, dir): _*))(toMemory(
+    drainToTable(t.group(parityStage(spark, dir): _*),
+        t.group(t5bStage(spark, dir): _*))(
       t.read(spark)
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark("user_id")
         .select("user_id"),
-      "graft_t5b", "append"))
-    spark.table(q.name)
+      "graft_t5b", "append")
       }
 
   /** Max event time per (session, fixture) — the sentinel/finalization
@@ -2364,9 +2340,9 @@ object StreamOps {
     // first batch's watermark and be silently late-dropped. The two
     // sentinels follow as batches 3 and 4.
     val Seq(early, late) = timeSplitStage(spark, dir)
-    def drive(start: => StreamingQuery): StreamingQuery =
-      drain(t.group(early), t.group(late), t.group(sentinelFile(spark, s1)),
-        t.group(sentinelFile(spark, s1 + 3600L * 1000)))(start)
+    val steps = Seq(t.group(early), t.group(late),
+      t.group(sentinelFile(spark, s1)),
+      t.group(sentinelFile(spark, s1 + 3600L * 1000)))
     val emissions = t.read(spark)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), gapExpr).as("w"))
@@ -2388,7 +2364,7 @@ object StreamOps {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             emissions.schema)))
           .write.mode("append").parquet(out)
-        drive(emissions.writeStream
+        drain(steps: _*)(emissions.writeStream
           .outputMode("append")
           .option("checkpointLocation", t.path("ckpt"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -2397,8 +2373,7 @@ object StreamOps {
           .start())
         spark.read.parquet(out)
       case None =>
-        belt(spark.table(
-          drive(toMemory(emissions, s"graft_$tag", "append")).name))
+        belt(drainToTable(steps: _*)(emissions, s"graft_$tag", "append"))
     }
   }
 
@@ -2467,13 +2442,8 @@ object StreamOps {
     * exactly once. The batch SQL range join is the oracle. */
   def streamStreamIntervalJoin(spark: SparkSession, dir: String,
                                toleranceSec: Long = 3600L): DataFrame =
-    // A stream-stream join commits per-partition state stores on BOTH
-    // sides every micro-batch, so partitions ≫ keys buy nothing: width 4
-    // is sized to the key cardinality (~150 users) — see
-    // [[withShufflePartitions]].
-    perfScope(spark, Some(4)) {
-      streamStreamIntervalJoinInner(spark, dir, toleranceSec)
-    }
+    intervalJoin(spark, dir, toleranceSec, "inner", "graft_ssj")(
+      col("purchase_id"), col("click_id"), col("user_id"), gapUs)
 
   /** The two watermarked sides every stream-stream join here builds on.
     * Sources are the staged per-type topics ([[typeStage]]), not
@@ -2493,19 +2463,41 @@ object StreamOps {
     (clicks, purchases)
   }
 
-  private def streamStreamIntervalJoinInner(
-      spark: SparkSession, dir: String, toleranceSec: Long): DataFrame = {
-    val (clicks, purchases) = joinSides(spark, dir)
-    val q = drain()(toMemory(purchases.join(clicks,
-        col("user_id") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $toleranceSec SECONDS"))
-      .select(col("purchase_id"), col("click_id"), col("user_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-          .as("gap_us")),
-      "graft_ssj", "append"))
-    spark.table(q.name)
+  /** The interval-join body of t10, t20, t36, t40 and t38: purchases
+    * joined (`joinType`) to the same user's clicks in `[purchase_ts -
+    * tolerance, purchase_ts]`, projected to `cols` and drained in append
+    * mode. A stream-stream join commits per-partition state stores on
+    * BOTH sides every micro-batch, so partitions ≫ keys buy nothing:
+    * width 4 is sized to the key cardinality (~150 users) — see
+    * [[withShufflePartitions]]. The scope comes from the join type: an
+    * outer flavor emits its null rows when the watermark evicts them, in
+    * the trailing no-data batch, so it keeps that batch
+    * ([[withShufflePartitions]] alone); inner and semi emit from data
+    * batches only ([[perfScope]]). */
+  private def intervalJoin(spark: SparkSession, dir: String,
+                           toleranceSec: Long, joinType: String,
+                           prefix: String)
+                          (cols: org.apache.spark.sql.Column*): DataFrame = {
+    def run: DataFrame = {
+      val (clicks, purchases) = joinSides(spark, dir)
+      drainToTable()(purchases.join(clicks,
+          col("user_id") === col("click_user") &&
+          col("click_ts") <= col("purchase_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
+          joinType)
+        .select(cols: _*), prefix, "append")
+    }
+    if (joinType.endsWith("Outer")) withShufflePartitions(spark, Some(4))(run)
+    else perfScope(spark, Some(4))(run)
   }
+
+  /** A matched pair's event-time gap, in micros. */
+  private def gapUs =
+    (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))).as("gap_us")
+
+  /** The user of an outer-join row: the purchase side's user_id is NULL
+    * on click-only rows. */
+  private def eitherUser = coalesce(col("user_id"), col("click_user")).as("user_id")
 
   /** T20: stream-stream LEFT OUTER interval join — the null-emission
     * semantics [[streamStreamIntervalJoin]]'s inner form can't show.
@@ -2525,19 +2517,8 @@ object StreamOps {
     * join — the outer flavor adds no state, only the evict-time emit. */
   def streamStreamLeftOuterJoin(spark: SparkSession, dir: String,
                                 toleranceSec: Long = 3600L): DataFrame =
-    withShufflePartitions(spark, Some(4)) {
-      val (clicks, purchases) = joinSides(spark, dir)
-      val q = drain()(toMemory(purchases.join(clicks,
-          col("user_id") === col("click_user") &&
-          col("click_ts") <= col("purchase_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
-          "leftOuter")
-        .select(col("purchase_id"), col("click_id"), col("user_id"),
-          (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-            .as("gap_us")),
-        "graft_ssoj", "append"))
-      spark.table(q.name)
-    }
+    intervalJoin(spark, dir, toleranceSec, "leftOuter", "graft_ssoj")(
+      col("purchase_id"), col("click_id"), col("user_id"), gapUs)
 
   /** T36: stream-stream FULL OUTER interval join — completes the
     * streaming join matrix (inner [[streamStreamIntervalJoin]],
@@ -2556,21 +2537,8 @@ object StreamOps {
     * O(tolerance horizon) per side, unchanged from the inner join. */
   def streamStreamFullOuterJoin(spark: SparkSession, dir: String,
                                 toleranceSec: Long = 3600L): DataFrame =
-    withShufflePartitions(spark, Some(4)) {
-      val (clicks, purchases) = joinSides(spark, dir)
-      val q = drain()(toMemory(purchases.join(clicks,
-          col("user_id") === col("click_user") &&
-          col("click_ts") <= col("purchase_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
-          "fullOuter")
-        .select(col("purchase_id"), col("click_id"),
-          // the purchase side's user_id is NULL on click-only rows
-          coalesce(col("user_id"), col("click_user")).as("user_id"),
-          (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-            .as("gap_us")),
-        "graft_ssfoj", "append"))
-      spark.table(q.name)
-    }
+    intervalJoin(spark, dir, toleranceSec, "fullOuter", "graft_ssfoj")(
+      col("purchase_id"), col("click_id"), eitherUser, gapUs)
 
   /** T40: stream-stream RIGHT OUTER interval join — the last
     * Spark-supported flavor of the matrix (inner t10, left-outer t20,
@@ -2588,21 +2556,8 @@ object StreamOps {
     * emit. */
   def streamStreamRightOuterJoin(spark: SparkSession, dir: String,
                                  toleranceSec: Long = 3600L): DataFrame =
-    withShufflePartitions(spark, Some(4)) {
-      val (clicks, purchases) = joinSides(spark, dir)
-      val q = drain()(toMemory(purchases.join(clicks,
-          col("user_id") === col("click_user") &&
-          col("click_ts") <= col("purchase_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
-          "rightOuter")
-        .select(col("purchase_id"), col("click_id"),
-          // the purchase side's user_id is NULL on click-only rows
-          coalesce(col("user_id"), col("click_user")).as("user_id"),
-          (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-            .as("gap_us")),
-        "graft_ssroj", "append"))
-      spark.table(q.name)
-    }
+    intervalJoin(spark, dir, toleranceSec, "rightOuter", "graft_ssroj")(
+      col("purchase_id"), col("click_id"), eitherUser, gapUs)
 
   /** T38: stream-stream LEFT SEMI interval join — the EXISTENCE flavor
     * completing the join matrix (inner t10, left-outer t20, full-outer
@@ -2617,18 +2572,9 @@ object StreamOps {
     * as in the other flavors. */
   def streamStreamSemiJoin(spark: SparkSession, dir: String,
                            toleranceSec: Long = 3600L): DataFrame =
-    perfScope(spark, Some(4)) {
-      val (clicks, purchases) = joinSides(spark, dir)
-      val q = drain()(toMemory(purchases.join(clicks,
-          col("user_id") === col("click_user") &&
-          col("click_ts") <= col("purchase_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
-          "leftSemi")
-        .select(col("purchase_id"), col("user_id"),
-          unix_micros(col("purchase_ts")).as("purchase_us")),
-        "graft_sssj", "append"))
-      spark.table(q.name)
-    }
+    intervalJoin(spark, dir, toleranceSec, "leftSemi", "graft_sssj")(
+      col("purchase_id"), col("user_id"),
+      unix_micros(col("purchase_ts")).as("purchase_us"))
 
   /** Output row of the streaming as-of join. */
   final case class AsOfMatch(left_id: Long, user_id: Long,
@@ -2676,9 +2622,7 @@ object StreamOps {
           }
           out.iterator
       }
-    val q = drain()(toMemory(matched.toDF(),
-      "graft_asof", "append"))
-    spark.table(q.name)
+    drainToTable()(matched.toDF(), "graft_asof", "append")
         }
 
   /** T11: the ordered funnel incrementalized as a keyed state machine —
@@ -2732,9 +2676,8 @@ object StreamOps {
       .groupByKey(_.user_id)
       .mapGroupsWithState[(Int, Long), (Long, Int)](GroupStateTimeout.NoTimeout)(
         funnelStep(stages))
-    val q = drain()(toMemory(progressed.toDF("user_id", "stage"),
-      "graft_funnel", "update"))
-    val last = spark.table(q.name)
+    val last = drainToTable()(progressed.toDF("user_id", "stage"),
+        "graft_funnel", "update")
       .groupBy("user_id").agg(max("stage").as("stage"))
     val counts = stages.zipWithIndex.map { case (st, i) =>
       count(when(col("stage") >= i + 1, 1)).as(s"n_$st")
@@ -2782,9 +2725,7 @@ object StreamOps {
           cur.foreach(state.update)
           out.iterator
       }
-    val q = drain()(toMemory(closed.toDF(),
-      "graft_scd2", "append"))
-    spark.table(q.name)
+    drainToTable()(closed.toDF(), "graft_scd2", "append")
   }
 
   /** A closed session emitted by [[streamingTimeoutSessions]]. */
@@ -2868,9 +2809,7 @@ object StreamOps {
             out.iterator
           }
       }
-    val q = drain()(toMemory(closed.toDF(),
-      "graft_t15", "append"))
-    spark.table(q.name)
+    drainToTable()(closed.toDF(), "graft_t15", "append")
   }
 
   /** The open session held by [[TimerSessionsProcessor]]. */
@@ -2964,9 +2903,7 @@ object StreamOps {
     * one-batch regime the 0.37 reading measures. */
   def twsTimerSessions(spark: SparkSession, dir: String,
                        gapSec: Long = 1800L): DataFrame =
-    withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+    withRocksDb(spark) {
       withShufflePartitions(spark, Some(4)) {
         import spark.implicits._
         val closed = eventStream(spark, dir)
@@ -2976,9 +2913,7 @@ object StreamOps {
           .transformWithState(new TimerSessionsProcessor(gapSec * 1000000L),
             org.apache.spark.sql.streaming.TimeMode.EventTime(),
             org.apache.spark.sql.streaming.OutputMode.Append())
-        val q = drain()(toMemory(closed.toDF(),
-          "graft_t30", "append"))
-        spark.table(q.name)
+        drainToTable()(closed.toDF(), "graft_t30", "append")
       }
     }
 
@@ -3054,9 +2989,7 @@ object StreamOps {
     * keeps the last emit per pair, and the batch GROUP BY is the
     * oracle. */
   def twsMapStateTotals(spark: SparkSession, dir: String): DataFrame = {
-    val snap = withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+    val snap = withRocksDb(spark) {
       streamTable(spark, eventStream(spark, dir), "update", Some(4)) { df =>
         val s = df.sparkSession
         import s.implicits._
@@ -3070,11 +3003,7 @@ object StreamOps {
           .toDF("user_id", "event_type", "n_events", "total_cents")
       }
     }
-    snap.groupBy("user_id", "event_type")
-      .agg(max(struct(col("n_events"), col("total_cents"))).as("m"))
-      .select(col("user_id"), col("event_type"),
-        col("m.n_events").as("n_events"),
-        col("m.total_cents").as("total_cents"))
+    lastEmit(snap, Seq("user_id", "event_type"), "n_events", "total_cents")
       .orderBy("user_id", "event_type")
   }
 
@@ -3147,17 +3076,11 @@ object StreamOps {
     * SQL: per user, the total event count and the ids of the `k` latest
     * events by (event time, event_id), latest first. */
   def twsListStateLastK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val snap = withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+    val snap = withRocksDb(spark) {
       streamTable(spark, eventStream(spark, dir), "update", Some(4))(
         twsLastKPipeline(k))
     }
-    snap.groupBy("user_id")
-      .agg(max(struct(col("n_seen"), col("recent_ids"))).as("m"))
-      .select(col("user_id"), col("m.n_seen").as("n_seen"),
-        col("m.recent_ids").as("recent_ids"))
-      .orderBy("user_id")
+    lastEmit(snap, Seq("user_id"), "n_seen", "recent_ids").orderBy("user_id")
   }
 
   /** The t34 processor: per-user running (n, cents) in a ValueState
@@ -3240,20 +3163,17 @@ object StreamOps {
     require(ttl.toMillis <= 500L || ttl.toHours >= 1L,
       s"ttl $ttl is in the raced mid-range: use <=500 ms (provably " +
         "expired) or >=1 h (provably retained)")
-    withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+    withRocksDb(spark) {
       perfScope(spark, Some(4)) {
         val t = new Topic("graft_t34_")
         val Seq(even, odd) = parityStage(spark, dir)
-        val q = drain(t.group(even), () => {
+        drainToTable(t.group(even), () => {
           // capped so a caller-supplied long ttl (deliberately
           // unexpirable) cannot stall the harness
           Thread.sleep(math.min(2 * ttl.toMillis, 1000L))
           t.land(odd)
-        })(toMemory(twsTtlPipeline(ttl)(t.read(spark, paced = true)),
-          "graft_t34", "update", Some(t.path("ckpt"))))
-        spark.table(q.name)
+        })(twsTtlPipeline(ttl)(t.read(spark, paced = true)),
+          "graft_t34", "update", Some(t.path("ckpt")))
       }
     }
   }
@@ -3322,9 +3242,7 @@ object StreamOps {
     * warm and their odd half streams, so their fold STARTS from the
     * seeded cell. */
   def twsInitialStateTotals(spark: SparkSession, dir: String): DataFrame =
-    withConf(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+    withRocksDb(spark) {
       perfScope(spark, Some(4)) {
         import spark.implicits._
         val t = new Topic("graft_t37_")
@@ -3340,7 +3258,8 @@ object StreamOps {
         val init = warm.as[(Long, Long, Long)]
           .groupByKey(_._1).mapValues(t => (t._2, t._3))
         // the stream folds only the active users' odd half
-        val q = drain(t.group(parityStage(spark, dir)(1)))(toMemory(
+        val emitted = lastEmit(drainToTable(
+            t.group(parityStage(spark, dir)(1)))(
           t.read(spark, paced = true)
           .filter(pmod(col("user_id"), lit(3)) =!= 0)
           .select(col("user_id"),
@@ -3352,12 +3271,8 @@ object StreamOps {
             org.apache.spark.sql.streaming.OutputMode.Update(),
             init)
           .toDF("user_id", "n_events", "total_cents"),
-          "graft_t37", "update", Some(t.path("ckpt"))))
-        val emitted = spark.table(q.name)
-          .groupBy("user_id")
-          .agg(max(struct(col("n_events"), col("total_cents"))).as("m"))
-          .select(col("user_id"), col("m.n_events").as("n_events"),
-            col("m.total_cents").as("total_cents"))
+          "graft_t37", "update", Some(t.path("ckpt"))),
+          Seq("user_id"), "n_events", "total_cents")
         // The departed-user serving side reads the seeded cells BACK OUT
         // of the checkpointed state (the t39 statestore mechanism), NOT
         // the warm parquet verbatim — a silently dropped
@@ -3439,16 +3354,15 @@ object StreamOps {
     // countDistinct is not a streaming aggregate; the distinct-doc fold
     // is the stateful dropDuplicates (t5's machinery, keyed on doc_id —
     // O(contaminated docs) state), then a plain count per language
-    val q = try drain()(toMemory(
+    try drainToTable()(
         graft.ext.DedupOps.tokenWindows(stream, w, keep = Seq("lang"))
           .join(broadcast(evalWins), Seq("win_h"), "left_semi")
           .select("doc_id", "lang")
           .dropDuplicates("doc_id")
           .groupBy("lang")
           .agg(count(lit(1)).as("n_contaminated")),
-        "graft_t14", "complete"))
+        "graft_t14", "complete")
       finally evalWins.unpersist()
-    spark.table(q.name)
   }
 
   /** T12: streaming corpus curation — the LLM tier's scan-side gates
@@ -3492,7 +3406,7 @@ object StreamOps {
   def streamingNfcDedup(spark: SparkSession, dir: String): DataFrame =
       perfScope(spark, Some(8)) {
     graft.functions.GraftExtensions.register(spark)
-    val q = drain()(toMemory(docStream(spark, dir)
+    drainToTable()(docStream(spark, dir)
       .withColumn("variant",
         explode(array(lit("caf\u00e9"), lit("cafe\u0301"))))
       .withColumn("norm_text",
@@ -3500,18 +3414,16 @@ object StreamOps {
           concat(col("text"), lit(" "), col("variant"))))
       .dropDuplicates("lang", "norm_text")
       .groupBy("lang").agg(count(lit(1)).as("n_unique")),
-      "graft_t24", "complete"))
-    spark.table(q.name).orderBy("lang")
+      "graft_t24", "complete").orderBy("lang")
   }
 
   def streamingQualityGate(spark: SparkSession, dir: String): DataFrame =
       perfScope(spark, Some(4)) {
-    val q = drain()(toMemory(docStream(spark, dir)
+    drainToTable()(docStream(spark, dir)
       .filter(graft.ext.TextOps.isEnglishPredicate &&
               graft.ext.TextOps.qualityOkPredicate)
       .groupBy("lang").agg(count(lit(1)).as("n_kept")),
-      "graft_t12", "complete"))
-    spark.table(q.name).orderBy("lang")
+      "graft_t12", "complete").orderBy("lang")
   }
 
   /** T17: dead-letter routing — the streaming form of the reference's

@@ -38,7 +38,7 @@ object StreamFloor {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), aqeByDefault = true)
     val S = graft.streaming.StreamOps
 
-    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val rocks = S.RocksDbProvider
     val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
     // one staged 100-row arrival file per batch slot, written once

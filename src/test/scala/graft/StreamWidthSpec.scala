@@ -18,6 +18,16 @@ class StreamWidthSpec extends SparkSpec {
     * (what a restart reuses), and every state operator's partition
     * count across its micro-batches. */
   private def pinned(seat: => DataFrame): (Int, Seq[Long]) = {
+    val q = drained(seat)
+    val conf = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.offsetSeqMetadata.conf
+    (conf("spark.sql.shuffle.partitions").toInt,
+      q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numShufflePartitions))
+        .distinct)
+  }
+
+  /** Run `seat` with the session at [[sessionWidth]]; its drained query. */
+  private def drained(seat: => DataFrame): StreamingQuery = {
     StreamOps.lastDrained = null
     StreamOps.withConf(spark,
         Map("spark.sql.shuffle.partitions" -> sessionWidth.toString)) {
@@ -25,11 +35,7 @@ class StreamWidthSpec extends SparkSpec {
     }
     val q: StreamingQuery = StreamOps.lastDrained
     assert(q != null, "the seat drained no query")
-    val conf = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-      .lastExecution.offsetSeqMetadata.conf
-    (conf("spark.sql.shuffle.partitions").toInt,
-      q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numShufflePartitions))
-        .distinct)
+    q
   }
 
   test("t3 and t17 pin width 8 whatever the session width") {
@@ -48,5 +54,27 @@ class StreamWidthSpec extends SparkSpec {
   test("t53 keeps the session width") {
     assert(pinned(StreamOps.streamingIncrementalDedup(spark, sfDir)) ===
       (sessionWidth, Seq()))
+  }
+
+  test("the outer interval joins end on a no-data batch, inner and semi " +
+       "do not, and all five pin width 4") {
+    // the outer flavors emit their null rows when the watermark evicts
+    // them, in the trailing no-data batch; inner and semi emit from data
+    // batches only
+    Seq[(String, () => DataFrame, Boolean)](
+      ("t10", () => StreamOps.streamStreamIntervalJoin(spark, sfDir), false),
+      ("t20", () => StreamOps.streamStreamLeftOuterJoin(spark, sfDir), true),
+      ("t36", () => StreamOps.streamStreamFullOuterJoin(spark, sfDir), true),
+      ("t40", () => StreamOps.streamStreamRightOuterJoin(spark, sfDir), true),
+      ("t38", () => StreamOps.streamStreamSemiJoin(spark, sfDir), false)
+    ).foreach { case (seat, run, endsOnNoData) =>
+      val progress = drained(run()).recentProgress.toSeq
+      assert(progress.nonEmpty, s"$seat ran no micro-batch")
+      assert((progress.last.numInputRows == 0) === endsOnNoData,
+        s"$seat batches: ${progress.map(_.numInputRows)}")
+      assert(progress.exists(_.numInputRows > 0), s"$seat read no data")
+      assert(progress.flatMap(_.stateOperators.map(_.numShufflePartitions))
+        .distinct === Seq(4L), s"$seat state width")
+    }
   }
 }
