@@ -42,8 +42,9 @@ object Bench {
     // run (VotePipeline.decodedShared — the generate→wire→from_json
     // front-end they both derived independently); their readings measure
     // the aggregation over the memoized decode, while the three
-    // streaming vote seats keep the full wire-decode chain on the timed
-    // board per micro-batch.
+    // streaming vote seats keep the wire-decode chain on the timed board
+    // per micro-batch, parsing only the fields each one reads
+    // (JsonFieldPruning).
     "vote_e2e_party_tally", "vote_e2e_turnout_by_state")
 
   /** The two timing flags; neither set = the driver's board run.

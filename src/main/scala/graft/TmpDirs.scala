@@ -128,10 +128,12 @@ object TmpDirs {
     * install, the ImageIO cache opt-out (explicit here, not only in the
     * codec objects' static init: it must hold for EVERY ImageIO user in
     * the run, incl. Spark's `image` datasource, whichever class loads
-    * first), the [[timedSessionBuilder]] config in UTC, and the
-    * [[graft.functions.NativeVectorMathRule]] fusion, which every
-    * driving session needs (r17: the graded similarity paths otherwise
-    * run interpreted HOF dot products). The static posture sets AQE off
+    * first), the [[timedSessionBuilder]] config in UTC, and graft's
+    * optimizer rules ([[graft.functions.NativeVectorMathRule]],
+    * [[graft.functions.JsonFieldPruning]]), which every driving session
+    * needs (r17: the graded similarity paths otherwise run interpreted HOF
+    * dot products; the vote decode otherwise parses every field of its
+    * schema). The static posture sets AQE off
     * explicitly: Spark's own default is adaptive. */
   def session(cpus: String, aqeByDefault: Boolean)
       : org.apache.spark.sql.SparkSession = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** SparkSessionExtensions hook: registers graft's native expressions so
   * they're usable from SQL text as well as the Column API. Activate with
@@ -26,7 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.ngramFingerprintsDescriptor)
     ext.injectFunction(GraftExtensions.cdcChunkSpansDescriptor)
     ext.injectFunction(GraftExtensions.charPolyHashDescriptor)
-    ext.injectOptimizerRule(_ => NativeVectorMathRule)
+    GraftExtensions.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 }
 
@@ -213,10 +215,13 @@ object GraftExtensions {
     * the check-and-append on `extraOptimizations` is a read-modify-write
     * and register() is called from every similarity entry point — two
     * concurrent first calls (parallel streaming batches) could otherwise
-    * double-append the rule or drop a concurrent append. */
+    * double-append a rule or drop a concurrent append. */
   def installOptimizations(spark: SparkSession): Unit = this.synchronized {
-    if (!spark.experimental.extraOptimizations.contains(NativeVectorMathRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NativeVectorMathRule
+    val installed = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      installed ++ optimizerRules.filterNot(installed.contains)
   }
+
+  /** graft's optimizer rewrites, in the order they are installed. */
+  private val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(NativeVectorMathRule, JsonFieldPruning)
 }

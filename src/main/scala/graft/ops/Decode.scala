@@ -8,10 +8,16 @@ import org.apache.spark.sql.types.StructType
   * (`/root/reference/spark-streaming.py:72-74`): binary Kafka value →
   * `CAST(value AS STRING)` → `from_json(value, schema)` → `select("data.*")`.
   *
-  * All three stages are single `Project`s that Catalyst's `CollapseProject`
-  * fuses into one whole-stage-codegen'd projection — at 100 TB this runs at
-  * scan speed with no extra pass, unlike the reference's per-record Python
-  * loop (`/root/reference/voting.py:79-134`).
+  * All three stages are `Project`s. `CollapseProject` does not inline the
+  * `from_json` into a projection that reads two or more of its fields, so
+  * the optimized plan keeps two: `Project [data.f, data.g, ...] ←
+  * Project [from_json(schema) AS data]`. Both run in their input's tasks
+  * with no extra pass, unlike the reference's per-record Python loop
+  * (`voting.py:79-134`); the `from_json` one is
+  * interpreted (`CodegenFallback`), outside whole-stage codegen.
+  * [[graft.functions.JsonFieldPruning]] narrows that `from_json` to the
+  * fields the plan reads, so a vote tally parses `candidate_id` and
+  * `vote`, not the whole record.
   */
 object Decode {
 

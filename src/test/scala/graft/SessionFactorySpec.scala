@@ -5,7 +5,7 @@ import java.util.concurrent.TimeUnit
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftExtensions, NativeVectorMathRule}
+import graft.functions.{GraftExtensions, JsonFieldPruning, NativeVectorMathRule}
 
 /** [[TmpDirs.session]], the one driving-session factory. The shared spec
   * session would swallow the factory's `getOrCreate`, so the checks run
@@ -44,14 +44,15 @@ object SessionFactoryProbe {
   def main(args: Array[String]): Unit = {
     def check(spark: SparkSession, aqe: Boolean): Seq[String] = {
       GraftExtensions.register(spark)
-      val rules = spark.experimental.extraOptimizations.count(_ == NativeVectorMathRule)
+      val installed = spark.experimental.extraOptimizations
       Seq(
         "timeZone" -> (spark.conf.get("spark.sql.session.timeZone") == "UTC"),
         "checkpoint manager" -> (spark.conf.get(
           "spark.sql.streaming.checkpointFileManagerClass") ==
           TmpDirs.localFsFastConfs("spark.sql.streaming.checkpointFileManagerClass")),
         s"adaptive=$aqe" -> (spark.conf.get("spark.sql.adaptive.enabled") == aqe.toString),
-        s"rule installed $rules times" -> (rules == 1),
+        s"rules installed as ${installed.map(_.ruleName)}" ->
+          Seq(NativeVectorMathRule, JsonFieldPruning).forall(r => installed.count(_ == r) == 1),
         "no spark.sql.extensions" -> !spark.sparkContext.getConf.contains("spark.sql.extensions"))
         .collect { case (name, false) => s"aqeByDefault=$aqe: $name" }
     }
