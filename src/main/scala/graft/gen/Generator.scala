@@ -59,8 +59,8 @@ object Generator {
   val States: Seq[String] = Seq("CA", "NY", "TX", "WA", "IL")
   val Cities: Seq[String] = Seq("Springfield", "Rivertown", "Lakeside", "Hillview", "Midvale")
 
-  /** Full 21-field voter record with the nested address struct — the wire
-    * shape the reference builds at `/root/reference/main.py:95-114`
+  /** Full voter record (13 top-level fields, with the nested address
+    * struct) — the wire shape the reference builds at `main.py:95-114`
     * (address nesting `main.py:102-108`, street concat `main.py:103`). */
   def votersFull(spark: SparkSession, n: Long): DataFrame = {
     val base = voters(spark, n)

@@ -4,12 +4,13 @@ import org.apache.spark.sql.types._
 
 /** Declared schemas, mirroring the reference's schema-first style.
   *
-  * `VoteSchema` reproduces the 21-field nested vote record the reference
+  * `VoteSchema` reproduces the nested vote record the reference
   * declares by hand (`/root/reference/spark-streaming.py:35-62`): the
   * denormalized union of the voter record, the candidate record, and
   * `{voting_time, vote}` built by dict merge at
   * `/root/reference/voting.py:100-103`. Everything nullable, as in the
-  * reference.
+  * reference. 20 top-level fields, 25 counting the five `address`
+  * subfields.
   */
 object Schemas {
 
@@ -45,16 +46,5 @@ object Schemas {
     StructField("photo_url", StringType),
     StructField("voting_time", TimestampType),
     StructField("vote", IntegerType)
-  ))
-
-  /** Event record for the driver's `events` table (`TESTDATA.md`) — the
-    * stand-in stream carrier used by the oracle-checked queries. */
-  val EventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)
   ))
 }

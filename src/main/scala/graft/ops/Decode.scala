@@ -51,11 +51,6 @@ object Decode {
                     requiredField: String = "event_id"): DataFrame =
     df.filter(col(s"$dataCol.$requiredField").isNotNull)
 
-  /** F5 encode side: row → JSON document, as the reference's producers do
-    * (`/root/reference/main.py:217`, `voting.py:131`) and as `row_to_json`
-    * does SQL-side (`voting.py:50-57`). */
-  def toJsonValue(cols: Column*): Column = to_json(struct(cols: _*))
-
   /** Full Kafka-shaped round trip used by the oracle query: serialize rows
     * to JSON, cast to binary (the Kafka wire shape,
     * `/root/reference/main.py:216-217`), then run P1→P2→P3. */

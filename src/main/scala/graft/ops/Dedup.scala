@@ -30,10 +30,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Nondeterministic engine dedup (state-store semantics in streaming). */
-  def arbitraryPerKey(df: DataFrame, key: String): DataFrame =
-    df.dropDuplicates(key)
-
   /** Exact full-row dedup for the LLM-pipeline: group documents by content,
     * keep the smallest id, report the multiplicity. At scale this shuffles a
     * 128-bit content digest rather than the document text itself. */

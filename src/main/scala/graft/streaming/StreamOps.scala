@@ -47,42 +47,30 @@ object StreamOps {
     graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
 
-  /** Streaming view of the events table via the parquet *file stream
-    * source* — the data never touches the driver (contrast: a
-    * MemoryStream feed requires a driver-side collect, an OOM at 100×
-    * scale). In production the events directory keeps receiving files and
-    * `maxFilesPerTrigger` paces micro-batches; here the fixed fixture
-    * drains in as many batches as it has files. Schema is declared (file
-    * sources require it) by a one-time probe of the static file — the
-    * testdata's physical `ts` type has varied across generations — and
-    * normalized to TimestampType in-plan (see
-    * [[graft.Tables.normalizeTs]]). */
-  private val topicDirs = SessionMemo[String, String]("stream_events_topic")
-
   /** The file stream source consumes a *directory* (a "topic" that receives
-    * files over time). The driver fixture is a single read-only file, so
-    * expose it through a symlinked topic dir — zero copy, driver does O(1)
-    * work. A SCALED fixture (`tools.ScaleUp`) writes `events.parquet` as a
-    * multi-part DIRECTORY; the file source does not recurse into a
-    * subdirectory entry, so symlink each part file instead (one arrival
-    * per part — with `maxFilesPerTrigger=1` the scaled run genuinely
-    * spans one micro-batch per part, the multi-file arrival shape a real
-    * topic has; every eventStream seat's result is batch-split
-    * insensitive). Symlinking a directory whole would silently yield an
-    * EMPTY stream — zero batches, vacuous results (the round-14 scaling
-    * run caught exactly that). */
-  private def eventsTopicDir(spark: SparkSession, dir: String): String =
-    topicDirs(spark, dir) {
-      val topic = graft.TmpDirs.create("graft_events_topic_")
-      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-      if (Files.isDirectory(src)) {
-        Option(src.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .foreach { p =>
-            Files.createSymbolicLink(topic.resolve(p.getName), p.toPath) }
-      } else {
-        Files.createSymbolicLink(topic.resolve("events.parquet"), src)
-      }
+    * files over time), so a fixture table streams through a symlinked
+    * topic dir — zero copy, O(1) driver work. The driver fixtures are
+    * single files, linked whole. A SCALED fixture (`tools.ScaleUp`) writes
+    * each table as a multi-part DIRECTORY; the file source does not recurse
+    * into a subdirectory entry, so a directory linked whole would silently
+    * yield an EMPTY stream (zero batches, vacuous results). Each part file
+    * is linked instead: one arrival per part, so with
+    * `maxFilesPerTrigger=1` the scaled run spans one micro-batch per part,
+    * the multi-file arrival shape a real topic has. */
+  private val topicDirs = SessionMemo[String, String]("stream_fixture_topic")
+
+  private def fixtureTopic(spark: SparkSession, dir: String,
+                           table: String): String =
+    topicDirs(spark, s"$dir/$table.parquet") {
+      val topic = graft.TmpDirs.create(s"graft_${table}_topic_")
+      val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
+      val files =
+        if (Files.isDirectory(src))
+          Option(src.toFile.listFiles()).getOrElse(Array.empty)
+            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+            .map(_.toPath).toSeq
+        else Seq(src)
+      files.foreach(f => Files.createSymbolicLink(topic.resolve(f.getFileName), f))
       topic.toString
     }
 
@@ -378,6 +366,16 @@ object StreamOps {
     * for the life of the process). */
   private val tsDecls = SessionMemo[String, String]("stream_ts_decl")
 
+  /** Streaming view of the events table via the parquet *file stream
+    * source* ([[fixtureTopic]]) — the data never touches the driver
+    * (contrast: a MemoryStream feed requires a driver-side collect, an OOM
+    * at 100× scale). In production the events directory keeps receiving
+    * files and `maxFilesPerTrigger` paces micro-batches; here the fixture
+    * drains in as many batches as it has files. Schema is declared (file
+    * sources require it) by a one-time probe of the static file — the
+    * testdata's physical `ts` type has varied across generations — and
+    * normalized to TimestampType in-plan (see
+    * [[graft.Tables.normalizeTs]]). */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // see Tables.events: NTZ-as-LTZ keeps ts filters pushable to parquet
@@ -395,7 +393,7 @@ object StreamOps {
         // driver's single-file fixtures; on a multi-part scaled topic it
         // paces one band per batch)
         .option("maxFilesPerTrigger", 1)
-        .parquet(eventsTopicDir(spark, dir)))
+        .parquet(fixtureTopic(spark, dir, "events")))
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
@@ -1050,11 +1048,9 @@ object StreamOps {
   def streamingCanonicalDedup(spark: SparkSession, dir: String): DataFrame =
     gatedDigestFold(spark, corpusFrontEndRun(spark, dir).out)
 
-  /** The corpus front end's gated digest aggregation — ONE definition
-    * shared by the t45 emission seat, the t47 recovery seat, and the
-    * t49 eviction sibling's gate stage (they duplicated this block
-    * inline through round 16): language + quality gates as scan-side
-    * predicates, then the content-digest canonical fold. */
+  /** The corpus front end's gated digest aggregation, shared by the t45
+    * emission seat and the t47 recovery seat: language + quality gates as
+    * scan-side predicates, then the content-digest canonical fold. */
   private def gatedDigestUpdates(spark: SparkSession, topic: Topic): DataFrame =
     topic.read(spark, "doc_id BIGINT, text STRING", paced = true)
       .filter(graft.ext.TextOps.isEnglishPredicate &&
@@ -1065,19 +1061,32 @@ object StreamOps {
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"),
         min("n_tokens").as("n_tokens"))
 
-  /** Start the update-mode foreachBatch parquet fold over
-    * [[gatedDigestUpdates]] — each batch's emissions stay DISTRIBUTED
-    * (the sessionFlushAppend discipline; a memory sink would collect
-    * every per-batch re-emission to the driver). */
-  private def startDigestFold(updates: DataFrame, ckpt: String,
-                              out: String): StreamingQuery =
+  /** The schema-anchored append fold of t9, t45, t47 and t53: start
+    * `updates` in `mode`, each micro-batch appending `f(batch)` to the
+    * parquet directory `out`, so the fold stays DISTRIBUTED (a memory sink
+    * would collect every per-batch emission to the driver). A new `out`
+    * first gets an empty anchor of `f`'s schema, written BEFORE start —
+    * after start it would race batch 0's append into the same directory —
+    * so a run that appends nothing still reads back as an empty frame. A
+    * resumed fold (t47's copied snapshot) keeps the anchor it has. */
+  private def appendFold(updates: DataFrame, mode: String, ckpt: String,
+                         out: String)
+                        (f: DataFrame => DataFrame): StreamingQuery = {
+    val spark = updates.sparkSession
+    if (!Files.exists(java.nio.file.Paths.get(out))) {
+      def empty(schema: org.apache.spark.sql.types.StructType) =
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      empty(f(empty(updates.schema)).schema).write.mode("append").parquet(out)
+    }
     updates.writeStream
-      .outputMode("update")
+      .outputMode(mode)
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out); ()
+        f(batch).write.mode("append").parquet(out); ()
       }
       .start()
+  }
 
   /** Re-aggregate the fold's partials, keeping the final emission per
     * digest (min doc_id is monotone decreasing and n_copies monotone
@@ -1095,17 +1104,12 @@ object StreamOps {
 
   /** One shared corpus-front-end pipeline run per (session, fixture),
     * at width 4 — the t5/t27 shared-run discipline applied to the
-    * t45/t47 pair (the r16 verdict's directive #5): t45 grades the full
-    * two-arrival fold; t47 grades a COLD START from this run's
-    * checkpoint as it stood after arrival 0, so the even half streams
-    * once per board instead of twice. Between the two drains the query
-    * is idle (processAllAvailable returned, no-data batches disabled by
-    * the caller's scope), so the checkpoint and fold snapshot are
-    * stat-stable and the copy is consistent. The schema anchor is
-    * written BEFORE the query starts — writing it after start() raced
-    * batch 0's foreachBatch append into the same directory (two
-    * concurrent batch writers sharing out/_temporary; the r16 ADVICE
-    * item). */
+    * t45/t47 pair: t45 grades the full two-arrival fold; t47 grades a
+    * COLD START from this run's checkpoint as it stood after arrival 0,
+    * so the even half streams once per board instead of twice. Between
+    * the two drains the query is idle (processAllAvailable returned,
+    * no-data batches disabled by the caller's scope), so the checkpoint
+    * and fold snapshot are stat-stable and the copy is consistent. */
   private final case class CorpusRun(out: String, topic: Topic,
                                      recoverCkpt: String, recoverOut: String)
   private val corpusRunMemo =
@@ -1141,14 +1145,6 @@ object StreamOps {
         val out = t.path("snap")
         val recoverCkpt = t.root.resolve("ckpt_recover")
         val recoverOut = t.root.resolve("snap_recover")
-        val updates = gatedDigestUpdates(spark, t)
-        // establish the snapshot schema up front (BEFORE start — see
-        // scaladoc) so a run whose gates pass zero documents still
-        // reads back as an empty frame
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            updates.schema)
-          .write.mode("append").parquet(out)
         drain(t.group(even), () => {
           // snapshot the post-arrival-0 checkpoint + fold for the t47
           // cold start: new checkpoint writes land as NEW files (offset/
@@ -1157,7 +1153,8 @@ object StreamOps {
           copyTree(t.root.resolve("ckpt"), recoverCkpt, tolerateVanishing = true)
           copyTree(java.nio.file.Paths.get(out), recoverOut)
           t.land(odd)
-        })(startDigestFold(updates, t.path("ckpt"), out))
+        })(appendFold(gatedDigestUpdates(spark, t), "update", t.path("ckpt"),
+          out)(identity))
         CorpusRun(out, t, recoverCkpt.toString, recoverOut.toString)
       }
     }
@@ -1251,8 +1248,8 @@ object StreamOps {
     corpusRecoverMemo(spark, dir) {
       val run = corpusFrontEndRun(spark, dir)
       perfScope(spark, Some(4)) {
-        drain()(startDigestFold(gatedDigestUpdates(spark, run.topic),
-          run.recoverCkpt, run.recoverOut))
+        drain()(appendFold(gatedDigestUpdates(spark, run.topic), "update",
+          run.recoverCkpt, run.recoverOut)(identity))
       }
       run.recoverOut
     }
@@ -1459,27 +1456,13 @@ object StreamOps {
     // not a per-batch re-derivation of the corpus side
     val idx = graft.ext.DedupOps.corpusIndex(t53Corpus(spark, dir), 3)
     val out = t.path("snap")
-    // schema anchor BEFORE start (the t45 ordering discipline)
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("status",
-            org.apache.spark.sql.types.StringType))))
-      .write.mode("append").parquet(out)
-    drain(t.group(f0), t.group(f1))(t.read(spark, "doc_id BIGINT, text STRING")
-      .writeStream
-      .option("checkpointLocation", t.path("ckpt"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one manifest file per micro-batch: the verdict rows are
-        // batch-bounded (KBs), and a 32-file append per batch was pure
-        // commit overhead (guide §6 output sizing)
-        graft.ext.DedupOps.incrementalDedupIndexed(batch, idx, 3, tau = 0.5)
-          .coalesce(1)
-          .write.mode("append").parquet(out); ()
-      }
-      .start())
+    // one manifest file per micro-batch: the verdict rows are
+    // batch-bounded (KBs), and a 32-file append per batch was pure
+    // commit overhead (guide §6 output sizing)
+    drain(t.group(f0), t.group(f1))(appendFold(
+        t.read(spark, "doc_id BIGINT, text STRING"), "append", t.path("ckpt"),
+        out)(graft.ext.DedupOps.incrementalDedupIndexed(_, idx, 3, tau = 0.5)
+          .coalesce(1)))
     spark.read.parquet(out).orderBy("doc_id")
       }
 
@@ -1667,16 +1650,23 @@ object StreamOps {
   def streamingDedupUsersRocksDB(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark)(streamingDedupUsers(spark, dir))
 
-  /** The processor behind [[transformWithStateTotals]]: one
-    * `ValueState[(n, cents)]` per user, folded over each batch's rows and
-    * re-emitted — the arbitrary-state cell Spark 4's `transformWithState`
-    * gives an operator author, with the lifecycle (init per partition,
+  /** The running-totals fold of t26, t34 and t37: one
+    * `ValueState[(n, cents)]` cell per user, named "totals", folded over
+    * each batch's rows and re-emitted as (user, n, cents) — the
+    * arbitrary-state cell Spark 4's `transformWithState` gives an
+    * operator author, with the lifecycle (init per partition,
     * handleInputRows per key per batch) made explicit. Cents are integer,
     * so the fold is order-insensitive and the emitted totals replay
-    * exactly in SQL. */
-  private class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long), (Long, Long, Long)] {
+    * exactly in SQL. `ttl` bounds the cell's life (t34; an expired cell
+    * reads as absent, so the fold restarts from zero).
+    * `handleInitialState` seeds the cell from a prior deployment's totals
+    * before the first batch touches it (t37); t26 and t34 run it through
+    * the overload without initial state. */
+  private class TotalsProcessor(
+      ttl: org.apache.spark.sql.streaming.TTLConfig =
+        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
+        Long, (Long, Long), (Long, Long, Long), (Long, Long)] {
     @transient private var totals:
         org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
     override def init(
@@ -1686,16 +1676,41 @@ object StreamOps {
         org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong,
           org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
+        ttl)
+    override def handleInitialState(user: Long, warm: (Long, Long),
+        timerValues: org.apache.spark.sql.streaming.TimerValues): Unit =
+      totals.update(warm)
+    override def handleInputRows(user: Long, rows: Iterator[(Long, Long)],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[(Long, Long, Long)] = {
-      var (n, cents) = if (totals.exists()) totals.get() else (0L, 0L)
-      rows.foreach { case (_, c) => n += 1; cents += c }
-      totals.update((n, cents))
-      Iterator.single((key, n, cents))
+      var (n, c) = if (totals.exists()) totals.get() else (0L, 0L)
+      rows.foreach { case (_, cents) => n += 1; c += cents }
+      totals.update((n, c))
+      Iterator.single((user, n, c))
     }
   }
+
+  /** Events as (user_id, integer cents) rows keyed by user — the input of
+    * every (n, cents) totals fold (t26, t28, t34, t37). */
+  private def centsByUser(df: DataFrame)
+      : org.apache.spark.sql.KeyValueGroupedDataset[Long, (Long, Long)] = {
+    val s = df.sparkSession
+    import s.implicits._
+    df.select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+  }
+
+  /** The "totals" cell a [[TotalsProcessor]] run left in `ckpt`, read back
+    * through the state data source as (user_id, n_events, total_cents) —
+    * t39's audit and t37's seeded-key side. */
+  private def totalsCell(spark: SparkSession, ckpt: String): DataFrame =
+    spark.read.format("statestore")
+      .option("path", ckpt)
+      .option("stateVarName", "totals").load()
+      .select(col("key.value").as("user_id"),
+        col("value._1").as("n_events"),
+        col("value._2").as("total_cents"))
 
   /** T26: per-user running totals on **`transformWithState`** — Spark 4's
     * arbitrary-state operator (successor of `mapGroupsWithState`, the
@@ -1724,9 +1739,8 @@ object StreamOps {
 
   /** ONE `transformWithState` totals run per (session, fixture), at
     * width 8, shared by the t26 emission seat and the t39 TWS
-    * state-source seat — the same consolidation as [[dedupPipelineRun]]
-    * (t39's scaladoc has always said "run the t26 totals to completion,
-    * then audit"): t26 grades the update-mode emissions, t39 grades the
+    * state-source seat — the same consolidation as [[dedupPipelineRun]]:
+    * t26 grades the update-mode emissions, t39 grades the
     * state data source's decode of the "totals" ValueState cell from
     * the run's checkpoint. Whichever seat runs first pays the pipeline
     * (never the warm pass). RocksDB provider is inherent — TWS refuses
@@ -1742,12 +1756,8 @@ object StreamOps {
           import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
           import spark.implicits._
           val ckpt = graft.TmpDirs.create("graft_t26_").resolve("ckpt").toString
-          val q = drain()(toMemory(eventStream(spark, dir)
-            .select(col("user_id"),
-              round(col("value") * 100).cast("long").as("cents"))
-            .as[(Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new RunningTotalsProcessor,
+          val q = drain()(toMemory(centsByUser(eventStream(spark, dir))
+            .transformWithState(new TotalsProcessor,
               TimeMode.None(), OutputMode.Update())
             .toDF("user_id", "n_events", "total_cents"),
             "graft_t26", "update", Some(ckpt)))
@@ -1852,18 +1862,14 @@ object StreamOps {
         // nothing of its own
         val Seq(even, odd) = parityStage(spark, dir)
         def phase(arrival: Path)(processorOut: DataFrame => DataFrame): Unit =
-          drain(t.group(arrival))(processorOut(
-            t.read(spark, paced = true)
-              .select(col("user_id"),
-                round(col("value") * 100).cast("long").as("cents")))
+          drain(t.group(arrival))(processorOut(t.read(spark, paced = true))
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", t.path("ckpt"))
             .outputMode("append").start())
         import spark.implicits._
         phase(even) { df =>
-          df.select(col("user_id"), col("cents")).as[(Long, Long)]
-            .groupByKey(_._1)
+          centsByUser(df)
             .transformWithState(new TotalsProcessorV1,
               org.apache.spark.sql.streaming.TimeMode.None(),
               org.apache.spark.sql.streaming.OutputMode.Append())
@@ -1872,8 +1878,7 @@ object StreamOps {
         // the upgrade boundary: new input lands, NEW CODE restarts on
         // the same checkpoint
         phase(odd) { df =>
-          df.select(col("user_id"), col("cents")).as[(Long, Long)]
-            .groupByKey(_._1)
+          centsByUser(df)
             .transformWithState(new TotalsProcessorV2,
               org.apache.spark.sql.streaming.TimeMode.None(),
               org.apache.spark.sql.streaming.OutputMode.Append())
@@ -2358,19 +2363,8 @@ object StreamOps {
     fold match {
       case Some(f) =>
         val out = t.path("snap")
-        // establish the snapshot's schema up front so a degenerate run
-        // with zero closed sessions still reads back as an empty frame
-        f(belt(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            emissions.schema)))
-          .write.mode("append").parquet(out)
-        drain(steps: _*)(emissions.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", t.path("ckpt"))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            f(belt(batch)).write.mode("append").parquet(out); ()
-          }
-          .start())
+        drain(steps: _*)(
+          appendFold(emissions, "append", t.path("ckpt"), out)(belt andThen f))
         spark.read.parquet(out)
       case None =>
         belt(drainToTable(steps: _*)(emissions, s"graft_$tag", "append"))
@@ -2576,6 +2570,17 @@ object StreamOps {
       col("purchase_id"), col("user_id"),
       unix_micros(col("purchase_ts")).as("purchase_us"))
 
+  /** `df`'s five event columns as typed [[Ev]] rows keyed by user — the
+    * input of every per-user state machine here (t8, t11, t13, t15,
+    * t30). */
+  private def eventsByUser(df: DataFrame)
+      : org.apache.spark.sql.KeyValueGroupedDataset[Long, Ev] = {
+    val s = df.sparkSession
+    import s.implicits._
+    df.select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
+      .groupByKey(_.user_id)
+  }
+
   /** Output row of the streaming as-of join. */
   final case class AsOfMatch(left_id: Long, user_id: Long,
                              matched_right_id: Option[Long], gap_s: Option[Long])
@@ -2598,9 +2603,7 @@ object StreamOps {
       perfScope(spark, Some(8)) {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val matched = eventStream(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-      .groupByKey(_.user_id)
+    val matched = eventsByUser(eventStream(spark, dir))
       .flatMapGroupsWithState[(Long, Long), AsOfMatch](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (user: Long, evs: Iterator[Ev],
@@ -2671,9 +2674,7 @@ object StreamOps {
       perfScope(spark, Some(8)) {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val progressed = eventStream(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-      .groupByKey(_.user_id)
+    val progressed = eventsByUser(eventStream(spark, dir))
       .mapGroupsWithState[(Int, Long), (Long, Int)](GroupStateTimeout.NoTimeout)(
         funnelStep(stages))
     val last = drainToTable()(progressed.toDF("user_id", "stage"),
@@ -2705,9 +2706,7 @@ object StreamOps {
       perfScope(spark, Some(8)) {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val closed = eventStream(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-      .groupByKey(_.user_id)
+    val closed = eventsByUser(eventStream(spark, dir))
       .flatMapGroupsWithState[(Long, Long, String), ScdClosed](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (user: Long, evs: Iterator[Ev],
@@ -2751,43 +2750,26 @@ object StreamOps {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val gapUs = gapSec * 1000000L
-    val closed = eventStream(spark, dir)
-      .withWatermark("ts", "0 seconds")
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long), ClosedSession](
+    val closed = eventsByUser(eventStream(spark, dir)
+        .withWatermark("ts", "0 seconds"))
+      .flatMapGroupsWithState[OpenSess, ClosedSession](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[Ev],
-         state: org.apache.spark.sql.streaming.GroupState[(Long, Long, Long)]) =>
+         state: org.apache.spark.sql.streaming.GroupState[OpenSess]) =>
           if (state.hasTimedOut) {
-            val (start, last, n) = state.get
+            val c = state.get
             state.remove()
-            Iterator.single(ClosedSession(user, start, last, n))
+            Iterator.single(c.close(user))
           } else {
-            val sorted = evs.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer[ClosedSession]()
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val m = tsMicros(e.ts)
-              cur match {
-                case Some((start, last, n)) if m - last > gapUs =>
-                  out += ClosedSession(user, start, last, n)
-                  cur = Some((m, m, 1L))
-                case Some((start, _, n)) =>
-                  cur = Some((start, m, n + 1L))
-                case None =>
-                  cur = Some((m, m, 1L))
-              }
-            }
-            cur.foreach { c =>
+            val (closed, open) = foldSessions(user, evs, state.getOption, gapUs)
+            val trailing = open.flatMap { c =>
               // event-time timers are millisecond-epoch
-              val tMs = Math.floorDiv(c._2 + gapUs, 1000L)
+              val tMs = Math.floorDiv(c.last_us + gapUs, 1000L)
               val wmMs = state.getCurrentWatermarkMs()
               if (tMs < wmMs) {
                 // multi-batch arrival: the watermark has already passed
                 // this session's close point (possible whenever a key's
-                // rows span batches — single-batch fixtures never hit
-                // it, the 10× scaled run did). Arming the timer would
+                // rows span batches). Arming the timer would
                 // throw (timers must not trail the watermark), so apply
                 // the engine's own fire rule (timer strictly below
                 // watermark) in-batch: close now — same emitted set,
@@ -2800,21 +2782,47 @@ object StreamOps {
                 // prefix session, a duplicate the oracle rejects
                 // (reproduced by the A/B'd regression spec)
                 if (state.exists) state.remove()
-                out += ClosedSession(user, c._1, c._2, c._3)
+                Some(c.close(user))
               } else {
                 state.update(c)
                 state.setTimeoutTimestamp(tMs)
+                None
               }
             }
-            out.iterator
+            (closed ++ trailing).iterator
           }
       }
     drainToTable()(closed.toDF(), "graft_t15", "append")
   }
 
-  /** The open session held by [[TimerSessionsProcessor]]. */
+  /** The open session t15 and t30 hold per user. */
   private[streaming] case class OpenSess(start_us: Long, last_us: Long,
-                                         n: Long)
+                                         n: Long) {
+    def close(user: Long): ClosedSession =
+      ClosedSession(user, start_us, last_us, n)
+  }
+
+  /** The session-close fold of t15 and t30: a user's batch rows, in
+    * (µs, event_id) order, extend the `open` session; a gap of more than
+    * `gapUs` closes it and opens the next. Returns the sessions closed
+    * in-batch and the one left open. */
+  private def foldSessions(user: Long, evs: Iterator[Ev],
+                           open: Option[OpenSess], gapUs: Long)
+      : (Seq[ClosedSession], Option[OpenSess]) = {
+    val closed = scala.collection.mutable.ArrayBuffer[ClosedSession]()
+    var cur = open
+    evs.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id)).foreach { e =>
+      val m = tsMicros(e.ts)
+      cur = cur match {
+        case Some(c) if m - c.last_us > gapUs =>
+          closed += c.close(user)
+          Some(OpenSess(m, m, 1L))
+        case Some(c) => Some(c.copy(last_us = m, n = c.n + 1L))
+        case None => Some(OpenSess(m, m, 1L))
+      }
+    }
+    (closed.toSeq, cur)
+  }
 
   /** The t30 processor: [[streamingTimeoutSessions]]'s keyed state
     * machine re-expressed on Spark 4's `transformWithState` TIMER
@@ -2844,29 +2852,16 @@ object StreamOps {
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[ClosedSession] = {
-      val sorted = rows.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-      val out = scala.collection.mutable.ArrayBuffer[ClosedSession]()
-      var cur = if (sess.exists()) Some(sess.get()) else None
-      val prevTimer = cur.map(c => timerMs(c.last_us))
-      sorted.foreach { e =>
-        val m = tsMicros(e.ts)
-        cur match {
-          case Some(OpenSess(start, last, n)) if m - last > gapUs =>
-            out += ClosedSession(user, start, last, n)
-            cur = Some(OpenSess(m, m, 1L))
-          case Some(OpenSess(start, _, n)) =>
-            cur = Some(OpenSess(start, m, n + 1L))
-          case None =>
-            cur = Some(OpenSess(m, m, 1L))
-        }
-      }
+      val open = if (sess.exists()) Some(sess.get()) else None
+      val prevTimer = open.map(c => timerMs(c.last_us))
+      val (closed, cur) = foldSessions(user, rows, open, gapUs)
       cur.foreach { c =>
         sess.update(c)
         prevTimer.filter(_ != timerMs(c.last_us))
           .foreach(getHandle.deleteTimer)
         getHandle.registerTimer(timerMs(c.last_us))
       }
-      out.iterator
+      closed.iterator
     }
     override def handleExpiredTimer(user: Long,
         timerValues: org.apache.spark.sql.streaming.TimerValues,
@@ -2875,7 +2870,7 @@ object StreamOps {
       if (sess.exists()) {
         val c = sess.get()
         sess.clear()
-        Iterator.single(ClosedSession(user, c.start_us, c.last_us, c.n))
+        Iterator.single(c.close(user))
       } else Iterator.empty
   }
 
@@ -2906,10 +2901,8 @@ object StreamOps {
     withRocksDb(spark) {
       withShufflePartitions(spark, Some(4)) {
         import spark.implicits._
-        val closed = eventStream(spark, dir)
-          .withWatermark("ts", "0 seconds")
-          .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-          .groupByKey(_.user_id)
+        val closed = eventsByUser(eventStream(spark, dir)
+            .withWatermark("ts", "0 seconds"))
           .transformWithState(new TimerSessionsProcessor(gapSec * 1000000L),
             org.apache.spark.sql.streaming.TimeMode.EventTime(),
             org.apache.spark.sql.streaming.OutputMode.Append())
@@ -2927,14 +2920,7 @@ object StreamOps {
     * directions: the processor left exactly the right state behind,
     * and the reader decodes the new format exactly. */
   def twsStateSourceAudit(spark: SparkSession, dir: String): DataFrame = {
-    val (_, ckpt) = twsTotalsRun(spark, dir)
-    spark.read.format("statestore")
-      .option("path", ckpt)
-      .option("stateVarName", "totals").load()
-      .select(col("key.value").as("user_id"),
-        col("value._1").as("n_events"),
-        col("value._2").as("total_cents"))
-      .orderBy("user_id")
+    totalsCell(spark, twsTotalsRun(spark, dir)._2).orderBy("user_id")
   }
 
   /** The t32 processor: per-user per-event-type running (n, cents) in a
@@ -3083,53 +3069,22 @@ object StreamOps {
     lastEmit(snap, Seq("user_id"), "n_seen", "recent_ids").orderBy("user_id")
   }
 
-  /** The t34 processor: per-user running (n, cents) in a ValueState
-    * carrying a **TTL** — the state-retention knob that keeps unbounded
-    * keyed state bounded in a long-running deployment (abandoned keys
-    * age out instead of accumulating forever). TWS TTL is
-    * PROCESSING-time based: an entry written by batch B expires
-    * `ttl` after B's batch timestamp, and the read path NEVER returns
-    * an expired value (the documented guarantee the harness leans on).
-    * Emissions are materialized eagerly (the MapState discipline
-    * above). */
-  private class TtlTotalsProcessor(ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long), (Long, Long, Long)] {
-    @transient private var totals:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Long)]("totals",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig(ttl))
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long)] = {
-      // an expired cell reads as absent — the fold restarts from zero
-      var (n, c) = if (totals.exists()) totals.get() else (0L, 0L)
-      rows.foreach { case (_, cents) => n += 1; c += cents }
-      totals.update((n, c))
-      Iterator.single((user, n, c))
-    }
-  }
-
-  /** The t34 pipeline over any event frame — shared with the
-    * cross-batch spec, which drives it through MemoryStream batch
-    * boundaries to pin expiry (ttl ≪ batch gap → per-batch re-count)
-    * and the control (ttl ≫ run length → cumulative). */
+  /** The t34 pipeline over any event frame: the [[TotalsProcessor]] fold
+    * with its cell under a `ttl` — the state-retention knob that keeps
+    * unbounded keyed state bounded (abandoned keys age out). TWS TTL is
+    * PROCESSING-time based: an entry written by batch B expires `ttl`
+    * after B's batch timestamp, and the read path never returns an
+    * expired value. Shared with the cross-batch spec, which drives it
+    * through MemoryStream batch boundaries to pin expiry (ttl ≪ batch
+    * gap → per-batch re-count) and the control (ttl ≫ run length →
+    * cumulative). */
   private[graft] def twsTtlPipeline(ttl: java.time.Duration)
                                    (df: DataFrame): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    df.select(col("user_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new TtlTotalsProcessor(ttl),
+    centsByUser(df)
+      .transformWithState(
+        new TotalsProcessor(org.apache.spark.sql.streaming.TTLConfig(ttl)),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         org.apache.spark.sql.streaming.OutputMode.Update())
       .toDF("user_id", "n_events", "total_cents")
@@ -3175,37 +3130,6 @@ object StreamOps {
         })(twsTtlPipeline(ttl)(t.read(spark, paced = true)),
           "graft_t34", "update", Some(t.path("ckpt")))
       }
-    }
-  }
-
-  /** The t37 processor: the t26 running-totals fold warm-started from a
-    * prior deployment's materialized state — `handleInitialState` seeds
-    * the ValueState cell once per key BEFORE the first batch touches
-    * it (the `StatefulProcessorWithInitialState` surface). */
-  private class WarmStartTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, (Long, Long), (Long, Long, Long), (Long, Long)] {
-    @transient private var totals:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Long)]("totals",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInitialState(user: Long, warm: (Long, Long),
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Unit =
-      totals.update(warm)
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long)] = {
-      var (n, c) = if (totals.exists()) totals.get() else (0L, 0L)
-      rows.foreach { case (_, cents) => n += 1; c += cents }
-      totals.update((n, c))
-      Iterator.single((user, n, c))
     }
   }
 
@@ -3260,13 +3184,9 @@ object StreamOps {
         // the stream folds only the active users' odd half
         val emitted = lastEmit(drainToTable(
             t.group(parityStage(spark, dir)(1)))(
-          t.read(spark, paced = true)
-          .filter(pmod(col("user_id"), lit(3)) =!= 0)
-          .select(col("user_id"),
-            round(col("value") * 100).cast("long").as("cents"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new WarmStartTotalsProcessor,
+          centsByUser(t.read(spark, paced = true)
+            .filter(pmod(col("user_id"), lit(3)) =!= 0))
+          .transformWithState(new TotalsProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update(),
             init)
@@ -3281,12 +3201,7 @@ object StreamOps {
         // warm frame only names WHICH keys are warm-only; their (n,
         // cents) payload must come from what the processor actually
         // persisted.
-        val seeded = spark.read.format("statestore")
-          .option("path", t.path("ckpt"))
-          .option("stateVarName", "totals").load()
-          .select(col("key.value").as("user_id"),
-            col("value._1").as("n_events"),
-            col("value._2").as("total_cents"))
+        val seeded = totalsCell(spark, t.path("ckpt"))
         emitted.unionByName(
             seeded.join(emitted.select("user_id"), Seq("user_id"), "left_anti")
               .join(warm.select("user_id"), Seq("user_id"), "left_semi"))
@@ -3365,32 +3280,12 @@ object StreamOps {
       finally evalWins.unpersist()
   }
 
-  /** T12: streaming corpus curation — the LLM tier's scan-side gates
-    * (language-ID + quality, [[graft.ext.TextOps.isEnglishPredicate]] /
-    * [[graft.ext.TextOps.qualityOkPredicate]]) applied to a document
-    * STREAM, with per-language survivor counts maintained in complete
-    * mode. The production shape of "filter the crawl as it lands" —
-    * the gates are pure scan predicates, so they pipeline inside each
-    * micro-batch with zero extra state; the only stateful op is the
-    * small keyed count. Batch/stream parity is exact (same predicate
-    * expressions), which is what lets the batch SQL oracle grade the
-    * streaming execution. */
-  private val docTopicDirs = SessionMemo[String, String]("stream_docs_topic")
-  /** The documents table as a file-stream source (symlinked topic dir,
-    * same discipline as [[eventsTopicDir]]). */
-  private def docStream(spark: SparkSession, dir: String): DataFrame = {
-    val topic = docTopicDirs(spark, dir) {
-      val t = graft.TmpDirs.create("graft_docs_topic_")
-      Files.createSymbolicLink(
-        t.resolve("documents.parquet"),
-        java.nio.file.Paths.get(s"$dir/documents.parquet"))
-      t.toString
-    }
+  /** The documents table as a file-stream source ([[fixtureTopic]]). */
+  private def docStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
       .option("maxFilesPerTrigger", 1)
-      .parquet(topic)
-  }
+      .parquet(fixtureTopic(spark, dir, "documents"))
 
   /** T24: stateful streaming dedup keyed on a NATIVE expression — unicode
     * canonicalization meets streaming state. Every document arrives as
@@ -3417,6 +3312,16 @@ object StreamOps {
       "graft_t24", "complete").orderBy("lang")
   }
 
+  /** T12: streaming corpus curation — the LLM tier's scan-side gates
+    * (language-ID + quality, [[graft.ext.TextOps.isEnglishPredicate]] /
+    * [[graft.ext.TextOps.qualityOkPredicate]]) applied to a document
+    * STREAM, with per-language survivor counts maintained in complete
+    * mode. The production shape of "filter the crawl as it lands" —
+    * the gates are pure scan predicates, so they pipeline inside each
+    * micro-batch with zero extra state; the only stateful op is the
+    * small keyed count. Batch/stream parity is exact (same predicate
+    * expressions), which is what lets the batch SQL oracle grade the
+    * streaming execution. */
   def streamingQualityGate(spark: SparkSession, dir: String): DataFrame =
       perfScope(spark, Some(4)) {
     drainToTable()(docStream(spark, dir)
@@ -3448,12 +3353,7 @@ object StreamOps {
     val outDir = graft.TmpDirs.create("graft_t17_").resolve("split").toString
     drain()(eventStream(spark, dir).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .withColumn("k",
-            get_json_object(col("props"), "$.k").cast("long"))
-          .withColumn("__dead",
-            col("k").isNull || pmod(col("k"), lit(97)) === 13)
-          .drop("k")
+        batch.withColumn("__dead", poisoned)
           .write.mode("append").partitionBy("__dead").parquet(outDir)
         ()
       }
@@ -3465,6 +3365,13 @@ object StreamOps {
       .groupBy("event_type")
       .agg(count(when(!col("__dead"), 1)).as("n_valid"),
            count(when(col("__dead"), 1)).as("n_dead"))
+  }
+
+  /** The dead-letter rule of t17 and t17b: `props.k` fails to parse, or
+    * matches the poison predicate (`k % 97 == 13`, deterministic). */
+  private def poisoned: org.apache.spark.sql.Column = {
+    val k = get_json_object(col("props"), "$.k").cast("long")
+    k.isNull || pmod(k, lit(97)) === 13
   }
 
   /** T17b: dead-letter triage under GENUINE KEY SKEW — the fixture's
@@ -3490,12 +3397,10 @@ object StreamOps {
     drain()(eventStream(spark, dir).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch
-          .withColumn("k",
-            get_json_object(col("props"), "$.k").cast("long"))
           .withColumn("skew_key",
             when(pmod(col("event_id"), lit(100)) < 90, lit(1L))
               .otherwise(col("user_id")))
-          .filter(col("k").isNull || pmod(col("k"), lit(97)) === 13)
+          .filter(poisoned)
           .select("skew_key", "event_id")
           .write.mode("append").parquet(deadDir)
         ()
@@ -3522,23 +3427,9 @@ object StreamOps {
     * `sketch_hll_merge`: exact distinct (recomputed from raw) + an honest
     * within-5% verdict from the final snapshot's estimates. */
   def streamingSketchMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.TmpDirs.create("graft_t18_").toString
-    @volatile var latest = -1L
-    drain()(eventStream(spark, dir).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val bsk = batch.groupBy("event_type")
-          .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-        val merged =
-          if (latest >= 0)
-            spark.read.parquet(s"$root/v=$latest").union(bsk)
-              .groupBy("event_type")
-              .agg(expr("hll_union_agg(sk)").as("sk"))
-          else bsk
-        merged.write.mode("overwrite").parquet(s"$root/v=$id")
-        latest = id; ()
-      }
-      .start())
-    val est = spark.read.parquet(s"$root/v=$latest")
+    val est = versionedSnapshot(spark, dir, "t18")(
+        _.groupBy("event_type").agg(expr("hll_sketch_agg(user_id)").as("sk")),
+        _.groupBy("event_type").agg(expr("hll_union_agg(sk)").as("sk")))
       .select(col("event_type"),
         expr("hll_sketch_estimate(sk)").as("est"))
     graft.Tables.events(spark, dir)
@@ -3566,13 +3457,9 @@ object StreamOps {
     * oracle computes those hour bars direct from raw ticks — equality
     * proves the incremental path loses nothing. */
   def streamingOhlcMaintenance(spark: SparkSession, dir: String,
-                               fineSeconds: Int = 900): DataFrame = {
-    val root = graft.TmpDirs.create("graft_t19_").toString
-    @volatile var latest = -1L
-    drain()(eventStream(spark, dir).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val part = batch
-          .select(col("event_type"), col("ts"), col("value"),
+                               fineSeconds: Int = 900): DataFrame =
+    versionedSnapshot(spark, dir, "t19")(
+        _.select(col("event_type"), col("ts"), col("value"),
             round(col("value") * 100, 0).cast("long").as("cents"))
           .groupBy(col("event_type"),
             window(col("ts"), s"$fineSeconds seconds")
@@ -3583,20 +3470,11 @@ object StreamOps {
             min("value").as("low"),
             max(struct(col("ts"), col("value"))).as("close_s"),
             count(lit(1)).as("n"),
-            sum("cents").as("vol_cents"))
-        val merged =
-          if (latest >= 0)
-            spark.read.parquet(s"$root/v=$latest").union(part)
-              .groupBy("event_type", "fbar")
-              .agg(min("open_s").as("open_s"), max("high").as("high"),
-                min("low").as("low"), max("close_s").as("close_s"),
-                sum("n").as("n"), sum("vol_cents").as("vol_cents"))
-          else part
-        merged.write.mode("overwrite").parquet(s"$root/v=$id")
-        latest = id; ()
-      }
-      .start())
-    spark.read.parquet(s"$root/v=$latest")
+            sum("cents").as("vol_cents")),
+        _.groupBy("event_type", "fbar")
+          .agg(min("open_s").as("open_s"), max("high").as("high"),
+            min("low").as("low"), max("close_s").as("close_s"),
+            sum("n").as("n"), sum("vol_cents").as("vol_cents")))
       .groupBy(col("event_type"), date_trunc("hour", col("fbar")).as("bar"))
       .agg(
         round(min_by(col("open_s").getField("value"), col("fbar")), 2)
@@ -3611,6 +3489,29 @@ object StreamOps {
         date_format(col("bar"), "yyyy-MM-dd HH:mm").as("bar_start"),
         col("open"), col("high"), col("low"), col("close"),
         col("n_events"), col("vol_cents"))
+
+  /** The versioned snapshot fold of t18 and t19: each micro-batch of the
+    * events stream folds to `partial(batch)`, which is unioned with the
+    * snapshot at `v=<latest>`, merged by `merge` and written to
+    * `v=<batch id>` — history is never re-scanned. Returns the last
+    * snapshot. */
+  private def versionedSnapshot(spark: SparkSession, dir: String, tag: String)
+                               (partial: DataFrame => DataFrame,
+                                merge: DataFrame => DataFrame): DataFrame = {
+    val root = graft.TmpDirs.create(s"graft_${tag}_").toString
+    @volatile var latest = -1L
+    drain()(eventStream(spark, dir).writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val part = partial(batch)
+        val merged =
+          if (latest >= 0)
+            merge(spark.read.parquet(s"$root/v=$latest").union(part))
+          else part
+        merged.write.mode("overwrite").parquet(s"$root/v=$id")
+        latest = id; ()
+      }
+      .start())
+    spark.read.parquet(s"$root/v=$latest")
   }
 
   /** S2+S5+S8: sink composition with write-then-emit ordering — the

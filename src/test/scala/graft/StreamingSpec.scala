@@ -897,6 +897,61 @@ class StreamingSpec extends SparkSpec {
     assert(stream.nonEmpty)
   }
 
+  /** sf0.001 with `events` and `documents` rewritten as 3-part
+    * directories (the `tools.ScaleUp` layout: events range-banded on ts);
+    * every other table links the original file. */
+  private lazy val multiPartDir: String = {
+    val d = Files.createTempDirectory("graft_multipart_")
+    new java.io.File(sfDir).listFiles().foreach { f =>
+      val bands = f.getName match {
+        case "events.parquet"    => Seq(col("ts"), col("event_id"))
+        case "documents.parquet" => Seq(col("doc_id"))
+        case _                   => Nil
+      }
+      if (bands.isEmpty) Files.createSymbolicLink(d.resolve(f.getName), f.toPath)
+      else spark.read.parquet(f.getPath).repartitionByRange(3, bands: _*)
+        .write.parquet(d.resolve(f.getName).toString)
+    }
+    d.toString
+  }
+
+  test("a multi-part fixture streams every part: t12 and t24 return " +
+       "their single-file rows") {
+    Seq("events.parquet", "documents.parquet").foreach { t =>
+      assert(new java.io.File(s"$multiPartDir/$t").listFiles()
+        .count(_.getName.endsWith(".parquet")) === 3, t)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "t12" -> StreamOps.streamingQualityGate,
+      "t24" -> StreamOps.streamingNfcDedup).foreach { case (seat, run) =>
+      val want = rows(run(spark, sfDir))
+      assert(want.nonEmpty, seat)
+      assert(rows(run(spark, multiPartDir)) === want, seat)
+    }
+  }
+
+  test("a multi-part fixture runs the merge branch of the t18/t19 " +
+       "versioned fold, and the snapshots equal their single-file rows") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "t18" -> StreamOps.streamingSketchMaintenance,
+      "t19" -> (StreamOps.streamingOhlcMaintenance(_, _))).foreach {
+      case (seat, run) =>
+        val want = rows(run(spark, sfDir))
+        val got = rows(run(spark, multiPartDir))
+        val dataBatches =
+          StreamOps.lastDrained.recentProgress.count(_.numInputRows > 0)
+        assert(want.nonEmpty, seat)
+        assert(got === want, seat)
+        assert(dataBatches >= 2, s"$seat ran $dataBatches data batches")
+    }
+  }
+
   test("s10: every emit epoch lands twice on the wire; the keyed dedup converges") {
     import spark.implicits._
     val emitted = StreamOps.wireEmitRun(spark, sfDir)

@@ -1,6 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileContextBasedCheckpointFileManager,
+  FileSystemBasedCheckpointFileManager}
 
 /** Pins the scratch-vs-spill split: graft scratch may live in RAM-backed
   * /dev/shm, but Spark's local dirs (shuffle spill, block manager —
@@ -8,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * spill dir competes with executor memory and can ENOSPC mid-query on
   * a larger SF, since the 4 GiB headroom check runs once at JVM start.
   */
-class TmpDirsSpec extends AnyFunSuite {
+class TmpDirsSpec extends SparkSpec {
   test("install() never routes spark.local.dir into /dev/shm") {
     TmpDirs.install()
     val localDir = System.getProperty("spark.local.dir")
@@ -27,5 +29,20 @@ class TmpDirsSpec extends AnyFunSuite {
   test("create() yields writable scratch dirs under the chosen root") {
     val d = TmpDirs.create("graft_spec_")
     assert(java.nio.file.Files.isDirectory(d) && java.nio.file.Files.isWritable(d))
+  }
+
+  test("checkpoints get the FileSystem-based manager, and a scoped conf " +
+       "swaps in the stock FileContext one") {
+    val path = new org.apache.hadoop.fs.Path(
+      TmpDirs.create("graft_ckpt_manager_").toString)
+    def manager =
+      CheckpointFileManager.create(path, spark.sessionState.newHadoopConf())
+    assert(manager.isInstanceOf[FileSystemBasedCheckpointFileManager])
+    graft.streaming.StreamOps.withConf(spark, Map(
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[FileContextBasedCheckpointFileManager].getName)) {
+      assert(manager.isInstanceOf[FileContextBasedCheckpointFileManager])
+    }
+    assert(manager.isInstanceOf[FileSystemBasedCheckpointFileManager])
   }
 }

@@ -102,6 +102,27 @@ class TransformWithStateSpec extends SparkSpec {
       (5L, "5,4,3")))     // after batch 3: carried buffer, e2 gone
   }
 
+  test("t33 seat: per-user count and the 3 latest event ids equal a " +
+       "batch window") {
+    val got = StreamOps.twsListStateLastK(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    val ev = Tables.events(spark, sfDir)
+    val latest = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id").orderBy(desc("ts"), desc("event_id"))
+    val want = ev.withColumn("rn", row_number().over(latest))
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_seen"),
+        sort_array(collect_list(when(col("rn") <= 3,
+          struct(col("rn"), col("event_id"))))).as("top"))
+      .select(col("user_id"), col("n_seen"),
+        concat_ws(",", transform(col("top"),
+          t => t.getField("event_id").cast("string"))).as("recent_ids"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(got.nonEmpty && got === want)
+    // the window is non-vacuous: some user has more than 3 events
+    assert(got.exists(_._2 > 3))
+  }
+
   test("t34 state TTL: expired cells re-count from zero across a real " +
        "batch boundary; the no-expiry control stays cumulative") {
     import graft.streaming.StreamOps.Ev
