@@ -212,8 +212,6 @@ object Bench {
       // factor explode rebuild
       warm { graft.ops.FuzzyJoin.fuzzyPartMatch(
         Tables.part(spark, sfDir)).count() }
-      warm { graft.ext.TextOps.quality(docs30).count() }
-      warm { graft.ext.TextOps.langId(docs30).count() }
       // The vote wire decode chain (generator → to_json → from_json over
       // the 20-field VoteSchema → flatten) compiles a multi-second codegen
       // family; whichever vote_e2e_* query the Map ordered first was

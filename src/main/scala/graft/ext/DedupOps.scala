@@ -19,20 +19,27 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** Project a shingle/window string column down to its shuffle-safe
-    * fingerprint pair `(<col>_h, <col>_l)` = (xxhash64, length). Every
-    * consumer that only needs the string as an OPAQUE group/join key
-    * shuffles these 12 bytes instead of the ~80-100-byte raw n-gram —
-    * at 100 TB that is the difference between a window-mass shuffle and
-    * a key shuffle ~10× smaller. The length rider pushes the collision
-    * odds of a bare 64-bit hash far below the ~10^12-key scale where
-    * they would start to matter (two strings must collide in BOTH hash
-    * and length). Results remain defined by string content — the
-    * differential oracle computes on the strings themselves. */
-  private def fingerprinted(df: DataFrame, strCol: String): DataFrame = df
-    .withColumn(strCol + "_h", xxhash64(col(strCol)))
-    .withColumn(strCol + "_l", length(col(strCol)))
-    .drop(strCol)
+  /** Distinct shingle keys per doc: `(doc_id, [sizeAs,] shingle_h,
+    * shingle_l)`, the (xxhash64, length) pair of each distinct shingle
+    * of [[shingles]], from the codegen'd
+    * [[graft.functions.ShingleKeys]] kernel — no shingle string is built.
+    * Every consumer that only needs the shingle as an OPAQUE group/join
+    * key shuffles these 12 bytes instead of the ~80-100-byte raw n-gram
+    * — at 100 TB that is the difference between a window-mass shuffle
+    * and a key shuffle ~10× smaller. The length rider pushes the
+    * collision odds of a bare 64-bit hash far below the ~10^12-key scale
+    * where they would start to matter (two strings must collide in BOTH
+    * hash and length). Results remain defined by string content — the
+    * differential oracle computes on the strings themselves. `sizeAs`
+    * names a column carrying the doc's distinct-shingle count (the
+    * kernel's array size) on each of its rows. */
+  private[graft] def shingleKeys(docs: DataFrame, n: Int,
+                                 sizeAs: Option[String] = None): DataFrame = {
+    val keyed = docs.select(col("doc_id"), graft.functions.ShingleKeys
+      .column(split(col("text"), " "), n).as("keys"))
+    keyed.select(((col("doc_id") +: sizeAs.map(size(col("keys")).as(_)).toSeq)
+      :+ inline(col("keys"))): _*)
+  }
 
   /** Distinct word-n-gram shingles per doc: (doc_id, shingle). */
   def shingles(docs: DataFrame, n: Int): DataFrame =
@@ -169,7 +176,7 @@ object DedupOps {
     * recompute without changing any result; correctness never depends
     * on a hit.
     *
-    * Stores `(doc_id, shingle_h, shingle_l)` — the [[fingerprinted]]
+    * Stores `(doc_id, shingle_h, shingle_l)` — the [[shingleKeys]]
     * key pair, never the raw n-gram string: both consumers
     * ([[ngramJaccardPairs]], [[containmentTopPairs]]) only ever
     * group/join on the shingle, so the checkpoint AND every downstream
@@ -191,10 +198,9 @@ object DedupOps {
       // doc_id: uniform, deterministic. One-time build cost inside the
       // memo; the explode and the checkpoint then materialize evenly
       // across the session's cores.
-      fingerprinted(
-          shingles(docs.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism,
-            col("doc_id")), n), "shingle")
+      shingleKeys(docs.repartition(
+          docs.sparkSession.sparkContext.defaultParallelism,
+          col("doc_id")), n)
         .localCheckpoint()
     }
 
@@ -212,8 +218,13 @@ object DedupOps {
                                      tau: Double): DataFrame =
     truthMemo(docs.sparkSession,
         (docs.queryExecution.analyzed.semanticHash(), n, tau)) {
+      // sealed hash-partitioned on the full (doc_a, doc_b) key the recall
+      // and precision joins use, so they shuffle only the candidate side
       ngramJaccardPairsAbove(docs, n, tau)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b")
+        .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
+          col("doc_a"), col("doc_b"))
+        .localCheckpoint()
     }
 
   /** Differential recall of a candidate-pair set against the exact-Jaccard
@@ -575,7 +586,7 @@ object DedupOps {
       }
       val digests = seal(corpus.select(md5(col("text")).as("dig"))
         .distinct().repartition(parts, col("dig")))
-      val sh = seal(fingerprinted(shingles(corpus, n), "shingle")
+      val sh = seal(shingleKeys(corpus, n)
         .repartition(parts, col("shingle_h"), col("shingle_l"))
         .sortWithinPartitions("shingle_h", "shingle_l"))
       val sz = seal(sh.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
@@ -606,7 +617,7 @@ object DedupOps {
     val exactDup = increment.select(col("doc_id"), md5(col("text")).as("dig"))
       .join(idx.digests, "dig")
       .select("doc_id").distinct()
-    val shInc = fingerprinted(shingles(increment, n), "shingle")
+    val shInc = shingleKeys(increment, n)
     val shKey = Seq("shingle_h", "shingle_l")
     val szInc = shInc.groupBy("doc_id").agg(count(lit(1)).as("n_a"))
     // r18 (guide §2.4, the q2/q21 lesson applied to the pair count): the
@@ -647,29 +658,22 @@ object DedupOps {
   }
 
   /** Shared triage tail of the incremental-dedup pair: near-dup gate +
-    * status fold, parameterized by how the exact-dup set was computed. */
+    * status fold, parameterized by how the exact-dup set was computed.
+    * Each key row carries its doc's distinct-shingle count (`n_a`,
+    * `n_b`, the kernel's array size), so the Jaccard denominator needs
+    * no per-doc count aggregate and no size join. The cross-set join is
+    * on the 12-byte fingerprint pair, not the raw shingle string — the
+    * increment×corpus shuffle is the wide edge here. */
   private def incrementalTriage(increment: DataFrame, corpus: DataFrame,
                                 n: Int, tau: Double,
                                 exactDup: DataFrame): DataFrame = {
-    val shCorp = fingerprinted(shingles(corpus, n), "shingle")
-    val szCorp = shCorp.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
-    incrementalTriageIndexed(increment, shCorp, szCorp, n, tau, exactDup)
-  }
-
-  private def incrementalTriageIndexed(increment: DataFrame,
-                                       shCorp: DataFrame, szCorp: DataFrame,
-                                       n: Int, tau: Double,
-                                       exactDup: DataFrame): DataFrame = {
-    // Cross-set join on the 12-byte fingerprint pair, not the raw shingle
-    // string — the increment×corpus shuffle is the wide edge here.
-    val shInc = fingerprinted(shingles(increment, n), "shingle")
     val shKey = Seq("shingle_h", "shingle_l")
-    val szInc = shInc.groupBy("doc_id").agg(count(lit(1)).as("n_a"))
-    val nearDup = shInc.select((col("doc_id").as("inc_id") +: shKey.map(col)): _*)
-      .join(shCorp.select((col("doc_id").as("corp_id") +: shKey.map(col)): _*), shKey)
-      .groupBy("inc_id", "corp_id").agg(count(lit(1)).as("n_common"))
-      .join(szInc.select(col("doc_id").as("inc_id"), col("n_a")), "inc_id")
-      .join(szCorp.select(col("doc_id").as("corp_id"), col("n_b")), "corp_id")
+    val nearDup = shingleKeys(increment, n, Some("n_a"))
+      .withColumnRenamed("doc_id", "inc_id")
+      .join(shingleKeys(corpus, n, Some("n_b"))
+        .withColumnRenamed("doc_id", "corp_id"), shKey)
+      .groupBy("inc_id", "corp_id", "n_a", "n_b")
+      .agg(count(lit(1)).as("n_common"))
       .filter(round(col("n_common")
         / (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6) >= tau)
       .select(col("inc_id").as("doc_id")).distinct()
@@ -693,9 +697,8 @@ object DedupOps {
   def jaccardForPairs(docs: DataFrame, pairs: DataFrame, n: Int): DataFrame = {
     val ids = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = fingerprinted(
-      shingles(docs.join(broadcast(ids), Seq("doc_id"), "left_semi"), n),
-      "shingle")
+    val sh = shingleKeys(
+      docs.join(broadcast(ids), Seq("doc_id"), "left_semi"), n)
     val shKey = Seq("shingle_h", "shingle_l")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val common = sh.select((col("doc_id").as("doc_a") +: shKey.map(col)): _*)

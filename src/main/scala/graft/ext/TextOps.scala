@@ -7,8 +7,21 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §2.7 F10): token stats, quality scoring, language-ID heuristic,
   * BPE-ish token counting, document fingerprinting.
   *
-  * All built-ins / higher-order functions — no UDFs — so every op stays
-  * inside whole-stage codegen and runs at scan speed over 100 TB of text.
+  * Built-ins, higher-order functions and graft's native kernels — no
+  * UDFs. Higher-order functions are NOT compiled: Spark 4.1's
+  * `ArrayTransform`, `ArrayFilter`, `ArrayAggregate` and `ZipWith` are
+  * `CodegenFallback`, so each lambda runs interpreted per element inside
+  * the generated stage. The hot per-document scores run on codegen'd
+  * kernels instead ([[graft.functions.CountInSet]],
+  * [[graft.functions.BigramProfileCount]], `top_bigram_count`,
+  * `char_poly_hash`, `cdc_chunk_spans`, `ngram_fingerprints`). The HOF
+  * sites still interpreted: [[stats]] (`aggregate` token lengths),
+  * [[tokenizeStats]] (`filter` + `aggregate` over the vocab map),
+  * [[bigramLmScore]] (`zip_with` pairs), [[crossSourceOverlap]] (nested
+  * `transform` source pairs), [[boilerplateRemove]] (`filter`/`transform`
+  * over blocks), [[chunks]] (`transform` windows) and the BPE family
+  * ([[bpeMerges]], [[bpeEncode]], [[bpeRoundtripApply]]: `aggregate` merge
+  * folds, `zip_with`, `transform` id maps).
   * The per-document scoring ops are embarrassingly parallel (zero shuffle);
   * the corpus-level ops (vocabulary, tf-idf, source overlap, boilerplate)
   * shuffle only on bounded keys (terms, sources, blocks) — never doc×doc.
@@ -16,7 +29,15 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
   private val StopWords = Seq("the", "a")
-  private def stopSet = StopWords.map(w => s"'$w'").mkString("(", ",", ")")
+
+  /** Stop-word share of a token array, 4 places: the language-ID score
+    * of [[langId]] and [[isEnglishPredicate]] and [[quality]]'s
+    * `stop_ratio`. The count is the codegen'd
+    * [[graft.functions.CountInSet]] kernel, equal to
+    * `size(filter(words, w -> w in ('the', 'a')))`. */
+  private def stopWordRatio(words: org.apache.spark.sql.Column) =
+    round(graft.functions.CountInSet.column(words, StopWords)
+      / size(words).cast("double"), 4)
 
   /** Per-document token statistics. */
   def stats(docs: DataFrame): DataFrame =
@@ -38,8 +59,7 @@ object TextOps {
       .select(
         col("doc_id"),
         size(col("words")).as("n_tokens"),
-        expr(s"round(size(filter(words, w -> w in $stopSet)) / cast(size(words) as double), 4)")
-          .as("stop_ratio"),
+        stopWordRatio(col("words")).as("stop_ratio"),
         expr("round(size(array_distinct(words)) / cast(size(words) as double), 4)")
           .as("ttr"))
       .withColumn("quality_ok",
@@ -197,17 +217,13 @@ object TextOps {
     * are tunable downstream; prediction from the word-level score. */
   def langId(docs: DataFrame): DataFrame = {
     val bigramProfile = Seq("th", "he", "in", "er", "an", "re")
-      .map(g => s"'$g'").mkString("(", ",", ")")
     docs
       .withColumn("words", split(col("text"), " "))
       .select(
         col("doc_id"),
-        expr(s"round(size(filter(words, w -> w in $stopSet)) / cast(size(words) as double), 4)")
-          .as("en_score"),
-        expr(s"""round(size(filter(transform(sequence(1, length(text) - 1),
-                                   i -> substring(text, i, 2)),
-                            g -> g in $bigramProfile))
-                 / cast(length(text) - 1 as double), 4)""")
+        stopWordRatio(col("words")).as("en_score"),
+        round(graft.functions.BigramProfileCount.column(col("text"), bigramProfile)
+          / (length(col("text")) - 1).cast("double"), 4)
           .as("en_bigram_score"))
       .withColumn("predicted_lang",
         when(col("en_score") > 0.03, "en").otherwise("other"))
@@ -228,7 +244,7 @@ object TextOps {
     * score frame (stays a pushable filter, no join). Same expression as
     * the oracle-checked [[langId]]. */
   def isEnglishPredicate: org.apache.spark.sql.Column =
-    expr(s"round(size(filter(split(text, ' '), w -> w in $stopSet)) / cast(size(split(text, ' ')) as double), 4)") > lit(0.03)
+    stopWordRatio(split(col("text"), " ")) > lit(0.03)
 
   /** [[quality]]'s verdict as a scan-side predicate (no join). */
   def qualityOkPredicate: org.apache.spark.sql.Column =

@@ -26,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.centroidArgmaxDescriptor)
     ext.injectFunction(GraftExtensions.topBigramCountDescriptor)
     ext.injectFunction(GraftExtensions.ngramFingerprintsDescriptor)
+    ext.injectFunction(GraftExtensions.shingleKeysDescriptor)
     ext.injectFunction(GraftExtensions.cdcChunkSpansDescriptor)
     ext.injectFunction(GraftExtensions.charPolyHashDescriptor)
     GraftExtensions.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
@@ -131,6 +132,21 @@ object GraftExtensions {
        NgramFingerprints(children(0), n)
      })
 
+  private[functions] val shingleKeysDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier("shingle_keys"),
+     new ExpressionInfo(classOf[ShingleKeys].getName, "shingle_keys"),
+     (children: Seq[Expression]) => {
+       require(children.size == 2,
+         "shingle_keys(words, n) takes exactly 2 args")
+       val n = children(1) match {
+         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+         case other => throw new IllegalArgumentException(
+           s"shingle_keys n must be an int literal, got $other")
+       }
+       ShingleKeys(children(0), n)
+     })
+
   private[functions] val cdcChunkSpansDescriptor
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     (FunctionIdentifier("cdc_chunk_spans"),
@@ -204,6 +220,7 @@ object GraftExtensions {
         jaroWinklerDescriptor, nfcNormalizeDescriptor,
         damerauDescriptor, centroidArgmaxDescriptor,
         topBigramCountDescriptor, ngramFingerprintsDescriptor,
+        shingleKeysDescriptor,
         cdcChunkSpansDescriptor, charPolyHashDescriptor).foreach {
       case (id, info, builder) =>
         if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
