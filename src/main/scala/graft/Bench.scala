@@ -81,11 +81,17 @@ object Bench {
 
   private[graft] type Seat = (SparkSession, String) => org.apache.spark.sql.DataFrame
 
+  /** Runs `df` in full: every row and column through the `noop` sink.
+    * A `count()` lets Catalyst prune a per-row seat's projections down
+    * to a scan, so it would time less work than the seat does. */
+  private def runInFull(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   /** One timed run; NaN when the seat fails, so a failure can never read
     * as a fast arm. */
   private def timeOnce(spark: SparkSession, sfDir: String, name: String, fn: Seat): Double = {
     val t0 = System.nanoTime()
-    try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+    try { runInFull(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
     catch { case e: Throwable =>
       System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       Double.NaN
@@ -185,12 +191,11 @@ object Bench {
     // throw too; everything inside is additionally guarded per step
     val warmT0 = System.nanoTime()
     warm {
-      warm { spark.range(1000000).selectExpr("sum(id)").count() }
-      warm { Tables.events(spark, sfDir).limit(10000).agg(
-        org.apache.spark.sql.functions.sum("value")).count() }
-      warm { Tables.embeddings(spark, sfDir).limit(100)
-        .selectExpr("aggregate(transform(embedding, x -> cast(x as double)), 0D, (a, b) -> a + b)")
-        .count() }
+      warm { runInFull(spark.range(1000000).selectExpr("sum(id)")) }
+      warm { runInFull(Tables.events(spark, sfDir).limit(10000).agg(
+        org.apache.spark.sql.functions.sum("value"))) }
+      warm { runInFull(Tables.embeddings(spark, sfDir).limit(100)
+        .selectExpr("aggregate(transform(embedding, x -> cast(x as double)), 0D, (a, b) -> a + b)")) }
       // Compile the heavy codegen families once on tiny inputs so their
       // one-time cost (measured ~9 s for the ivf centroid fold alone)
       // lands here, outside the timed region, instead of on whichever
@@ -200,9 +205,9 @@ object Bench {
       // use: an eager schema probe can throw too (missing fixture), and
       // it must not take the later, unrelated families down with it
       warm { val emb64 = Tables.embeddings(spark, sfDir).limit(64)
-        graft.ext.SimilarityOps.ivfTopK(emb64, 0L, 3, nprobe = 2).count() }
+        runInFull(graft.ext.SimilarityOps.ivfTopK(emb64, 0L, 3, nprobe = 2)) }
       def docs30 = Tables.documents(spark, sfDir).limit(30)
-      warm { graft.ext.DedupOps.ngramJaccardTopPairs(docs30, 3, 5).count() }
+      warm { runInFull(graft.ext.DedupOps.ngramJaccardTopPairs(docs30, 3, 5)) }
       // the fuzzy-join probe/verify family compiles a multi-second
       // codegen set; pin it here like the others — AND stage the
       // session-memoized probe/index checkpoints at the REAL sfDir
@@ -210,30 +215,30 @@ object Bench {
       // timed-region discipline as the truth memo and storage layouts:
       // the timed seat then measures the join+verify, not the constant-
       // factor explode rebuild
-      warm { graft.ops.FuzzyJoin.fuzzyPartMatch(
-        Tables.part(spark, sfDir)).count() }
+      warm { runInFull(graft.ops.FuzzyJoin.fuzzyPartMatch(
+        Tables.part(spark, sfDir))) }
       // The vote wire decode chain (generator → to_json → from_json over
       // the 20-field VoteSchema → flatten) compiles a multi-second codegen
       // family; whichever vote_e2e_* query the Map ordered first was
       // paying it (r4: 0.62 s vs r5: 4.44 s for the SAME query). A tiny
       // run here pins that one-time cost outside the timed region.
-      warm { graft.pipeline.VotePipeline.partyTally(spark, 64).count() }
-      warm { graft.pipeline.VotePipeline.turnoutByState(spark, 64).count() }
+      warm { runInFull(graft.pipeline.VotePipeline.partyTally(spark, 64)) }
+      warm { runInFull(graft.pipeline.VotePipeline.turnoutByState(spark, 64)) }
       // real-codec families: ImageIO/javax.sound static init + the
       // mapPartitions codegen sets; one-doc payloads keep it millisecond
       def doc1 = Tables.documents(spark, sfDir).limit(1)
-      warm { graft.ext.ImageCodec.decodeBrightness(spark,
-        graft.ext.ImageCodec.withImagePayload(spark, doc1, "png")).count() }
-      warm { graft.ext.AudioCodec.wavDecode(spark,
-        graft.ext.AudioCodec.withWavPayload(spark, doc1)).count() }
-      warm { graft.ext.VideoCodec.demuxAvi(spark,
-        graft.ext.VideoCodec.withAviPayload(spark, doc1)).count() }
+      warm { runInFull(graft.ext.ImageCodec.decodeBrightness(spark,
+        graft.ext.ImageCodec.withImagePayload(spark, doc1, "png"))) }
+      warm { runInFull(graft.ext.AudioCodec.wavDecode(spark,
+        graft.ext.AudioCodec.withWavPayload(spark, doc1))) }
+      warm { runInFull(graft.ext.VideoCodec.demuxAvi(spark,
+        graft.ext.VideoCodec.withAviPayload(spark, doc1))) }
       // native string-metric expressions (registry + codegen compile)
       warm { graft.functions.GraftExtensions.register(spark)
-        spark.range(1).selectExpr(
+        runInFull(spark.range(1).selectExpr(
           "jaro_winkler('martha', 'marhta')",
           "nfc_normalize('cafe')",
-          "damerau_levenshtein('ab', 'ba')").count() }
+          "damerau_levenshtein('ab', 'ba')")) }
       // Streaming machinery: the first query of each STATEFUL OPERATOR
       // CLASS pays MicroBatchExecution init, state-store provider
       // load, and that operator's generated-class compile — measured
@@ -248,18 +253,18 @@ object Bench {
       // otherwise lands on whichever of those queries the Map happens to
       // order first (bench ordering, not engine cost). Built from the
       // same (corpus, n, tau) memo key.
-      warm { graft.ext.DedupOps.duplicateClusters(
-        Tables.documents(spark, sfDir), 3, tau = 0.5).count() }
+      warm { runInFull(graft.ext.DedupOps.duplicateClusters(
+        Tables.documents(spark, sfDir), 3, tau = 0.5)) }
       // The corpus-pipeline COMPOSITIONS chain five codegen families
       // (gates, repetition kernel, decontamination fingerprints, digest
       // dedup, split assign) whose one-time compile otherwise lands on
       // corpus_prepare_full or whichever family member the Map orders
       // first; a 40-doc run compiles all of them (the tiny limit() keys
       // its own truth memo, so the full-corpus memo above is untouched).
-      warm { graft.ext.CorpusPipeline.prepareFull(spark,
-        Tables.documents(spark, sfDir).limit(40)).count() }
-      warm { graft.ext.CorpusPipeline.prepare(spark,
-        Tables.documents(spark, sfDir).limit(40)).count() }
+      warm { runInFull(graft.ext.CorpusPipeline.prepareFull(spark,
+        Tables.documents(spark, sfDir).limit(40))) }
+      warm { runInFull(graft.ext.CorpusPipeline.prepare(spark,
+        Tables.documents(spark, sfDir).limit(40))) }
       // Storage-layout fixture pre-build: each storage seat's FIRST call
       // materializes its memoized layout directory (partitioned /
       // z-ordered / codec / sorted / evolved / compacted / dynamic-
@@ -288,7 +293,7 @@ object Bench {
       // profiling run skips the 4 encode+write passes.
       if (SparkEntry.queries.keys.exists(n => n.startsWith("mm_") && inFilter(n)))
         Seq("png", "jpg", "wav", "avi").foreach { k =>
-          warm { graft.ext.MediaPayloads.payload(spark, sfDir, k).count() }
+          warm { runInFull(graft.ext.MediaPayloads.payload(spark, sfDir, k)) }
         }
       // staged streaming layouts at the REAL sfDir: the parity split,
       // typed join topics, ivf ingest, and sentinel files are memoized
@@ -314,7 +319,7 @@ object Bench {
           "storage_dynamic_overwrite", "storage_evolving_read",
           "storage_sorted_export", "storage_codec_zstd",
           "storage_nested_pruning").foreach { n =>
-        if (inFilter(n)) warm { allQueries(n)(spark, sfDir).count() }
+        if (inFilter(n)) warm { runInFull(allQueries(n)(spark, sfDir)) }
       }
       // session-memoized MODEL/SKETCH builds at the REAL sfDir, same
       // discipline as the layout writes above: the BPE merge table
@@ -339,7 +344,7 @@ object Bench {
         .foreach { case (builder, servedPrefixes) =>
           val served = allQueries.keys.exists(n =>
             servedPrefixes.exists(n.startsWith) && inFilter(n))
-          if (served) warm { allQueries(builder)(spark, sfDir).count() }
+          if (served) warm { runInFull(allQueries(builder)(spark, sfDir)) }
         }
       // Whole-board codegen warm at the SMALLEST fixture: one pass over
       // every query at sf0.001 compiles every generated-class family the
@@ -364,7 +369,7 @@ object Bench {
         "/root/testdata/sf0.01")
       if (new java.io.File(s"$warmSf/events.parquet").exists()) {
         allQueries.foreach { case (name, fn) =>
-          if (inFilter(name)) warm { fn(spark, warmSf).count() }
+          if (inFilter(name)) warm { runInFull(fn(spark, warmSf)) }
         }
       }
     }
@@ -494,7 +499,7 @@ object Bench {
     val selected = SparkEntry.queries.filter { case (n, _) => inFilter(n) }
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try runInFull(fn(spark, sfDir)) catch { case _: Throwable => () }
       name -> (System.nanoTime() - t0) / 1e9
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -583,7 +588,7 @@ object Bench {
         }
         outliers.map { case (name, first) =>
           val t0 = System.nanoTime()
-          try { selected(name)(spark, sfDir).count() }
+          try runInFull(selected(name)(spark, sfDir))
           catch { case _: Throwable => () }
           val second = (System.nanoTime() - t0) / 1e9
           System.err.println(

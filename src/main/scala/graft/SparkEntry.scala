@@ -2615,7 +2615,320 @@ object SparkEntry {
         .orderBy("doc_id", "frame_idx"))
   )
 
-  private[graft] lazy val oracleSqlBase: Map[String, String] = Map(
+  /** SQL that two or more oracles share, each piece written once. Every
+    * oracle that splices a piece is a `raw` string: unlike `s`, `raw`
+    * leaves a `\` in the oracle's own text as written (a `$` is still
+    * written `$$`). `OracleTableSpec` checks that each piece is used by
+    * at least two base oracles. */
+  private[graft] object OracleFragments {
+    // ---- documents: 3-word shingles and their exact Jaccard truth
+    /** `cte`: the words of each row of `table` that has at least 3 */
+    def wordsOf(cte: String, table: String): String =
+      raw"""$cte AS (SELECT doc_id, string_split(text, ' ') AS words FROM $table
+                     WHERE len(string_split(text, ' ')) >= 3)"""
+    /** `cte`: each doc's distinct 3-shingles of the word lists in `words` */
+    def shingled(cte: String, words: String): String =
+      raw"""$cte AS (SELECT doc_id,
+                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
+                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
+                     FROM $words)"""
+    /** per-doc shingle counts `sizes` and the shared-shingle count `com`
+      * of every pair doc_a < doc_b, over the shingles `sh` */
+    val shingleOverlap: String =
+      """sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                      GROUP BY a.doc_id, b.doc_id)"""
+    val docShingles: String =
+      raw"""${wordsOf("w", "documents")},
+              ${shingled("sh", "w")},
+              $shingleOverlap"""
+    /** `com` joined to both docs' `sizes` */
+    val sizedPairs: String =
+      """FROM com
+                    JOIN sizes sa ON sa.doc_id = doc_a
+                    JOIN sizes sb ON sb.doc_id = doc_b"""
+    val jaccard: String = "n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)"
+    /** `p`: the truth pairs, Jaccard >= 0.5 */
+    val truthPairs: String =
+      raw"""$docShingles,
+              p AS (SELECT doc_a, doc_b
+                    $sizedPairs
+                    WHERE $jaccard >= 0.5)"""
+    /** `reach`: the transitive closure of the symmetric truth graph `e` */
+    val closure: String =
+      raw"""$truthPairs,
+              e AS (SELECT doc_a AS src, doc_b AS dst FROM p
+                    UNION SELECT doc_b, doc_a FROM p),
+              reach AS (SELECT src, dst FROM e
+                        UNION
+                        SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)"""
+    /** the multiplicative-hash 80/10/10 split of `key` */
+    def split(key: String): String =
+      raw"""CASE WHEN ($key * 2654435761) % 100 < 80 THEN 'train'
+                     WHEN ($key * 2654435761) % 100 < 90 THEN 'val'
+                     ELSE 'test' END AS split"""
+    /** drop doc_b of each near-dup pair among the kept docs `kc`, then split */
+    val nearDupSplit: String =
+      raw"""${wordsOf("w2", "kc")},
+              ${shingled("sh", "w2")},
+              $shingleOverlap,
+              losers AS (SELECT DISTINCT doc_b AS doc_id
+                         $sizedPairs
+                         WHERE round($jaccard, 6) >= 0.5)
+         SELECT doc_id,
+                ${split("doc_id")}
+         FROM kc WHERE doc_id NOT IN (SELECT doc_id FROM losers)"""
+    /** `wins`: every 13-word window of each doc that has one */
+    val docWindows: String =
+      """w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
+                    WHERE len(string_split(text, ' ')) >= 13),
+              wins AS (SELECT doc_id,
+                              unnest(list_transform(range(0, len(words) - 12),
+                                i -> array_to_string(words[i+1:i+13], ' '))) AS win
+                       FROM w)"""
+
+    // ---- documents: the quality gate over the word list `w`
+    val stopRatio: String =
+      """round(len(list_filter(w, x -> x IN ('the','a')))
+                            / CAST(len(w) AS DOUBLE), 4)"""
+    val typeTokenRatio: String =
+      "round(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 4)"
+    val wellFormed: String =
+      raw"len(w) >= 10 AND len(w) <= 10000 AND $typeTokenRatio > 0.1"
+    val qualityGate: String = raw"""$stopRatio > 0.03
+                  AND $wellFormed"""
+    /** the quality classifier's features and label */
+    val lrFeatures: String =
+      raw"""$stopRatio AS x_stop,
+                  $typeTokenRatio AS x_ttr,
+                  round(least(len(w), 200) / 200.0, 4) AS x_len,
+                  CASE WHEN $wellFormed THEN 1.0 ELSE 0.0 END AS y"""
+    /** `f`'s rows with the classifier's probability `p` at weights `w` */
+    def lrScored(w: String): String =
+      raw"""SELECT f.*, 1.0 / (1.0 + exp(-($w.b + $w.ws * x_stop
+                         + $w.wt * x_ttr + $w.wl * x_len))) AS p
+                FROM f, $w"""
+
+    // ---- embeddings: 64-dim vectors
+    /** `e`: each embedding cast to DOUBLE as `v`, next to `cols` */
+    def embedded(cols: String): String =
+      raw"""e AS (SELECT $cols,
+                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                    FROM embeddings)"""
+    def l2(v: String): String = raw"sqrt(list_sum(list_transform($v, x -> x * x)))"
+    def dot(a: String, b: String): String =
+      raw"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
+    /** `n`: `e` with each vector's L2 norm `nrm` */
+    def normed(cols: String): String =
+      raw"""n AS (SELECT $cols, v,
+                           ${l2("v")} AS nrm
+                    FROM e)"""
+    val query0: String = "q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0)"
+    val queries10: String =
+      """q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn
+                    FROM n WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9))"""
+    val queryCosine: String =
+      raw"""round(${dot("n.v", "q.qv")}
+                                  / (n.nrm * q.qn), 6) AS cosine"""
+    /** exact-cosine top-10 of `n` to query 0 */
+    val cosineTop10: String =
+      raw"""SELECT n.vec_id, $queryCosine
+                     FROM n, q WHERE n.vec_id <> 0
+                     ORDER BY cosine DESC, vec_id LIMIT 10"""
+    /** each query's top-10 `sc` ids, in rank order */
+    val topIdsPerQuery: String =
+      """rk AS (SELECT query_id, vec_id,
+                            row_number() OVER (PARTITION BY query_id
+                              ORDER BY cosine DESC, vec_id) AS rn
+                     FROM sc)
+         SELECT query_id,
+                string_agg(CAST(vec_id AS VARCHAR), ',' ORDER BY rn) AS top_ids
+         FROM rk WHERE rn <= 10 GROUP BY query_id"""
+    /** the mean of `x` in 2^-24 fixed point: order-insensitive, so it
+      * equals the engine's bounded-buffer aggregation exactly */
+    val fixedPointMean: String =
+      """(CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
+                             / 16777216.0) / count(*)"""
+    /** `cent`: each label cell's centroid `cv` */
+    val labelCentroids: String =
+      raw"""ej AS (SELECT label, vec_id, unnest(v) AS x,
+                            generate_subscripts(v, 1) AS j FROM e),
+              cm AS (SELECT label, j, $fixedPointMean AS cj
+                     FROM ej GROUP BY label, j),
+              cent AS (SELECT label, list(cj ORDER BY j) AS cv
+                       FROM cm GROUP BY label)"""
+    val centroidCosine: String =
+      raw"""${dot("cv", "q.qv")}
+                                 / (${l2("cv")} * q.qn)"""
+    /** `probe`: the 3 cells nearest query 0 */
+    val ivfProbe: String =
+      raw"""probe AS (SELECT cent.label
+                        FROM cent, q
+                        ORDER BY $centroidCosine DESC,
+                                 cent.label ASC
+                        LIMIT 3)"""
+    /** exact-cosine top-10 to query 0 inside the probed cells */
+    val ivfTop10: String =
+      raw"""SELECT n.vec_id, $queryCosine
+         FROM n JOIN probe ON n.label = probe.label, q
+         WHERE n.vec_id <> 0
+         ORDER BY cosine DESC, vec_id LIMIT 10"""
+    val unitCentroid: String =
+      """list_transform(cv, x ->
+                      x / sqrt(list_sum(list_transform(cv, y -> y * y))))"""
+    /** the streaming IVF ingest: centroids of the even half `base`, the
+      * odd half assigned to its argmax cell, `corpus` = both */
+    val ivfIngest: String =
+      raw"""${embedded("vec_id, CAST(label AS BIGINT) AS cell")},
+              base AS (SELECT vec_id, cell, v FROM e WHERE vec_id % 2 = 0),
+              newv AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
+              cj AS (SELECT cell, generate_subscripts(v, 1) AS j,
+                            unnest(v) AS x FROM base),
+              cm AS (SELECT cell, j, $fixedPointMean AS cjv
+                     FROM cj GROUP BY cell, j),
+              cent AS (SELECT cell, list(cjv ORDER BY j) AS cv
+                       FROM cm GROUP BY cell),
+              u AS (SELECT cell, $unitCentroid AS uc
+                    FROM cent),
+              s AS (SELECT newv.vec_id, newv.v, u.cell,
+                           ${dot("newv.v", "u.uc")} AS d
+                    FROM newv CROSS JOIN u),
+              anew AS (SELECT vec_id, v, cell FROM
+                        (SELECT vec_id, v, cell,
+                                row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY d DESC, cell ASC) AS rn FROM s)
+                       WHERE rn = 1),
+              corpus AS (SELECT vec_id, cell, v FROM base
+                         UNION ALL SELECT vec_id, cell, v FROM anew)"""
+    /** `cn`: per-vector 127/max|x| int8 codes `cq` with norms; `cqv`: query 0's */
+    val int8Codes: String =
+      raw"""c AS (SELECT vec_id,
+                           list_transform(v, x -> CAST(CAST(round(x * (127.0 /
+                             list_max(list_transform(v, y -> abs(y))))) AS INTEGER)
+                             AS DOUBLE)) AS cq
+                    FROM e),
+              cn AS (SELECT vec_id, cq,
+                            ${l2("cq")} AS nrm
+                     FROM c),
+              cqv AS (SELECT cq AS qv, nrm AS qn FROM cn WHERE vec_id = 0)"""
+    /** PQ over the label cells: 8 subspace `codes` per vector (argmin L2,
+      * ties to the smaller cell) and query 0's lookup table `lut` */
+    val pqCodes: String =
+      raw"""${embedded("vec_id, CAST(label AS BIGINT) AS cell")},
+              ej AS (SELECT cell, generate_subscripts(v, 1) AS j,
+                            unnest(v) AS x FROM e),
+              cm AS (SELECT cell, j, $fixedPointMean AS cj
+                     FROM ej GROUP BY cell, j),
+              cent AS (SELECT cell, list(cj ORDER BY j) AS cv
+                       FROM cm GROUP BY cell),
+              ss AS (SELECT unnest(range(0, 8)) AS s),
+              dist AS (SELECT e.vec_id, ss.s, cent.cell,
+                              list_sum(list_transform(range(1, 9),
+                                i -> (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])
+                                     * (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])))
+                                AS d
+                       FROM e CROSS JOIN ss CROSS JOIN cent),
+              codes AS (SELECT vec_id, s, cell FROM
+                         (SELECT vec_id, s, cell,
+                                 row_number() OVER (PARTITION BY vec_id, s
+                                   ORDER BY d ASC, cell ASC) AS rn FROM dist)
+                        WHERE rn = 1),
+              q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+              lut AS (SELECT ss.s, cent.cell,
+                             list_sum(list_transform(range(1, 9),
+                               i -> q.qv[ss.s * 8 + i] * cent.cv[ss.s * 8 + i]))
+                               AS p
+                      FROM cent CROSS JOIN ss, q)"""
+    /** each vector's ADC score: its codes' `lut` entries, folded in
+      * subspace order */
+    val adcScore: String =
+      """round(list_sum(list(lut.p ORDER BY lut.s)), 6)
+                               AS adc_score
+                      FROM codes JOIN lut ON codes.s = lut.s
+                             AND codes.cell = lut.cell
+                      WHERE codes.vec_id <> 0
+                      GROUP BY codes.vec_id"""
+    /** `adc`: the ADC pool, the top max(10, n/10) */
+    val adcPool: String =
+      raw"""adc AS (SELECT codes.vec_id,
+                             $adcScore
+                      ORDER BY adc_score DESC, vec_id
+                      LIMIT (SELECT greatest(10, CAST(count(*) // 10 AS BIGINT))
+                             FROM e))"""
+
+    // ---- events: as-of joins of purchases to clicks
+    /** purchases (tag 1) and clicks (tag 0, carrying their id and ts) */
+    val asofRows: String =
+      """u AS (
+           SELECT user_id, ts, event_id, 1 AS tag,
+                  CAST(NULL AS BIGINT) AS r_id, CAST(NULL AS TIMESTAMP) AS r_ts
+           FROM events WHERE event_type = 'purchase'
+           UNION ALL
+           SELECT user_id, ts, event_id, 0 AS tag, event_id AS r_id, ts AS r_ts
+           FROM events WHERE event_type = 'click')"""
+    // ---- events: the click → purchase interval join within 1 h
+    /** matched pairs `m` and the global watermark `wm` (ms) */
+    val intervalMatches: String =
+      """p AS (SELECT event_id AS purchase_id, user_id, ts AS pts
+                    FROM events WHERE event_type = 'purchase'),
+              c AS (SELECT event_id AS click_id, user_id, ts AS cts
+                    FROM events WHERE event_type = 'click'),
+              m AS (SELECT p.purchase_id, c.click_id, p.user_id,
+                           date_diff('microsecond', c.cts, p.pts) AS gap_us
+                    FROM p JOIN c ON p.user_id = c.user_id
+                     AND c.cts <= p.pts
+                     AND p.pts <= c.cts + INTERVAL 3600 SECONDS),
+              wm AS (SELECT least(
+                       (SELECT max(epoch_us(cts)) // 1000 FROM c),
+                       (SELECT max(epoch_us(pts)) // 1000 FROM p))
+                       - 3600000 AS w)"""
+    /** unmatched purchases whose state the watermark evicted */
+    val unmatchedPurchases: String =
+      """unm AS (SELECT p.purchase_id, CAST(NULL AS BIGINT) AS click_id,
+                             p.user_id, CAST(NULL AS BIGINT) AS gap_us
+                      FROM p CROSS JOIN wm
+                      WHERE NOT EXISTS (SELECT 1 FROM m
+                                        WHERE m.purchase_id = p.purchase_id)
+                        AND epoch_us(p.pts) // 1000 < wm.w)"""
+    /** unmatched clicks past click_ts + tolerance */
+    val unmatchedClicks: String =
+      """unc AS (SELECT CAST(NULL AS BIGINT) AS purchase_id, c.click_id,
+                             c.user_id, CAST(NULL AS BIGINT) AS gap_us
+                      FROM c CROSS JOIN wm
+                      WHERE NOT EXISTS (SELECT 1 FROM m
+                                        WHERE m.click_id = c.click_id)
+                        AND epoch_us(c.cts) // 1000 + 3600000 < wm.w)"""
+
+    // ---- parts: the typo-injected names of the fuzzy-join fixture
+    /** `dirty`: every third part name with one or two injected typos */
+    val typoNames: String =
+      """base AS (
+           SELECT p_partkey, p_name || ' ' || p_brand AS s FROM part),
+         d0 AS (
+           SELECT p_partkey, s, 2 + (p_partkey % (length(s) - 3)) AS pos
+           FROM base WHERE p_partkey % 3 = 0),
+         d1 AS (
+           SELECT p_partkey,
+                  CASE (p_partkey // 3) % 3
+                    WHEN 0 THEN substr(s, 1, pos - 1) || 'z' || substr(s, pos + 1)
+                    WHEN 1 THEN substr(s, 1, pos - 1) || substr(s, pos + 1)
+                    ELSE substr(s, 1, pos) || 'q' || substr(s, pos + 1)
+                  END AS d1
+           FROM d0),
+         dirty AS (
+           SELECT p_partkey AS dirty_id,
+                  CASE WHEN p_partkey % 5 = 0
+                    THEN substr(d1, 1, 1 + ((p_partkey // 7) % (length(d1) - 3)))
+                         || 'x' ||
+                         substr(d1, 3 + ((p_partkey // 7) % (length(d1) - 3)))
+                    ELSE d1 END AS dirty_name
+           FROM d1)"""
+  }
+
+  private[graft] lazy val oracleSqlBase: Map[String, String] = {
+    import OracleFragments._
+    Map(
     "a1_votes_per_candidate" ->
       """SELECT event_type, round(sum(value), 2) AS total_value, count(*) AS n_events
          FROM events GROUP BY event_type""",
@@ -2858,27 +3171,7 @@ object SparkEntry {
     // The engine's segment blocking must reproduce this row set exactly
     // — completeness of the candidate generator is what's graded.
     "j8_fuzzy_match" ->
-      """WITH base AS (
-           SELECT p_partkey, p_name || ' ' || p_brand AS s FROM part),
-         d0 AS (
-           SELECT p_partkey, s, 2 + (p_partkey % (length(s) - 3)) AS pos
-           FROM base WHERE p_partkey % 3 = 0),
-         d1 AS (
-           SELECT p_partkey,
-                  CASE (p_partkey // 3) % 3
-                    WHEN 0 THEN substr(s, 1, pos - 1) || 'z' || substr(s, pos + 1)
-                    WHEN 1 THEN substr(s, 1, pos - 1) || substr(s, pos + 1)
-                    ELSE substr(s, 1, pos) || 'q' || substr(s, pos + 1)
-                  END AS d1
-           FROM d0),
-         dirty AS (
-           SELECT p_partkey AS dirty_id,
-                  CASE WHEN p_partkey % 5 = 0
-                    THEN substr(d1, 1, 1 + ((p_partkey // 7) % (length(d1) - 3)))
-                         || 'x' ||
-                         substr(d1, 3 + ((p_partkey // 7) % (length(d1) - 3)))
-                    ELSE d1 END AS dirty_name
-           FROM d1),
+      raw"""WITH $typoNames,
          clean AS (SELECT DISTINCT s AS entity FROM base)
          SELECT d.dirty_id, d.dirty_name, c.entity,
                 CAST(levenshtein(d.dirty_name, c.entity) AS BIGINT) AS dist
@@ -2888,27 +3181,7 @@ object SparkEntry {
     // the engine's native expression implements the identical classic
     // definition, so the 6-dp scores must agree exactly
     "j8b_jaro_winkler_match" ->
-      """WITH base AS (
-           SELECT p_partkey, p_name || ' ' || p_brand AS s FROM part),
-         d0 AS (
-           SELECT p_partkey, s, 2 + (p_partkey % (length(s) - 3)) AS pos
-           FROM base WHERE p_partkey % 3 = 0),
-         d1 AS (
-           SELECT p_partkey,
-                  CASE (p_partkey // 3) % 3
-                    WHEN 0 THEN substr(s, 1, pos - 1) || 'z' || substr(s, pos + 1)
-                    WHEN 1 THEN substr(s, 1, pos - 1) || substr(s, pos + 1)
-                    ELSE substr(s, 1, pos) || 'q' || substr(s, pos + 1)
-                  END AS d1
-           FROM d0),
-         dirty AS (
-           SELECT p_partkey AS dirty_id,
-                  CASE WHEN p_partkey % 5 = 0
-                    THEN substr(d1, 1, 1 + ((p_partkey // 7) % (length(d1) - 3)))
-                         || 'x' ||
-                         substr(d1, 3 + ((p_partkey // 7) % (length(d1) - 3)))
-                    ELSE d1 END AS dirty_name
-           FROM d1)
+      raw"""WITH $typoNames
          SELECT d.dirty_id, d.dirty_name,
                 round(jaro_winkler_similarity(d.dirty_name, b.s), 6)
                   AS jw_self,
@@ -2953,14 +3226,10 @@ object SparkEntry {
     // batch replay of the streamed corpus front end: the same gates as
     // the corpus_prepare oracle, then canonical exact dedup per content
     "t45_stream_canonical_dedup" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w
+      raw"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w
                     FROM documents),
               kept AS (SELECT doc_id, text, len(w) AS n_tokens FROM t
-                       WHERE round(len(list_filter(w, x -> x IN ('the','a')))
-                                   / CAST(len(w) AS DOUBLE), 4) > 0.03
-                         AND len(w) >= 10 AND len(w) <= 10000
-                         AND round(len(list_distinct(w))
-                                   / CAST(len(w) AS DOUBLE), 4) > 0.1)
+                       WHERE $qualityGate)
          SELECT min(doc_id) AS doc_id, count(*) AS n_copies,
                 CAST(min(n_tokens) AS BIGINT) AS n_tokens
          FROM kept GROUP BY md5(text) ORDER BY doc_id""",
@@ -2989,14 +3258,10 @@ object SparkEntry {
     // batch-1 re-delivery iff its batch-0 ingest time put it on the
     // evicted (even-text-length) side of the watermark horizon
     "t49_stream_dedup_evicted" ->
-      """WITH t AS (SELECT text, string_split(text, ' ') AS w
+      raw"""WITH t AS (SELECT text, string_split(text, ' ') AS w
                     FROM documents),
               kept AS (SELECT text, len(w) AS n_tokens FROM t
-                       WHERE round(len(list_filter(w, x -> x IN ('the','a')))
-                                   / CAST(len(w) AS DOUBLE), 4) > 0.03
-                         AND len(w) >= 10 AND len(w) <= 10000
-                         AND round(len(list_distinct(w))
-                                   / CAST(len(w) AS DOUBLE), 4) > 0.1)
+                       WHERE $qualityGate)
          SELECT md5(text) AS digest,
                 CAST(CASE WHEN length(text) % 2 = 0 THEN 2 ELSE 1 END
                      AS BIGINT) AS n_emits,
@@ -4088,13 +4353,7 @@ object SparkEntry {
                FROM events GROUP BY user_id) t
          JOIN customer c ON t.user_id = c.c_custkey""",
     "j4_asof_attribution" ->
-      """WITH u AS (
-           SELECT user_id, ts, event_id, 1 AS tag,
-                  CAST(NULL AS BIGINT) AS r_id, CAST(NULL AS TIMESTAMP) AS r_ts
-           FROM events WHERE event_type = 'purchase'
-           UNION ALL
-           SELECT user_id, ts, event_id, 0 AS tag, event_id AS r_id, ts AS r_ts
-           FROM events WHERE event_type = 'click'),
+      raw"""WITH $asofRows,
          w AS (
            SELECT *,
                   last_value(r_id IGNORE NULLS) OVER
@@ -4113,13 +4372,7 @@ object SparkEntry {
                      THEN date_diff('second', last_r_ts, ts) END AS gap_s
          FROM w WHERE tag = 1""",
     "j4_asof_forward" ->
-      """WITH u AS (
-           SELECT user_id, ts, event_id, 1 AS tag,
-                  CAST(NULL AS BIGINT) AS r_id, CAST(NULL AS TIMESTAMP) AS r_ts
-           FROM events WHERE event_type = 'purchase'
-           UNION ALL
-           SELECT user_id, ts, event_id, 0 AS tag, event_id AS r_id, ts AS r_ts
-           FROM events WHERE event_type = 'click'),
+      raw"""WITH $asofRows,
          w AS (
            SELECT *,
                   last_value(r_id IGNORE NULLS) OVER
@@ -4392,22 +4645,8 @@ object SparkEntry {
     // UNION ALL both sides, ascending edges so the recursion is acyclic,
     // the same hop < 3 bound
     "s6b_recursive_cte" ->
-      """WITH RECURSIVE
-              w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+      raw"""WITH RECURSIVE
+              $truthPairs,
               reach AS (SELECT doc_a AS src, doc_b AS dst, 1 AS hop FROM p
                         UNION ALL
                         SELECT r.src, e.doc_b, r.hop + 1
@@ -4507,46 +4746,17 @@ object SparkEntry {
     // the odd half (the ann_kmeans_cells window discipline), probe
     // ranking over the build-time centroids, post-ingest cosine top-k
     "t29_stream_ivf_ingest" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS cell,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              base AS (SELECT vec_id, cell, v FROM e WHERE vec_id % 2 = 0),
-              newv AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
-              cj AS (SELECT cell, generate_subscripts(v, 1) AS j,
-                            unnest(v) AS x FROM base),
-              cm AS (SELECT cell, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cjv
-                     FROM cj GROUP BY cell, j),
-              cent AS (SELECT cell, list(cjv ORDER BY j) AS cv
-                       FROM cm GROUP BY cell),
-              u AS (SELECT cell, list_transform(cv, x ->
-                      x / sqrt(list_sum(list_transform(cv, y -> y * y)))) AS uc
-                    FROM cent),
-              s AS (SELECT newv.vec_id, newv.v, u.cell,
-                           list_sum(list_transform(range(1, 65),
-                             i -> newv.v[i] * u.uc[i])) AS d
-                    FROM newv CROSS JOIN u),
-              anew AS (SELECT vec_id, v, cell FROM
-                        (SELECT vec_id, v, cell,
-                                row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, cell ASC) AS rn FROM s)
-                       WHERE rn = 1),
-              corpus AS (SELECT vec_id, cell, v FROM base
-                         UNION ALL SELECT vec_id, cell, v FROM anew),
+      raw"""WITH $ivfIngest,
               q AS (SELECT v AS qv,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS qn
+                           ${l2("v")} AS qn
                     FROM base WHERE vec_id = 0),
               probe AS (SELECT cent.cell FROM cent, q
-                        ORDER BY list_sum(list_transform(range(1, 65),
-                                   i -> cv[i] * q.qv[i]))
-                                 / (sqrt(list_sum(list_transform(cv, x -> x * x)))
-                                    * q.qn) DESC,
+                        ORDER BY $centroidCosine DESC,
                                  cent.cell ASC
                         LIMIT 3)
          SELECT c.vec_id,
-                round(list_sum(list_transform(range(1, 65), i -> c.v[i] * q.qv[i]))
-                      / (sqrt(list_sum(list_transform(c.v, x -> x * x))) * q.qn), 6)
+                round(${dot("c.v", "q.qv")}
+                      / (${l2("c.v")} * q.qn), 6)
                   AS cosine
          FROM corpus c JOIN probe ON c.cell = probe.cell, q
          WHERE c.vec_id <> 0
@@ -4555,61 +4765,25 @@ object SparkEntry {
     // over the build-time centroids, per-query top-10 within the probed
     // cells; queries 0-9 include the five just-ingested odd vectors
     "t29b_stream_ivf_batch_serve" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS cell,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              base AS (SELECT vec_id, cell, v FROM e WHERE vec_id % 2 = 0),
-              newv AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
-              cj AS (SELECT cell, generate_subscripts(v, 1) AS j,
-                            unnest(v) AS x FROM base),
-              cm AS (SELECT cell, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cjv
-                     FROM cj GROUP BY cell, j),
-              cent AS (SELECT cell, list(cjv ORDER BY j) AS cv
-                       FROM cm GROUP BY cell),
-              u AS (SELECT cell, list_transform(cv, x ->
-                      x / sqrt(list_sum(list_transform(cv, y -> y * y)))) AS uc
-                    FROM cent),
-              s AS (SELECT newv.vec_id, newv.v, u.cell,
-                           list_sum(list_transform(range(1, 65),
-                             i -> newv.v[i] * u.uc[i])) AS d
-                    FROM newv CROSS JOIN u),
-              anew AS (SELECT vec_id, v, cell FROM
-                        (SELECT vec_id, v, cell,
-                                row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, cell ASC) AS rn FROM s)
-                       WHERE rn = 1),
-              corpus AS (SELECT vec_id, cell, v FROM base
-                         UNION ALL SELECT vec_id, cell, v FROM anew),
+      raw"""WITH $ivfIngest,
               cn AS (SELECT vec_id, cell, v,
-                            sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
+                            ${l2("v")} AS nrm
                      FROM corpus),
               q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn
                     FROM cn WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9)),
               pr AS (SELECT q.query_id, cent.cell,
                             row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY list_sum(list_transform(range(1, 65),
-                                         i -> cv[i] * q.qv[i]))
-                                       / (sqrt(list_sum(list_transform(cv, x -> x * x)))
-                                          * q.qn) DESC,
+                              ORDER BY $centroidCosine DESC,
                                        cent.cell ASC) AS rn
                      FROM cent, q),
               probe AS (SELECT query_id, cell FROM pr WHERE rn <= 3),
               sc AS (SELECT probe.query_id, cn.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> cn.v[i] * q.qv[i]))
+                            round(${dot("cn.v", "q.qv")}
                                   / (cn.nrm * q.qn), 6) AS cosine
                      FROM cn JOIN probe ON cn.cell = probe.cell
                             JOIN q ON q.query_id = probe.query_id
                      WHERE cn.vec_id <> q.query_id),
-              rk AS (SELECT query_id, vec_id,
-                            row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, vec_id) AS rn
-                     FROM sc)
-         SELECT query_id,
-                string_agg(CAST(vec_id AS VARCHAR), ',' ORDER BY rn) AS top_ids
-         FROM rk WHERE rn <= 10 GROUP BY query_id""",
+              $topIdsPerQuery""",
     "s7_generator" ->
       s"""SELECT id AS voter_id,
                  ${partyCase("id")} AS party_affiliation,
@@ -4826,25 +5000,8 @@ object SparkEntry {
     // us//1000 < w, so the // replay is exact); purchases inside the
     // final delay stay in state and must NOT appear as null rows
     "t20_stream_left_outer_join" ->
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS pts
-                    FROM events WHERE event_type = 'purchase'),
-              c AS (SELECT event_id AS click_id, user_id, ts AS cts
-                    FROM events WHERE event_type = 'click'),
-              m AS (SELECT p.purchase_id, c.click_id, p.user_id,
-                           date_diff('microsecond', c.cts, p.pts) AS gap_us
-                    FROM p JOIN c ON p.user_id = c.user_id
-                     AND c.cts <= p.pts
-                     AND p.pts <= c.cts + INTERVAL 3600 SECONDS),
-              wm AS (SELECT least(
-                       (SELECT max(epoch_us(cts)) // 1000 FROM c),
-                       (SELECT max(epoch_us(pts)) // 1000 FROM p))
-                       - 3600000 AS w),
-              unm AS (SELECT p.purchase_id, CAST(NULL AS BIGINT) AS click_id,
-                             p.user_id, CAST(NULL AS BIGINT) AS gap_us
-                      FROM p CROSS JOIN wm
-                      WHERE NOT EXISTS (SELECT 1 FROM m
-                                        WHERE m.purchase_id = p.purchase_id)
-                        AND epoch_us(p.pts) // 1000 < wm.w)
+      raw"""WITH $intervalMatches,
+              $unmatchedPurchases
          SELECT * FROM m UNION ALL SELECT * FROM unm""",
     // full-outer replay: t20's matched + unmatched-purchase halves plus
     // the second eviction direction — unmatched CLICKS emit when the
@@ -4852,31 +5009,9 @@ object SparkEntry {
     // point past which no in-range purchase can still arrive); clicks
     // inside the final horizon stay in state and must NOT appear
     "t36_stream_full_outer_join" ->
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS pts
-                    FROM events WHERE event_type = 'purchase'),
-              c AS (SELECT event_id AS click_id, user_id, ts AS cts
-                    FROM events WHERE event_type = 'click'),
-              m AS (SELECT p.purchase_id, c.click_id, p.user_id,
-                           date_diff('microsecond', c.cts, p.pts) AS gap_us
-                    FROM p JOIN c ON p.user_id = c.user_id
-                     AND c.cts <= p.pts
-                     AND p.pts <= c.cts + INTERVAL 3600 SECONDS),
-              wm AS (SELECT least(
-                       (SELECT max(epoch_us(cts)) // 1000 FROM c),
-                       (SELECT max(epoch_us(pts)) // 1000 FROM p))
-                       - 3600000 AS w),
-              unm AS (SELECT p.purchase_id, CAST(NULL AS BIGINT) AS click_id,
-                             p.user_id, CAST(NULL AS BIGINT) AS gap_us
-                      FROM p CROSS JOIN wm
-                      WHERE NOT EXISTS (SELECT 1 FROM m
-                                        WHERE m.purchase_id = p.purchase_id)
-                        AND epoch_us(p.pts) // 1000 < wm.w),
-              unc AS (SELECT CAST(NULL AS BIGINT) AS purchase_id, c.click_id,
-                             c.user_id, CAST(NULL AS BIGINT) AS gap_us
-                      FROM c CROSS JOIN wm
-                      WHERE NOT EXISTS (SELECT 1 FROM m
-                                        WHERE m.click_id = c.click_id)
-                        AND epoch_us(c.cts) // 1000 + 3600000 < wm.w)
+      raw"""WITH $intervalMatches,
+              $unmatchedPurchases,
+              $unmatchedClicks
          SELECT * FROM m UNION ALL SELECT * FROM unm
          UNION ALL SELECT * FROM unc""",
     // semi replay: the plain EXISTS — matched purchases emit exactly
@@ -4895,25 +5030,8 @@ object SparkEntry {
     // passes click_ts + tolerance; unmatched purchases never emit, and
     // clicks inside the final horizon stay in state
     "t40_stream_right_outer_join" ->
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS pts
-                    FROM events WHERE event_type = 'purchase'),
-              c AS (SELECT event_id AS click_id, user_id, ts AS cts
-                    FROM events WHERE event_type = 'click'),
-              m AS (SELECT p.purchase_id, c.click_id, p.user_id,
-                           date_diff('microsecond', c.cts, p.pts) AS gap_us
-                    FROM p JOIN c ON p.user_id = c.user_id
-                     AND c.cts <= p.pts
-                     AND p.pts <= c.cts + INTERVAL 3600 SECONDS),
-              wm AS (SELECT least(
-                       (SELECT max(epoch_us(cts)) // 1000 FROM c),
-                       (SELECT max(epoch_us(pts)) // 1000 FROM p))
-                       - 3600000 AS w),
-              unc AS (SELECT CAST(NULL AS BIGINT) AS purchase_id, c.click_id,
-                             c.user_id, CAST(NULL AS BIGINT) AS gap_us
-                      FROM c CROSS JOIN wm
-                      WHERE NOT EXISTS (SELECT 1 FROM m
-                                        WHERE m.click_id = c.click_id)
-                        AND epoch_us(c.cts) // 1000 + 3600000 < wm.w)
+      raw"""WITH $intervalMatches,
+              $unmatchedClicks
          SELECT * FROM m UNION ALL SELECT * FROM unc""",
     // per-batch observed counters ≡ the parity split's group counters
     "t43_stream_observe" ->
@@ -4943,25 +5061,17 @@ object SparkEntry {
       """SELECT md5(text) AS content_md5, min(doc_id) AS doc_id, count(*) AS n_copies
          FROM documents GROUP BY md5(text)""",
     "dedup_incremental" ->
-      """WITH inc AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
+      raw"""WITH inc AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
                       UNION ALL
                       SELECT doc_id + 10000 AS doc_id, text FROM documents
                       WHERE doc_id % 5 <> 0 AND doc_id % 7 = 3),
               corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
               ed AS (SELECT DISTINCT doc_id FROM inc
                      WHERE md5(text) IN (SELECT md5(text) FROM corp)),
-              wi AS (SELECT doc_id, string_split(text, ' ') AS words FROM inc
-                     WHERE len(string_split(text, ' ')) >= 3),
-              shi AS (SELECT doc_id,
-                             unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                               i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                      FROM wi),
-              wc AS (SELECT doc_id, string_split(text, ' ') AS words FROM corp
-                     WHERE len(string_split(text, ' ')) >= 3),
-              shc AS (SELECT doc_id,
-                             unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                               i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                      FROM wc),
+              ${wordsOf("wi", "inc")},
+              ${shingled("shi", "wi")},
+              ${wordsOf("wc", "corp")},
+              ${shingled("shc", "wc")},
               szi AS (SELECT doc_id, count(*) AS n FROM shi GROUP BY doc_id),
               szc AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id),
               cm AS (SELECT a.doc_id AS ia, b.doc_id AS cb, count(*) AS c
@@ -4982,87 +5092,32 @@ object SparkEntry {
     // truth side (exact Jaccard >= 0.5) is DuckDB-recomputable; the
     // engine's own MinHash/SimHash candidates must cover it (recall_ok).
     "dedup_minhash_recall" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              j AS (SELECT n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jac
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b)
+      raw"""WITH $docShingles,
+              j AS (SELECT $jaccard AS jac
+                    $sizedPairs)
          SELECT count(*) AS n_true_pairs, true AS recall_ok FROM j WHERE jac >= 0.5""",
     // precision side: the truth size is the same recomputable count; the
     // FP-rate and recall verdicts over the engine's own 4×4 candidate
     // set must both hold
     "dedup_minhash_precision" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              j AS (SELECT n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jac
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b)
+      raw"""WITH $docShingles,
+              j AS (SELECT $jaccard AS jac
+                    $sizedPairs)
          SELECT count(*) AS n_true_pairs, true AS precision_ok,
                 true AS recall_ok FROM j WHERE jac >= 0.5""",
     // connected components of the >=tau pair graph: DuckDB computes the
     // exact transitive closure recursively; Spark's min-label propagation
     // must converge to the same clustering
     "dedup_clusters" ->
-      """WITH RECURSIVE
-              w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-              e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-                    UNION SELECT doc_b, doc_a FROM p),
-              reach AS (SELECT src, dst FROM e
-                        UNION
-                        SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
+      raw"""WITH RECURSIVE
+              $closure
          SELECT src AS doc_id,
                 CAST(least(src, min(dst)) AS BIGINT) AS cluster_id
          FROM reach GROUP BY src""",
     // Triangle replay: same pair CTE, ordered wedge join a<b<c, each
     // triangle credited to all three members
     "graph_triangles_neardup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+      raw"""WITH $truthPairs,
               t AS (SELECT e1.doc_a AS x, e1.doc_b AS y, e2.doc_b AS z
                     FROM p e1
                     JOIN p e2 ON e2.doc_a = e1.doc_b
@@ -5075,27 +5130,8 @@ object SparkEntry {
     // one hop per round bounded at 6 — min(hop) per node is the exact
     // level-synchronous BFS distance the engine's frontier loop produces
     "graph_hops_to_canonical" ->
-      """WITH RECURSIVE
-              w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-              e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-                    UNION SELECT doc_b, doc_a FROM p),
-              reach AS (SELECT src, dst FROM e
-                        UNION
-                        SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
+      raw"""WITH RECURSIVE
+              $closure,
               lbl AS (SELECT src AS node, least(src, min(dst)) AS cluster_id
                       FROM reach GROUP BY src),
               seeds AS (SELECT node FROM lbl WHERE node = cluster_id),
@@ -5114,21 +5150,7 @@ object SparkEntry {
     // division truncates identically in both engines (operands
     // non-negative), so the replay is exact.
     "graph_pagerank_neardup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+      raw"""WITH $truthPairs,
               e AS (SELECT doc_a AS src, doc_b AS dst FROM p
                     UNION ALL SELECT doc_b, doc_a FROM p),
               nodes AS (SELECT DISTINCT src AS node FROM e),
@@ -5169,27 +5191,8 @@ object SparkEntry {
          SELECT node AS doc_id, CAST(score AS BIGINT) AS score_fp
          FROM pr3 ORDER BY score_fp DESC, doc_id""",
     "dedup_canonical" ->
-      """WITH RECURSIVE
-              w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-              e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-                    UNION SELECT doc_b, doc_a FROM p),
-              reach AS (SELECT src, dst FROM e
-                        UNION
-                        SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
+      raw"""WITH RECURSIVE
+              $closure,
               cc AS (SELECT src AS doc_id,
                             CAST(least(src, min(dst)) AS BIGINT) AS cluster_id
                      FROM reach GROUP BY src),
@@ -5205,39 +5208,17 @@ object SparkEntry {
                FROM sel) t
          WHERE rn = 1""",
     "dedup_ngram_jaccard" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id)
+      raw"""WITH $docShingles
          SELECT doc_a, doc_b,
-                round(n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6) AS jaccard
-         FROM com
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
+                round($jaccard, 6) AS jaccard
+         $sizedPairs
          ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20""",
     "dedup_containment" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id)
+      raw"""WITH $docShingles
          SELECT doc_a, doc_b,
                 round(n_common / CAST(sa.n_sh AS DOUBLE), 6) AS c_a_in_b,
                 round(n_common / CAST(sb.n_sh AS DOUBLE), 6) AS c_b_in_a
-         FROM com
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
+         $sizedPairs
          ORDER BY greatest(c_a_in_b, c_b_in_a) DESC, doc_a, doc_b LIMIT 20""",
     "text_source_overlap" ->
       """WITH w AS (SELECT source, string_split(text, ' ') AS words FROM documents
@@ -5300,41 +5281,26 @@ object SparkEntry {
          GROUP BY b.doc_id
          ORDER BY b.doc_id""",
     "dedup_embedding_cosine" ->
-      """WITH e AS (SELECT vec_id, label,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, label, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e)
+      raw"""WITH ${embedded("vec_id, label")},
+              ${normed("vec_id, label")}
          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                round(list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
+                round(${dot("a.v", "b.v")}
                       / (a.nrm * b.nrm), 6) AS cosine
          FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
          ORDER BY cosine DESC, vec_a, vec_b LIMIT 20""",
     "ann_cosine_topk" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0)
-         SELECT n.vec_id,
-                round(list_sum(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]))
-                      / (n.nrm * q.qn), 6) AS cosine
-         FROM n, q WHERE n.vec_id <> 0
-         ORDER BY cosine DESC, vec_id LIMIT 10""",
+      raw"""WITH ${embedded("vec_id")},
+              ${normed("vec_id")},
+              $query0
+         $cosineTop10""",
     // embedding top-20 replay + exact lexical Jaccard for those pairs
     "dedup_semantic_verified" ->
-      """WITH e AS (SELECT vec_id, label,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
+      raw"""WITH ${embedded("vec_id, label")},
               nn AS (SELECT vec_id, label, v,
-                            sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
+                            ${l2("v")} AS nrm
                      FROM e),
               top AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                             round(list_sum(list_transform(range(1, 65),
-                                     i -> a.v[i] * b.v[i]))
+                             round(${dot("a.v", "b.v")}
                                    / (a.nrm * b.nrm), 6) AS cosine
                       FROM nn a JOIN nn b
                         ON a.label = b.label AND a.vec_id < b.vec_id
@@ -5345,23 +5311,12 @@ object SparkEntry {
                     FROM documents
                     WHERE doc_id IN (SELECT doc_id FROM ids)
                       AND len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                             count(*) AS n_common
-                      FROM sh a JOIN sh b
-                        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
+              ${shingled("sh", "w")},
+              $shingleOverlap,
               j AS (SELECT doc_a, doc_b,
-                           round(n_common
-                                 / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6)
+                           round($jaccard, 6)
                              AS jaccard
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b)
+                    $sizedPairs)
          SELECT t.vec_a, t.vec_b, t.cosine,
                 coalesce(j.jaccard, 0.0) AS jaccard
          FROM top t
@@ -5369,26 +5324,13 @@ object SparkEntry {
          ORDER BY t.cosine DESC, t.vec_a, t.vec_b""",
     // per-query ranked id list, replayed with a window + ordered string_agg
     "ann_batch_topk" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn
-                    FROM n WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9)),
+      raw"""WITH ${embedded("vec_id")},
+              ${normed("vec_id")},
+              $queries10,
               sc AS (SELECT q.query_id, n.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> n.v[i] * q.qv[i]))
-                                  / (n.nrm * q.qn), 6) AS cosine
+                            $queryCosine
                      FROM n, q WHERE n.vec_id <> q.query_id),
-              rk AS (SELECT query_id, vec_id,
-                            row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, vec_id) AS rn
-                     FROM sc)
-         SELECT query_id,
-                string_agg(CAST(vec_id AS VARCHAR), ',' ORDER BY rn) AS top_ids
-         FROM rk WHERE rn <= 10 GROUP BY query_id""",
+              $topIdsPerQuery""",
     // Batched IVF replay: per-query nprobe=3 probe sets (row_number over
     // centroid cosine, the same fixed-point centroid arithmetic as
     // ann_ivf_topk), then per-query exact-cosine top-10 confined to each
@@ -5396,45 +5338,22 @@ object SparkEntry {
     // ann_batch_topk. Cells outside the probe union never contribute —
     // exactly what the engine's partition-pruned scan reads.
     "ann_ivf_batch_topk" ->
-      """WITH e AS (SELECT vec_id, label,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, label, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn
-                    FROM n WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9)),
-              ej AS (SELECT label, vec_id, unnest(v) AS x,
-                            generate_subscripts(v, 1) AS j FROM e),
-              cm AS (SELECT label, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cj
-                     FROM ej GROUP BY label, j),
-              cent AS (SELECT label, list(cj ORDER BY j) AS cv
-                       FROM cm GROUP BY label),
+      raw"""WITH ${embedded("vec_id, label")},
+              ${normed("vec_id, label")},
+              $queries10,
+              $labelCentroids,
               pr AS (SELECT q.query_id, cent.label,
                             row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY list_sum(list_transform(range(1, 65),
-                                         i -> cv[i] * q.qv[i]))
-                                       / (sqrt(list_sum(list_transform(cv, x -> x * x)))
-                                          * q.qn) DESC,
+                              ORDER BY $centroidCosine DESC,
                                        cent.label ASC) AS rn
                      FROM cent, q),
               probe AS (SELECT query_id, label FROM pr WHERE rn <= 3),
               sc AS (SELECT probe.query_id, n.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> n.v[i] * q.qv[i]))
-                                  / (n.nrm * q.qn), 6) AS cosine
+                            $queryCosine
                      FROM n JOIN probe ON n.label = probe.label
                             JOIN q ON q.query_id = probe.query_id
                      WHERE n.vec_id <> q.query_id),
-              rk AS (SELECT query_id, vec_id,
-                            row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, vec_id) AS rn
-                     FROM sc)
-         SELECT query_id,
-                string_agg(CAST(vec_id AS VARCHAR), ',' ORDER BY rn) AS top_ids
-         FROM rk WHERE rn <= 10 GROUP BY query_id""",
+              $topIdsPerQuery""",
     // Independent replay of the nprobe=3 probe: label-cell centroid means
     // (fixed-point 2^24 long sums — order-insensitive, matches the
     // engine's bounded-buffer aggregation exactly), top-3 cells by
@@ -5443,83 +5362,29 @@ object SparkEntry {
     // same computation over a different storage layout, so it shares this
     // oracle verbatim (appended below the Map literal).
     "ann_ivf_topk" ->
-      """WITH e AS (SELECT vec_id, label,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, label, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0),
-              ej AS (SELECT label, vec_id, unnest(v) AS x,
-                            generate_subscripts(v, 1) AS j FROM e),
-              cm AS (SELECT label, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cj
-                     FROM ej GROUP BY label, j),
-              cent AS (SELECT label, list(cj ORDER BY j) AS cv
-                       FROM cm GROUP BY label),
-              probe AS (SELECT cent.label
-                        FROM cent, q
-                        ORDER BY list_sum(list_transform(range(1, 65),
-                                   i -> cv[i] * q.qv[i]))
-                                 / (sqrt(list_sum(list_transform(cv, x -> x * x)))
-                                    * q.qn) DESC,
-                                 cent.label ASC
-                        LIMIT 3)
-         SELECT n.vec_id,
-                round(list_sum(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]))
-                      / (n.nrm * q.qn), 6) AS cosine
-         FROM n JOIN probe ON n.label = probe.label, q
-         WHERE n.vec_id <> 0
-         ORDER BY cosine DESC, vec_id LIMIT 10""",
+      raw"""WITH ${embedded("vec_id, label")},
+              ${normed("vec_id, label")},
+              $query0,
+              $labelCentroids,
+              $ivfProbe
+         $ivfTop10""",
     // recall@10 of the nprobe=3 probe vs brute-force truth — BOTH sides
     // recomputed here from the raw embeddings, independent of the engine.
     "ann_ivf_recall" ->
-      """WITH e AS (SELECT vec_id, label,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, label, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0),
-              bf AS (SELECT n.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> n.v[i] * q.qv[i]))
-                                  / (n.nrm * q.qn), 6) AS cosine
-                     FROM n, q WHERE n.vec_id <> 0
-                     ORDER BY cosine DESC, vec_id LIMIT 10),
-              ej AS (SELECT label, vec_id, unnest(v) AS x,
-                            generate_subscripts(v, 1) AS j FROM e),
-              cm AS (SELECT label, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cj
-                     FROM ej GROUP BY label, j),
-              cent AS (SELECT label, list(cj ORDER BY j) AS cv
-                       FROM cm GROUP BY label),
-              probe AS (SELECT cent.label
-                        FROM cent, q
-                        ORDER BY list_sum(list_transform(range(1, 65),
-                                   i -> cv[i] * q.qv[i]))
-                                 / (sqrt(list_sum(list_transform(cv, x -> x * x)))
-                                    * q.qn) DESC,
-                                 cent.label ASC
-                        LIMIT 3),
-              iv AS (SELECT n.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> n.v[i] * q.qv[i]))
-                                  / (n.nrm * q.qn), 6) AS cosine
-                     FROM n JOIN probe ON n.label = probe.label, q
-                     WHERE n.vec_id <> 0
-                     ORDER BY cosine DESC, vec_id LIMIT 10)
+      raw"""WITH ${embedded("vec_id, label")},
+              ${normed("vec_id, label")},
+              $query0,
+              bf AS ($cosineTop10),
+              $labelCentroids,
+              $ivfProbe,
+              iv AS ($ivfTop10)
          SELECT count(*) AS n_hits, count(*) >= 3 AS recall_ok
          FROM bf JOIN iv USING (vec_id)""",
     // Deterministic hyperplane arithmetic replay (functions.HyperplaneSig):
     // plane(b)[j] = ((b*64+j)*2654435761 mod 4096)/4096 - 0.5, bit b set
     // iff dot(v, plane_b) > 0, 8 bits packed into one long.
     "ann_lsh_buckets" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings)
+      raw"""WITH ${embedded("vec_id")}
          SELECT vec_id,
                 CAST(list_sum(list_transform(range(0, 8), b ->
                   CASE WHEN list_sum(list_transform(range(0, 64), j ->
@@ -5530,24 +5395,19 @@ object SparkEntry {
     // label cells, per-cell mean -> unit-normalize -> argmax-dot reassign
     // (ties to the smaller cell id), twice.
     "ann_kmeans_cells" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS cell,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
+      raw"""WITH ${embedded("vec_id, CAST(label AS BIGINT) AS cell")},
               a0 AS (SELECT vec_id, v, cell FROM e),
               c1j AS (SELECT cell, vec_id, generate_subscripts(v, 1) AS j,
                              unnest(v) AS x FROM a0),
               c1m AS (SELECT cell, j,
-                             (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                              / 16777216.0) / count(*) AS cj
+                             $fixedPointMean AS cj
                       FROM c1j GROUP BY cell, j),
               c1 AS (SELECT cell, list(cj ORDER BY j) AS cv
                      FROM c1m GROUP BY cell),
-              u1 AS (SELECT cell, list_transform(cv, x ->
-                       x / sqrt(list_sum(list_transform(cv, y -> y * y)))) AS uc
+              u1 AS (SELECT cell, $unitCentroid AS uc
                      FROM c1),
               s1 AS (SELECT a0.vec_id, a0.v, u1.cell,
-                            list_sum(list_transform(range(1, 65),
-                              i -> a0.v[i] * u1.uc[i])) AS d
+                            ${dot("a0.v", "u1.uc")} AS d
                      FROM a0 CROSS JOIN u1),
               a1 AS (SELECT vec_id, v, cell FROM
                       (SELECT vec_id, v, cell,
@@ -5557,17 +5417,14 @@ object SparkEntry {
               c2j AS (SELECT cell, vec_id, generate_subscripts(v, 1) AS j,
                              unnest(v) AS x FROM a1),
               c2m AS (SELECT cell, j,
-                             (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                              / 16777216.0) / count(*) AS cj
+                             $fixedPointMean AS cj
                       FROM c2j GROUP BY cell, j),
               c2 AS (SELECT cell, list(cj ORDER BY j) AS cv
                      FROM c2m GROUP BY cell),
-              u2 AS (SELECT cell, list_transform(cv, x ->
-                       x / sqrt(list_sum(list_transform(cv, y -> y * y)))) AS uc
+              u2 AS (SELECT cell, $unitCentroid AS uc
                      FROM c2),
               s2 AS (SELECT a1.vec_id, u2.cell,
-                            list_sum(list_transform(range(1, 65),
-                              i -> a1.v[i] * u2.uc[i])) AS d
+                            ${dot("a1.v", "u2.uc")} AS d
                      FROM a1 CROSS JOIN u2)
          SELECT vec_id, cell FROM
           (SELECT vec_id, cell,
@@ -5576,9 +5433,7 @@ object SparkEntry {
            FROM s2) WHERE rn = 1
          ORDER BY vec_id""",
     "vec_quantize_int8" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
+      raw"""WITH ${embedded("vec_id")},
               m AS (SELECT vec_id, v,
                            list_max(list_transform(v, x -> abs(x))) AS ma FROM e)
          SELECT vec_id, round(127.0 / ma, 6) AS scale,
@@ -5587,12 +5442,7 @@ object SparkEntry {
          FROM m""",
     // independent replay of the 13-token-window span accounting
     "dedup_substring_spans" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 13),
-              wins AS (SELECT doc_id,
-                              unnest(list_transform(range(0, len(words) - 12),
-                                i -> array_to_string(words[i+1:i+13], ' '))) AS win
-                       FROM w),
+      raw"""WITH $docWindows,
               dfd AS (SELECT win, count(DISTINCT doc_id) AS n_docs
                       FROM wins GROUP BY win)
          SELECT doc_id, count(*) AS n_windows,
@@ -5604,12 +5454,7 @@ object SparkEntry {
     // full keep/drop manifest: every non-eval doc with its count of
     // distinct windows shared with the eval split
     "dedup_decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 13),
-              wins AS (SELECT doc_id,
-                              unnest(list_transform(range(0, len(words) - 12),
-                                i -> array_to_string(words[i+1:i+13], ' '))) AS win
-                       FROM w),
+      raw"""WITH $docWindows,
               ev AS (SELECT DISTINCT win FROM wins WHERE doc_id % 20 = 0),
               hits AS (SELECT wins.doc_id, count(DISTINCT wins.win) AS n_eval_windows
                        FROM wins JOIN ev USING (win)
@@ -5703,31 +5548,17 @@ object SparkEntry {
     // Two-stage replay: quantize (per-vector 127/max|x| symmetric codes),
     // int8-cosine top-50 pool, exact float re-rank top-10 inside the pool.
     "ann_int8_rerank" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              c AS (SELECT vec_id,
-                           list_transform(v, x -> CAST(CAST(round(x * (127.0 /
-                             list_max(list_transform(v, y -> abs(y))))) AS INTEGER)
-                             AS DOUBLE)) AS cq
-                    FROM e),
-              cn AS (SELECT vec_id, cq,
-                            sqrt(list_sum(list_transform(cq, x -> x * x))) AS nrm
-                     FROM c),
-              cqv AS (SELECT cq AS qv, nrm AS qn FROM cn WHERE vec_id = 0),
+      raw"""WITH ${embedded("vec_id")},
+              $int8Codes,
               cand AS (SELECT cn.vec_id,
-                              round(list_sum(list_transform(range(1, 65),
-                                      i -> cn.cq[i] * cqv.qv[i]))
+                              round(${dot("cn.cq", "cqv.qv")}
                                     / (cn.nrm * cqv.qn), 6) AS c8
                        FROM cn, cqv WHERE cn.vec_id <> 0
                        ORDER BY c8 DESC, vec_id LIMIT 50),
-              n AS (SELECT vec_id, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0)
+              ${normed("vec_id")},
+              $query0
          SELECT n.vec_id,
-                round(list_sum(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]))
-                      / (n.nrm * q.qn), 6) AS cosine
+                $queryCosine
          FROM n JOIN cand ON n.vec_id = cand.vec_id, q
          ORDER BY cosine DESC, n.vec_id LIMIT 10""",
     // PQ replay: fixed-point label centroids → per-subspace codebooks
@@ -5737,172 +5568,44 @@ object SparkEntry {
     // score folds an ORDERED list (list(p ORDER BY s)), matching the
     // engine's left-to-right subspace fold bit for bit.
     "ann_pq_adc_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS cell,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              ej AS (SELECT cell, generate_subscripts(v, 1) AS j,
-                            unnest(v) AS x FROM e),
-              cm AS (SELECT cell, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cj
-                     FROM ej GROUP BY cell, j),
-              cent AS (SELECT cell, list(cj ORDER BY j) AS cv
-                       FROM cm GROUP BY cell),
-              ss AS (SELECT unnest(range(0, 8)) AS s),
-              dist AS (SELECT e.vec_id, ss.s, cent.cell,
-                              list_sum(list_transform(range(1, 9),
-                                i -> (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])
-                                     * (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])))
-                                AS d
-                       FROM e CROSS JOIN ss CROSS JOIN cent),
-              codes AS (SELECT vec_id, s, cell FROM
-                         (SELECT vec_id, s, cell,
-                                 row_number() OVER (PARTITION BY vec_id, s
-                                   ORDER BY d ASC, cell ASC) AS rn FROM dist)
-                        WHERE rn = 1),
-              q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-              lut AS (SELECT ss.s, cent.cell,
-                             list_sum(list_transform(range(1, 9),
-                               i -> q.qv[ss.s * 8 + i] * cent.cv[ss.s * 8 + i]))
-                               AS p
-                      FROM cent CROSS JOIN ss, q),
+      raw"""WITH $pqCodes,
               sc AS (SELECT codes.vec_id,
-                            round(list_sum(list(lut.p ORDER BY lut.s)), 6)
-                              AS adc_score
-                     FROM codes JOIN lut ON codes.s = lut.s
-                            AND codes.cell = lut.cell
-                     WHERE codes.vec_id <> 0
-                     GROUP BY codes.vec_id)
+                            $adcScore)
          SELECT vec_id, adc_score FROM sc
          ORDER BY adc_score DESC, vec_id LIMIT 10""",
     // two-stage replay: ADC pool of 100 (codes + LUT as above), exact
     // dot re-rank of the pool, top-10
     "ann_pq_rerank" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS cell,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              ej AS (SELECT cell, generate_subscripts(v, 1) AS j,
-                            unnest(v) AS x FROM e),
-              cm AS (SELECT cell, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cj
-                     FROM ej GROUP BY cell, j),
-              cent AS (SELECT cell, list(cj ORDER BY j) AS cv
-                       FROM cm GROUP BY cell),
-              ss AS (SELECT unnest(range(0, 8)) AS s),
-              dist AS (SELECT e.vec_id, ss.s, cent.cell,
-                              list_sum(list_transform(range(1, 9),
-                                i -> (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])
-                                     * (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])))
-                                AS d
-                       FROM e CROSS JOIN ss CROSS JOIN cent),
-              codes AS (SELECT vec_id, s, cell FROM
-                         (SELECT vec_id, s, cell,
-                                 row_number() OVER (PARTITION BY vec_id, s
-                                   ORDER BY d ASC, cell ASC) AS rn FROM dist)
-                        WHERE rn = 1),
-              q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-              lut AS (SELECT ss.s, cent.cell,
-                             list_sum(list_transform(range(1, 9),
-                               i -> q.qv[ss.s * 8 + i] * cent.cv[ss.s * 8 + i]))
-                               AS p
-                      FROM cent CROSS JOIN ss, q),
-              adc AS (SELECT codes.vec_id,
-                             round(list_sum(list(lut.p ORDER BY lut.s)), 6)
-                               AS adc_score
-                      FROM codes JOIN lut ON codes.s = lut.s
-                             AND codes.cell = lut.cell
-                      WHERE codes.vec_id <> 0
-                      GROUP BY codes.vec_id
-                      ORDER BY adc_score DESC, vec_id
-                      LIMIT (SELECT greatest(10, CAST(count(*) // 10 AS BIGINT))
-                             FROM e))
+      raw"""WITH $pqCodes,
+              $adcPool
          SELECT e.vec_id,
-                round(list_sum(list_transform(range(1, 65),
-                        i -> e.v[i] * q.qv[i])), 6) AS dp
+                round(${dot("e.v", "q.qv")}, 6) AS dp
          FROM e JOIN adc USING (vec_id), q
          ORDER BY dp DESC, vec_id LIMIT 10""",
     // recall@10 of the RERANKED ranking vs the exact-DOT truth — both
     // sides recomputed here independently of the engine
     "ann_pq_recall" ->
-      """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS cell,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              ej AS (SELECT cell, generate_subscripts(v, 1) AS j,
-                            unnest(v) AS x FROM e),
-              cm AS (SELECT cell, j,
-                            (CAST(sum(CAST(round(x * 16777216.0) AS BIGINT)) AS DOUBLE)
-                             / 16777216.0) / count(*) AS cj
-                     FROM ej GROUP BY cell, j),
-              cent AS (SELECT cell, list(cj ORDER BY j) AS cv
-                       FROM cm GROUP BY cell),
-              ss AS (SELECT unnest(range(0, 8)) AS s),
-              dist AS (SELECT e.vec_id, ss.s, cent.cell,
-                              list_sum(list_transform(range(1, 9),
-                                i -> (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])
-                                     * (e.v[ss.s * 8 + i] - cent.cv[ss.s * 8 + i])))
-                                AS d
-                       FROM e CROSS JOIN ss CROSS JOIN cent),
-              codes AS (SELECT vec_id, s, cell FROM
-                         (SELECT vec_id, s, cell,
-                                 row_number() OVER (PARTITION BY vec_id, s
-                                   ORDER BY d ASC, cell ASC) AS rn FROM dist)
-                        WHERE rn = 1),
-              q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-              lut AS (SELECT ss.s, cent.cell,
-                             list_sum(list_transform(range(1, 9),
-                               i -> q.qv[ss.s * 8 + i] * cent.cv[ss.s * 8 + i]))
-                               AS p
-                      FROM cent CROSS JOIN ss, q),
-              adc AS (SELECT codes.vec_id,
-                             round(list_sum(list(lut.p ORDER BY lut.s)), 6)
-                               AS adc_score
-                      FROM codes JOIN lut ON codes.s = lut.s
-                             AND codes.cell = lut.cell
-                      WHERE codes.vec_id <> 0
-                      GROUP BY codes.vec_id
-                      ORDER BY adc_score DESC, vec_id
-                      LIMIT (SELECT greatest(10, CAST(count(*) // 10 AS BIGINT))
-                             FROM e)),
+      raw"""WITH $pqCodes,
+              $adcPool,
               rr AS (SELECT e.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> e.v[i] * q.qv[i])), 6) AS dp
+                            round(${dot("e.v", "q.qv")}, 6) AS dp
                      FROM e JOIN adc USING (vec_id), q
                      ORDER BY dp DESC, vec_id LIMIT 10),
               bf AS (SELECT e.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> e.v[i] * q.qv[i])), 6) AS dp
+                            round(${dot("e.v", "q.qv")}, 6) AS dp
                      FROM e, q WHERE e.vec_id <> 0
                      ORDER BY dp DESC, vec_id LIMIT 10)
          SELECT CAST(count(*) AS BIGINT) AS n_hits,
                 count(*) >= 2 AS recall_ok
          FROM rr JOIN bf USING (vec_id)""",
     "ann_int8_recall" ->
-      """WITH e AS (SELECT vec_id,
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                    FROM embeddings),
-              n AS (SELECT vec_id, v,
-                           sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-                    FROM e),
-              q AS (SELECT v AS qv, nrm AS qn FROM n WHERE vec_id = 0),
-              bf AS (SELECT n.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> n.v[i] * q.qv[i]))
-                                  / (n.nrm * q.qn), 6) AS cosine
-                     FROM n, q WHERE n.vec_id <> 0
-                     ORDER BY cosine DESC, vec_id LIMIT 10),
-              c AS (SELECT vec_id,
-                           list_transform(v, x -> CAST(CAST(round(x * (127.0 /
-                             list_max(list_transform(v, y -> abs(y))))) AS INTEGER)
-                             AS DOUBLE)) AS cq
-                    FROM e),
-              cn AS (SELECT vec_id, cq,
-                            sqrt(list_sum(list_transform(cq, x -> x * x))) AS nrm
-                     FROM c),
-              cqv AS (SELECT cq AS qv, nrm AS qn FROM cn WHERE vec_id = 0),
+      raw"""WITH ${embedded("vec_id")},
+              ${normed("vec_id")},
+              $query0,
+              bf AS ($cosineTop10),
+              $int8Codes,
               ap AS (SELECT cn.vec_id,
-                            round(list_sum(list_transform(range(1, 65),
-                                    i -> cn.cq[i] * cqv.qv[i]))
+                            round(${dot("cn.cq", "cqv.qv")}
                                   / (cn.nrm * cqv.qn), 6) AS cosine
                      FROM cn, cqv WHERE cn.vec_id <> 0
                      ORDER BY cosine DESC, vec_id LIMIT 10)
@@ -5922,16 +5625,8 @@ object SparkEntry {
     // iteration 1 folds the closed form p = 0.5 (w_0 = 0). loss_pre is
     // measured at the PRE-step weights, so row 1 reads exactly ln 2
     "quality_lr_train" ->
-      """WITH f AS (
-           SELECT round(len(list_filter(w, x -> x IN ('the','a')))
-                        / CAST(len(w) AS DOUBLE), 4) AS x_stop,
-                  round(len(list_distinct(w))
-                        / CAST(len(w) AS DOUBLE), 4) AS x_ttr,
-                  round(least(len(w), 200) / 200.0, 4) AS x_len,
-                  CASE WHEN len(w) >= 10 AND len(w) <= 10000
-                        AND round(len(list_distinct(w))
-                                  / CAST(len(w) AS DOUBLE), 4) > 0.1
-                       THEN 1.0 ELSE 0.0 END AS y
+      raw"""WITH f AS (
+           SELECT $lrFeatures
            FROM (SELECT string_split(text, ' ') AS w FROM documents) t),
          a1 AS (SELECT avg(0.5 - y) AS g0, avg((0.5 - y) * x_stop) AS g1,
                        avg((0.5 - y) * x_ttr) AS g2,
@@ -5940,9 +5635,7 @@ object SparkEntry {
                 FROM f),
          w1 AS (SELECT -g0 AS b, -g1 AS ws, -g2 AS wt, -g3 AS wl, loss
                 FROM a1),
-         p2 AS (SELECT f.*, 1.0 / (1.0 + exp(-(w1.b + w1.ws * x_stop
-                         + w1.wt * x_ttr + w1.wl * x_len))) AS p
-                FROM f, w1),
+         p2 AS (${lrScored("w1")}),
          a2 AS (SELECT avg(p - y) AS g0, avg((p - y) * x_stop) AS g1,
                        avg((p - y) * x_ttr) AS g2,
                        avg((p - y) * x_len) AS g3,
@@ -5951,9 +5644,7 @@ object SparkEntry {
          w2 AS (SELECT w1.b - a2.g0 AS b, w1.ws - a2.g1 AS ws,
                        w1.wt - a2.g2 AS wt, w1.wl - a2.g3 AS wl, a2.loss
                 FROM w1, a2),
-         p3 AS (SELECT f.*, 1.0 / (1.0 + exp(-(w2.b + w2.ws * x_stop
-                         + w2.wt * x_ttr + w2.wl * x_len))) AS p
-                FROM f, w2),
+         p3 AS (${lrScored("w2")}),
          a3 AS (SELECT avg(p - y) AS g0, avg((p - y) * x_stop) AS g1,
                        avg((p - y) * x_ttr) AS g2,
                        avg((p - y) * x_len) AS g3,
@@ -5975,17 +5666,9 @@ object SparkEntry {
     // score with the ROUNDED final weights (both engines score from
     // identical 6-decimal weights); kept gates on the raw margin z > 0
     "quality_lr_score" ->
-      """WITH f AS (
+      raw"""WITH f AS (
            SELECT doc_id,
-                  round(len(list_filter(w, x -> x IN ('the','a')))
-                        / CAST(len(w) AS DOUBLE), 4) AS x_stop,
-                  round(len(list_distinct(w))
-                        / CAST(len(w) AS DOUBLE), 4) AS x_ttr,
-                  round(least(len(w), 200) / 200.0, 4) AS x_len,
-                  CASE WHEN len(w) >= 10 AND len(w) <= 10000
-                        AND round(len(list_distinct(w))
-                                  / CAST(len(w) AS DOUBLE), 4) > 0.1
-                       THEN 1.0 ELSE 0.0 END AS y
+                  $lrFeatures
            FROM (SELECT doc_id, string_split(text, ' ') AS w
                  FROM documents) t),
          a1 AS (SELECT avg(0.5 - y) AS g0, avg((0.5 - y) * x_stop) AS g1,
@@ -5993,18 +5676,14 @@ object SparkEntry {
                        avg((0.5 - y) * x_len) AS g3
                 FROM f),
          w1 AS (SELECT -g0 AS b, -g1 AS ws, -g2 AS wt, -g3 AS wl FROM a1),
-         p2 AS (SELECT f.*, 1.0 / (1.0 + exp(-(w1.b + w1.ws * x_stop
-                         + w1.wt * x_ttr + w1.wl * x_len))) AS p
-                FROM f, w1),
+         p2 AS (${lrScored("w1")}),
          a2 AS (SELECT avg(p - y) AS g0, avg((p - y) * x_stop) AS g1,
                        avg((p - y) * x_ttr) AS g2, avg((p - y) * x_len) AS g3
                 FROM p2),
          w2 AS (SELECT w1.b - a2.g0 AS b, w1.ws - a2.g1 AS ws,
                        w1.wt - a2.g2 AS wt, w1.wl - a2.g3 AS wl
                 FROM w1, a2),
-         p3 AS (SELECT f.*, 1.0 / (1.0 + exp(-(w2.b + w2.ws * x_stop
-                         + w2.wt * x_ttr + w2.wl * x_len))) AS p
-                FROM f, w2),
+         p3 AS (${lrScored("w2")}),
          a3 AS (SELECT avg(p - y) AS g0, avg((p - y) * x_stop) AS g1,
                        avg((p - y) * x_ttr) AS g2, avg((p - y) * x_len) AS g3
                 FROM p3),
@@ -6022,12 +5701,10 @@ object SparkEntry {
                 m > 0 AS kept, y = 1.0 AS label_ok
          FROM z""",
     "text_quality" ->
-      """SELECT doc_id, len(w) AS n_tokens,
-                round(len(list_filter(w, x -> x IN ('the','a')))
-                      / CAST(len(w) AS DOUBLE), 4) AS stop_ratio,
-                round(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 4) AS ttr,
-                (len(w) >= 10 AND len(w) <= 10000
-                 AND round(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 4) > 0.1)
+      raw"""SELECT doc_id, len(w) AS n_tokens,
+                $stopRatio AS stop_ratio,
+                $typeTokenRatio AS ttr,
+                ($wellFormed)
                   AS quality_ok
          FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t""",
     "text_langid" ->
@@ -6327,59 +6004,33 @@ object SparkEntry {
          WHERE (event_id * 2654435761) %
                (CASE event_type WHEN 'click' THEN 2 WHEN 'error' THEN 5 ELSE 10 END) = 0""",
     "split_assign" ->
-      """SELECT doc_id,
-                CASE WHEN (doc_id * 2654435761) % 100 < 80 THEN 'train'
-                     WHEN (doc_id * 2654435761) % 100 < 90 THEN 'val'
-                     ELSE 'test' END AS split
+      raw"""SELECT doc_id,
+                ${split("doc_id")}
          FROM documents""",
     // group-aware split replay: the dedup_clusters recursive-CTE labels
     // (min reachable doc id per near-dup component), singletons fall back
     // to their own id, then the same multiplicative-hash 80/10/10 case
     "split_group_aware" ->
-      """WITH RECURSIVE
-              w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents
-                    WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              p AS (SELECT doc_a, doc_b
-                    FROM com
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-              e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-                    UNION SELECT doc_b, doc_a FROM p),
-              reach AS (SELECT src, dst FROM e
-                        UNION
-                        SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
+      raw"""WITH RECURSIVE
+              $closure,
               cl AS (SELECT src AS doc_id,
                             CAST(least(src, min(dst)) AS BIGINT) AS cluster_id
                      FROM reach GROUP BY src)
          SELECT d.doc_id,
                 CAST(coalesce(cl.cluster_id, d.doc_id) AS BIGINT) AS group_key,
-                CASE WHEN (coalesce(cl.cluster_id, d.doc_id) * 2654435761) % 100 < 80 THEN 'train'
-                     WHEN (coalesce(cl.cluster_id, d.doc_id) * 2654435761) % 100 < 90 THEN 'val'
-                     ELSE 'test' END AS split
+                ${split("coalesce(cl.cluster_id, d.doc_id)")}
          FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id""",
     // full pipeline replay: language gate -> quality gate -> exact dedup
     // (min doc_id per digest) -> near-dup removal (drop doc_b of each
     // jaccard>=0.5 pair) -> deterministic split
     // prepare + repetition gate + decontamination, replayed end-to-end
     "corpus_prepare_full" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
+      raw"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
               ev AS (SELECT doc_id, w FROM t WHERE doc_id % 20 = 0),
               corp AS (SELECT doc_id, text, w FROM t WHERE doc_id % 20 <> 0),
               kept AS (
                 SELECT doc_id, text, w FROM corp
-                WHERE round(len(list_filter(w, x -> x IN ('the','a')))
-                            / CAST(len(w) AS DOUBLE), 4) > 0.03
-                  AND len(w) >= 10 AND len(w) <= 10000
-                  AND round(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 4) > 0.1),
+                WHERE $qualityGate),
               bg AS (SELECT doc_id, len(w) AS n_words,
                             len(list_distinct(w)) AS n_distinct,
                             unnest(list_transform(range(0, len(w) - 1),
@@ -6407,26 +6058,7 @@ object SparkEntry {
                      WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
               canon AS (SELECT min(doc_id) AS doc_id FROM cl GROUP BY md5(text)),
               kc AS (SELECT c2.doc_id, c2.text FROM cl c2 JOIN canon USING (doc_id)),
-              w2 AS (SELECT doc_id, string_split(text, ' ') AS words FROM kc
-                     WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w2),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              losers AS (SELECT DISTINCT doc_b AS doc_id
-                         FROM com
-                         JOIN sizes sa ON sa.doc_id = doc_a
-                         JOIN sizes sb ON sb.doc_id = doc_b
-                         WHERE round(n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6) >= 0.5)
-         SELECT doc_id,
-                CASE WHEN (doc_id * 2654435761) % 100 < 80 THEN 'train'
-                     WHEN (doc_id * 2654435761) % 100 < 90 THEN 'val'
-                     ELSE 'test' END AS split
-         FROM kc WHERE doc_id NOT IN (SELECT doc_id FROM losers)""",
+              $nearDupSplit""",
     // batch replay of the stream's gates — identical predicate arithmetic
     // conservation: NFC-keyed dedup collapses both injected spellings of
     // every doc AND the corpus's planted exact-dup texts, so per-lang
@@ -6435,43 +6067,18 @@ object SparkEntry {
       """SELECT lang, count(DISTINCT text) AS n_unique
          FROM documents GROUP BY lang ORDER BY lang""",
     "t12_stream_quality_gate" ->
-      """WITH t AS (SELECT lang, string_split(text, ' ') AS w FROM documents)
+      raw"""WITH t AS (SELECT lang, string_split(text, ' ') AS w FROM documents)
          SELECT lang, count(*) AS n_kept FROM t
-         WHERE round(len(list_filter(w, x -> x IN ('the','a')))
-                     / CAST(len(w) AS DOUBLE), 4) > 0.03
-           AND len(w) >= 10 AND len(w) <= 10000
-           AND round(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 4) > 0.1
+         WHERE $qualityGate
          GROUP BY lang ORDER BY lang""",
     "corpus_prepare" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
+      raw"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
               kept AS (
                 SELECT doc_id, text FROM t
-                WHERE round(len(list_filter(w, x -> x IN ('the','a')))
-                            / CAST(len(w) AS DOUBLE), 4) > 0.03
-                  AND len(w) >= 10 AND len(w) <= 10000
-                  AND round(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 4) > 0.1),
+                WHERE $qualityGate),
               canon AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY md5(text)),
               kc AS (SELECT k.doc_id, k.text FROM kept k JOIN canon c USING (doc_id)),
-              w2 AS (SELECT doc_id, string_split(text, ' ') AS words FROM kc
-                     WHERE len(string_split(text, ' ')) >= 3),
-              sh AS (SELECT doc_id,
-                            unnest(list_distinct(list_transform(range(1, len(words) - 1),
-                              i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS shingle
-                     FROM w2),
-              sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              com AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                      GROUP BY a.doc_id, b.doc_id),
-              losers AS (SELECT DISTINCT doc_b AS doc_id
-                         FROM com
-                         JOIN sizes sa ON sa.doc_id = doc_a
-                         JOIN sizes sb ON sb.doc_id = doc_b
-                         WHERE round(n_common / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6) >= 0.5)
-         SELECT doc_id,
-                CASE WHEN (doc_id * 2654435761) % 100 < 80 THEN 'train'
-                     WHEN (doc_id * 2654435761) % 100 < 90 THEN 'val'
-                     ELSE 'test' END AS split
-         FROM kc WHERE doc_id NOT IN (SELECT doc_id FROM losers)""",
+              $nearDupSplit""",
     "mm_media_meta" ->
       """SELECT doc_id, strlen(text) AS n_bytes, sha256(text) AS sha256_hex,
                 (length(text) % 640) + 1 AS fake_width,
@@ -6569,6 +6176,7 @@ object SparkEntry {
          WHERE t.i < d.doc_id % 4 + 2 AND d.doc_id % 2 = 0
          ORDER BY d.doc_id, frame_idx"""
   )
+  }
 
   /** One oracle per shared contract: each base seat's replay is also the
     * oracle of its twins — seats that reach the base's exact result by

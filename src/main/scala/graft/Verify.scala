@@ -30,9 +30,18 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+    // release the board-run memos (dedup truth/cluster checkpoints,
+    // storage layout dirs) before teardown — nothing may outlive the run
+    SessionMemo.clearAll()
+    spark.stop()
+  }
+
+  /** `oracles` as the JSON object `oracle_sql.json` holds. Strings escape
+    * backslash, quote and ALL control chars (< 0x20): a tab or CR in an
+    * oracle would otherwise fail the reader's `json.load`, and with it
+    * every seat's grade. */
+  def oracleJson(oracles: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -42,12 +51,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // release the board-run memos (dedup truth/cluster checkpoints,
-    // storage layout dirs) before teardown — nothing may outlive the run
-    SessionMemo.clearAll()
-    spark.stop()
+    oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -222,8 +222,11 @@ object TextOps {
       .select(
         col("doc_id"),
         stopWordRatio(col("words")).as("en_score"),
-        round(graft.functions.BigramProfileCount.column(col("text"), bigramProfile)
-          / (length(col("text")) - 1).cast("double"), 4)
+        // a 1-character text has no bigram: NULL, as in DuckDB, where a
+        // plain divide would fail the whole query under ANSI
+        round(try_divide(
+          graft.functions.BigramProfileCount.column(col("text"), bigramProfile),
+          (length(col("text")) - 1).cast("double")), 4)
           .as("en_bigram_score"))
       .withColumn("predicted_lang",
         when(col("en_score") > 0.03, "en").otherwise("other"))

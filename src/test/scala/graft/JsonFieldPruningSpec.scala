@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
-import graft.functions.GraftExtensions
 import graft.model.Schemas
 import graft.pipeline.VotePipeline
 import graft.streaming.StreamOps
@@ -21,11 +20,6 @@ class JsonFieldPruningSpec extends SparkSpec {
   private val partialResults = "spark.sql.json.enablePartialResults"
 
   private val tallySchema = StructType(Seq("candidate_id", "vote").map(Schemas.VoteSchema(_)))
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftExtensions.installOptimizations(spark)
-  }
 
   private def jsonSchemas(plan: LogicalPlan): Seq[StructType] =
     plan.flatMap(_.expressions.flatMap(_.collect {

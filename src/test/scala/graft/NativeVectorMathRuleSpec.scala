@@ -45,7 +45,6 @@ class NativeVectorMathRuleSpec extends SparkSpec {
   }
 
   test("rewrite is bit-exact against the un-rewritten fold on real vectors") {
-    GraftExtensions.installOptimizations(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("a"))
     val paired = emb.limit(50).crossJoin(
@@ -62,7 +61,6 @@ class NativeVectorMathRuleSpec extends SparkSpec {
   }
 
   test("fused result mirrors the HOF on null elements and length mismatch") {
-    GraftExtensions.installOptimizations(spark)
     // containsNull = true array schema (the parquet default): the fused
     // expression must return NULL exactly where the un-fused fold does —
     // a null element poisons the product, a length mismatch poisons the
@@ -88,7 +86,6 @@ class NativeVectorMathRuleSpec extends SparkSpec {
   }
 
   test("codegen and interpreted dot_product agree on nulls and mismatch") {
-    GraftExtensions.installOptimizations(spark)
     val rows = Seq(
       (Seq[java.lang.Double](1.0, 2.0, 3.0), Seq[java.lang.Double](4.0, 5.0, 6.0)),
       (Seq[java.lang.Double](null, 2.0), Seq[java.lang.Double](1.0, 1.0)),
@@ -105,7 +102,6 @@ class NativeVectorMathRuleSpec extends SparkSpec {
   }
 
   test("rule does not fire on non-matching aggregates") {
-    GraftExtensions.installOptimizations(spark)
     val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
       .select(expr("aggregate(zip_with(a, b, (x, y) -> x + y), 0D, (acc, v) -> acc + v)").as("d"))
     val plan = df.queryExecution.optimizedPlan.toString

@@ -33,6 +33,11 @@ object SparkSpec {
     TmpDirs.localFsFastConfs.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // graft's optimizer rules, as in every main's session: installed here
+    // once, so no spec's plans depend on which suite ran first. A spec
+    // whose reference is the plan before a rewrite builds it on a
+    // rule-free `spark.newSession()`.
+    graft.functions.GraftExtensions.installOptimizations(s)
     s
   }
 }

@@ -10,12 +10,19 @@ Two guards reproduce that locally: (1) an arrow probe flags any
 oracle column whose physical type can't round-trip the driver's
 hash (decimal128/int128); (2) after canon, the pandas dtype KIND
 (integer vs float vs other) must match between Spark and oracle —
-exactly what HUGEINT->float64 coercion would otherwise hide."""
+exactly what HUGEINT->float64 coercion would otherwise hide.
+
+`compare.py --sql-only <sf_dir> <dir>` runs only the oracles in
+<dir>/oracle_sql.json, with no Spark dump: it fails (exit 1) on any
+oracle that errors or emits a decimal column."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
 import pyarrow as pa
 
+sql_only = "--sql-only" in sys.argv
+if sql_only:
+    sys.argv.remove("--sql-only")
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
@@ -52,6 +59,25 @@ def arrow_dtype_errors(sql):
     return [(f.name, str(f.type)) for f in tbl.schema
             if pa.types.is_decimal(f.type)]
 
+def oracle_error(sql):
+    """Why the gate rejects this oracle before comparing values, or None."""
+    try:
+        dtype_errs = arrow_dtype_errors(sql)
+    except Exception as e:
+        return f"ORACLE SQL ERROR: {e}"
+    if dtype_errs:
+        return (f"oracle emits hash-hostile dtype "
+                f"{dtype_errs} — wrap in CAST(... AS BIGINT)")
+    return None
+
+if sql_only:
+    errors = {name: oracle_error(oracle[name]) for name in sorted(oracle)}
+    bad = [name for name, err in errors.items() if err]
+    for name in bad:
+        print(f"✗ {name}: {errors[name]}")
+    print(f"\n{len(oracle) - len(bad)} ok, {len(bad)} bad, {len(oracle)} oracles run")
+    sys.exit(1 if bad else 0)
+
 n_ok = n_bad = 0
 for name in sorted(os.listdir(out_dir)):
     qdir = os.path.join(out_dir, name)
@@ -61,18 +87,12 @@ for name in sorted(os.listdir(out_dir)):
     if name not in oracle:
         print(f"  [rows-only] {name}: {len(spark_df)} rows")
         continue
-    try:
-        dtype_errs = arrow_dtype_errors(oracle[name])
-        ora_df = con.execute(oracle[name]).df()
-    except Exception as e:
-        print(f"✗ {name}: ORACLE SQL ERROR: {e}")
+    err = oracle_error(oracle[name])
+    if err:
+        print(f"✗ {name}: {err}")
         n_bad += 1
         continue
-    if dtype_errs:
-        print(f"✗ {name}: oracle emits driver-hash-hostile dtype "
-              f"{dtype_errs} — wrap in CAST(... AS BIGINT)")
-        n_bad += 1
-        continue
+    ora_df = con.execute(oracle[name]).df()
     a, b = canon(spark_df), canon(ora_df)
     if list(a.columns) != list(b.columns):
         print(f"✗ {name}: column mismatch spark={list(a.columns)} oracle={list(b.columns)}")
