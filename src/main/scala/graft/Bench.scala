@@ -24,6 +24,30 @@ object Bench {
     committedMin.exists(m => m > 0 && reading > 0.5 &&
       (reading >= 2.5 * m || (reading >= 2 * m && reading - m >= 1.0)))
 
+  /** Each seat's floor for the resample pass: its minimum over the last
+    * THREE committed rounds (`bench_perquery_r<N>.json` under `root`)
+    * whose full line says `"action":"noop"`, i.e. that ran every seat in
+    * full. A round timed with `count()` read per-row seats as a pruned
+    * scan, so its minima are no floor of a full run; a minimum from a
+    * retired implementation is no floor of code that exists either (t9's
+    * pre-r16 single-drain 1.07 s made the re-paced ~2.1 s seat resample
+    * every run). Empty until such a round is committed. */
+  private[graft] def committedFloors(root: java.io.File): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rounds = Option(root.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+      "^bench_perquery_r0*(\\d+)\\.json$".r.unapplySeq(f.getName)
+        .flatMap(_.headOption).map(_.toInt)
+        .flatMap(r => scala.util.Try(om.readTree(f)).toOption.map(r -> _))
+    }.filter { case (_, node) => Option(node.get("action")).exists(_.asText == "noop") }
+    val recent = rounds.map(_._1).maxOption.map(_ - 2).getOrElse(0)
+    rounds.filter(_._1 >= recent)
+      .flatMap { case (_, node) => Option(node.get("queries")).toSeq }
+      .flatMap(_.fields().asScala.map(e => e.getKey -> e.getValue.asDouble(-1.0)))
+      .filter(_._2 > 0)
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
+  }
+
   /** Seats whose graded entry reads a session-memoized pipeline run
     * (t5/t27 via dedupPipelineRun, t26/t39 via the TWS totals run,
     * t45/t47 via the shared corpus front-end run): a post-board
@@ -84,7 +108,7 @@ object Bench {
   /** Runs `df` in full: every row and column through the `noop` sink.
     * A `count()` lets Catalyst prune a per-row seat's projections down
     * to a scan, so it would time less work than the seat does. */
-  private def runInFull(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def runInFull(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** One timed run; NaN when the seat fails, so a failure can never read
@@ -233,12 +257,6 @@ object Bench {
         graft.ext.AudioCodec.withWavPayload(spark, doc1))) }
       warm { runInFull(graft.ext.VideoCodec.demuxAvi(spark,
         graft.ext.VideoCodec.withAviPayload(spark, doc1))) }
-      // native string-metric expressions (registry + codegen compile)
-      warm { graft.functions.GraftExtensions.register(spark)
-        runInFull(spark.range(1).selectExpr(
-          "jaro_winkler('martha', 'marhta')",
-          "nfc_normalize('cafe')",
-          "damerau_levenshtein('ab', 'ba')")) }
       // Streaming machinery: the first query of each STATEFUL OPERATOR
       // CLASS pays MicroBatchExecution init, state-store provider
       // load, and that operator's generated-class compile — measured
@@ -546,39 +564,7 @@ object Bench {
     val resampled: Map[String, (Double, Double)] =
       if (filtered || !roundSf) Map.empty
       else try {
-        val history = rootOpt.map { root =>
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val perquery = Option(root.listFiles()).getOrElse(Array.empty)
-            .flatMap { f =>
-              "^bench_perquery_r0*(\\d+)\\.json$".r.unapplySeq(f.getName)
-                .flatMap(_.headOption).map(_.toInt -> f)
-            }
-          // floors come from the last THREE rounds only: a committed
-          // minimum from a RETIRED implementation is not a floor of any
-          // code that exists — t9's pre-r16 single-drain reading (1.07 s)
-          // made the honestly re-paced seat (~2.1 s) resample every run
-          // and read as a standing "regression" in the artifact
-          val recent = perquery.map(_._1).maxOption.map(_ - 2).getOrElse(0)
-          perquery.filter(_._1 >= recent).map(_._2)
-            .flatMap { f =>
-              try {
-                val node = om.readTree(f)
-                val q = node.get("queries")
-                if (q == null) Seq.empty
-                else {
-                  val it = q.fields()
-                  val buf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-                  while (it.hasNext) {
-                    val e = it.next()
-                    val v = e.getValue.asDouble(-1.0)
-                    if (v > 0) buf += (e.getKey -> v)
-                  }
-                  buf.toSeq
-                }
-              } catch { case _: Throwable => Seq.empty }
-            }
-            .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-        }.getOrElse(Map.empty[String, Double])
+        val history = rootOpt.map(committedFloors).getOrElse(Map.empty[String, Double])
         val ratios = results.toSeq.flatMap { case (name, v) =>
           history.get(name).filter(_ > 0).map(v / _)
         }.sorted
@@ -605,7 +591,7 @@ object Bench {
       .mkString("{", ",", "}")
     val resampledMemoJson = resampled.keys.filter(memoBackedSeats)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_fs":$calibFs,"calib_stream":$calibStream,"resampled":$resampledJson,"resampled_memoized":$resampledMemoJson,"median_ratio_vs_floor":$medianRatioVsFloor,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","action":"noop","calib":$calib,"calib_fs":$calibFs,"calib_stream":$calibStream,"resampled":$resampledJson,"resampled_memoized":$resampledMemoJson,"median_ratio_vs_floor":$medianRatioVsFloor,"queries":$qs,"sf":"$sfDir"}"""
     // The per-query line is one giant record whose "metric":"total" head is
     // the first thing a tail-truncated log window loses (the driver recorded
     // "parsed": null two rounds running). Print a second, SHORT, final line

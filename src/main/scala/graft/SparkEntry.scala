@@ -2205,10 +2205,8 @@ object SparkEntry {
     // ---- LLM pipeline: similarity search ----
     "ann_cosine_topk" -> ((s, d) =>
       SimilarityOps.bruteForceTopK(Tables.embeddings(s, d), 0L, 10)),
-    "ann_cosine_topk_native" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      SimilarityOps.bruteForceTopKNative(Tables.embeddings(s, d), 0L, 10)
-    }),
+    "ann_cosine_topk_native" -> ((s, d) =>
+      SimilarityOps.bruteForceTopKNative(Tables.embeddings(s, d), 0L, 10)),
     "ann_ivf_topk" -> ((s, d) =>
       SimilarityOps.ivfTopK(Tables.embeddings(s, d), 0L, 10, nprobe = 3)),
     // same probe executed against the Hive-partitioned cell layout: the
@@ -2354,8 +2352,9 @@ object SparkEntry {
     // doc parity — collapse to identical bytes, the precondition every
     // digest/shingle dedup key needs on real web text
     "text_nfc_dedup" -> ((s, d) => {
+      // `tail_nfc` is SQL text naming nfc_normalize: it needs the name
+      // registered, where the Column form needs nothing
       graft.functions.GraftExtensions.register(s)
-      val nfc = graft.functions.NfcNormalize
       Tables.documents(s, d)
         .select(col("doc_id"),
           concat(col("text"), lit(" "),
@@ -2363,7 +2362,8 @@ object SparkEntry {
               .otherwise(lit("cafe\u0301"))).as("t"))
         .select(col("doc_id"),
           length(col("t")).as("len_raw"),
-          length(nfc(col("t"))).as("len_nfc"),
+          length(graft.functions.GraftExtensions.call("nfc_normalize",
+            col("t"))).as("len_nfc"),
           expr("right(nfc_normalize(t), 4)").as("tail_nfc"))
         .orderBy("doc_id")
     }),

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.call
 
 /** Near-duplicate detection for a training-data pipeline ([X] tier):
   * n-gram Jaccard, MinHash+LSH, SimHash. Exact dedup is
@@ -416,12 +417,11 @@ object DedupOps {
     // as the previous (xxhash64, length) string fingerprints — see the
     // kernel's doc), so both shuffles below carry longs and the
     // interpreted 13-token concat_ws lambda is gone.
-    graft.functions.GraftExtensions.register(docs.sparkSession)
     val wins = docs
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= w)
       .select(col("doc_id"),
-        explode(expr(s"ngram_fingerprints(words, $w)")).as("win_h"))
+        explode(call("ngram_fingerprints", col("words"), lit(w))).as("win_h"))
     val winKey = Seq("win_h")
     // Collapse to per-(window, doc) occurrence counts FIRST: the raw
     // occurrence stream (n_words rows per doc) rides exactly ONE shuffle,
@@ -463,11 +463,10 @@ object DedupOps {
     // kernel's doc for the collision budget); both sides of every
     // window join use THIS builder, so cross-side equality is by
     // construction
-    graft.functions.GraftExtensions.register(df.sparkSession)
     df.withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= w)
       .select((col("doc_id") +: keep.map(col)) :+
-        explode(expr(s"ngram_fingerprints(words, $w)")).as("win_h"): _*)
+        explode(call("ngram_fingerprints", col("words"), lit(w))).as("win_h"): _*)
   }
 
   def decontaminate(corpus: DataFrame, evalDocs: DataFrame,
@@ -520,7 +519,6 @@ object DedupOps {
     * machinery InjectRuntimeFilter plans automatically, here explicit). */
   def incrementalDedupBloom(increment: DataFrame, corpus: DataFrame,
                             n: Int, tau: Double): DataFrame = {
-    graft.functions.GraftExtensions.register(increment.sparkSession)
     val corpDigests = corpus.select(md5(col("text")).as("dig")).distinct()
     // the sketch folds distributed (map-side partial bloom merges) down
     // to ONE bounded binary — numBits/8 bytes (100 KB here) regardless
@@ -528,11 +526,10 @@ object DedupOps {
     // it ships to the probe side as a literal (the driver round-trip is
     // the sketch, never the digest set)
     val bf = corpDigests.agg(
-      expr("graft_bloom_agg(xxhash64(dig), 100000L, 800000L)").as("bf"))
+      call("graft_bloom_agg", xxhash64(col("dig")), lit(100000L), lit(800000L)).as("bf"))
       .head().getAs[Array[Byte]](0)
     val probable = increment.select(col("doc_id"), md5(col("text")).as("dig"))
-      .filter(call_function("graft_might_contain",
-        lit(bf), xxhash64(col("dig"))))
+      .filter(call("graft_might_contain", lit(bf), xxhash64(col("dig"))))
     val exactDup = probable.join(corpDigests, "dig")
       .select("doc_id").distinct()
     incrementalTriage(increment, corpus, n, tau, exactDup)
@@ -776,12 +773,11 @@ object DedupOps {
     * [[graft.functions.SimHash64]] — the HOF form below allocates two
     * 64-element arrays per WORD through interpreted lambdas. */
   def simHashes(docs: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(docs.sparkSession)
     docs
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 1)
       .select(col("doc_id"),
-        call_function("simhash64", col("words")).as("simhash"))
+        call("simhash64", col("words")).as("simhash"))
   }
 
   /** HOF formulation of [[simHashes]] — the executable specification the

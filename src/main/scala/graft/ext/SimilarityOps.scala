@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.call
 
 /** Similarity search over an embedding column ([X] tier): brute-force
   * cosine top-k as the correctness baseline, IVF (coarse-quantizer
@@ -38,8 +39,12 @@ object SimilarityOps {
     * the similarity hot loops runs codegen'd instead of as interpreted
     * lambda frames. Bit-exact: same left fold over the same per-element
     * products (x·x ≡ x·y at x = y). */
-  private[graft] def norm(a: String): Column =
+  private def norm(a: String): Column =
     expr(s"sqrt(aggregate(zip_with($a, $a, (x, y) -> x * y), 0D, (acc, v) -> acc + v))")
+
+  /** cos(a, b) = dot(a, b) / (||a||·||b||), over the rule-fused dots. */
+  private[graft] def cosine(a: String, b: String): Column =
+    dot(a, b) / (norm(a) * norm(b))
 
   /** Brute-force cosine top-k against the vector of `queryId`. */
   def bruteForceTopK(embeddings: DataFrame, queryId: Long, k: Int): DataFrame = {
@@ -49,7 +54,7 @@ object SimilarityOps {
     base.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"))
+        round(cosine("v", "qv"), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -58,13 +63,12 @@ object SimilarityOps {
     * expression — single fused loop per row (dot + both norms), no
     * intermediate arrays; semantically identical to [[bruteForceTopK]]. */
   def bruteForceTopKNative(embeddings: DataFrame, queryId: Long, k: Int): DataFrame = {
-    graft.functions.GraftExtensions.register(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), vecD("embedding").as("v"))
     val q = base.filter(col("vec_id") === queryId).select(col("v").as("qv"))
     base.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(graft.functions.CosineSimilarity(col("v"), col("qv")), 6).as("cosine"))
+        round(call("cosine_sim", col("v"), col("qv")), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -88,7 +92,7 @@ object SimilarityOps {
     base.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"),
+        round(cosine("v", "qv"), 6).as("cosine"),
         col("vec_id"))
       .groupBy("query_id")
       .agg(topk(col("cosine"), col("vec_id")).as("top_ids"))
@@ -133,7 +137,7 @@ object SimilarityOps {
 
     val probed = cents.crossJoin(broadcast(q))
       .select(col("label"),
-        (dot("cv", "qv") / (norm("cv") * norm("qv"))).as("ccos"))
+        cosine("cv", "qv").as("ccos"))
       .orderBy(desc("ccos"), asc("label"))
       .limit(nprobe)
       .select("label")
@@ -142,7 +146,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"))
+        round(cosine("v", "qv"), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -168,7 +172,7 @@ object SimilarityOps {
       .select(col("cell").as("label"), col("cv"))
     val probed = cents.crossJoin(broadcast(q))
       .select(col("label"),
-        (dot("cv", "qv") / (norm("cv") * norm("qv"))).as("ccos"))
+        cosine("cv", "qv").as("ccos"))
       .orderBy(desc("ccos"), asc("label"))
       .limit(nprobe)
       .select("label")
@@ -181,7 +185,7 @@ object SimilarityOps {
       .select(col("vec_id"), vecD("embedding").as("v"))
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"))
+        round(cosine("v", "qv"), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -216,7 +220,7 @@ object SimilarityOps {
       .partitionBy("query_id").orderBy(desc("ccos"), asc("label"))
     val probePairs = cents.crossJoin(broadcast(qs))
       .select(col("query_id"), col("label"),
-        (dot("cv", "qv") / (norm("cv") * norm("qv"))).as("ccos"))
+        cosine("cv", "qv").as("ccos"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= nprobe)
       .select("query_id", "label")
@@ -235,7 +239,7 @@ object SimilarityOps {
       .join(broadcast(qs), "query_id")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"),
+        round(cosine("v", "qv"), 6).as("cosine"),
         col("vec_id"))
       .groupBy("query_id")
       .agg(topk(col("cosine"), col("vec_id")).as("top_ids"))
@@ -262,7 +266,6 @@ object SimilarityOps {
     * per task. Returns (vec_id, cell). */
   def kmeansCells(embeddings: DataFrame, iters: Int): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.GraftExtensions.register(spark)
     val base = embeddings.select(col("vec_id"), col("label"),
       vecD("embedding").as("v"))
 
@@ -282,7 +285,7 @@ object SimilarityOps {
       base
         .crossJoin(broadcast(centsRow))
         .select(col("vec_id"), col("v"),
-          call_function("centroid_argmax", col("v"), col("cents")).as("cell"))
+          call("centroid_argmax", col("v"), col("cents")).as("cell"))
     }
 
     var assigned = base.withColumn("cell", col("label").cast("long"))
@@ -496,7 +499,7 @@ object SimilarityOps {
     val approx = codes.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dot("q", "qv") / (norm("q") * norm("qv")), 6).as("cosine"))
+        round(cosine("q", "qv"), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
       .select("vec_id")
@@ -526,7 +529,7 @@ object SimilarityOps {
     val cand = codes.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q8))
       .select(col("vec_id"),
-        round(dot("q", "qv") / (norm("q") * norm("qv")), 6).as("c8"))
+        round(cosine("q", "qv"), 6).as("c8"))
       .orderBy(desc("c8"), asc("vec_id"))
       .limit(pool)
       .select("vec_id")
@@ -535,7 +538,7 @@ object SimilarityOps {
     base.join(broadcast(cand), Seq("vec_id"), "left_semi")
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"))
+        round(cosine("v", "qv"), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -546,10 +549,8 @@ object SimilarityOps {
     * one long. Runs on the native codegen'd
     * [[graft.functions.HyperplaneSig]] — one fused loop per row, no
     * per-row plane-matrix materialization. Zero shuffle. */
-  private def packedSigns(df: DataFrame, nBits: Int): Column = {
-    graft.functions.GraftExtensions.register(df.sparkSession)
-    call_function("hyperplane_sig", col("v"), lit(nBits))
-  }
+  private def packedSigns(nBits: Int): Column =
+    call("hyperplane_sig", col("v"), lit(nBits))
 
   /** The higher-order-function formulation of [[packedSigns]] — retained as
     * the executable specification the native expression is spec-checked
@@ -572,7 +573,7 @@ object SimilarityOps {
   def lshBuckets(embeddings: DataFrame, nBits: Int): DataFrame = {
     val base = embeddings.select(col("vec_id"), vecD("embedding").as("v"))
     base
-      .withColumn("bucket", packedSigns(base, nBits))
+      .withColumn("bucket", packedSigns(nBits))
       .select("vec_id", "bucket")
   }
 
@@ -597,14 +598,13 @@ object SimilarityOps {
     * against the DuckDB oracle). */
   def nearDupPairsWithinLabel(embeddings: DataFrame, k: Int,
                               bands: Int = 32, bitsPerBand: Int = 2): DataFrame = {
-    graft.functions.GraftExtensions.register(embeddings.sparkSession)
     val cands = bandCandidatePairs(embeddings, bands, bitsPerBand)
     val base = embeddings.select(col("vec_id"), vecD("embedding").as("v"))
     cands
       .join(base.select(col("vec_id").as("vec_a"), col("v").as("va")), "vec_a")
       .join(base.select(col("vec_id").as("vec_b"), col("v").as("vb")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        round(graft.functions.CosineSimilarity(col("va"), col("vb")), 6).as("cosine"))
+        round(call("cosine_sim", col("va"), col("vb")), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_a"), asc("vec_b"))
       .limit(k)
   }
@@ -619,7 +619,7 @@ object SimilarityOps {
     val mask = (1L << bitsPerBand) - 1
     val base = embeddings
       .select(col("vec_id"), col("label"), vecD("embedding").as("v"))
-    val signed = base.withColumn("sig", packedSigns(base, bands * bitsPerBand))
+    val signed = base.withColumn("sig", packedSigns(bands * bitsPerBand))
     val bk = signed.select(col("label"), col("vec_id"),
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> shiftright(sig, b * $bitsPerBand) & ${mask}L)"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.call
 
 /** Text-analysis operators for a training-data pipeline ([X] tier,
   * SURVEY.md §2.7 F10): token stats, quality scoring, language-ID heuristic,
@@ -83,13 +84,12 @@ object TextOps {
   def repetition(docs: DataFrame,
                  maxTopBigramFrac: Double = 0.18,
                  maxDupWordFrac: Double = 0.9): DataFrame = {
-    graft.functions.GraftExtensions.register(docs.sparkSession)
     docs
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 2)
       .select(col("doc_id"), size(col("words")).as("n_words"),
         size(array_distinct(col("words"))).as("n_distinct"),
-        expr("top_bigram_count(words)").as("top_bigram_n"))
+        call("top_bigram_count", col("words")).as("top_bigram_n"))
       .select(col("doc_id"),
         round(col("top_bigram_n") /
           (col("n_words") - 1).cast("double"), 6).as("top_bigram_frac"),
@@ -396,12 +396,11 @@ object TextOps {
     // Results stay defined by shingle content (the oracle computes on
     // strings); collisions are the same N²·2⁻⁶⁵ budget as the previous
     // (xxhash64, length) string keys, deterministic per corpus.
-    graft.functions.GraftExtensions.register(docs.sparkSession)
     val sh = docs
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= n)
       .select(col("source"),
-        explode(array_distinct(expr(s"ngram_fingerprints(words, $n)")))
+        explode(array_distinct(call("ngram_fingerprints", col("words"), lit(n))))
           .as("sh_h"))
       .distinct()
     // One aggregation per shingle replaces the df-cap join + self-join:
@@ -560,11 +559,10 @@ object TextOps {
     // the rolling hash runs in the native CharPolyHash kernel — the SQL
     // HOF form it replaces evaluated an interpreted lambda per CHARACTER
     // of every document; values are bit-identical (spec-pinned)
-    graft.functions.GraftExtensions.register(docs.sparkSession)
     docs.select(
       col("doc_id"),
       md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("content_md5"),
-      expr("char_poly_hash(text)").as("rolling_hash"))
+      call("char_poly_hash", col("text")).as("rolling_hash"))
   }
 
   /** Content-defined chunking — variable-size chunk boundaries placed
@@ -586,10 +584,9 @@ object TextOps {
     * aggregate) shuffled and sorted the corpus's full token stream for a
     * per-document statistic; the kernel is spec-pinned bit-identical. */
   def cdcChunks(docs: DataFrame, divisor: Int = 16): DataFrame = {
-    graft.functions.GraftExtensions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
-        explode(expr(s"cdc_chunk_spans(split(text, ' '), $divisor)")).as("c"))
+        explode(call("cdc_chunk_spans", split(col("text"), " "), lit(divisor))).as("c"))
       .select(col("doc_id"), col("c.chunk_id").as("chunk_id"),
         col("c.n_tokens").as("n_tokens"), col("c.start_pos").as("start_pos"))
   }

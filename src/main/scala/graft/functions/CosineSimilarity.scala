@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -65,13 +64,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Column-API entry point. Resolves through the session function
-    * registry (Column↔Expression bridges are private[sql] in Spark 4), so
-    * [[GraftExtensions.register]] must have run on the session — callers in
-    * graft.ext do this automatically. */
-  def apply(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
 }

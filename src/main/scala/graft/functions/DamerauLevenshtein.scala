@@ -68,10 +68,4 @@ object DamerauLevenshtein {
       i += 1
     }
     d(la + 1)(lb + 1)
-  }
-
-  /** Column-API entry point via the registry (see [[JaroWinkler.apply]]). */
-  def apply(a: org.apache.spark.sql.Column,
-            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("damerau_levenshtein", a, b)
-}
+  }}

@@ -1,238 +1,102 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, BloomFilterAggregate}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graft.KernelColumns
 
-/** SparkSessionExtensions hook: registers graft's native expressions so
-  * they're usable from SQL text as well as the Column API. Activate with
+/** SparkSessionExtensions hook: registers graft's native expressions under
+  * their SQL names and installs graft's optimizer rules. Activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`, or
-  * call [[GraftExtensions.register]] on a live session (the offline driver
-  * harness builds its own session, so both paths are supported).
+  * call [[GraftExtensions.register]] on a live session. Operator code never
+  * needs either: it builds kernels as Columns with [[GraftExtensions.call]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineSimDescriptor)
-    ext.injectFunction(GraftExtensions.hyperplaneSigDescriptor)
-    ext.injectFunction(GraftExtensions.simHash64Descriptor)
-    ext.injectFunction(GraftExtensions.bloomAggDescriptor)
-    ext.injectFunction(GraftExtensions.bloomMightContainDescriptor)
-    ext.injectFunction(GraftExtensions.jaroWinklerDescriptor)
-    ext.injectFunction(GraftExtensions.nfcNormalizeDescriptor)
-    ext.injectFunction(GraftExtensions.damerauDescriptor)
-    ext.injectFunction(GraftExtensions.centroidArgmaxDescriptor)
-    ext.injectFunction(GraftExtensions.topBigramCountDescriptor)
-    ext.injectFunction(GraftExtensions.ngramFingerprintsDescriptor)
-    ext.injectFunction(GraftExtensions.shingleKeysDescriptor)
-    ext.injectFunction(GraftExtensions.cdcChunkSpansDescriptor)
-    ext.injectFunction(GraftExtensions.charPolyHashDescriptor)
+    GraftExtensions.functions.foreach(f => ext.injectFunction(f.descriptor))
     GraftExtensions.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 }
 
 object GraftExtensions {
-  private[functions] val cosineSimDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("cosine_sim"),
-     new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2, "cosine_sim(a, b) takes exactly 2 args")
-       CosineSimilarity(children(0), children(1))
-     })
 
-  private[functions] val hyperplaneSigDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("hyperplane_sig"),
-     new ExpressionInfo(classOf[HyperplaneSig].getName, "hyperplane_sig"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "hyperplane_sig(v, nBits) takes exactly 2 args")
-       val nBits = children(1) match {
-         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-         case other => throw new IllegalArgumentException(
-           s"hyperplane_sig nBits must be an int literal, got $other")
-       }
-       HyperplaneSig(children(0), nBits)
-     })
+  /** One native function: its SQL name, the expression class it builds
+    * and the builder over its `arity` argument expressions. */
+  private final class Fn(val name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression) {
+    def apply(args: Seq[Expression]): Expression = {
+      require(args.size == arity, s"$name takes exactly $arity args, got ${args.size}")
+      try build(args) catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"$name: ${e.getMessage}", e)
+      }
+    }
+    def descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), apply)
+  }
 
-  private[functions] val simHash64Descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("simhash64"),
-     new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-     (children: Seq[Expression]) => {
-       require(children.size == 1, "simhash64(words) takes exactly 1 arg")
-       SimHash64(children.head)
-     })
+  /** A width argument (bit count, shingle width, chunk divisor): the
+    * kernels specialize on it, so it must be an int literal. */
+  private def intLit(e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(s"expected an int literal, got $other")
+  }
 
-  private[functions] val jaroWinklerDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("jaro_winkler"),
-     new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2, "jaro_winkler(a, b) takes exactly 2 args")
-       JaroWinklerSim(children(0), children(1))
-     })
+  /** graft's native functions. `graft_bloom_agg`/`graft_might_contain`
+    * surface Spark's own BloomFilterAggregate/BloomFilterMightContain (the
+    * pair InjectRuntimeFilter plans, which has no SQL name) for an explicit
+    * Bloom pre-filter: [[graft.ext.DedupOps.incrementalDedupBloom]]. */
+  private val functions: Seq[Fn] = Seq(
+    new Fn("cosine_sim", classOf[CosineSimilarity], 2)(a => CosineSimilarity(a(0), a(1))),
+    new Fn("hyperplane_sig", classOf[HyperplaneSig], 2)(a => HyperplaneSig(a(0), intLit(a(1)))),
+    new Fn("simhash64", classOf[SimHash64], 1)(a => SimHash64(a(0))),
+    new Fn("graft_bloom_agg", classOf[BloomFilterAggregate], 3)(
+      a => new BloomFilterAggregate(a(0), a(1), a(2))),
+    new Fn("graft_might_contain", classOf[BloomFilterMightContain], 2)(
+      a => BloomFilterMightContain(a(0), a(1))),
+    new Fn("jaro_winkler", classOf[JaroWinklerSim], 2)(a => JaroWinklerSim(a(0), a(1))),
+    new Fn("nfc_normalize", classOf[NfcNormalize], 1)(a => NfcNormalize(a(0))),
+    new Fn("damerau_levenshtein", classOf[DamerauLevenshteinDist], 2)(
+      a => DamerauLevenshteinDist(a(0), a(1))),
+    new Fn("centroid_argmax", classOf[CentroidArgmax], 2)(a => CentroidArgmax(a(0), a(1))),
+    new Fn("top_bigram_count", classOf[TopBigramCount], 1)(a => TopBigramCount(a(0))),
+    new Fn("ngram_fingerprints", classOf[NgramFingerprints], 2)(
+      a => NgramFingerprints(a(0), intLit(a(1)))),
+    new Fn("shingle_keys", classOf[ShingleKeys], 2)(a => ShingleKeys(a(0), intLit(a(1)))),
+    new Fn("cdc_chunk_spans", classOf[CdcChunkSpans], 2)(a => CdcChunkSpans(a(0), intLit(a(1)))),
+    new Fn("char_poly_hash", classOf[CharPolyHash], 1)(a => CharPolyHash(a(0))))
 
-  private[functions] val nfcNormalizeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("nfc_normalize"),
-     new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-     (children: Seq[Expression]) => {
-       require(children.size == 1, "nfc_normalize(s) takes exactly 1 arg")
-       NfcNormalize(children.head)
-     })
+  private val byName: Map[String, Fn] = functions.map(f => f.name -> f).toMap
 
-  private[functions] val damerauDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("damerau_levenshtein"),
-     new ExpressionInfo(classOf[DamerauLevenshteinDist].getName,
-       "damerau_levenshtein"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "damerau_levenshtein(a, b) takes exactly 2 args")
-       DamerauLevenshteinDist(children(0), children(1))
-     })
+  /** The graft function `name` over `args` as a Column: the expression the
+    * SQL name resolves to, built without the session's function registry,
+    * so it works in any session and changes no session state. An aggregate
+    * is wrapped as `ResolveFunctions` wraps it on the SQL path. */
+  def call(name: String, args: Column*): Column = {
+    val fn = byName.getOrElse(name,
+      throw new IllegalArgumentException(s"no graft function named $name"))
+    KernelColumns.column(fn(args.map(KernelColumns.expression)) match {
+      case agg: AggregateFunction => agg.toAggregateExpression()
+      case e => e
+    })
+  }
 
-  private[functions] val centroidArgmaxDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("centroid_argmax"),
-     new ExpressionInfo(classOf[CentroidArgmax].getName, "centroid_argmax"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "centroid_argmax(v, cents) takes exactly 2 args")
-       CentroidArgmax(children(0), children(1))
-     })
-
-  private[functions] val topBigramCountDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("top_bigram_count"),
-     new ExpressionInfo(classOf[TopBigramCount].getName, "top_bigram_count"),
-     (children: Seq[Expression]) => {
-       require(children.size == 1,
-         "top_bigram_count(words) takes exactly 1 arg")
-       TopBigramCount(children.head)
-     })
-
-  private[functions] val ngramFingerprintsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ngram_fingerprints"),
-     new ExpressionInfo(classOf[NgramFingerprints].getName,
-       "ngram_fingerprints"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "ngram_fingerprints(words, n) takes exactly 2 args")
-       val n = children(1) match {
-         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-         case other => throw new IllegalArgumentException(
-           s"ngram_fingerprints n must be an int literal, got $other")
-       }
-       NgramFingerprints(children(0), n)
-     })
-
-  private[functions] val shingleKeysDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("shingle_keys"),
-     new ExpressionInfo(classOf[ShingleKeys].getName, "shingle_keys"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "shingle_keys(words, n) takes exactly 2 args")
-       val n = children(1) match {
-         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-         case other => throw new IllegalArgumentException(
-           s"shingle_keys n must be an int literal, got $other")
-       }
-       ShingleKeys(children(0), n)
-     })
-
-  private[functions] val cdcChunkSpansDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("cdc_chunk_spans"),
-     new ExpressionInfo(classOf[CdcChunkSpans].getName, "cdc_chunk_spans"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "cdc_chunk_spans(words, divisor) takes exactly 2 args")
-       val d = children(1) match {
-         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-         case other => throw new IllegalArgumentException(
-           s"cdc_chunk_spans divisor must be an int literal, got $other")
-       }
-       CdcChunkSpans(children(0), d)
-     })
-
-  private[functions] val charPolyHashDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("char_poly_hash"),
-     new ExpressionInfo(classOf[CharPolyHash].getName, "char_poly_hash"),
-     (children: Seq[Expression]) => {
-       require(children.size == 1,
-         "char_poly_hash(s) takes exactly 1 arg")
-       CharPolyHash(children.head)
-     })
-
-  /** Spark's own BloomFilterAggregate/BloomFilterMightContain, surfaced
-    * under graft names: the engine-internal pair InjectRuntimeFilter plans
-    * with has no SQL registration, but an explicit Bloom pre-filter (build
-    * over a key set, probe before an expensive join) is a first-class
-    * 100 TB pattern the library wants callable directly —
-    * [[graft.ext.DedupOps.incrementalDedupBloom]] is the graded consumer. */
-  private[functions] val bloomAggDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_bloom_agg"),
-     new ExpressionInfo(
-       classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-       "graft_bloom_agg"),
-     (children: Seq[Expression]) => {
-       require(children.size == 3,
-         "graft_bloom_agg(xxhash64_col, estItems, numBits) takes 3 args")
-       new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-         children(0), children(1), children(2))
-     })
-
-  private[functions] val bloomMightContainDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_might_contain"),
-     new ExpressionInfo(
-       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-       "graft_might_contain"),
-     (children: Seq[Expression]) => {
-       require(children.size == 2,
-         "graft_might_contain(bloom, xxhash64_col) takes 2 args")
-       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-         children(0), children(1))
-     })
-
-  /** Idempotent late registration into an existing session.
-    * r17: ALSO installs the optimizer rewrites — the
-    * [[NativeVectorMathRule]] dot-product fusion was only ever installed
-    * by its spec, so every graded similarity path's HOF dot/norm ran as
-    * interpreted lambda frames in the Bench/Verify sessions while the
-    * fused native expression sat dormant. register() is the one call
-    * every similarity entry point already makes, so piggybacking the
-    * (idempotent) install here covers them all. */
+  /** Registers graft's function names on a live session, for SQL text
+    * that names them, and installs graft's optimizer rules. Idempotent. */
   def register(spark: SparkSession): Unit = {
     installOptimizations(spark)
     val registry = spark.sessionState.functionRegistry
-    Seq(cosineSimDescriptor, hyperplaneSigDescriptor, simHash64Descriptor,
-        bloomAggDescriptor, bloomMightContainDescriptor,
-        jaroWinklerDescriptor, nfcNormalizeDescriptor,
-        damerauDescriptor, centroidArgmaxDescriptor,
-        topBigramCountDescriptor, ngramFingerprintsDescriptor,
-        shingleKeysDescriptor,
-        cdcChunkSpansDescriptor, charPolyHashDescriptor).foreach {
-      case (id, info, builder) =>
-        if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    functions.map(_.descriptor).foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
   }
 
   /** Late install of the optimizer rewrites on a live session (extensions
     * only apply at session build time). Idempotent; synchronized because
-    * the check-and-append on `extraOptimizations` is a read-modify-write
-    * and register() is called from every similarity entry point — two
-    * concurrent first calls (parallel streaming batches) could otherwise
-    * double-append a rule or drop a concurrent append. */
+    * the check-and-append on `extraOptimizations` is a read-modify-write. */
   def installOptimizations(spark: SparkSession): Unit = this.synchronized {
     val installed = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =

@@ -40,13 +40,6 @@ case class JaroWinklerSim(left: Expression, right: Expression)
 }
 
 object JaroWinkler {
-  /** Column-API entry point via the function registry (Column↔Expression
-    * bridges are private[sql] in Spark 4) — run
-    * [[GraftExtensions.register]] on the session first. */
-  def apply(a: org.apache.spark.sql.Column,
-            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("jaro_winkler", a, b)
-
   /** Classic Jaro-Winkler (see [[JaroWinklerSim]]); public static so both
     * the interpreted and generated paths run the identical routine. */
   def similarity(s1: String, s2: String): Double = {

@@ -33,9 +33,4 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 object NfcNormalize {
   def normalize(s: UTF8String): UTF8String =
     UTF8String.fromString(java.text.Normalizer.normalize(
-      s.toString, java.text.Normalizer.Form.NFC))
-
-  /** Column-API entry point via the registry (see [[JaroWinkler.apply]]). */
-  def apply(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("nfc_normalize", c)
-}
+      s.toString, java.text.Normalizer.Form.NFC))}

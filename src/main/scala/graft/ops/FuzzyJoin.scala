@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.call
 
 /** Edit-distance similarity join (entity resolution / fuzzy dedup of
   * name-like strings) via pigeonhole SEGMENT blocking — the PassJoin
@@ -238,7 +239,6 @@ object FuzzyJoin {
     * a cross-engine differential of the unrestricted DL definition.
     * Scale: pure per-row expressions after one key equi-join. */
   def damerauPartMatch(part: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(part.sparkSession)
     val base = withEntity(part)
     base
       .filter(col("p_partkey") % 3 === 1)
@@ -247,7 +247,7 @@ object FuzzyJoin {
         """concat(substring(s, 1, pos - 1), substring(s, pos + 1, 1),
                   substring(s, pos, 1), substring(s, pos + 2))"""))
       .select(col("p_partkey").as("dirty_id"), col("swapped"),
-        graft.functions.DamerauLevenshtein(col("swapped"), col("s"))
+        call("damerau_levenshtein", col("swapped"), col("s"))
           .as("dl_dist"),
         levenshtein(col("swapped"), col("s")).cast("int").as("lev_dist"))
       .withColumn("transposition_detected",
@@ -265,9 +265,8 @@ object FuzzyJoin {
     * Pure per-row expressions after two key equi-joins — no similarity
     * join blow-up; the blocked-join seat stays [[fuzzyPartMatch]]. */
   def jaroWinklerPartMatch(part: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(part.sparkSession)
     val base = withEntity(part)
-    val jw = graft.functions.JaroWinkler
+    def jw(a: Column, b: Column): Column = call("jaro_winkler", a, b)
     dirtyParts(base)
       .join(base.select(col("p_partkey").as("dirty_id"), col("s")),
         "dirty_id")

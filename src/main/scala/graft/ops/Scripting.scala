@@ -103,19 +103,12 @@ object Scripting {
           END"""
     // conf-scoped exactly while the script PARSES AND RUNS (a script
     // executes eagerly, statement by statement — unlike a lazy query,
-    // the returned frame is the last statement's materialized result)
-    val prev = spark.conf.getOption("spark.sql.scripting.enabled")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    // the script executes EAGERLY, so the ballots view can be dropped as
-    // soon as sql() returns — without this, every call leaks a
-    // uuid-named temp view (and its analyzed plan) for the session life
-    try spark.sql(script)
-    finally {
-      spark.catalog.dropTempView(view)
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.scripting.enabled", v)
-        case None    => spark.conf.unset("spark.sql.scripting.enabled")
-      }
-    }
+    // the returned frame is the last statement's materialized result),
+    // so the ballots view can be dropped as soon as sql() returns —
+    // without this, every call leaks a uuid-named temp view (and its
+    // analyzed plan) for the session life
+    try graft.streaming.StreamOps.withConf(spark,
+      Map("spark.sql.scripting.enabled" -> "true"))(spark.sql(script))
+    finally spark.catalog.dropTempView(view)
   }
 }

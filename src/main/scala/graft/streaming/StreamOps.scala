@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SessionMemo
+import graft.functions.GraftExtensions.call
 
 /** Structured-Streaming realizations of the reference pipeline (SURVEY.md
   * §2.8). The reference's Spark job is truncated right before these stages
@@ -1975,7 +1976,6 @@ object StreamOps {
       : (String, String, Array[(Long, Array[Double])]) =
     ivfIngestMemo(spark, dir) {
       import graft.ext.SimilarityOps.{vecD, centroidsOf}
-      graft.functions.GraftExtensions.register(spark)
       val t = new Topic("graft_t29_")
       val baseDir = t.path("base")
       val ingestDir = t.path("ingest")
@@ -2014,8 +2014,7 @@ object StreamOps {
         .withColumn("__one", lit(1))
         .join(broadcast(unitRow), "__one")
         .select(col("vec_id"), col("v"),
-          call_function("centroid_argmax", col("v"),
-            col("cents")).as("cell"))
+          call("centroid_argmax", col("v"), col("cents")).as("cell"))
         .writeStream.format("parquet")
         .option("path", ingestDir)
         .option("checkpointLocation", t.path("ckpt"))
@@ -2039,7 +2038,7 @@ object StreamOps {
   def streamingIvfIngestServe(spark: SparkSession, dir: String, k: Int = 10,
                               nprobe: Int = 3, queryId: Long = 0L): DataFrame =
       perfScope(spark, Some(4)) {
-    import graft.ext.SimilarityOps.{dot, norm}
+    import graft.ext.SimilarityOps.cosine
     val (baseDir, ingestDir, cents) = ivfIngestedSegments(spark, dir)
 
     // serve against the grown corpus: probe ranking uses the SAME
@@ -2053,7 +2052,7 @@ object StreamOps {
       .toDF("cell", "cv")
     val probed = centsDf.crossJoin(broadcast(qv))
       .select(col("cell"),
-        (dot("cv", "qv") / (norm("cv") * norm("qv"))).as("ccos"))
+        cosine("cv", "qv").as("ccos"))
       .orderBy(desc("ccos"), asc("cell"))
       .limit(nprobe)
       .select("cell")
@@ -2064,7 +2063,7 @@ object StreamOps {
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(qv))
       .select(col("vec_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"))
+        round(cosine("v", "qv"), 6).as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -2083,7 +2082,7 @@ object StreamOps {
                                    queryIds: Seq[Long] = 0L to 9L,
                                    k: Int = 10, nprobe: Int = 3): DataFrame =
       perfScope(spark, Some(4)) {
-    import graft.ext.SimilarityOps.{dot, norm}
+    import graft.ext.SimilarityOps.cosine
     import org.apache.spark.sql.Encoders
     val (baseDir, ingestDir, cents) = ivfIngestedSegments(spark, dir)
     val corpus = ivfGrownCorpus(spark, baseDir, ingestDir)
@@ -2096,7 +2095,7 @@ object StreamOps {
       .partitionBy("query_id").orderBy(desc("ccos"), asc("cell"))
     val probePairs = centsDf.crossJoin(broadcast(qs))
       .select(col("query_id"), col("cell"),
-        (dot("cv", "qv") / (norm("cv") * norm("qv"))).as("ccos"))
+        cosine("cv", "qv").as("ccos"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= nprobe)
       .select("query_id", "cell")
@@ -2112,7 +2111,7 @@ object StreamOps {
       .join(broadcast(qs), "query_id")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"),
-        round(dot("v", "qv") / (norm("v") * norm("qv")), 6).as("cosine"),
+        round(cosine("v", "qv"), 6).as("cosine"),
         col("vec_id"))
       .groupBy("query_id")
       .agg(topk(col("cosine"), col("vec_id")).as("top_ids"))
@@ -3300,13 +3299,11 @@ object StreamOps {
     * normalized doc — the dedup key the 100 TB ingest gate would carry. */
   def streamingNfcDedup(spark: SparkSession, dir: String): DataFrame =
       perfScope(spark, Some(8)) {
-    graft.functions.GraftExtensions.register(spark)
     drainToTable()(docStream(spark, dir)
       .withColumn("variant",
         explode(array(lit("caf\u00e9"), lit("cafe\u0301"))))
       .withColumn("norm_text",
-        graft.functions.NfcNormalize(
-          concat(col("text"), lit(" "), col("variant"))))
+        call("nfc_normalize", concat(col("text"), lit(" "), col("variant"))))
       .dropDuplicates("lang", "norm_text")
       .groupBy("lang").agg(count(lit(1)).as("n_unique")),
       "graft_t24", "complete").orderBy("lang")

@@ -90,7 +90,7 @@ object ScaleBench {
     // tiny fixture compiles every family the timed runs reuse
     val warmSf = "/root/testdata/sf0.001"
     run.foreach { s =>
-      try { queries(s)(spark, warmSf).count(); () }
+      try graft.Bench.runInFull(queries(s)(spark, warmSf))
       catch { case e: Throwable =>
         System.err.println(s"[scale] warm $s failed: ${e.getMessage}") }
     }
@@ -100,7 +100,7 @@ object ScaleBench {
       (1 to reps).map { _ =>
         graft.SessionMemo.clearAll()
         val t0 = System.nanoTime()
-        try { queries(name)(spark, dir).count(); () }
+        try graft.Bench.runInFull(queries(name)(spark, dir))
         catch { case e: Throwable =>
           System.err.println(s"[scale] $name @ $dir FAILED: ${e.getMessage}")
           return -1.0

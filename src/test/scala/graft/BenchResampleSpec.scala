@@ -36,6 +36,23 @@ class BenchResampleSpec extends AnyFunSuite {
     assert(!Bench.isResampleOutlier(Some(-1.0), 99.0)) // failed-seat sentinel
   }
 
+  test("floors come only from rounds that ran their seats in full") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_floors")
+    try {
+      def write(name: String, json: String): Unit =
+        java.nio.file.Files.writeString(dir.resolve(name), json)
+      write("bench_perquery_r20.json",
+        """{"metric":"total","action":"noop","queries":{"a":1.5,"b":2.0}}""")
+      // a count()-era round: its minima are no floor of a full run
+      write("bench_perquery_r21.json",
+        """{"metric":"total","queries":{"a":0.1,"c":0.2}}""")
+      assert(Bench.committedFloors(dir.toFile) === Map("a" -> 1.5, "b" -> 2.0))
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete())
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("every memo-backed seat name resolves to a live board seat") {
     // the flag list is maintained by hand next to the shared-run memos;
     // a renamed or retired seat here would silently stop being flagged

