@@ -36,8 +36,8 @@ object DedupOps {
     * kernel's array size) on each of its rows. */
   private[graft] def shingleKeys(docs: DataFrame, n: Int,
                                  sizeAs: Option[String] = None): DataFrame = {
-    val keyed = docs.select(col("doc_id"), graft.functions.ShingleKeys
-      .column(split(col("text"), " "), n).as("keys"))
+    val keyed = docs.select(col("doc_id"),
+      call("shingle_keys", split(col("text"), " "), lit(n)).as("keys"))
     keyed.select(((col("doc_id") +: sizeAs.map(size(col("keys")).as(_)).toSeq)
       :+ inline(col("keys"))): _*)
   }

@@ -68,4 +68,5 @@ object DamerauLevenshtein {
       i += 1
     }
     d(la + 1)(lb + 1)
-  }}
+  }
+}

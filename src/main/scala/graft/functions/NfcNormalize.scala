@@ -33,4 +33,5 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 object NfcNormalize {
   def normalize(s: UTF8String): UTF8String =
     UTF8String.fromString(java.text.Normalizer.normalize(
-      s.toString, java.text.Normalizer.Form.NFC))}
+      s.toString, java.text.Normalizer.Form.NFC))
+}

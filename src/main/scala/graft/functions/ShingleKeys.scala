@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.KernelColumns
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -52,11 +50,6 @@ object ShingleKeys {
   val KeyType: StructType = StructType(Seq(
     StructField("shingle_h", LongType, nullable = false),
     StructField("shingle_l", IntegerType, nullable = false)))
-
-  /** `shingle_keys(words, n)` as a Column, usable without registering
-    * the SQL name in the session. */
-  def column(words: Column, n: Int): Column =
-    KernelColumns.column(ShingleKeys(KernelColumns.expression(words), n))
 
   def keys(words: ArrayData, n: Int): ArrayData = {
     val m = words.numElements()

@@ -10,10 +10,12 @@ import graft.functions.GraftExtensions
   * optimizer rules, and leaves that session as it found it. */
 class KernelRouteSpec extends SparkSpec {
 
-  /** Every seat whose operator builds a graft kernel by name. */
+  /** A seat for each operator that builds a graft kernel through
+    * `GraftExtensions.call`; `dedup_containment` stands for the seats
+    * keyed by `DedupOps.shingleKeys`. */
   private val kernelSeats = Seq(
     "ann_cosine_topk_native", "ann_kmeans_cells", "ann_lsh_buckets",
-    "dedup_decontaminate", "dedup_embedding_cosine",
+    "dedup_containment", "dedup_decontaminate", "dedup_embedding_cosine",
     "dedup_incremental_bloom", "dedup_simhash_recall",
     "dedup_substring_spans", "j8b_jaro_winkler_match", "j8c_damerau_match",
     "t14_stream_decontaminate", "t24_stream_nfc_dedup",
